@@ -6,18 +6,38 @@ one canonical document per component. The reference has nothing like
 this (its dedup surface is zero); this is the beyond-reference
 training-data mandate.
 
-Algorithm: iterative min-label propagation with pointer jumping.
-Each round every node takes the minimum label over itself and its
-neighbors (one shuffle: edge-join + groupBy), then compresses paths by
-replacing its label with its label's label (one self-join). The
-neighbor step alone needs O(diameter) rounds; the pointer-jumping step
-halves label-chain depth each round, giving O(log n) rounds total —
-the same convergence bound as the large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14). Near-dup components are dense and shallow in practice, so
-convergence is typically 2-3 rounds.
+Algorithm: two regimes, picked by ONE observed-size gate. The
+symmetric edge list is materialized first (``tables.pin_keyed``); if
+its cached size fits ``spark.sql.autoBroadcastJoinThreshold``
+(``tables.fits_broadcast``, a block-manager lookup, zero jobs) the
+components are solved on the driver, otherwise by the distributed loop.
+Both return the same labels (property-tested), and both raise when no
+fixpoint is confirmed within ``max_iter`` rounds.
+
+- Driver solve: one Arrow collect of the edge list, dense ids via
+  ``np.unique``, then a vectorised min-label union-find — each round
+  hooks every tree root under its smallest adjacent root
+  (``np.minimum.at``) and pointer-jumps every node to its root. The
+  labels return as one Arrow-built LocalRelation. Two jobs in all
+  (materialize + collect) where the loop pays ~8 AQE sub-jobs per
+  round: c06 went from 95 jobs to 21 at the benchmark input.
+- Distributed loop: iterative min-label propagation with pointer
+  jumping. Each round every node takes the minimum label over itself
+  and its neighbors (one shuffle: edge-join + groupBy), then compresses
+  paths by replacing its label with its label's label (one self-join).
+  The neighbor step alone needs O(diameter) rounds; the pointer-jumping
+  step halves label-chain depth each round, giving O(log n) rounds
+  total — the same convergence bound as the large-star/small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14). Near-dup components are dense and shallow in
+  practice, so convergence is typically 2-3 rounds.
 
 Scale notes (100 TB):
+- The gate bounds the driver collect by the broadcast threshold: the
+  driver never holds more edge bytes than it would already accept as
+  a broadcast table. Past the gate nothing special happens — the loop
+  below is the 100 TB path (forced locally in tests with a 1-byte
+  threshold).
 - The edge list is localCheckpoint-ed once up front: every round joins
   it, and without materialization the (expensive) pair-generation
   subtree would re-run per round. On a cluster, persist(MEMORY_AND_DISK)
@@ -127,9 +147,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
     ``nodes`` must contain every vertex (isolated nodes become their
     own singleton component); ``edges`` is undirected input given in
-    one direction. Returns ``(node_col, component_id)``.
+    one direction. Returns ``(node_col, component_id)``. Raises
+    ``RuntimeError`` when no fixpoint is confirmed within ``max_iter``
+    rounds, in either regime.
     """
-    from mousedatapipeline_spark.tables import pin_keyed
+    from mousedatapipeline_spark.tables import fits_broadcast, pin_keyed
 
     # Both edge directions from ONE pass over the (possibly expensive)
     # edge subtree: a union of two selects would evaluate the pair-
@@ -149,6 +171,77 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
             .alias("e"))
         .select("e.u", "e.v"),
         ["v"])
+    # The same zero-job observed-size gate picks the regime: a
+    # materialized edge list under the broadcast threshold is solved
+    # on the driver (one collect instead of ~8 AQE sub-jobs per
+    # round); past it the distributed loop runs.
+    if fits_broadcast(und):
+        labels = _driver_labels(und, max_iter)
+    else:
+        labels = _loop_labels(und, max_iter)
+    looped = labels.select(F.col("id").alias(node_col),
+                           F.col("lbl").alias("component_id"))
+    singletons = (nodes.join(labels, nodes[node_col] == labels.id,
+                             "left_anti")
+                  .select(F.col(node_col),
+                          F.col(node_col).alias("component_id")))
+    return looped.union(singletons)
+
+
+def _driver_labels(und: DataFrame, max_iter: int) -> DataFrame:
+    """``(id, lbl)`` for every endpoint of the symmetric edge list
+    ``und``, solved in driver memory: one Arrow collect, then a
+    vectorised min-label union-find over dense ids.
+
+    Each round hooks every tree root under the smallest root adjacent
+    to it (``np.minimum.at``; parents are always smaller ids, so the
+    forest stays acyclic) and then pointer-jumps every node to its
+    root. Rounds are counted like the loop's: the round that confirms
+    the fixpoint counts. The labels come back as an Arrow-built frame
+    typed like ``und``'s columns: a LocalRelation under
+    ``spark.sql.execution.arrow.localRelationThreshold``, so consumers
+    plan it with its exact size and never start a Python worker for
+    it (pickled-row ``parallelize`` would, on every job)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    # An edge with a null endpoint connects nothing (it matches no
+    # join in the loop either).
+    tbl = und.toArrow().drop_null()
+    m = tbl.num_rows
+    ids, dense = np.unique(
+        np.concatenate([tbl.column("u").to_numpy(),
+                        tbl.column("v").to_numpy()]),
+        return_inverse=True)
+    eu, ev = dense[:m], dense[m:]
+    lbl = np.arange(len(ids))
+    for _ in range(max_iter):
+        prev = lbl.copy()
+        np.minimum.at(lbl, lbl[eu], lbl[ev])
+        while True:
+            jumped = lbl[lbl]
+            if np.array_equal(jumped, lbl):
+                break
+            lbl = jumped
+        if np.array_equal(lbl, prev):
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds")
+    arrow_type = tbl.schema.field("u").type
+    spark_type = und.schema["u"].dataType
+    return und.sparkSession.createDataFrame(
+        pa.table({"id": pa.array(ids, type=arrow_type),
+                  "lbl": pa.array(ids[lbl], type=arrow_type)}),
+        StructType([StructField("id", spark_type),
+                    StructField("lbl", spark_type)]))
+
+
+def _loop_labels(und: DataFrame, max_iter: int) -> DataFrame:
+    """``(id, lbl)`` for every endpoint of the symmetric edge list
+    ``und`` by distributed min-label propagation with pointer jumping
+    (the scale path; see the module docstring)."""
     # Only nodes with at least one edge enter the loop: isolated nodes
     # (the vast majority of a deduped corpus) are their own component
     # by definition and would just pad every per-round shuffle. At
@@ -193,10 +286,4 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds")
-    looped = labels.select(F.col("id").alias(node_col),
-                           F.col("lbl").alias("component_id"))
-    singletons = (nodes.join(labels, nodes[node_col] == labels.id,
-                             "left_anti")
-                  .select(F.col(node_col),
-                          F.col(node_col).alias("component_id")))
-    return looped.union(singletons)
+    return labels

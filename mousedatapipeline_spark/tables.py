@@ -6,8 +6,6 @@ supplier part orders lineitem events documents embeddings.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -260,7 +258,14 @@ def fits_broadcast(df: DataFrame) -> bool:
     fits) and at scale fall back to an unhinted join that AQE plans
     from runtime statistics.  Unknown size reads as DOES-NOT-FIT: the
     fallback merely loses a hint, while wrongly hinting an oversized
-    table is the driver-OOM the gate exists to prevent."""
+    table is the driver-OOM the gate exists to prevent.
+
+    The size compared is the DESERIALIZED cache size (block manager
+    ``memSize + diskSize``), against a threshold Spark defines for
+    plan-size estimates; the two track each other but are not the
+    same measure. The threshold now bounds a driver collect as well
+    as a broadcast hint: ``connected_components`` solves on the driver
+    exactly when its materialized edge list passes this gate."""
     raw_thr = str(df.sparkSession.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10m")).strip()
     if raw_thr in ("-1", "0"):
@@ -307,9 +312,6 @@ def _cached_bytes(df: DataFrame):
     return None
 
 
-_AQE_TOGGLE_LOCK = threading.Lock()
-
-
 def _checkpoint_keep_layout(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint compiled WITHOUT AQE so the LogicalRDD
     keeps the plan's outputPartitioning/outputOrdering (see
@@ -323,21 +325,9 @@ def _checkpoint_keep_layout(df: DataFrame) -> DataFrame:
     concurrent compiles and could restore a stale value). The
     checkpointed LogicalRDD is then re-hosted in the caller's session;
     the RDD itself lives in the shared SparkContext, so nothing about
-    the materialized data changes."""
-    try:
-        return _checkpoint_in_clone(df)
-    except Exception:  # noqa: BLE001 - internals moved: fall back to the
-        # session-global toggle, serialized so interleaved pins can
-        # never restore a stale value (the restore shares the critical
-        # section with the toggle).
-        spark = df.sparkSession
-        with _AQE_TOGGLE_LOCK:
-            prev = spark.conf.get("spark.sql.adaptive.enabled")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                return df.localCheckpoint(eager=True)
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", prev)
+    the materialized data changes. A failing clone compile raises:
+    there is no session-global fallback."""
+    return _checkpoint_in_clone(df)
 
 
 def _checkpoint_in_clone(df: DataFrame) -> DataFrame:

@@ -56,6 +56,38 @@ def test_nonconvergence_raises(spark):
         connected_components(ndf, edf, "id", "a", "b", max_iter=1)
 
 
+def test_local_regime_job_budget(spark):
+    """Below the broadcast threshold the components are solved on the
+    driver: the edge-list checkpoint and one Arrow collect inside
+    connected_components, then the caller's collect — one job for the
+    labels' broadcast into the singleton anti-join (Spark collects
+    even a LocalTableScan build side through a job) and one for the
+    result. The distributed loop paid ~8 jobs per round; sub-job creep
+    on this path fails here."""
+    sc = spark.sparkContext
+    ndf = spark.createDataFrame([(i,) for i in range(1, 31)], ["id"])
+    edf = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 16)] + [(20, 25), (25, 21)],
+        "a: bigint, b: bigint")
+    group = "cc-job-budget"
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "connected_components job budget")
+    try:
+        out = connected_components(ndf, edf, "id", "a", "b")
+        inside = jobs()
+        got = {r.id: r.component_id for r in out.collect()}
+        total = jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got[16] == 1 and got[25] == 20 and got[30] == 30
+    assert inside <= 2, inside
+    assert total <= 4, total
+
+
 # --- orient_by_degree (s27's wedge-bound guard) ----------------------------
 
 def _orient(spark, edges):

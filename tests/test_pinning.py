@@ -98,6 +98,7 @@ def test_pin_compile_leaves_session_aqe_alone(spark):
     runs in a cloned session, so a concurrent reader of the session
     conf must observe 'true' throughout."""
     import threading
+    import time
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     df = spark.range(20000).select(F.col("id").alias("v"))
@@ -109,6 +110,7 @@ def test_pin_compile_leaves_session_aqe_alone(spark):
             v = spark.conf.get("spark.sql.adaptive.enabled")
             if v != "true":
                 seen.append(v)
+            time.sleep(0.001)
 
     t = threading.Thread(target=watch, daemon=True)
     t.start()
@@ -125,8 +127,8 @@ def test_pin_compile_leaves_session_aqe_alone(spark):
 
 def test_pin_clone_compile_is_primary_path(spark):
     """_checkpoint_in_clone (the no-toggle path) must work against this
-    Spark version's internals — if it ever starts throwing, the silent
-    fallback would reintroduce the session-global toggle."""
+    Spark version's internals — it is the only path: every pin goes
+    through it, and a failing clone compile raises."""
     from mousedatapipeline_spark.tables import _checkpoint_in_clone
 
     df = spark.range(1000).select(F.col("id").alias("v"))
@@ -181,3 +183,20 @@ def test_cc_identical_under_forced_pin(spark, edges, expect):
                   .collect()}
     assert local == expect
     assert forced == expect
+
+
+def test_cc_keeps_id_type_under_both_regimes(spark):
+    """The driver solve types its labels like the edge list, so an
+    ``int`` graph yields ``int`` ids in both regimes."""
+    ndf = spark.createDataFrame([(n,) for n in range(1, 7)], "id: int")
+    edf = spark.createDataFrame([(1, 2), (2, 3), (5, 4)], "a: int, b: int")
+
+    def run():
+        out = connected_components(ndf, edf, "id", "a", "b")
+        return out.dtypes, sorted(map(tuple, out.collect()))
+
+    local = run()
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "1"):
+        forced = run()
+    assert local[0] == [("id", "int"), ("component_id", "int")]
+    assert local == forced

@@ -7,6 +7,7 @@ so hypothesis's many examples cost one Spark job."""
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -162,6 +163,68 @@ def test_connected_components_matches_union_find(spark, edges):
            for r in connected_components(ndf, edf, "id", "a", "b")
            .collect()}
     assert got == expect
+
+
+@contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+@st.composite
+def _graphs(draw):
+    """(nodes, edges): a long chain in shuffled id order, random extra
+    edges, self-loops and duplicated edges over sparse (also negative)
+    ids, plus nodes that never appear in an edge."""
+    ids = draw(st.lists(st.integers(-1000, 10**6), min_size=1,
+                        max_size=40, unique=True))
+    chain = draw(st.permutations(ids))[:draw(st.integers(0, len(ids)))]
+    pick = st.sampled_from(ids)
+    extra = draw(st.lists(st.tuples(pick, pick), max_size=12))
+    loops = [(x, x) for x in draw(st.lists(pick, max_size=3))]
+    edges = list(zip(chain, chain[1:])) + extra + loops
+    edges += draw(st.lists(st.sampled_from(edges), max_size=4)) \
+        if edges else []
+    isolated = draw(st.lists(st.integers(2 * 10**6, 3 * 10**6),
+                             min_size=1, max_size=3, unique=True))
+    return ids + isolated, edges
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_graphs())
+def test_cc_driver_solve_equals_distributed_loop(spark, graph):
+    """The driver-side solve (local default: the edge list fits the
+    broadcast threshold) and the distributed loop (forced with a 1-byte
+    threshold) give the identical (node, min member id) map."""
+    from mousedatapipeline_spark.operators.graph import (
+        connected_components,
+    )
+    nodes, edges = graph
+    ndf = spark.createDataFrame([(n,) for n in nodes], "id: bigint")
+    edf = spark.createDataFrame(edges or [(0, 0)], "a: bigint, b: bigint")
+    if not edges:
+        edf = edf.filter(F.lit(False))
+
+    def labels():
+        return {r.id: r.component_id
+                for r in connected_components(ndf, edf, "id", "a", "b")
+                .collect()}
+
+    driver = labels()
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "1"):
+        loop = labels()
+    assert driver == loop
+    comp = {n: {n} for n in nodes}
+    for a, b in edges:
+        merged = comp[a] | comp[b]
+        for x in merged:
+            comp[x] = merged
+    assert driver == {n: min(comp[n]) for n in nodes}
 
 
 @settings(max_examples=15, deadline=None,
