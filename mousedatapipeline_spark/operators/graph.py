@@ -21,16 +21,18 @@ fixpoint is confirmed within ``max_iter`` rounds.
   labels return as one Arrow-built LocalRelation. Two jobs in all
   (materialize + collect) where the loop pays ~8 AQE sub-jobs per
   round: c06 went from 95 jobs to 21 at the benchmark input.
-- Distributed loop: iterative min-label propagation with pointer
-  jumping. Each round every node takes the minimum label over itself
-  and its neighbors (one shuffle: edge-join + groupBy), then compresses
-  paths by replacing its label with its label's label (one self-join).
-  The neighbor step alone needs O(diameter) rounds; the pointer-jumping
-  step halves label-chain depth each round, giving O(log n) rounds
-  total — the same convergence bound as the large-star/small-star
-  algorithm (Kiveris et al., "Connected Components in MapReduce and
-  Beyond", SoCC'14). Near-dup components are dense and shallow in
-  practice, so convergence is typically 2-3 rounds.
+- Distributed loop: the same min-label hooking, one round at a time.
+  Each round every node takes the minimum label over itself and its
+  neighbors AND hooks the node its label points at under that minimum
+  (one shuffle: edge-join + groupBy, then one groupBy over both
+  candidates), then compresses paths by replacing its label with its
+  label's label (one self-join). Propagation and path compression
+  alone still need O(diameter) rounds — a 37-edge chain in shuffled
+  id order took 29 — because a minimum only ever moves one edge per
+  round; hooking moves it to the whole tree under the label at once,
+  and the same chain converges in 7 (a 20 000-node chain in ~19).
+  Near-dup components are dense and shallow in practice, so
+  convergence is typically 2-3 rounds.
 
 Scale notes (100 TB):
 - The gate bounds the driver collect by the broadcast threshold: the
@@ -45,10 +47,16 @@ Scale notes (100 TB):
 - Labels are localCheckpoint-ed each round to cut lineage — an
   iterative plan otherwise grows by two joins per round and chokes the
   optimizer (same pattern as the k-means loop in operators/vector.py).
+  The checkpoint is then re-hosted without the plan statistics it
+  inherits: a round joins the label table three times, the estimate
+  of a join without column statistics is the product of its sides,
+  so the inherited size estimate gains ~3x digits per round and the
+  optimizer ran out of heap multiplying them (a 1 GB driver, on the
+  37-edge chain above).
 - Convergence is detected by the sum of labels: min-label updates are
   monotone non-increasing, so an unchanged sum (one lightweight agg
   action per round) proves a fixpoint. No row-level diff join needed.
-- Each round is two shuffles on the node id; AQE handles the skew of
+- Each round is three shuffles on the node id; AQE handles the skew of
   popular labels. Component count and sizes are unbounded in general,
   but label state is exactly one row per node — never per edge.
 """
@@ -240,8 +248,8 @@ def _driver_labels(und: DataFrame, max_iter: int) -> DataFrame:
 
 def _loop_labels(und: DataFrame, max_iter: int) -> DataFrame:
     """``(id, lbl)`` for every endpoint of the symmetric edge list
-    ``und`` by distributed min-label propagation with pointer jumping
-    (the scale path; see the module docstring)."""
+    ``und`` by distributed min-label hooking with pointer jumping (the
+    scale path; see the module docstring)."""
     # Only nodes with at least one edge enter the loop: isolated nodes
     # (the vast majority of a deduped corpus) are their own component
     # by definition and would just pad every per-round shuffle. At
@@ -249,27 +257,40 @@ def _loop_labels(und: DataFrame, max_iter: int) -> DataFrame:
     # with a near-dup|.
     # Initialization doubles as round one: lbl = min(self, neighbors)
     # comes out of the same shuffle that dedups the active-node set.
-    labels = (und.groupBy("u")
-              .agg(F.least(F.col("u"), F.min("v")).alias("lbl"))
-              .withColumnRenamed("u", "id")
-              .localCheckpoint(eager=False))
+    labels = _without_stats(
+        und.groupBy("u")
+        .agg(F.least(F.col("u"), F.min("v")).alias("lbl"))
+        .withColumnRenamed("u", "id")
+        .localCheckpoint(eager=False))
     prev_sum = None
     for _ in range(max_iter):
         neigh = (und.join(labels, und.v == labels.id)
                  .groupBy("u").agg(F.min("lbl").alias("nlbl")))
+        # Two candidates per node from ONE pass over the join (explode,
+        # as for the symmetric edge list): the node itself takes the
+        # smallest neighbor label, and the node its label points at is
+        # hooked under it too. Every candidate is a member id of the
+        # node's component and no larger than the label it replaces,
+        # so labels only decrease and always point at a smaller id:
+        # the label forest stays acyclic. A node without a neighbor row
+        # (its only edges have a null endpoint) keeps its label.
+        nlbl = F.coalesce("nlbl", labels.lbl)
         stepped = (labels.join(neigh, labels.id == neigh.u, "left")
-                   .select(labels.id,
-                           F.least(labels.lbl,
-                                   F.coalesce("nlbl", labels.lbl))
-                           .alias("lbl")))
+                   .select(F.explode(F.array(
+                       F.struct(labels.id.alias("id"),
+                                F.least(labels.lbl, nlbl).alias("lbl")),
+                       F.struct(labels.lbl.alias("id"),
+                                nlbl.alias("lbl")))).alias("c"))
+                   .groupBy("c.id").agg(F.min("c.lbl").alias("lbl")))
         # Pointer jump against the PREVIOUS (checkpointed) label table,
         # not against `stepped`: a stepped-vs-stepped self-join would
-        # recompute the whole neighbor-min subtree on both sides (Spark
+        # recompute the whole candidate subtree on both sides (Spark
         # does not share non-materialized subtrees between join
         # branches). prev(x) <= x for every node id x, so the jump is
-        # still a monotone improvement and the fixpoint is unchanged:
-        # stable labels mean both edge endpoints agree, and the common
-        # label is a member id <= the member min, i.e. the min itself.
+        # still a monotone improvement. At the fixpoint every label is
+        # its own label (a root), and propagation makes both endpoints
+        # of every edge agree: the common label is a member id <= the
+        # member min, i.e. the min itself.
         parent = labels.select(F.col("id").alias("pid"),
                                F.col("lbl").alias("plbl"))
         jumped = (stepped.join(parent, stepped.lbl == parent.pid)
@@ -278,7 +299,7 @@ def _loop_labels(und: DataFrame, max_iter: int) -> DataFrame:
                           .alias("lbl")))
         # Lazy checkpoint + the convergence agg as its materializing
         # action: one job per round, and the lineage is still cut.
-        labels = jumped.localCheckpoint(eager=False)
+        labels = _without_stats(jumped.localCheckpoint(eager=False))
         cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
         if cur_sum == prev_sum:
             break
@@ -287,3 +308,18 @@ def _loop_labels(und: DataFrame, max_iter: int) -> DataFrame:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds")
     return labels
+
+
+def _without_stats(checkpointed: DataFrame) -> DataFrame:
+    """``checkpointed`` (a localCheckpoint-ed frame) re-hosted over the
+    same RDD, without the size estimate its LogicalRDD inherited from
+    the plan that built it (see the module docstring). The new leaf
+    estimates the session default size, as any RDD-backed frame does;
+    the adaptive planner still picks joins on the observed sizes. The
+    RDD is the checkpoint-marked one, so a lazy checkpoint still
+    materializes on the first job over either frame."""
+    spark = checkpointed.sparkSession
+    jdf = checkpointed._jdf
+    jout = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().analyzed().rdd(), jdf.schema(), False)
+    return checkpointed.__class__(jout, spark)

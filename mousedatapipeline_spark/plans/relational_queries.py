@@ -1619,22 +1619,17 @@ def q38_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q39_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
+    from mousedatapipeline_spark.sources.sinks import upsert_partitions
+
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_totalprice").alias("amt"))
     out = tempfile.mkdtemp(prefix="mouse_q39_")
     (o.write.mode("overwrite").partitionBy("prio").parquet(out))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        backfill = (spark.read.parquet(out)
-                    .filter(F.col("prio") == "1-URGENT")
-                    .withColumn("amt", -F.col("amt")))
-        (backfill.write.mode("overwrite").partitionBy("prio")
-         .parquet(out))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    backfill = (spark.read.parquet(out)
+                .filter(F.col("prio") == "1-URGENT")
+                .withColumn("amt", -F.col("amt")))
+    upsert_partitions(backfill, out, ["prio"])
     back = spark.read.parquet(out)
     from mousedatapipeline_spark.operators.aggregates import dsum
     return back.groupBy("prio").agg(

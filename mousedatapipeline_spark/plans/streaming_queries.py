@@ -5,16 +5,18 @@ The reference's "streaming" is ingestion-triggered batch (SURVEY.md
 §2.8), so streaming/batch parity IS the correctness contract: draining
 the landing area in one availableNow pass must produce exactly the
 batch aggregation of the same files. That is what the oracle asserts.
+
+Landing, draining, versioned foreachBatch state and work-dir cleanup
+are the shared harness in ``streaming/fold.py``; each query here is its
+stream and its merge.
 """
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -22,21 +24,39 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
 )
+from mousedatapipeline_spark.operators import bloom
+from mousedatapipeline_spark.operators import sketches as K
+from mousedatapipeline_spark.operators import text as TX
 from mousedatapipeline_spark.operators.aggregates import dsum
-from mousedatapipeline_spark.plans.catalog import register
+from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
+from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
+from mousedatapipeline_spark.plans.decontam_queries import EVAL_MOD, NGRAM
 from mousedatapipeline_spark.plans.events_queries import (
+    _E22_B,
     SESSION_WINDOW_ORACLE_SQL,
+    _e22_sql,
+    _e22_tail,
+    _e22_weights_col,
 )
-from mousedatapipeline_spark.streaming import stateful, watcher
+from mousedatapipeline_spark.streaming import fold, stateful, watcher
 from mousedatapipeline_spark.tables import load, load_spread
 
-def _drain(q, seconds: int = 300) -> None:
-    """availableNow drains must COMPLETE: a timed-out query would leave
-    the sink partial and be read back as a silently-wrong answer."""
-    if not q.awaitTermination(seconds):
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain did not finish within {seconds}s")
+
+def _chunk_stream(spark: SparkSession, df: DataFrame, work: Path, n: int,
+                  key: str) -> DataFrame:
+    """``df`` landed as ``n`` chunks range-partitioned on ``key``,
+    streamed back one file per trigger."""
+    landing = work / "landing"
+    schema = fold.land_chunks(df, landing, n, key)
+    return watcher.stream_manifest(spark, str(landing), schema,
+                                   max_files_per_trigger=1)
+
+
+def _events_us(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """Events with ``ts`` as unix micros (``ts_us``), the time key the
+    stateful queries land and order on."""
+    return load(spark, sf_dir, "events").select(
+        *cols, F.unix_micros("ts").alias("ts_us"))
 
 
 def _events_file_schema(spark: SparkSession, path: str) -> T.StructType:
@@ -81,115 +101,18 @@ def _hourly_counts(batch: DataFrame) -> DataFrame:
         "equal the batch aggregation (streaming/batch parity oracle).",
 )
 def w01_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_stream_"))
-    landing = work / "landing"
-    landing.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", landing / "events.parquet")
-
-    stream = watcher.stream_manifest(
-        spark, str(landing),
-        _events_file_schema(spark, str(landing / "events.parquet")),
-        fmt="parquet")
-    sink = str(work / "sink")
-    q = watcher.run_watcher(
-        stream, _hourly_counts, sink, str(work / "ckpt"),
-        available_now=True, dedupe_keys=None)
-    _drain(q)
-    return spark.read.parquet(sink)
-
-
-_SESSION_STREAM_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("ts_us", T.LongType()),
-])
-
-
-def write_time_chunks(spark: SparkSession, sf_dir: str, landing: Path,
-                      n_chunks: int = 4,
-                      full_rows: bool = False) -> int:
-    """Split events into ``n_chunks`` contiguous time ranges, one file
-    per chunk, mtimes strictly increasing in time order.
-
-    With ``maxFilesPerTrigger=1`` the file source processes files
-    oldest-mtime-first, so each micro-batch delivers a later time slice
-    than the last — the per-key cross-trigger ordering contract of
-    ``stateful.sessionize_stream``. Range-partitioning by the SAME
-    column the state keys time on is how a real ingestion layout
-    provides this at scale (e.g. hourly landing files).
-    """
-    ev = load(spark, sf_dir, "events")
-    if full_rows:
-        ev = ev.select("event_id", "user_id", "event_type",
-                       F.unix_micros("ts").alias("ts_us"))
-    else:
-        ev = ev.select("user_id", F.unix_micros("ts").alias("ts_us"))
-    # ONE job: range-repartition on ts_us writes n_chunks part files
-    # whose lexicographic part numbers follow the range order.
-    tmp = landing / "_tmp"
-    ev.repartitionByRange(n_chunks, "ts_us").write.mode(
-        "overwrite").parquet(str(tmp))
-    written = 0
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-        written += 1
-    shutil.rmtree(tmp)
-    return written
-
-
-def _final_state(spark: SparkSession, state_dir, schema) -> DataFrame:
-    """Latest ``v*`` state version as a DataFrame — or an EMPTY
-    DataFrame with the state's declared schema when no micro-batch
-    ever fired: an empty source fixture makes :func:`write_time_chunks`
-    emit zero chunks, foreachBatch never runs, and no ``v*`` dir
-    exists, which used to be an ``IndexError`` (ADVICE r05).  The
-    declared-schema fallback keeps the degenerate-fixture result equal
-    to the batch oracle over the same empty table.  The schema is also
-    applied to the read: a state version written from a batch with no
-    qualifying rows is an empty dir that breaks schema inference."""
-    versions = sorted(Path(state_dir).glob("v*"))
-    if not versions:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema) \
-        .parquet(str(versions[-1]))
-
-
-def drain_sessionization(spark: SparkSession, sf_dir: str, work: Path,
-                         n_chunks: int = 2) -> DataFrame:
-    """Run the stateful sessionization stream over time-chunked landing
-    files and return the drained per-trigger emissions (cumulative
-    counters — one row per (user, trigger-with-data))."""
-    landing = work / "landing"
-    landing.mkdir()
-    write_time_chunks(spark, sf_dir, landing, n_chunks)
-    stream = (
-        spark.readStream.schema(_SESSION_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(landing))
-    )
-    out = stateful.sessionize_stream(stream, gap_seconds=1800)
-    sink = str(work / "sink")
-    # State-store partition count is fixed per checkpoint at the
-    # session's shuffle.partitions when the query first starts. Scope it
-    # down for the drain: every trigger pays O(partitions) state-store
-    # open/commit overhead, so oversized values tax EVERY micro-batch.
-    # (On a real cluster you size this to key cardinality, not cores.)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(sink)
+    with fold.workdir("mouse_stream_") as work:
+        landing = work / "landing"
+        landing.mkdir()
+        shutil.copy(f"{sf_dir}/events.parquet", landing / "events.parquet")
+        stream = watcher.stream_manifest(
+            spark, str(landing),
+            _events_file_schema(spark, str(landing / "events.parquet")))
+        sink = str(work / "sink")
+        fold.drain(spark, lambda: watcher.run_watcher(
+            stream, _hourly_counts, sink, str(work / "ckpt"),
+            available_now=True, dedupe_keys=None))
+        return fold.keep(spark.read.parquet(sink))
 
 
 @register(
@@ -225,13 +148,16 @@ def drain_sessionization(spark: SparkSession, sf_dir: str, work: Path,
         "streaming/batch parity is the correctness contract.",
 )
 def w02_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_sess_stream_"))
-    emissions = drain_sessionization(spark, sf_dir, work)
-    # Counters are monotonic per key, so max() over the append sink is
-    # the exactly-once final answer even under trigger re-delivery.
-    return emissions.groupBy("user_id").agg(
-        F.max("n_sessions").cast("bigint").alias("n_sessions"),
-        F.max("n_events").cast("bigint").alias("n_events"))
+    with fold.workdir("mouse_sess_stream_") as work:
+        stream = _chunk_stream(spark, _events_us(spark, sf_dir, "user_id"),
+                               work, 2, "ts_us")
+        emissions = fold.sink(
+            spark, stateful.sessionize_stream(stream, gap_seconds=1800), work)
+        # Counters are monotonic per key, so max() over the append sink
+        # is the exactly-once final answer even under trigger re-delivery.
+        return fold.keep(emissions.groupBy("user_id").agg(
+            F.max("n_sessions").cast("bigint").alias("n_sessions"),
+            F.max("n_events").cast("bigint").alias("n_events")))
 
 
 @register(
@@ -250,44 +176,23 @@ def w02_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deliberately blind to the duplication.",
 )
 def w03_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_dedup_stream_"))
-    landing = work / "landing"
-    landing.mkdir()
-    # Deliver the whole table twice: the second file is a full replay.
-    for i in range(2):
-        dest = landing / f"delivery{i}.parquet"
-        shutil.copy(f"{sf_dir}/events.parquet", dest)
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-
-    from mousedatapipeline_spark.tables import normalize_events_ts
-    stream = normalize_events_ts(
-        spark.readStream.format("parquet")
-        .schema(_events_file_schema(spark, str(landing / "delivery0.parquet")))
-        .option("maxFilesPerTrigger", 1)
-        .load(str(landing))
-    ).select("event_id", "user_id", "event_type", "ts")
-    # Data spans ~1 month; a 60-day horizon keeps every key's state
-    # alive for the whole replay, so ALL re-deliveries are dropped.
-    deduped = stateful.dedupe_stream(stream, ["event_id"], "ts",
-                                     watermark="60 days")
-    sink = str(work / "sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.read.parquet(sink).groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.count_distinct("user_id").cast("bigint").alias("n_users"))
+    with fold.workdir("mouse_dedup_stream_") as work:
+        landing = work / "landing"
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "ts")
+        # Deliver the whole table twice: the second file is a full replay.
+        for _ in range(2):
+            schema = fold.land_chunks(ev, landing, 1, "event_id")
+        stream = watcher.stream_manifest(spark, str(landing), schema,
+                                         max_files_per_trigger=1)
+        # Data spans ~1 month; a 60-day horizon keeps every key's state
+        # alive for the whole replay, so ALL re-deliveries are dropped.
+        deduped = stateful.dedupe_stream(stream, ["event_id"], "ts",
+                                         watermark="60 days")
+        return fold.keep(fold.sink(spark, deduped, work)
+                         .groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_events"),
+            F.count_distinct("user_id").cast("bigint").alias("n_users")))
 
 
 # --------------------------------------------------------------------------
@@ -295,33 +200,24 @@ def w03_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # folds its (tiny) delta into a persisted running aggregate — the
 # streaming face of q19's IVM story: per-trigger cost is proportional
 # to the delta plus the aggregate's cardinality, never to history.
-# The running state is written to a NEW versioned directory per batch
-# (atomic pointer-bump semantics, like a table-format commit), so a
-# crashed batch never corrupts the previous version.
 # --------------------------------------------------------------------------
 _DEC = "decimal(30,10)"
 
 
-def _merge_batch_into_state(batch: DataFrame, batch_id: int,
-                            state_dir: Path) -> None:
-    spark = batch.sparkSession
-    b = batch.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(F.col("value").cast(_DEC)).cast(_DEC).alias("value_dec"))
-    # Strictly-below-batch_id: a foreachBatch replay must not read its
-    # own previous attempt's v{batch_id} as prior state (double-merge +
-    # lazy read of the dir being overwritten); see _w07_merge.
-    versions = sorted(p for p in state_dir.glob("v*")
-                      if int(p.name[1:]) < batch_id)
-    if versions:
-        prev = spark.read.parquet(str(versions[-1]))
-        b = (prev.unionByName(b)
-             .groupBy("event_type")
-             .agg(F.sum("n_events").cast("bigint").alias("n_events"),
-                  # narrow the decimal(38,10) sum-of-sums back down so
-                  # later merges never hit the precision-loss scale cut
-                  F.sum("value_dec").cast(_DEC).alias("value_dec")))
-    b.write.mode("overwrite").parquet(str(state_dir / f"v{batch_id:06d}"))
+def _w04_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
+    rows = batch.select(
+        "event_type", F.lit(1).cast("bigint").alias("n_events"),
+        F.col("value").cast(_DEC).alias("value_dec"))
+    return (prior.unionByName(rows)
+            .groupBy("event_type")
+            .agg(F.sum("n_events").cast("bigint").alias("n_events"),
+                 # narrow the decimal(38,10) sum back down so later
+                 # merges never hit the precision-loss scale cut
+                 F.sum("value_dec").cast(_DEC).alias("value_dec")))
+
+
+_W04_FOLD = fold.Fold(
+    _w04_merge, f"event_type string, n_events bigint, value_dec {_DEC}")
 
 
 @register(
@@ -344,61 +240,15 @@ def _merge_batch_into_state(batch: DataFrame, batch_id: int,
 )
 def w04_stream_incremental_agg(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_w04_"))
-    landing = work / "landing"
-    landing.mkdir()
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", F.unix_micros("ts").alias("ts"), "user_id",
-        "event_type", "value", "props")
-    tmp = work / "_tmp"
-    ev.repartitionByRange(3, "event_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-
-    state_dir = work / "state"
-    state_dir.mkdir()
-    # The chunk files are self-written above with ts as unix micros
-    # (bigint), so their schema is fixed regardless of the generator's
-    # encoding of the original table.
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(chunk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(landing))
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream
-            .foreachBatch(lambda b, i: _merge_batch_into_state(
-                b, i, state_dir))
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    state = _final_state(
-        spark, state_dir,
-        f"event_type string, n_events bigint, value_dec {_DEC}")
-    return state.select(
-        "event_type", "n_events",
-        stable_round(F.col("value_dec").cast("double"))
-        .alias("value_sum"))
+    with fold.workdir("mouse_w04_") as work:
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "event_type", "value")
+        state = _W04_FOLD.run(
+            spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
+        return fold.keep(state.select(
+            "event_type", "n_events",
+            stable_round(F.col("value_dec").cast("double"))
+            .alias("value_sum")))
 
 
 # --------------------------------------------------------------------------
@@ -436,65 +286,38 @@ def w04_stream_incremental_agg(spark: SparkSession,
         "independent of stream length.",
 )
 def w05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_w05_"))
-    landing = work / "landing"
-    landing.mkdir()
-    # Two time chunks = two triggers: enough to prove watermark-bounded
-    # cross-trigger join state while keeping the per-trigger fixed cost
-    # (state-store open/commit x partitions x 2 sides) off the bench's
-    # critical path. Trigger count is a harness choice, not a scale
-    # property — state size depends on the watermark, not chunking.
-    write_time_chunks(spark, sf_dir, landing, n_chunks=2, full_rows=True)
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(T.StructType([
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_us", T.LongType()),
-        ]))
-        .option("maxFilesPerTrigger", 1)
-        .load(str(landing))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    clicks = (stream.filter(F.col("event_type") == "click")
-              .select(F.col("event_id").alias("c_event_id"),
-                      F.col("user_id").alias("c_user_id"),
-                      F.col("ts").alias("c_ts"))
-              .withWatermark("c_ts", "90 minutes"))
-    purchases = (stream.filter(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user_id"),
-                         F.col("ts").alias("p_ts"))
-                 .withWatermark("p_ts", "90 minutes"))
-    pairs = clicks.join(
-        purchases,
-        (F.col("c_user_id") == F.col("p_user_id"))
-        & (F.col("p_ts") > F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select(F.col("c_user_id").alias("user_id"), "c_event_id")
-
-    sink = str(work / "sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            pairs.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", str(work / "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    drained = spark.read.parquet(sink)
-    return drained.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.count_distinct("c_event_id").cast("bigint")
-        .alias("n_converted_clicks"))
+    with fold.workdir("mouse_w05_") as work:
+        # Two time chunks = two triggers: enough to prove watermark-
+        # bounded cross-trigger join state while keeping the per-trigger
+        # fixed cost (state-store open/commit x partitions x 2 sides)
+        # off the bench's critical path. Trigger count is a harness
+        # choice, not a scale property — state size depends on the
+        # watermark, not chunking.
+        stream = _chunk_stream(
+            spark, _events_us(spark, sf_dir, "event_id", "user_id",
+                              "event_type"),
+            work, 2, "ts_us").withColumn(
+            "ts", F.timestamp_micros(F.col("ts_us")))
+        clicks = (stream.filter(F.col("event_type") == "click")
+                  .select(F.col("event_id").alias("c_event_id"),
+                          F.col("user_id").alias("c_user_id"),
+                          F.col("ts").alias("c_ts"))
+                  .withWatermark("c_ts", "90 minutes"))
+        purchases = (stream.filter(F.col("event_type") == "purchase")
+                     .select(F.col("user_id").alias("p_user_id"),
+                             F.col("ts").alias("p_ts"))
+                     .withWatermark("p_ts", "90 minutes"))
+        pairs = clicks.join(
+            purchases,
+            (F.col("c_user_id") == F.col("p_user_id"))
+            & (F.col("p_ts") > F.col("c_ts"))
+            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
+            "inner",
+        ).select(F.col("c_user_id").alias("user_id"), "c_event_id")
+        return fold.keep(fold.sink(spark, pairs, work).groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            F.count_distinct("c_event_id").cast("bigint")
+            .alias("n_converted_clicks")))
 
 
 # --------------------------------------------------------------------------
@@ -511,35 +334,21 @@ def w05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # can never desynchronize (code-review r06 — a hand-inlined copy of the
 # reduced constant 506952114 lived here before).
 def _w06_hash_sql() -> str:
-    from mousedatapipeline_spark.operators.sketches import user_hash_sql
-    return f"({user_hash_sql('user_id', 40503)})"
+    return f"({K.user_hash_sql('user_id', 40503)})"
 
 
-def _w06_batch_registers(batch: DataFrame) -> DataFrame:
-    from mousedatapipeline_spark.operators import sketches as K
+def _w06_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     h = batch.select(
-        "event_type",
-        K.user_hash(F.col("user_id"), 40503).alias("th"))
-    return K.hll_registers(h, "th", ["event_type"])
+        "event_type", K.user_hash(F.col("user_id"), 40503).alias("th"))
+    return (prior.unionByName(K.hll_registers(h, "th", ["event_type"]))
+            .groupBy("event_type", "reg")
+            .agg(F.max("max_rho").alias("max_rho")))
 
 
-def _w06_merge_into_state(batch: DataFrame, batch_id: int,
-                          state_dir: Path) -> None:
-    spark = batch.sparkSession
-    b = _w06_batch_registers(batch)
-    # Strictly-below-batch_id: replay idempotence (see _w07_merge).
-    versions = sorted(p for p in state_dir.glob("v*")
-                      if int(p.name[1:]) < batch_id)
-    if versions:
-        prev = spark.read.parquet(str(versions[-1]))
-        b = (prev.unionByName(b)
-             .groupBy("event_type", "reg")
-             .agg(F.max("max_rho").alias("max_rho")))
-    b.write.mode("overwrite").parquet(str(state_dir / f"v{batch_id:06d}"))
+_W06_FOLD = fold.Fold(_w06_merge, "event_type string, reg int, max_rho int")
 
 
 def _w06_oracle_sql() -> str:
-    from mousedatapipeline_spark.operators import sketches as K
     reg_expr, rho_expr = K.hll_registers_sql("th")
     return f"""
     WITH h AS (
@@ -565,54 +374,14 @@ def _w06_oracle_sql() -> str:
         "hash-gated by the SQL oracle.",
 )
 def w06_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators import sketches as K
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w06_"))
-    landing = work / "landing"
-    landing.mkdir()
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id",
-                                              "event_type")
-    tmp = work / "_tmp"
-    ev.repartitionByRange(3, "event_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-
-    state_dir = work / "state"
-    state_dir.mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-    ])
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(chunk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(landing))
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream
-            .foreachBatch(lambda b, i: _w06_merge_into_state(
-                b, i, state_dir))
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    registers = _final_state(
-        spark, state_dir, "event_type string, reg int, max_rho int")
-    est = K.hll_estimate(registers, ["event_type"])
-    return est.select("event_type",
-                      stable_round(F.col("hll_est_raw")).alias("hll_users"))
+    with fold.workdir("mouse_w06_") as work:
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type")
+        registers = _W06_FOLD.run(
+            spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
+        est = K.hll_estimate(registers, ["event_type"])
+        return fold.keep(est.select(
+            "event_type", stable_round(F.col("hll_est_raw")).alias("hll_users")))
 
 
 # --------------------------------------------------------------------------
@@ -642,24 +411,14 @@ def _w07_bucket_col() -> F.Column:
     return (clamped - clamped % _W07_BUCKET_WIDTH) / _W07_BUCKET_WIDTH
 
 
-def _w07_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
-    spark = batch.sparkSession
-    b = (batch.select(_w07_bucket_col().cast("bigint").alias("bucket"))
-         .groupBy("bucket")
-         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")))
-    # Merge on the latest version STRICTLY BELOW this batch id: on a
-    # foreachBatch replay (task retry / checkpoint restart) the
-    # previous attempt's own v{batch_id} output must not be read as
-    # prior state — that would fold the batch in twice (and lazily
-    # read the very directory being overwritten). Re-running batch N
-    # over v{N-1} is idempotent by construction.
-    versions = sorted(p for p in state_dir.glob("v*")
-                      if int(p.name[1:]) < batch_id)
-    if versions:
-        prev = spark.read.parquet(str(versions[-1]))
-        b = (prev.unionByName(b).groupBy("bucket")
-             .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-    b.write.mode("overwrite").parquet(str(state_dir / f"v{batch_id:06d}"))
+def _w07_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
+    rows = batch.select(_w07_bucket_col().cast("bigint").alias("bucket"),
+                        F.lit(1).cast("bigint").alias("cnt"))
+    return (prior.unionByName(rows).groupBy("bucket")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt")))
+
+
+_W07_FOLD = fold.Fold(_w07_merge, "bucket bigint, cnt bigint")
 
 
 @register(
@@ -696,55 +455,21 @@ def _w07_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
 )
 def w07_stream_quantile_histogram(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w07_"))
-    landing = work / "landing"
-    landing.mkdir()
-    ev = load(spark, sf_dir, "events").select("event_id", "value")
-    tmp = work / "_tmp"
-    ev.repartitionByRange(3, "event_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-
-    state_dir = work / "state"
-    state_dir.mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = (spark.readStream.format("parquet")
-              .schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .load(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(lambda b, i: _w07_merge(b, i, state_dir))
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    hist = _final_state(spark, state_dir, "bucket bigint, cnt bigint")
-    c = hist.select(
-        "bucket", "cnt",
-        F.sum("cnt").over(W.orderBy("bucket")
-                          .rowsBetween(W.unboundedPreceding, 0))
-        .alias("cum"),
-        F.sum("cnt").over(W.partitionBy()).alias("n"))
-    return c.agg(
-        F.max("n").cast("bigint").alias("n_events"),
-        *[F.min(F.when(F.col("cum") >= F.ceil(F.lit(q) * F.col("n")),
-                       F.col("bucket") * _W07_BUCKET_WIDTH))
-          .cast("bigint").alias(alias)
-          for q, alias in _W07_QS])
+    with fold.workdir("mouse_w07_") as work:
+        ev = load(spark, sf_dir, "events").select("event_id", "value")
+        hist = _W07_FOLD.run(
+            spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
+        c = hist.select(
+            "bucket", "cnt",
+            F.sum("cnt").over(Window.orderBy("bucket").rowsBetween(
+                Window.unboundedPreceding, 0)).alias("cum"),
+            F.sum("cnt").over(Window.partitionBy()).alias("n"))
+        return fold.keep(c.agg(
+            F.max("n").cast("bigint").alias("n_events"),
+            *[F.min(F.when(F.col("cum") >= F.ceil(F.lit(q) * F.col("n")),
+                           F.col("bucket") * _W07_BUCKET_WIDTH))
+              .cast("bigint").alias(alias)
+              for q, alias in _W07_QS]))
 
 
 @register(
@@ -764,70 +489,47 @@ def w07_stream_quantile_histogram(spark: SparkSession,
         "then equal the batch sessionization (e14's oracle).",
 )
 def w08_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_w08_"))
-    landing = work / "landing"
-    landing.mkdir()
-    n_real = write_time_chunks(spark, sf_dir, landing, n_chunks=3)
-    if n_real == 0:  # empty fixture: no chunks, no sessions (ADVICE r05)
-        return spark.createDataFrame(
-            [], "user_id bigint, session_start_us bigint, "
-                "session_end_us bigint, n_events bigint")
-    # Sentinel: ONE far-future event for a filtered-out user. It lands
-    # in the final data trigger and pushes the stream's max event time
-    # past every real session end (end <= max real ts + 30 min); the
-    # closing no-data micro-batch (noDataMicroBatches, Spark default)
-    # then advances the watermark from it and finalizes every real
-    # session before the availableNow drain terminates — no second
-    # sentinel trigger needed. The max event time comes from the LAST
-    # chunk file (range partitioning put the top ts range there) — no
-    # second scan of the events table.
-    last_chunk = sorted(landing.glob("chunk*.parquet"))[-1]
-    max_us = spark.read.parquet(str(last_chunk)).agg(
-        F.max("ts_us")).collect()[0][0]
-    if max_us is None:  # chunks exist but hold zero rows (ADVICE r05)
-        return spark.createDataFrame(
-            [], "user_id bigint, session_start_us bigint, "
-                "session_end_us bigint, n_events bigint")
-    # range+lit, not createDataFrame: local-data scans route through a
-    # Python worker and cost seconds per job; this stays JVM-only.
-    sent = spark.range(1).select(
-        F.lit(-1).cast("bigint").alias("user_id"),
-        F.lit(max_us + 864_000_000_000).cast("bigint").alias("ts_us"))
-    dest = landing / "zz_sentinel0.parquet"
-    tmp = work / "_sent0"
-    sent.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    shutil.move(str(next(Path(tmp).glob("part-*.parquet"))), str(dest))
-    os.utime(dest, (1_000_000_000 + n_real, 1_000_000_000 + n_real))
-    shutil.rmtree(tmp)
-
-    # Two files per trigger: batches land as [c0,c1], [c2,sentinel] —
-    # real-session state still merges across the two triggers (the
-    # semantics under test), and the watermark flush rides the free
-    # no-data batch: 2 state-store/sink triggers instead of r02's 3
-    # (r01 had 5).
-    stream = (spark.readStream.schema(_SESSION_STREAM_SCHEMA)
-              .option("maxFilesPerTrigger", 2)
-              .parquet(str(landing))
-              .select("user_id",
-                      F.timestamp_micros(F.col("ts_us")).alias("ts"))
-              .withWatermark("ts", "1 second"))
-    agg = (stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-           .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
-    sink = str(work / "sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (agg.writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", str(work / "ckpt"))
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    back = spark.read.parquet(sink)
-    return (back.filter(F.col("user_id") >= 0)
+    with fold.workdir("mouse_w08_") as work:
+        landing = work / "landing"
+        schema = fold.land_chunks(_events_us(spark, sf_dir, "user_id"),
+                                  landing, 3, "ts_us")
+        # Sentinel: ONE far-future event for a filtered-out user. It
+        # lands in the final data trigger and pushes the stream's max
+        # event time past every real session end (end <= max real ts +
+        # 30 min); the closing no-data micro-batch (noDataMicroBatches,
+        # Spark default) then advances the watermark from it and
+        # finalizes every real session before the availableNow drain
+        # terminates — no second sentinel trigger needed. The max event
+        # time comes from the LAST chunk file (range partitioning put
+        # the top ts range there) — no second scan of the events table.
+        chunks = sorted(landing.glob("chunk*.parquet"))
+        max_us = (spark.read.parquet(str(chunks[-1]))
+                  .agg(F.max("ts_us")).first()[0] if chunks else None)
+        if max_us is None:  # empty fixture: no sessions (ADVICE r05)
+            return spark.createDataFrame(
+                [], "user_id bigint, session_start_us bigint, "
+                    "session_end_us bigint, n_events bigint")
+        # range+lit, not createDataFrame: local-data scans route through
+        # a Python worker and cost seconds per job; this stays JVM-only.
+        sent = spark.range(1).select(
+            F.lit(-1).cast("bigint").alias("user_id"),
+            F.lit(max_us + 864_000_000_000).cast("bigint").alias("ts_us"))
+        fold.land_chunks(sent, landing, 1, "ts_us")
+        # Two files per trigger: batches land as [c0,c1], [c2,sentinel]
+        # — real-session state still merges across the two triggers (the
+        # semantics under test), and the watermark flush rides the free
+        # no-data batch: 2 state-store/sink triggers instead of r02's 3
+        # (r01 had 5).
+        stream = (watcher.stream_manifest(spark, str(landing), schema,
+                                          max_files_per_trigger=2)
+                  .select("user_id",
+                          F.timestamp_micros(F.col("ts_us")).alias("ts"))
+                  .withWatermark("ts", "1 second"))
+        agg = (stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
+        back = fold.sink(spark, agg, work)
+        return fold.keep(
+            back.filter(F.col("user_id") >= 0)
             .select("user_id",
                     F.unix_micros("session_window.start").cast("bigint")
                     .alias("session_start_us"),
@@ -838,32 +540,28 @@ def w08_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # w09: streaming top-k maintenance. The top-k-by-value rows per event
-# type, maintained incrementally: each micro-batch's local top-k
-# unions into the persisted k-row-per-type state and re-truncates —
-# a monoid fold (top-k of a union = top-k of top-k's), so state is
-# bounded at k x |types| rows forever and the result equals the batch
-# top-k of all history. Ties break on event_id for determinism.
+# type, maintained incrementally: each micro-batch's rows union into
+# the persisted k-row-per-type state and re-truncate — a monoid fold
+# (top-k of a union = top-k of top-k's), so state is bounded at
+# k x |types| rows forever and the result equals the batch top-k of all
+# history. Ties break on event_id for determinism.
 # --------------------------------------------------------------------------
 _W09_K = 5
 
 
-def _w09_topk(df: DataFrame) -> DataFrame:
-    from pyspark.sql import Window as W
-    w = W.partitionBy("event_type").orderBy(
-        F.col("value").desc(), "event_id")
-    return (df.withColumn("rk", F.row_number().over(w))
+def _w09_rank() -> F.Column:
+    return F.row_number().over(Window.partitionBy("event_type").orderBy(
+        F.col("value").desc(), "event_id"))
+
+
+def _w09_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
+    return (prior.unionByName(batch.select("event_type", "event_id", "value"))
+            .withColumn("rk", _w09_rank())
             .filter(F.col("rk") <= _W09_K).drop("rk"))
 
 
-def _w09_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
-    spark = batch.sparkSession
-    b = _w09_topk(batch.select("event_type", "event_id", "value"))
-    versions = sorted(p for p in state_dir.glob("v*")
-                      if int(p.name[1:]) < batch_id)  # replay-idempotent
-    if versions:
-        prev = spark.read.parquet(str(versions[-1]))
-        b = _w09_topk(prev.unionByName(b))
-    b.write.mode("overwrite").parquet(str(state_dir / f"v{batch_id:06d}"))
+_W09_FOLD = fold.Fold(
+    _w09_merge, "event_type string, event_id bigint, value double")
 
 
 @register(
@@ -888,61 +586,23 @@ def _w09_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
         "on both sides.",
 )
 def w09_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w09_"))
-    landing = work / "landing"
-    landing.mkdir()
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value")
-    tmp = work / "_tmp"
-    ev.repartitionByRange(3, "event_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-
-    state_dir = work / "state"
-    state_dir.mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = (spark.readStream.format("parquet")
-              .schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .load(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(lambda b, i: _w09_merge(b, i, state_dir))
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    from pyspark.sql import Window as W2
-    w = W2.partitionBy("event_type").orderBy(
-        F.col("value").desc(), "event_id")
-    state = _final_state(
-        spark, state_dir, "event_type string, event_id bigint, value double")
-    return (state
-            .withColumn("rank", F.row_number().over(w).cast("int"))
+    with fold.workdir("mouse_w09_") as work:
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "event_type", "value")
+        state = _W09_FOLD.run(
+            spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
+        return fold.keep(
+            state.withColumn("rank", _w09_rank().cast("int"))
             .select("event_type", "rank", "event_id",
                     stable_round(F.col("value")).alias("value")))
 
 
 @register(
     "w10_stream_decontam",
-    # Same exact semantics as s18 (oracle copied from its registration
-    # below — one decontamination definition): streaming/batch parity
-    # is the contract, the bloom is an internal pre-filter either way.
-    oracle="__PATCHED_FROM_S18__",
+    # s18's registered oracle: one decontamination definition.
+    # Streaming/batch parity is the contract; the bloom is an internal
+    # pre-filter either way.
+    oracle=_REGISTRY["s18_bloom_decontam"].oracle,
     doc="Streaming decontamination gate — the admission check a crawl "
         "ingest runs BEFORE a doc enters the corpus: document chunks "
         "drain one file per trigger; each micro-batch probes the "
@@ -955,29 +615,6 @@ def w09_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fixed, history never rescanned.",
 )
 def w10_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators import bloom
-    from mousedatapipeline_spark.operators import text as TX
-    from mousedatapipeline_spark.plans.decontam_queries import (
-        EVAL_MOD,
-        NGRAM,
-    )
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w10_"))
-    landing = work / "landing"
-    landing.mkdir()
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = work / "_tmp"
-    # Two chunks = two data triggers: the per-batch gate still runs
-    # across multiple triggers (the semantics under test) at the
-    # minimum state-store/sink fixed cost.
-    d.repartitionByRange(2, "doc_id").write.mode("overwrite") \
-        .parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-
     # The eval suite is static (production: a fixed benchmark set), so
     # its gram set and Bloom literal are built ONCE batch-side; each
     # micro-batch reuses both. Repartition first: the single-file
@@ -996,53 +633,28 @@ def w10_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
           .distinct().localCheckpoint(eager=False))
     blit = bloom.bloom_bits_literal(ev, "gram")
 
-    sink = str(work / "sink")
-
-    def probe(batch: DataFrame, _bid: int) -> None:
+    def probe(batch: DataFrame) -> DataFrame:
         ex = (batch.repartition(par)
               .filter(F.col("doc_id") % EVAL_MOD != 0)
               .select("doc_id", F.explode(grams).alias("gram")))
         cand = ex.filter(bloom.might_contain(blit, "gram"))
-        hit = (cand.join(F.broadcast(ev), "gram", "left_semi")
-               .select("doc_id").distinct())
-        hit.write.mode("append").parquet(sink)
+        return (cand.join(F.broadcast(ev), "gram", "left_semi")
+                .select("doc_id").distinct())
 
-    chunk_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ])
-    stream = (spark.readStream.format("parquet")
-              .schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .load(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(probe)
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    # Each doc lives in exactly one chunk, so the union of per-batch
-    # hits is already distinct across batches.
-    return spark.read.parquet(sink).select("doc_id")
-
-
-def _finalize_w10_oracle() -> None:
-    from dataclasses import replace
-
-    # Cross-module reference (s18): force its module to register first.
-    import mousedatapipeline_spark.plans.decontam_queries  # noqa: F401
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["w10_stream_decontam"]
-    _REGISTRY["w10_stream_decontam"] = replace(
-        spec, oracle=_REGISTRY["s18_bloom_decontam"].oracle)
-
-
-_finalize_w10_oracle()
+    with fold.workdir("mouse_w10_") as work:
+        # Two chunks = two data triggers: the per-batch gate still runs
+        # across multiple triggers (the semantics under test) at the
+        # minimum state-store/sink fixed cost.
+        stream = _chunk_stream(
+            spark, load(spark, sf_dir, "documents").select("doc_id", "text"),
+            work, 2, "doc_id")
+        sink = str(work / "sink")
+        fold.drain(spark, lambda: watcher.run_watcher(
+            stream, probe, sink, str(work / "ckpt"),
+            available_now=True, dedupe_keys=None))
+        # Each doc lives in exactly one chunk, so the union of per-batch
+        # hits is already distinct across batches.
+        return fold.keep(spark.read.parquet(sink).select("doc_id"))
 
 
 @register(
@@ -1069,53 +681,26 @@ _finalize_w10_oracle()
 )
 def w12_stream_running_profile(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_w12_"))
-    landing = work / "landing"
-    landing.mkdir()
-    write_time_chunks(spark, sf_dir, landing, n_chunks=2, full_rows=True)
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(landing))
-              .select("user_id", "event_type", "ts_us"))
-    out = stateful.profile_stream(stream)
-    sink = str(work / "sink")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (out.writeStream.format("parquet")
-             .option("path", sink)
-             .option("checkpointLocation", str(work / "ckpt"))
-             .outputMode("append")
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    snap = spark.read.parquet(sink)
-    final = snap.groupBy("user_id").agg(
-        F.max(F.struct("n_events", "n_types", "first_us", "last_us"))
-        .alias("b"))
-    return final.select(
-        "user_id", F.col("b.n_events").alias("n_events"),
-        F.col("b.n_types").alias("n_types"),
-        F.col("b.first_us").alias("first_us"),
-        F.col("b.last_us").alias("last_us"))
+    with fold.workdir("mouse_w12_") as work:
+        stream = _chunk_stream(
+            spark, _events_us(spark, sf_dir, "event_id", "user_id",
+                              "event_type"),
+            work, 2, "ts_us").select("user_id", "event_type", "ts_us")
+        snap = fold.sink(spark, stateful.profile_stream(stream), work)
+        final = snap.groupBy("user_id").agg(
+            F.max(F.struct("n_events", "n_types", "first_us", "last_us"))
+            .alias("b"))
+        return fold.keep(final.select(
+            "user_id", F.col("b.n_events").alias("n_events"),
+            F.col("b.n_types").alias("n_types"),
+            F.col("b.first_us").alias("first_us"),
+            F.col("b.last_us").alias("last_us")))
 
 
-def _w13_partial(batch: DataFrame) -> DataFrame:
-    """Per-batch bootstrap partials: exact-decimal weighted sums —
-    the same mergeable monoid e22 aggregates in one pass."""
-    from mousedatapipeline_spark.plans.events_queries import (
-        _E22_B,
-        _e22_weights_col,
-    )
-    dec = "decimal(30,10)"
+def _w13_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
+    """Fold one batch into the bootstrap state: exact-decimal weighted
+    sums per event type — the same mergeable monoid e22 aggregates in
+    one pass."""
     # Each micro-batch is one landing file -> one partition; spread
     # the per-row weight work across the executor threads first.
     staged = (batch
@@ -1123,44 +708,30 @@ def _w13_partial(batch: DataFrame) -> DataFrame:
                            .defaultParallelism)
               .select("event_type", "value",
                       _e22_weights_col().alias("wts")))
-    aggs = [F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("value").cast(dec)).alias("sv")]
+    rows = [F.lit(1).cast("bigint").alias("n"),
+            F.col("value").cast(_DEC).alias("sv")]
+    sums = [F.sum("n").cast("bigint").alias("n"),
+            F.sum("sv").cast(_DEC).alias("sv")]
     for k in range(_E22_B):
         wk = F.element_at("wts", k + 1)
-        aggs.append(F.sum((F.col("value") * wk).cast(dec))
-                    .alias(f"sv{k}"))
-        aggs.append(F.sum(wk).cast("bigint").alias(f"sw{k}"))
-    return staged.groupBy("event_type").agg(*aggs)
+        rows += [(F.col("value") * wk).cast(_DEC).alias(f"sv{k}"),
+                 wk.cast("bigint").alias(f"sw{k}")]
+        sums += [F.sum(f"sv{k}").cast(_DEC).alias(f"sv{k}"),
+                 F.sum(f"sw{k}").cast("bigint").alias(f"sw{k}")]
+    return (prior.unionByName(staged.select("event_type", *rows))
+            .groupBy("event_type").agg(*sums))
 
 
-def _w13_merge(batch: DataFrame, batch_id: int, state_dir) -> None:
-    from mousedatapipeline_spark.plans.events_queries import _E22_B
-    part = _w13_partial(batch)
-    # Strictly-below-batch_id: a foreachBatch replay (at-least-once)
-    # must not read its own previous attempt's v{batch_id} as prior
-    # state — that would fold this batch's partial in twice. Same
-    # guard as _merge_batch_into_state/_w07_merge.
-    versions = sorted(p for p in state_dir.glob("v*")
-                      if int(p.name[1:]) < batch_id)
-    if versions:
-        prev = part.sparkSession.read.parquet(str(versions[-1]))
-        part = prev.unionByName(part)
-    dec = "decimal(30,10)"
-    cols = [F.sum("n").cast("bigint").alias("n"),
-            F.sum("sv").cast(dec).alias("sv")]
-    for k in range(_E22_B):
-        cols.append(F.sum(f"sv{k}").cast(dec).alias(f"sv{k}"))
-        cols.append(F.sum(f"sw{k}").cast("bigint").alias(f"sw{k}"))
-    merged = part.groupBy("event_type").agg(*cols)
-    merged.write.mode("overwrite").parquet(
-        str(state_dir / f"v{batch_id:04d}"))
+_W13_FOLD = fold.Fold(
+    _w13_merge, f"event_type string, n bigint, sv {_DEC}, " + ", ".join(
+        f"sv{k} {_DEC}, sw{k} bigint" for k in range(_E22_B)))
 
 
 @register(
     "w13_stream_bootstrap",
-    # e22's registered oracle verbatim (patched below): streaming
-    # maintenance must land on the identical inference result.
-    oracle="__PATCHED_FROM_E22__",
+    # e22's oracle: streaming maintenance must land on the identical
+    # inference result.
+    oracle=_e22_sql(),
     doc="Streaming incremental BOOTSTRAP: e22's 32-replica weighted "
         "sums are exact-decimal monoids, so each micro-batch folds "
         "its partial into a persisted running aggregate (w04's "
@@ -1170,71 +741,17 @@ def _w13_merge(batch: DataFrame, batch_id: int, state_dir) -> None:
         "O(types x replicas) state, no history rescans, no RNG.",
 )
 def w13_stream_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.plans.events_queries import (
-        _E22_B,
-        _e22_tail,
-    )
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w13_"))
-    landing = work / "landing"
-    landing.mkdir()
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value")
-    tmp = work / "_tmp"
-    ev.repartitionByRange(2, "event_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-    state_dir = work / "state"
-    state_dir.mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = (spark.readStream.format("parquet")
-              .schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .load(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(lambda b, i: _w13_merge(b, i, state_dir))
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    dec = "decimal(30,10)"
-    agg = _final_state(
-        spark, state_dir,
-        f"event_type string, n bigint, sv {dec}, " + ", ".join(
-            f"sv{k} {dec}, sw{k} bigint" for k in range(_E22_B)))
-    m = agg.selectExpr(
-        "event_type", "n",
-        "CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mean_v",
-        *[f"CAST(sv{k} AS DOUBLE) / CAST(sw{k} AS DOUBLE) AS m{k}"
-          for k in range(_E22_B)])
-    return _e22_tail(m)
-
-
-def _finalize_w13_oracle() -> None:
-    from dataclasses import replace
-
-    # Cross-module reference (e22): force its module to register first.
-    import mousedatapipeline_spark.plans.events_queries  # noqa: F401
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["w13_stream_bootstrap"]
-    _REGISTRY["w13_stream_bootstrap"] = replace(
-        spec, oracle=_REGISTRY["e22_bootstrap_stderr"].oracle)
-
-
-_finalize_w13_oracle()
+    with fold.workdir("mouse_w13_") as work:
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "event_type", "value")
+        agg = _W13_FOLD.run(
+            spark, _chunk_stream(spark, ev, work, 2, "event_id"), work)
+        m = agg.selectExpr(
+            "event_type", "n",
+            "CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mean_v",
+            *[f"CAST(sv{k} AS DOUBLE) / CAST(sw{k} AS DOUBLE) AS m{k}"
+              for k in range(_E22_B)])
+        return fold.keep(_e22_tail(m))
 
 
 # --------------------------------------------------------------------------
@@ -1250,11 +767,12 @@ _finalize_w13_oracle()
 # is a small hot table, exactly the lakehouse SCD-2 shape.
 #
 # Cross-batch ordering: chunks are range-partitioned on ts_us and
-# drained oldest-mtime-first (write_time_chunks), so every batch's
+# drained oldest-mtime-first (fold.land_chunks), so every batch's
 # events are strictly later than all prior batches' — the previous
 # open row merges as a pseudo-event at its own valid_from and the
 # consecutive-duplicate collapse works unchanged across the boundary.
 # --------------------------------------------------------------------------
+# Closed and open rows share it; an open row's valid_to is NULL.
 _W14_CLOSED_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
     T.StructField("tier", T.StringType()),
@@ -1264,26 +782,14 @@ _W14_CLOSED_SCHEMA = T.StructType([
 ])
 
 
-def _w14_scd2_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
-    """Merge one time-ordered batch into the SCD-2 state.
-
-    Replay-idempotent (at-least-once foreachBatch): reads only open
-    snapshots strictly below ``batch_id`` and overwrites its own
-    ``closed/v{batch_id}`` + ``open/v{batch_id}`` outputs, so a task
-    retry reproduces identical state (same guard as _w07_merge)."""
-    from pyspark.sql import Window
-
-    spark = batch.sparkSession
-    opens = sorted(p for p in (state_dir / "open").glob("v*")
-                   if int(p.name[1:]) < batch_id)
-    ev = batch.select(
-        "user_id", F.col("event_type").alias("tier"),
-        F.col("ts_us").alias("valid_from"),
-        F.col("event_id").alias("version_event_id"))
-    if opens:
-        prev_open = spark.read.parquet(str(opens[-1])).select(
-            "user_id", "tier", "valid_from", "version_event_id")
-        ev = prev_open.unionByName(ev)
+def _w14_scd2_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
+    """Merge one time-ordered batch into the SCD-2 state: versions
+    with a successor are closed."""
+    ev = prior.select(
+        "user_id", "tier", "valid_from", "version_event_id").unionByName(
+        batch.select("user_id", F.col("event_type").alias("tier"),
+                     F.col("ts_us").alias("valid_from"),
+                     F.col("event_id").alias("version_event_id")))
     w = Window.partitionBy("user_id").orderBy(
         "valid_from", "version_event_id")
     changes = (
@@ -1291,11 +797,11 @@ def _w14_scd2_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
         .filter(F.col("prev_tier").isNull()
                 | (F.col("tier") != F.col("prev_tier")))
         .drop("prev_tier"))
-    vers = changes.withColumn("valid_to", F.lead("valid_from").over(w))
-    vers.filter(F.col("valid_to").isNotNull()).write.mode(
-        "overwrite").parquet(str(state_dir / "closed" / f"v{batch_id:06d}"))
-    vers.filter(F.col("valid_to").isNull()).drop("valid_to").write.mode(
-        "overwrite").parquet(str(state_dir / "open" / f"v{batch_id:06d}"))
+    return (changes.withColumn("valid_to", F.lead("valid_from").over(w))
+            .withColumn("closed", F.col("valid_to").isNotNull()))
+
+
+_W14_FOLD = fold.Fold(_w14_scd2_merge, _W14_CLOSED_SCHEMA, closed="closed")
 
 
 @register(
@@ -1336,59 +842,18 @@ def _w14_scd2_merge(batch: DataFrame, batch_id: int, state_dir: Path) -> None:
         "streaming/batch parity.",
 )
 def w14_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    work = Path(tempfile.mkdtemp(prefix="mouse_w14_"))
-    landing = work / "landing"
-    landing.mkdir()
-    write_time_chunks(spark, sf_dir, landing, n_chunks=3, full_rows=True)
-    state_dir = work / "state"
-    (state_dir / "closed").mkdir(parents=True)
-    (state_dir / "open").mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-    ])
-    stream = (
-        spark.readStream.schema(chunk_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(landing))
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            stream.writeStream
-            .foreachBatch(lambda b, i: _w14_scd2_merge(b, i, state_dir))
-            .option("checkpointLocation", str(work / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    closed_dirs = [str(p) for p in sorted((state_dir / "closed").glob("v*"))]
-    # Explicit schema: a batch with no transitions writes an empty dir
-    # (no part files), which would break schema inference on read-back;
-    # with NO batches at all (empty fixture) both sides degrade to
-    # empty declared-schema tables (see _final_state).
-    closed = (spark.read.schema(_W14_CLOSED_SCHEMA).parquet(*closed_dirs)
-              if closed_dirs
-              else spark.createDataFrame([], _W14_CLOSED_SCHEMA))
-    open_df = _final_state(
-        spark, state_dir / "open",
-        "user_id bigint, tier string, valid_from bigint, "
-        "version_event_id bigint").withColumn(
-        "valid_to", F.lit(None).cast("long"))
-    return (
-        closed.unionByName(open_df)
-        .select(
+    with fold.workdir("mouse_w14_") as work:
+        stream = _chunk_stream(
+            spark, _events_us(spark, sf_dir, "event_id", "user_id",
+                              "event_type"),
+            work, 3, "ts_us")
+        state = _W14_FOLD.run(spark, stream, work)
+        return fold.keep(state.select(
             "user_id", "tier", "version_event_id",
             F.col("valid_from").cast("bigint").alias("valid_from"),
             F.coalesce(F.col("valid_to"), F.lit(-1)).cast("bigint")
             .alias("valid_to"),
-            F.col("valid_to").isNull().cast("int").alias("is_current"))
-    )
+            F.col("valid_to").isNull().cast("int").alias("is_current")))
 
 
 # --------------------------------------------------------------------------
@@ -1414,44 +879,31 @@ _W15_BIN_SCHEMA = T.StructType([
 ])
 
 
-def _w15_compaction_merge(batch: DataFrame, batch_id: int,
-                          state_dir: Path) -> None:
+def _w15_compaction_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     """Continue the per-source bin packing over one file_id-ordered
-    batch. Replay-idempotent: reads only open snapshots strictly below
-    ``batch_id`` and overwrites its own closed/open v{batch_id} dirs
-    (same guard as _w07_merge/_w14_scd2_merge)."""
-    from pyspark.sql import Window
-
-    from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
-
-    spark = batch.sparkSession
-    opens = sorted(p for p in (state_dir / "open").glob("v*")
-                   if int(p.name[1:]) < batch_id)
-    carry = spark.read.parquet(str(opens[-1])) if opens else None
-    b = batch.select("source", "file_id", "sz")
-    if carry is not None:
-        # Ordering contract, enforced LOUDLY in-plan (blocked_pairs
-        # precedent): every batch file_id must exceed the carried open
-        # bin's last file — a late/out-of-order manifest entry would
-        # otherwise be packed at the WRONG offset silently. raise_error
-        # sits inside the consumed coff column so pruning can't drop it.
-        coff = carry.select("source", F.col("cum").alias("coff"),
-                            F.col("mx").alias("__last"))
-        b = (b.join(coff, "source", "left")
-             .withColumn(
-                 "coff",
-                 F.when(F.col("__last").isNotNull()
-                        & (F.col("file_id") <= F.col("__last")),
-                        F.raise_error(F.concat(
-                            F.lit("w15 ordering contract: file_id "),
-                            F.col("file_id").cast("string"),
-                            F.lit(" of source "), F.col("source"),
-                            F.lit(" arrived after file "),
-                            F.col("__last").cast("string"))).cast("bigint"))
-                 .otherwise(F.coalesce(F.col("coff"), F.lit(0))))
-             .drop("__last"))
-    else:
-        b = b.withColumn("coff", F.lit(0).cast("bigint"))
+    batch from the open bins in ``prior``; every row carries its
+    source's cumulative byte offset ``cum``."""
+    # Ordering contract, enforced LOUDLY in-plan (blocked_pairs
+    # precedent): every batch file_id must exceed the carried open
+    # bin's last file — a late/out-of-order manifest entry would
+    # otherwise be packed at the WRONG offset silently. raise_error
+    # sits inside the consumed coff column so pruning can't drop it.
+    coff = prior.select("source", F.col("cum").alias("coff"),
+                        F.col("mx").alias("__last"))
+    b = (batch.select("source", "file_id", "sz")
+         .join(coff, "source", "left")
+         .withColumn(
+             "coff",
+             F.when(F.col("__last").isNotNull()
+                    & (F.col("file_id") <= F.col("__last")),
+                    F.raise_error(F.concat(
+                        F.lit("w15 ordering contract: file_id "),
+                        F.col("file_id").cast("string"),
+                        F.lit(" of source "), F.col("source"),
+                        F.lit(" arrived after file "),
+                        F.col("__last").cast("string"))).cast("bigint"))
+             .otherwise(F.coalesce(F.col("coff"), F.lit(0))))
+         .drop("__last"))
     w = (Window.partitionBy("source").orderBy("file_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     b = (b.withColumn("cum_before",
@@ -1459,44 +911,39 @@ def _w15_compaction_merge(batch: DataFrame, batch_id: int,
                       + F.col("coff"))
          .withColumn("bin", F.floor(F.col("cum_before") / _C05_TARGET)
                      .cast("bigint")))
-    aggs = b.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("sz").cast("bigint").alias("tot"),
-        F.min("file_id").cast("bigint").alias("mn"),
-        F.max("file_id").cast("bigint").alias("mx"))
-    bs = b.groupBy("source").agg(F.sum("sz").cast("bigint").alias("bs"))
-    if carry is not None:
-        # The carried open bin merges with batch rows landing in the
-        # same bin id; closed bins never re-enter (cum is monotone, so
-        # future bin ids are >= the open bin's id).
-        aggs = (aggs.unionByName(
-            carry.select("source", "bin", "n", "tot", "mn", "mx"))
+    # The carried open bin merges with batch rows landing in the same
+    # bin id; closed bins never re-enter (cum is monotone, so future
+    # bin ids are >= the open bin's id).
+    bins = (b.select("source", "bin", F.lit(1).cast("bigint").alias("n"),
+                     F.col("sz").alias("tot"), F.col("file_id").alias("mn"),
+                     F.col("file_id").alias("mx"))
+            .unionByName(prior.select("source", "bin", "n", "tot", "mn",
+                                      "mx"))
             .groupBy("source", "bin")
             .agg(F.sum("n").cast("bigint").alias("n"),
                  F.sum("tot").cast("bigint").alias("tot"),
-                 F.min("mn").alias("mn"), F.max("mx").alias("mx")))
-        cums = (carry.select("source", "cum").join(bs, "source", "full")
-                .select("source",
-                        (F.coalesce(F.col("cum"), F.lit(0))
-                         + F.coalesce(F.col("bs"), F.lit(0)))
-                        .alias("cum")))
-    else:
-        cums = bs.select("source", F.col("bs").alias("cum"))
-    mxb = aggs.groupBy("source").agg(F.max("bin").alias("maxbin"))
-    merged = aggs.join(mxb, "source")
-    merged.filter(F.col("bin") < F.col("maxbin")).select(
-        "source", "bin", "n", "tot", "mn", "mx").write.mode(
-        "overwrite").parquet(str(state_dir / "closed" / f"v{batch_id:06d}"))
-    (merged.filter(F.col("bin") == F.col("maxbin"))
-     .select("source", "bin", "n", "tot", "mn", "mx")
-     .join(cums, "source")
-     .write.mode("overwrite")
-     .parquet(str(state_dir / "open" / f"v{batch_id:06d}")))
+                 F.min("mn").cast("bigint").alias("mn"),
+                 F.max("mx").cast("bigint").alias("mx")))
+    cums = (prior.select("source", "cum")
+            .unionByName(b.select("source", F.col("sz").alias("cum")))
+            .groupBy("source")
+            .agg(F.coalesce(F.sum("cum"), F.lit(0)).cast("bigint")
+                 .alias("cum")))
+    return bins.join(cums, "source").withColumn(
+        "closed",
+        F.col("bin") < F.max("bin").over(Window.partitionBy("source")))
+
+
+_W15_FOLD = fold.Fold(
+    _w15_compaction_merge,
+    "source string, bin bigint, n bigint, tot bigint, mn bigint, "
+    "mx bigint, cum bigint", closed="closed")
 
 
 @register(
     "w15_stream_compaction",
-    oracle="__W15_PLACEHOLDER__",
+    # c05's registered oracle: streaming/batch parity.
+    oracle=_REGISTRY["c05_compaction_plan"].oracle,
     doc="Streaming compaction-plan maintenance: the c05 OPTIMIZE "
         "bin-packing kept current behind a file-manifest stream. Each "
         "micro-batch continues every source's greedy running-sum pack "
@@ -1508,77 +955,21 @@ def _w15_compaction_merge(batch: DataFrame, batch_id: int,
         "streaming/batch parity (shared oracle).",
 )
 def w15_stream_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w15_"))
-    landing = work / "landing"
-    landing.mkdir()
-    m = load(spark, sf_dir, "documents").select(
-        "source", F.col("doc_id").alias("file_id"),
-        F.length("text").cast("bigint").alias("sz"))
-    tmp = landing / "_tmp"
-    # Global file_id ranges preserve per-source arrival order across
-    # chunks — the ordering contract the carry-forward pack needs.
-    m.repartitionByRange(3, "file_id").write.mode(
-        "overwrite").parquet(str(tmp))
-    for i, part in enumerate(sorted(tmp.glob("part-*.parquet"))):
-        dest = landing / f"chunk{i:03d}.parquet"
-        shutil.move(str(part), str(dest))
-        os.utime(dest, (1_000_000_000 + i, 1_000_000_000 + i))
-    shutil.rmtree(tmp)
-    state_dir = work / "state"
-    (state_dir / "closed").mkdir(parents=True)
-    (state_dir / "open").mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("source", T.StringType()),
-        T.StructField("file_id", T.LongType()),
-        T.StructField("sz", T.LongType()),
-    ])
-    stream = (spark.readStream.schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(
-                 lambda b, i: _w15_compaction_merge(b, i, state_dir))
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    closed_dirs = [str(p) for p in sorted((state_dir / "closed").glob("v*"))]
-    closed = (spark.read.schema(_W15_BIN_SCHEMA).parquet(*closed_dirs)
-              if closed_dirs
-              else spark.createDataFrame([], _W15_BIN_SCHEMA))
-    open_df = _final_state(
-        spark, state_dir / "open",
-        "source string, bin bigint, n bigint, tot bigint, "
-        "mn bigint, mx bigint, cum bigint").select(
-        "source", "bin", "n", "tot", "mn", "mx")
-    return (closed.unionByName(open_df)
-            .select("source", "bin",
-                    F.col("n").alias("n_input_files"),
-                    F.col("tot").alias("total_bytes"),
-                    F.col("mn").alias("first_file"),
-                    F.col("mx").alias("last_file"),
-                    (F.col("tot") >= _C05_TARGET).alias("full_bin")))
-
-
-def _finalize_w15_oracle() -> None:
-    from dataclasses import replace
-
-    # Cross-module reference (c05): force its module to register first.
-    import mousedatapipeline_spark.plans.curation_queries  # noqa: F401
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["w15_stream_compaction"]
-    _REGISTRY["w15_stream_compaction"] = replace(
-        spec, oracle=_REGISTRY["c05_compaction_plan"].oracle)
-
-
-_finalize_w15_oracle()
+    with fold.workdir("mouse_w15_") as work:
+        m = load(spark, sf_dir, "documents").select(
+            "source", F.col("doc_id").alias("file_id"),
+            F.length("text").cast("bigint").alias("sz"))
+        # Global file_id ranges preserve per-source arrival order across
+        # chunks — the ordering contract the carry-forward pack needs.
+        state = _W15_FOLD.run(
+            spark, _chunk_stream(spark, m, work, 3, "file_id"), work)
+        return fold.keep(state.select(
+            "source", "bin",
+            F.col("n").alias("n_input_files"),
+            F.col("tot").alias("total_bytes"),
+            F.col("mn").alias("first_file"),
+            F.col("mx").alias("last_file"),
+            (F.col("tot") >= _C05_TARGET).alias("full_bin")))
 
 
 # --------------------------------------------------------------------------
@@ -1601,88 +992,21 @@ _W16_REG_SCHEMA = T.StructType([
 ])
 
 
-def _w16_hll_merge(batch: DataFrame, batch_id: int,
-                   state_dir: Path) -> None:
-    from mousedatapipeline_spark.operators import sketches as K
-
-    spark = batch.sparkSession
-    opens = sorted(p for p in state_dir.glob("v*")
-                   if int(p.name[1:]) < batch_id)
+def _w16_hll_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     ev = batch.select(
         F.to_date(F.timestamp_micros(F.col("ts_us"))).alias("day"),
         K.user_hash(F.col("user_id")).alias("uh"))
-    daily = K.hll_registers(ev, "uh", ["day"])
-    if opens:
-        prior = spark.read.schema(_W16_REG_SCHEMA).parquet(str(opens[-1]))
-        daily = (daily.unionByName(prior)
-                 .groupBy("day", "reg")
-                 .agg(F.max("max_rho").alias("max_rho")))
-    daily.write.mode("overwrite").parquet(
-        str(state_dir / f"v{batch_id:06d}"))
+    return (K.hll_registers(ev, "uh", ["day"]).unionByName(prior)
+            .groupBy("day", "reg")
+            .agg(F.max("max_rho").alias("max_rho")))
 
 
-@register(
-    "w16_stream_sliding_hll",
-    oracle="__W16_PLACEHOLDER__",
-    doc="Streaming sliding-HLL maintenance: the k05 trailing-7-day "
-        "distinct-users dashboard kept current behind the event "
-        "stream. State is the daily 64-register sketch table (O(m) per "
-        "day, never per-user); each micro-batch MAX-merges its own "
-        "daily registers in — max is commutative and idempotent, so "
-        "late and replayed data land correctly with NO ordering "
-        "contract (the algebraic advantage sketch state has over "
-        "w15's prefix-sum state). The drained estimates must equal "
-        "the batch sketch chain over the full feed.",
-)
-def w16_stream_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators import sketches as K
-
-    work = Path(tempfile.mkdtemp(prefix="mouse_w16_"))
-    landing = work / "landing"
-    landing.mkdir()
-    write_time_chunks(spark, sf_dir, landing, n_chunks=3, full_rows=True)
-    state_dir = work / "state"
-    state_dir.mkdir()
-    chunk_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("ts_us", T.LongType()),
-    ])
-    stream = (spark.readStream.schema(chunk_schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(landing)))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (stream.writeStream
-             .foreachBatch(lambda b, i: _w16_hll_merge(b, i, state_dir))
-             .option("checkpointLocation", str(work / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
-        _drain(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    daily = _final_state(spark, state_dir, _W16_REG_SCHEMA)
-    spine = daily.select("day").distinct()
-    offsets = F.explode(F.array(*[F.lit(i) for i in range(7)])).alias("i")
-    fan = daily.select("reg", "max_rho", "day", offsets).select(
-        F.date_add("day", F.col("i")).alias("day"), "reg", "max_rho")
-    win = (fan.join(F.broadcast(spine), "day")
-           .groupBy("day", "reg").agg(F.max("max_rho").alias("max_rho")))
-    est = K.hll_estimate(win, ["day"])
-    return est.select(
-        F.date_format("day", "yyyy-MM-dd").alias("day"),
-        stable_round(F.col("hll_est_raw")).alias("hll_est"))
+_W16_FOLD = fold.Fold(_w16_hll_merge, _W16_REG_SCHEMA)
 
 
-def _finalize_w16_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.operators import sketches as K
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
+def _w16_oracle_sql() -> str:
     reg_expr, rho_expr = K.hll_registers_sql("uh")
-    oracle = f"""
+    return f"""
     WITH ev AS (
       SELECT CAST(ts AS DATE) AS day,
              {K.user_hash_sql('user_id')} AS uh
@@ -1706,8 +1030,35 @@ def _finalize_w16_oracle() -> None:
            {stable_round_sql(K.HLL_EST_SQL)} AS hll_est
     FROM win GROUP BY day
     """
-    spec = _REGISTRY["w16_stream_sliding_hll"]
-    _REGISTRY["w16_stream_sliding_hll"] = replace(spec, oracle=oracle)
 
 
-_finalize_w16_oracle()
+@register(
+    "w16_stream_sliding_hll",
+    oracle=_w16_oracle_sql(),
+    doc="Streaming sliding-HLL maintenance: the k05 trailing-7-day "
+        "distinct-users dashboard kept current behind the event "
+        "stream. State is the daily 64-register sketch table (O(m) per "
+        "day, never per-user); each micro-batch MAX-merges its own "
+        "daily registers in — max is commutative and idempotent, so "
+        "late and replayed data land correctly with NO ordering "
+        "contract (the algebraic advantage sketch state has over "
+        "w15's prefix-sum state). The drained estimates must equal "
+        "the batch sketch chain over the full feed.",
+)
+def w16_stream_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
+    with fold.workdir("mouse_w16_") as work:
+        stream = _chunk_stream(
+            spark, _events_us(spark, sf_dir, "event_id", "user_id",
+                              "event_type"),
+            work, 3, "ts_us")
+        daily = _W16_FOLD.run(spark, stream, work)
+        spine = daily.select("day").distinct()
+        offsets = F.explode(F.array(*[F.lit(i) for i in range(7)])).alias("i")
+        fan = daily.select("reg", "max_rho", "day", offsets).select(
+            F.date_add("day", F.col("i")).alias("day"), "reg", "max_rho")
+        win = (fan.join(F.broadcast(spine), "day")
+               .groupBy("day", "reg").agg(F.max("max_rho").alias("max_rho")))
+        est = K.hll_estimate(win, ["day"])
+        return fold.keep(est.select(
+            F.date_format("day", "yyyy-MM-dd").alias("day"),
+            stable_round(F.col("hll_est_raw")).alias("hll_est")))

@@ -72,16 +72,15 @@ def upsert_partitions(df: DataFrame, path: str,
     replaces that day's output atomically per partition. Uses dynamic
     partition overwrite — ``mode("overwrite")`` under
     ``partitionOverwriteMode=dynamic`` only clears partitions the write
-    produces. Safe to re-run (idempotent) and safe at 100 TB: the job
-    touches |changed partitions|, never the whole table.
+    produces. The mode is the per-write option, which overrides the
+    session conf, so the session is never touched. Safe to re-run
+    (idempotent) and safe at 100 TB: the job touches |changed
+    partitions|, never the whole table.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_cols)
+     .parquet(path))
 
 
 def compact(spark, path: str, target_rows_per_file: int = 1_000_000,

@@ -23,8 +23,9 @@ reference's "streaming" is ingestion-triggered batch, and stateless
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -55,11 +56,17 @@ def dedupe_against_sink(batch: DataFrame, sink_path: str,
                         keys: Sequence[str] = REPETITION_KEYS) -> DataFrame:
     """W3 — idempotence: drop rows whose key is already in the sink
     (the `already_processed` check, src/watcher.py:34-36, as a
-    left-anti join instead of a filesystem stat)."""
+    left-anti join instead of a filesystem stat).
+
+    Only a sink that does not exist yet means "first batch". Any other
+    read failure (a corrupt or unreadable sink) raises: treating it as
+    empty would silently turn dedupe off and append duplicates."""
     spark = batch.sparkSession
     try:
         existing = spark.read.parquet(sink_path).select(*keys)
-    except Exception:  # noqa: BLE001 - first batch: sink does not exist yet
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
         return batch
     return batch.join(existing.dropDuplicates(list(keys)),
                       list(keys), "left_anti")

@@ -359,7 +359,7 @@ def test_w15_carry_forward_pack_equals_single_shot(
     from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
     from mousedatapipeline_spark.plans.streaming_queries import (
         _W15_BIN_SCHEMA,
-        _w15_compaction_merge,
+        _W15_FOLD,
     )
 
     manifest = [(src, i + 1, sz)
@@ -374,7 +374,7 @@ def test_w15_carry_forward_pack_equals_single_shot(
         chunk = manifest[lo:hi] or None
         b = (spark.createDataFrame(chunk, schema) if chunk
              else spark.createDataFrame([], schema))
-        _w15_compaction_merge(b, bi, state)
+        _W15_FOLD.step(b, bi, state)
     closed = spark.read.schema(_W15_BIN_SCHEMA).parquet(
         *[str(p) for p in sorted((state / "closed").glob("v*"))])
     open_df = spark.read.parquet(

@@ -4,11 +4,28 @@ Structured Streaming watcher (availableNow end-to-end)."""
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
+import time
+from pathlib import Path
 
+import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.sources import hdf5, manifest, sinks
-from mousedatapipeline_spark.streaming import watcher
+from mousedatapipeline_spark.streaming import fold, watcher
+
+_PARTS = "spark.sql.shuffle.partitions"
+_W_QUERIES = (
+    "w01_stream_tumbling_counts", "w02_stream_sessionization",
+    "w03_stream_dedup", "w04_stream_incremental_agg",
+    "w05_stream_stream_join", "w06_stream_hll_users",
+    "w07_stream_quantile_histogram", "w08_stream_session_window",
+    "w09_stream_topk", "w10_stream_decontam",
+    "w12_stream_running_profile", "w13_stream_bootstrap",
+    "w14_stream_scd2", "w15_stream_compaction", "w16_stream_sliding_hll",
+)
 
 
 def _fake_listing(spark):
@@ -149,6 +166,20 @@ def test_streaming_watcher_end_to_end(tmp_path, spark):
     assert spark.read.parquet(sink).count() == 2
 
 
+def test_dedupe_against_sink_raises_on_unreadable_sink(spark, tmp_path):
+    """Only a sink that does not exist yet is the first batch: an
+    unreadable sink must raise, not silently turn the dedupe off."""
+    batch = spark.createDataFrame(
+        [("20240101", 1, 1)], "ymd string, batch int, repetition int")
+    assert watcher.dedupe_against_sink(
+        batch, str(tmp_path / "absent")).count() == 1
+    sink = tmp_path / "sink"
+    sink.mkdir()
+    (sink / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet"):
+        watcher.dedupe_against_sink(batch, str(sink)).collect()
+
+
 def test_windowed_event_counts_batch_semantics(spark):
     from datetime import datetime
     ev = spark.createDataFrame(
@@ -270,6 +301,17 @@ def test_upsert_partitions_rewrites_only_changed(tmp_path, spark):
     # Idempotent: re-running the same upsert changes nothing.
     sinks.upsert_partitions(day2_fixed, path, ["ymd"])
     assert spark.read.parquet(path).count() == 3
+    # The per-write option wins over an explicitly static session conf,
+    # which the upsert leaves as it found it.
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        sinks.upsert_partitions(day2_fixed, path, ["ymd"])
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+    assert spark.read.parquet(path).count() == 3
 
 
 def test_compact_reduces_file_count(tmp_path, spark):
@@ -308,17 +350,15 @@ def test_merge_batch_into_state_versions_and_running_totals(spark, tmp_path):
     totals are the running (count, decimal sum) over all batches."""
     from pathlib import Path
 
-    from mousedatapipeline_spark.plans.streaming_queries import (
-        _merge_batch_into_state,
-    )
+    from mousedatapipeline_spark.plans.streaming_queries import _W04_FOLD
     state = Path(tmp_path / "state")
     state.mkdir()
     b1 = spark.createDataFrame([("a", 1.5), ("a", 2.5), ("b", 1.0)],
                                ["event_type", "value"])
     b2 = spark.createDataFrame([("a", 4.0), ("c", 7.0)],
                                ["event_type", "value"])
-    _merge_batch_into_state(b1, 0, state)
-    _merge_batch_into_state(b2, 1, state)
+    _W04_FOLD.step(b1, 0, state)
+    _W04_FOLD.step(b2, 1, state)
     assert sorted(p.name for p in state.glob("v*")) == \
         ["v000000", "v000001"]
     final = {r.event_type: (r.n_events, float(r.value_dec))
@@ -357,8 +397,8 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
     from pathlib import Path
 
     from mousedatapipeline_spark.plans.streaming_queries import (
-        _merge_batch_into_state,
-        _w07_merge,
+        _W04_FOLD,
+        _W07_FOLD,
     )
 
     state = Path(tmp_path / "w04state"); state.mkdir()
@@ -366,9 +406,9 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
                                "event_type string, value double")
     b1 = spark.createDataFrame([("click", 4.0)],
                                "event_type string, value double")
-    _merge_batch_into_state(b0, 0, state)
-    _merge_batch_into_state(b1, 1, state)
-    _merge_batch_into_state(b1, 1, state)  # replay of batch 1
+    _W04_FOLD.step(b0, 0, state)
+    _W04_FOLD.step(b1, 1, state)
+    _W04_FOLD.step(b1, 1, state)  # replay of batch 1
     final = spark.read.parquet(
         str(sorted(state.glob("v*"))[-1])).collect()
     by_type = {r["event_type"]: (r["n_events"], float(r["value_dec"]))
@@ -378,9 +418,9 @@ def test_merge_replay_is_idempotent(spark, tmp_path):
     state7 = Path(tmp_path / "w07state"); state7.mkdir()
     v0 = spark.createDataFrame([(1.0,), (2.0,)], "value double")
     v1 = spark.createDataFrame([(3.0,)], "value double")
-    _w07_merge(v0, 0, state7)
-    _w07_merge(v1, 1, state7)
-    _w07_merge(v1, 1, state7)  # replay
+    _W07_FOLD.step(v0, 0, state7)
+    _W07_FOLD.step(v1, 1, state7)
+    _W07_FOLD.step(v1, 1, state7)  # replay
     hist = spark.read.parquet(str(sorted(state7.glob("v*"))[-1]))
     assert hist.agg({"cnt": "sum"}).collect()[0][0] == 3
 
@@ -391,7 +431,7 @@ def test_w13_merge_replay_is_idempotent(spark, tmp_path):
     once-delivered answer."""
     from pathlib import Path
 
-    from mousedatapipeline_spark.plans.streaming_queries import _w13_merge
+    from mousedatapipeline_spark.plans.streaming_queries import _W13_FOLD
 
     state = Path(tmp_path / "w13state"); state.mkdir()
     b0 = spark.range(0, 50).selectExpr(
@@ -400,11 +440,11 @@ def test_w13_merge_replay_is_idempotent(spark, tmp_path):
     b1 = spark.range(50, 80).selectExpr(
         "id AS event_id", "'click' AS event_type",
         "CAST(id AS DOUBLE) / 7 AS value")
-    _w13_merge(b0, 0, state)
-    _w13_merge(b1, 1, state)
+    _W13_FOLD.step(b0, 0, state)
+    _W13_FOLD.step(b1, 1, state)
     once = spark.read.parquet(
         str(sorted(state.glob("v*"))[-1])).collect()
-    _w13_merge(b1, 1, state)  # replay of batch 1
+    _W13_FOLD.step(b1, 1, state)  # replay of batch 1
     replayed = spark.read.parquet(
         str(sorted(state.glob("v*"))[-1])).collect()
     key = lambda r: r["event_type"]  # noqa: E731
@@ -420,7 +460,7 @@ def test_w14_scd2_merge_replay_is_idempotent(spark, tmp_path):
 
     from mousedatapipeline_spark.plans.streaming_queries import (
         _W14_CLOSED_SCHEMA,
-        _w14_scd2_merge,
+        _W14_FOLD,
     )
 
     state = Path(tmp_path / "w14state")
@@ -432,8 +472,8 @@ def test_w14_scd2_merge_replay_is_idempotent(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(4, 10, 300, "b"), (5, 20, 400, "a"), (6, 20, 500, "c")],
         "event_id long, user_id long, ts_us long, event_type string")
-    _w14_scd2_merge(b0, 0, state)
-    _w14_scd2_merge(b1, 1, state)
+    _W14_FOLD.step(b0, 0, state)
+    _W14_FOLD.step(b1, 1, state)
 
     def snapshot():
         closed = spark.read.schema(_W14_CLOSED_SCHEMA).parquet(
@@ -444,7 +484,7 @@ def test_w14_scd2_merge_replay_is_idempotent(spark, tmp_path):
                 sorted(map(tuple, open_df.collect())))
 
     once = snapshot()
-    _w14_scd2_merge(b1, 1, state)  # replay of batch 1
+    _W14_FOLD.step(b1, 1, state)  # replay of batch 1
     assert snapshot() == once
     closed, open_rows = once
     # user 10: a@100 closed at 200? no — b@200 belongs to user 10 too:
@@ -489,7 +529,7 @@ def test_w15_compaction_merge_replay_and_carry(spark, tmp_path):
 
     from mousedatapipeline_spark.plans.streaming_queries import (
         _W15_BIN_SCHEMA,
-        _w15_compaction_merge,
+        _W15_FOLD,
     )
 
     state = Path(tmp_path / "w15state")
@@ -501,8 +541,8 @@ def test_w15_compaction_merge_replay_and_carry(spark, tmp_path):
     b1 = spark.createDataFrame(
         [("cc", 3, 2_000), ("web", 2, 20_000)],
         "source string, file_id long, sz long")
-    _w15_compaction_merge(b0, 0, state)
-    _w15_compaction_merge(b1, 1, state)
+    _W15_FOLD.step(b0, 0, state)
+    _W15_FOLD.step(b1, 1, state)
 
     def snapshot():
         closed = spark.read.schema(_W15_BIN_SCHEMA).parquet(
@@ -513,7 +553,7 @@ def test_w15_compaction_merge_replay_and_carry(spark, tmp_path):
                 sorted(map(tuple, open_df.collect())))
 
     once = snapshot()
-    _w15_compaction_merge(b1, 1, state)  # replay of batch 1
+    _W15_FOLD.step(b1, 1, state)  # replay of batch 1
     assert snapshot() == once
     closed, open_rows = once
     # cc: cum_before 0 / 10000 / 17000 -> bins 0,0,1: bin 0 (2 files,
@@ -536,9 +576,7 @@ def test_w15_out_of_order_batch_fails_loudly(spark, tmp_path):
 
     import pytest as _pytest
 
-    from mousedatapipeline_spark.plans.streaming_queries import (
-        _w15_compaction_merge,
-    )
+    from mousedatapipeline_spark.plans.streaming_queries import _W15_FOLD
 
     state = Path(tmp_path / "w15oo")
     (state / "closed").mkdir(parents=True)
@@ -547,9 +585,9 @@ def test_w15_out_of_order_batch_fails_loudly(spark, tmp_path):
                                "source string, file_id long, sz long")
     late = spark.createDataFrame([("cc", 3, 1_000)],
                                  "source string, file_id long, sz long")
-    _w15_compaction_merge(b0, 0, state)
+    _W15_FOLD.step(b0, 0, state)
     with _pytest.raises(Exception, match="ordering contract"):
-        _w15_compaction_merge(late, 1, state)
+        _W15_FOLD.step(late, 1, state)
 
 
 def test_w16_hll_merge_is_replay_idempotent_and_order_insensitive(
@@ -562,8 +600,8 @@ def test_w16_hll_merge_is_replay_idempotent_and_order_insensitive(
     from pathlib import Path
 
     from mousedatapipeline_spark.plans.streaming_queries import (
+        _W16_FOLD,
         _W16_REG_SCHEMA,
-        _w16_hll_merge,
     )
 
     schema = "event_id long, user_id long, event_type string, ts_us long"
@@ -579,13 +617,13 @@ def test_w16_hll_merge_is_replay_idempotent_and_order_insensitive(
         state = Path(root)
         state.mkdir()
         for i, b in enumerate(batches):
-            _w16_hll_merge(b, i, state)
+            _W16_FOLD.step(b, i, state)
         last = sorted(state.glob("v*"))[-1]
         return sorted(map(tuple, spark.read.schema(_W16_REG_SCHEMA)
                           .parquet(str(last)).collect())), state
 
     fwd, state = run([b0, b1], tmp_path / "fwd")
-    _w16_hll_merge(b1, 1, state)  # replay of batch 1
+    _W16_FOLD.step(b1, 1, state)  # replay of batch 1
     replayed = sorted(map(tuple, spark.read.schema(_W16_REG_SCHEMA)
                           .parquet(str(sorted(state.glob("v*"))[-1]))
                           .collect()))
@@ -654,3 +692,169 @@ def test_write_bucketed_managed_survives_stale_location(spark):
             assert spark.table(table).count() == 100
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def _sum_merge(prior, batch):
+    return (prior.unionByName(batch).groupBy("k")
+            .agg(F.sum("v").cast("bigint").alias("v")))
+
+
+def _sum_fold(merge=_sum_merge):
+    return fold.Fold(merge, "k string, v bigint")
+
+
+def _landed_stream(spark, work, n_rows=6, n_chunks=2):
+    df = spark.range(n_rows).selectExpr("'a' AS k", "id AS v")
+    landing = work / "landing"
+    schema = fold.land_chunks(df, landing, n_chunks, "v")
+    return watcher.stream_manifest(spark, str(landing), schema,
+                                   max_files_per_trigger=1)
+
+
+@pytest.mark.parametrize("ids", [(9999, 10000, 10001),
+                                 (999_999, 1_000_000, 1_000_001)])
+def test_fold_resumes_from_newest_version_by_batch_id(spark, tmp_path, ids):
+    """Versions are ordered by parsed batch id: by name, v9999 sorts
+    after v10000 (and v999999 after v1000000), so the next batch would
+    fold onto a stale version and drop a batch."""
+    f = _sum_fold()
+    for i, batch_id in enumerate(ids):
+        f.step(spark.createDataFrame([("a", 10 ** i)], "k string, v bigint"),
+               batch_id, tmp_path)
+    assert f.final(spark, tmp_path).collect() == [Row(k="a", v=111)]
+
+
+def test_drain_sets_partitions_only_around_start(spark, tmp_path):
+    """The caller's shuffle partitions (7 here) are replaced by the
+    drain's 4 only while the query starts: a thread polling the
+    caller's session sees 7 whenever no start() is in flight, while the
+    fold's batch session reads 4."""
+    seen_in_batch: list[str] = []
+
+    def merge(prior, batch):
+        seen_in_batch.append(batch.sparkSession.conf.get(_PARTS))
+        return _sum_merge(prior, batch)
+
+    stray: list[str] = []
+    stop = threading.Event()
+
+    def watch():
+        while not stop.is_set():
+            starting = fold._START_LOCK.locked()
+            v = spark.conf.get(_PARTS)
+            if v != "7" and not (starting or fold._START_LOCK.locked()):
+                stray.append(v)
+            time.sleep(0.001)
+
+    prev = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, "7")
+    t = threading.Thread(target=watch, daemon=True)
+    try:
+        stream = _landed_stream(spark, tmp_path)
+        t.start()
+        state = _sum_fold(merge).run(spark, stream, tmp_path)
+        assert state.collect() == [Row(k="a", v=15)]
+        assert spark.conf.get(_PARTS) == "7"
+    finally:
+        stop.set()
+        t.join(timeout=10)
+        spark.conf.set(_PARTS, prev)
+    assert not t.is_alive()
+    assert stray == [], f"caller saw the drain's partitions: {stray}"
+    assert seen_in_batch and set(seen_in_batch) == {"4"}
+
+
+def test_concurrent_drains_restore_caller_partitions(spark, tmp_path):
+    """Two drains starting on two threads must not lose the caller's
+    value: unlocked, A saves 7 and sets 4, B saves 4, A restores 7, B
+    restores 4."""
+    results: list[list[Row]] = []
+    errors: list[BaseException] = []
+
+    def run(i):
+        try:
+            work = tmp_path / f"drain{i}"
+            stream = _landed_stream(spark, work)
+            results.append(_sum_fold().run(spark, stream, work).collect())
+        except BaseException as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    prev = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, "7")
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert spark.conf.get(_PARTS) == "7"
+    finally:
+        spark.conf.set(_PARTS, prev)
+    assert errors == []
+    assert results == [[Row(k="a", v=15)]] * 2
+
+
+def test_drain_start_scope_under_thread_stress(spark):
+    """Many threads draining at once, switching as often as the
+    interpreter allows: every start() must see the drain's 4 and the
+    caller must end at its own 7. A drain here is a query that has
+    already finished, so only the set/start/restore sequence runs."""
+    import sys
+
+    class Finished:
+        def awaitTermination(self, _seconds):
+            return True
+
+    inside: list[str] = []
+
+    def start():
+        inside.append(spark.conf.get(_PARTS))
+        return Finished()
+
+    def run():
+        for _ in range(10):
+            fold.drain(spark, start)
+
+    prev, switch = spark.conf.get(_PARTS), sys.getswitchinterval()
+    spark.conf.set(_PARTS, "7")
+    sys.setswitchinterval(1e-6)
+    threads = [threading.Thread(target=run) for _ in range(8)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert spark.conf.get(_PARTS) == "7"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.set(_PARTS, prev)
+    assert len(inside) == 80 and set(inside) == {"4"}
+
+
+def test_failing_merge_propagates_and_removes_workdir(spark):
+    def boom(prior, batch):
+        raise ValueError("merge failed on purpose")
+
+    dirs = []
+    with pytest.raises(Exception, match="merge failed on purpose"):
+        with fold.workdir("mouse_fold_test_") as work:
+            dirs.append(work)
+            _sum_fold(boom).run(spark, _landed_stream(spark, work), work)
+    assert len(dirs) == 1 and not dirs[0].exists()
+
+
+def test_streaming_queries_leave_no_work_dirs(spark):
+    """Every w-query removes its work dir, and its answer stays readable
+    after the dir is gone. Runs on the small corpus checked in for the
+    benchmark (an sf0.01 copy)."""
+    from mousedatapipeline_spark.plans import streaming_queries as SQ
+
+    corpus = str(Path(__file__).resolve().parents[1] / "perfbench" / "base")
+    tmp = Path(tempfile.gettempdir())
+    before = set(tmp.glob("mouse_*"))
+    for name in _W_QUERIES:
+        rows = getattr(SQ, name)(spark, corpus).collect()
+        assert rows, name
+    assert set(tmp.glob("mouse_*")) == before
