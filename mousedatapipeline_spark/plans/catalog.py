@@ -15,9 +15,12 @@ Conventions (required for the driver's order-insensitive value hash):
 
 from __future__ import annotations
 
+import functools
 import importlib
+import json
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,309 +84,58 @@ def _load_all() -> None:
             traceback.print_exc()
 
 
-# Queries that already earned a fully-green row in CORRECTNESS_r01.json.
-# The driver's per-round correctness gate samples a prefix of the catalog
-# (round 1 stopped after 50 of 86), so ordering is evidence policy:
-# queries WITHOUT a green driver row yet — the round-1 unchecked tail,
-# the two round-1 reds (m02/m08), and anything newly added — register
-# first, and the already-proven ones go last.
-#
-# ROTATION: each round, fold the new CORRECTNESS_r{N}.json green names
-# into a _R{N}_GREEN set below so the still-unrowed remainder claims
-# the ~50-row prefix next time. Repeat per round until every query has
-# a row; queries whose implementation changed after their row go back
-# into the pool via _STALE_PROOF.
-_R01_GREEN = frozenset({
-    "q01_pricing_summary", "q02_order_census", "q03_region_revenue",
-    "q04_asof_view_before_purchase", "q05_window_propagation",
-    "q06_latest_order_per_customer", "q07_customers_without_orders",
-    "q08_active_customers_semi", "q09_thickness_physics", "q10_energy_tcf",
-    "q11_stack_stats", "q12_identifiers", "q13_repetition_stack",
-    "q14_first_file", "q15_date_arith", "q16_column_profile",
-    "q17_rollup_revenue", "q18_snapshot_diff", "q19_incremental_agg",
-    "q20_cube_revenue", "q21_pivot_status_counts", "q22_customer_set_ops",
-    "q23_exists_slow_orders", "q24_window_analytics",
-    "q25_group_percentiles", "q26_above_avg_orders", "q27_topk_open_orders",
-    "q28_sole_late_supplier", "q30_fk_orphan_audit", "m01_stacked_summary",
-    "m03_flux_thickness_table", "m04_completeness", "m05_pipeline_e2e",
-    "m06_asof_mask", "m07_dispersant_background", "m09_cogroup_asof",
-    "t01_token_stats", "t02_language_id", "t03_quality_score",
-    "t04_fingerprint", "t05_tfidf", "t06_top_terms",
-    "t09_repetition_signals", "t10_decontamination", "t11_span_dedup",
-    "t12_vocab_coverage", "t13_source_dashboard", "s18_bloom_decontam",
-})
+# Registration order is evidence policy. Each correctness round re-proves
+# a ~50-query prefix of the catalog against the oracles and records the
+# rows in CORRECTNESS_rNN.json at the repo root. A hash-green row proves a
+# query until its code changes (_CHANGED_AFTER). Unproven queries claim
+# the prefix; proven ones follow, least recently proven first.
+_ROOT = Path(__file__).resolve().parents[2]
 
-# Green rows earned in CORRECTNESS_r02.json (all 50 sampled passed).
-_R02_GREEN = frozenset({
-    "m02_background_thickness", "m08_average_to_counts",
-    "m10_mask_diameter", "m11_stacker_freshness", "m12_canstack_checklist",
-    "m13_nexus_ingest_merge", "m14_stacked_sink_roundtrip",
-    "m16_daily_ops_dashboard", "m17_repetition_drift_qc",
-    "q31_scalable_percentiles", "q32_grouping_sets",
-    "q34_bucketed_join_roundtrip", "q35_scd2_intervals",
-    "q36_unpivot_metrics", "q37_distribution_ranks",
-    "q38_constraint_audit", "q39_partition_backfill",
-    "q40_point_in_time_lookup", "s01_exact_dedup", "s02_ngram_jaccard",
-    "s03_minhash_lsh", "s04_simhash", "s05_knn_cosine", "s06_ann_lsh",
-    "s07_label_centroids", "s08_ann_ivf", "s09_embedding_neardup",
-    "s10_kmeans_ivf", "s14_neardup_components", "s19_lsh_verified_neardup",
-    "s20_centroid_outliers", "s21_semantic_dedup", "s22_incremental_neardup",
-    "s23_embedding_quantization", "s24_containment_neardup",
-    "s25_ann_recall", "s26_minhash_accuracy", "s27_triangle_count",
-    "s28_threshold_sweep", "s29_bbit_minhash", "t14_unigram_surprisal",
-    "t15_bigram_surprisal", "t17_classifier_filter", "t18_novelty_scan",
-    "t19_rag_chunking", "t21_shared_span_localization",
-    "t22_dedup_adjusted_tokens", "t23_langid_confusion",
-    "t24_text_normalization", "t25_token_entropy",
-})
+# Queries whose code changed after the given round: a green row from that
+# round or earlier no longer proves them. Drop an entry once re-proven.
+_CHANGED_AFTER: dict[str, int] = {
+    # operators/graph.py: driver-side connected components; s34 uses s14.
+    **dict.fromkeys(("c06_production_dedup_e2e", "s14_neardup_components",
+        "s21_semantic_dedup", "mm06_media_dedup_clusters",
+        "s34_quality_canonical"), 11),
+    # streaming/fold.py: w01-w16 rewritten on one drain-and-fold harness.
+    **dict.fromkeys(("w01_stream_tumbling_counts", "w02_stream_sessionization",
+        "w03_stream_dedup", "w04_stream_incremental_agg",
+        "w05_stream_stream_join", "w06_stream_hll_users",
+        "w07_stream_quantile_histogram", "w08_stream_session_window",
+        "w09_stream_topk", "w10_stream_decontam",
+        "w12_stream_running_profile", "w13_stream_bootstrap",
+        "w14_stream_scd2", "w15_stream_compaction",
+        "w16_stream_sliding_hll"), 11),
+    # q39: per-write partitionOverwriteMode; q34: merge hint, no toggle.
+    "q39_partition_backfill": 11, "q34_bucketed_join_roundtrip": 11,
+}
 
-# Green rows earned in CORRECTNESS_r03.json (all 50 sampled passed).
-# This rotation landed exactly on the round-2 backlog (e*/w*/c*/k*,
-# s12-s17/s30/s32, t07/t08/t16/t20, mm03, q33, q41) and also renewed
-# every then-stale proof (e11, s08, s24, s27, w08).
-_R03_GREEN = frozenset({
-    "q33_approx_percentiles", "s12_stratified_sample",
-    "s13_dataset_split", "t07_pii_redaction", "t08_sequence_packing",
-    "s15_exact_k_sample", "s16_temperature_mix", "s17_shuffle_shards",
-    "t16_jsonl_export_roundtrip", "c01_curation_e2e",
-    "c02_dedup_funnel_report", "t20_sorted_export_roundtrip",
-    "c03_mixture_plan", "s08_ann_ivf", "s24_containment_neardup",
-    "s27_triangle_count", "s30_cluster_quality", "s32_split_drift",
-    "e01_tumbling_counts", "e02_sessionization",
-    "e03_range_join_attribution", "e04_salted_user_join",
-    "e05_json_extraction", "e06_funnel_stages", "e07_cohort_retention",
-    "e08_trailing_hour_stats", "e09_locf_gap_fill",
-    "e10_hourly_distinct_hll", "e11_conversion_latency",
-    "e12_event_transitions", "e13_skew_report",
-    "e14_native_session_window", "e15_robust_outliers",
-    "e16_rolling_active_users", "e17_hourly_anomalies",
-    "e18_time_rollup", "e19_weekly_churn", "mm03_phash_neardup",
-    "k01_cms_heavy_hitters", "k02_hll_distinct",
-    "w01_stream_tumbling_counts", "w02_stream_sessionization",
-    "w03_stream_dedup", "w04_stream_incremental_agg",
-    "w05_stream_stream_join", "w06_stream_hll_users",
-    "w07_stream_quantile_histogram", "w08_stream_session_window",
-    "w09_stream_topk", "q41_grouped_linear_fit",
-})
 
-# Green rows earned in CORRECTNESS_r04.json (all 44 sampled oracled
-# queries passed; the remaining 6 rows passed the rows-only check).
-# This rotation completed the record: every oracled catalog query now
-# has at least one green driver row across r01-r04.
-_R04_GREEN = frozenset({
-    "c04_quality_threshold_curve", "e20_decayed_engagement",
-    "e21_sequence_anomaly", "e22_bootstrap_stderr",
-    "e25_behavioral_entropy", "k03_hll_set_ops", "k04_join_size_estimate",
-    "mm06_media_dedup_clusters", "mm07_audio_neardup",
-    "mm08_audio_framing_census", "mm09_video_neardup",
-    "mm10_modality_census", "q42_orc_partitioned_roundtrip",
-    "q43_schema_evolution_merge", "q44_logistic_regression_steps",
-    "q45_delta_join_maintenance", "q46_sql_frontdoor",
-    "s33_cross_source_dup_matrix", "s34_quality_canonical",
-    "s35_hard_negatives", "s36_product_quantization",
-    "s37_ivf_probe_sweep", "s38_knn_graph_stats",
-    "s39_ivf_pq_index_build", "t26_substring_removal",
-    "t27_bpe_merge_stats", "t28_dsir_importance",
-    "t30_split_contamination", "t31_dedup_savings_by_source",
-    "t32_zipf_fit", "t33_heaps_fit", "t34_corpus_drift",
-    "t35_redaction_impact", "w10_stream_decontam",
-    "w12_stream_running_profile", "w13_stream_bootstrap",
-    # r04 also renewed these prior rows:
-    "q01_pricing_summary", "q02_order_census", "q03_region_revenue",
-    "q04_asof_view_before_purchase", "q05_window_propagation",
-    "q06_latest_order_per_customer", "q07_customers_without_orders",
-    "s24_containment_neardup",
-})
+@functools.cache
+def _last_green() -> dict[str, int]:
+    """``{query: newest round with a hash-green CORRECTNESS_rNN row}``."""
+    last: dict[str, int] = {}
+    for path in _ROOT.glob("CORRECTNESS_r[0-9]*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True:
+                last[name] = max(last.get(name, 0), rnd)
+    return last
 
-# Green rows earned in CORRECTNESS_r05.json (all 50 sampled queries
-# fully green — rows + schema + hash, zero err).
-_R05_GREEN = frozenset({
-    "c05_compaction_plan", "e22_bootstrap_stderr",
-    "e26_deletion_propagation", "m18_flux_contract", "m19_manifest_scan",
-    "m20_quarantine_roundtrip", "mm01_media_features",
-    "mm02_resized_frames", "mm03_phash_neardup",
-    "mm04_audio_frame_features", "mm05_scene_changes",
-    "mm06_media_dedup_clusters", "mm07_audio_neardup",
-    "mm08_audio_framing_census", "q47_merge_upsert",
-    "q48_zorder_skipping", "s02_ngram_jaccard", "s03_minhash_lsh",
-    "s04_simhash", "s09_embedding_neardup", "s14_neardup_components",
-    "s18_bloom_decontam", "s19_lsh_verified_neardup",
-    "s21_semantic_dedup", "s22_incremental_neardup",
-    "s24_containment_neardup", "s25_ann_recall", "s26_minhash_accuracy",
-    "s28_threshold_sweep", "s29_bbit_minhash",
-    "s33_cross_source_dup_matrix", "s34_quality_canonical",
-    "s35_hard_negatives", "s37_ivf_probe_sweep", "s40_neardup_pagerank",
-    "s41_power_iteration_pca", "s42_matryoshka_recall",
-    "s43_label_propagation", "t10_decontamination",
-    "t15_bigram_surprisal", "t18_novelty_scan", "t26_substring_removal",
-    "t27_bpe_merge_stats", "t28_dsir_importance",
-    "t30_split_contamination", "t31_dedup_savings_by_source",
-    "t34_corpus_drift", "t36_bm25_topk", "t37_textrank_keywords",
-    "u02_beam_contract",
-})
 
-# Green rows earned in CORRECTNESS_r06.json (48 hash-green of 50
-# sampled; u01/m15 are the declared rows-only kernels). This rotation
-# covered every round-5/6 stale, so the pre-r07 stale pool drained to
-# zero before the round-7 edits below re-opened it.
-_R06_GREEN = frozenset({
-    "c06_production_dedup_e2e", "e10_hourly_distinct_hll",
-    "k03_hll_set_ops", "k05_sliding_hll", "mm09_video_neardup",
-    "mm10_modality_census", "q01_pricing_summary", "q02_order_census",
-    "q03_region_revenue", "q04_asof_view_before_purchase",
-    "q05_window_propagation", "q06_latest_order_per_customer",
-    "q07_customers_without_orders", "q08_active_customers_semi",
-    "q09_thickness_physics", "q10_energy_tcf", "q11_stack_stats",
-    "q12_identifiers", "q13_repetition_stack",
-    "q34_bucketed_join_roundtrip", "s02_ngram_jaccard",
-    "s03_minhash_lsh", "s14_neardup_components",
-    "s19_lsh_verified_neardup", "s21_semantic_dedup",
-    "s22_incremental_neardup", "s24_containment_neardup",
-    "s26_minhash_accuracy", "s27_triangle_count", "s28_threshold_sweep",
-    "s29_bbit_minhash", "s33_cross_source_dup_matrix",
-    "s34_quality_canonical", "s35_hard_negatives",
-    "s40_neardup_pagerank", "s43_label_propagation", "u03_mask_contract",
-    "w04_stream_incremental_agg", "w06_stream_hll_users",
-    "w07_stream_quantile_histogram", "w08_stream_session_window",
-    "w09_stream_topk", "w10_stream_decontam",
-    "w12_stream_running_profile", "w13_stream_bootstrap",
-    "w14_stream_scd2", "w15_stream_compaction", "w16_stream_sliding_hll",
-})
-
-# Green rows earned in CORRECTNESS_r07.json (48 hash-green of 50
-# sampled; u01/m15 are the declared rows-only kernels). This rotation
-# covered all 10 round-7 stales, draining the pre-r08 pool to zero
-# before the round-8 edits below re-opened it.
-_R07_GREEN = frozenset({
-    "c06_production_dedup_e2e", "k03_hll_set_ops",
-    "m13_nexus_ingest_merge", "q01_pricing_summary", "q02_order_census",
-    "q03_region_revenue", "q04_asof_view_before_purchase",
-    "q05_window_propagation", "q06_latest_order_per_customer",
-    "q07_customers_without_orders", "q08_active_customers_semi",
-    "q09_thickness_physics", "q10_energy_tcf", "q11_stack_stats",
-    "q12_identifiers", "q13_repetition_stack", "q14_first_file",
-    "q15_date_arith", "q16_column_profile", "q17_rollup_revenue",
-    "q18_snapshot_diff", "q19_incremental_agg", "q20_cube_revenue",
-    "q21_pivot_status_counts", "q22_customer_set_ops",
-    "q23_exists_slow_orders", "q24_window_analytics",
-    "q25_group_percentiles", "q26_above_avg_orders",
-    "q27_topk_open_orders", "q28_sole_late_supplier",
-    "q30_fk_orphan_audit", "q31_scalable_percentiles",
-    "q32_grouping_sets", "q33_approx_percentiles",
-    "q34_bucketed_join_roundtrip", "q35_scd2_intervals",
-    "q36_unpivot_metrics", "q37_distribution_ranks",
-    "q38_constraint_audit", "q39_partition_backfill",
-    "s19_lsh_verified_neardup", "s33_cross_source_dup_matrix",
-    "s40_neardup_pagerank", "s43_label_propagation",
-    "t12_vocab_coverage", "t27_bpe_merge_stats",
-    "t37_textrank_keywords",
-})
-
-# Green rows earned in CORRECTNESS_r08.json (48 hash-green of 50
-# sampled; u01/m15 are the declared rows-only kernels). This rotation
-# covered all 9 round-8 stales, draining the pre-r09 pool to zero
-# before the round-9 edits below re-opened it.
-_R08_GREEN = frozenset({
-    "m13_nexus_ingest_merge", "q01_pricing_summary", "q02_order_census",
-    "q03_region_revenue", "q04_asof_view_before_purchase",
-    "q05_window_propagation", "q06_latest_order_per_customer",
-    "q07_customers_without_orders", "q08_active_customers_semi",
-    "q09_thickness_physics", "q10_energy_tcf", "q11_stack_stats",
-    "q12_identifiers", "q13_repetition_stack", "q14_first_file",
-    "q15_date_arith", "q16_column_profile", "q17_rollup_revenue",
-    "q18_snapshot_diff", "q19_incremental_agg", "q20_cube_revenue",
-    "q21_pivot_status_counts", "q22_customer_set_ops",
-    "q23_exists_slow_orders", "q24_window_analytics",
-    "q25_group_percentiles", "q26_above_avg_orders",
-    "q27_topk_open_orders", "q28_sole_late_supplier",
-    "q30_fk_orphan_audit", "q31_scalable_percentiles",
-    "q32_grouping_sets", "q33_approx_percentiles",
-    "q34_bucketed_join_roundtrip", "q35_scd2_intervals",
-    "q36_unpivot_metrics", "q37_distribution_ranks",
-    "q38_constraint_audit", "q39_partition_backfill",
-    "q40_point_in_time_lookup",
-    "s08_ann_ivf", "s14_neardup_components", "s34_quality_canonical",
-    "s35_hard_negatives", "s37_ivf_probe_sweep", "s38_knn_graph_stats",
-    "s39_ivf_pq_index_build", "t12_vocab_coverage",
-})
-
-# Green rows earned in CORRECTNESS_r09.json (48 hash-green of 50
-# sampled; u01/m15 are the declared rows-only kernels). This rotation
-# covered all 25 round-9 stales, draining the pre-r10 pool to zero
-# before the round-10 edits below re-opened it.
-_R09_GREEN = frozenset({
-    "c06_production_dedup_e2e", "e16_rolling_active_users",
-    "e21_sequence_anomaly", "k01_cms_heavy_hitters",
-    "m13_nexus_ingest_merge", "mm03_phash_neardup",
-    "mm06_media_dedup_clusters", "mm07_audio_neardup",
-    "mm09_video_neardup", "q01_pricing_summary", "q02_order_census",
-    "q03_region_revenue", "q04_asof_view_before_purchase",
-    "q05_window_propagation", "q06_latest_order_per_customer",
-    "q07_customers_without_orders", "q08_active_customers_semi",
-    "q09_thickness_physics", "q10_energy_tcf", "q11_stack_stats",
-    "q12_identifiers", "q13_repetition_stack", "q14_first_file",
-    "q15_date_arith", "q16_column_profile", "q17_rollup_revenue",
-    "q18_snapshot_diff", "q19_incremental_agg", "q20_cube_revenue",
-    "q21_pivot_status_counts", "q22_customer_set_ops",
-    "q23_exists_slow_orders", "q28_sole_late_supplier", "s08_ann_ivf",
-    "s10_kmeans_ivf", "s19_lsh_verified_neardup",
-    "s22_incremental_neardup", "s27_triangle_count",
-    "s30_cluster_quality", "s33_cross_source_dup_matrix",
-    "s35_hard_negatives", "s37_ivf_probe_sweep", "s38_knn_graph_stats",
-    "s39_ivf_pq_index_build", "s40_neardup_pagerank",
-    "s43_label_propagation", "t18_novelty_scan",
-    "t30_split_contamination",
-})
-
-# Queries whose implementation changed AFTER their last green driver row:
-# the proof is stale, so they rejoin the unproven pool (rotation rule).
-_STALE_PROOF = frozenset({
-    # Round-10 s14 funnel (VERDICT r09 item 2): s14 now runs the
-    # exact-dedup-first c06 shape — identical (lang, source, text)
-    # rows collapse to a representative contributing a linear star,
-    # and s02's exact enumeration + the union top-m degree cap run
-    # over DISTINCT texts only, so duplicate mass never reaches the
-    # quadratic stage (the r09 LSH A/B was REJECTED: >= 2-of-4 bands
-    # misses 103/112 exact 0.6-edges at sf0.01). Components verified
-    # output-identical to the old definition at sf0.001/0.01/0.1.
-    # s02's enumeration was factored into exact_jaccard_edges (plan
-    # unchanged) so s14 shares it verbatim; s34 composes s14's plan
-    # AND oracle, s27 composes s02's factored stage. Re-verified
-    # locally at sf0.001/0.01/0.1 the day of the change.
-    "s02_ngram_jaccard", "s14_neardup_components",
-    "s34_quality_canonical", "s27_triangle_count",
-    # Round-10 ADVICE fixes: phash_neardup_pairs' guarded member
-    # table is now pinned (eager localCheckpoint) so the group-budget
-    # aggregation runs once, not once per consumer branch —
-    # value-identical, plan changed for both pair-surface consumers.
-    # Re-verified locally at sf0.001/0.01/0.1 the day of the change.
-    "mm03_phash_neardup", "mm07_audio_neardup",
-    # Round-10 ingest-fidelity items (VERDICT r09 item 1 + ADVICE):
-    # minihdf5 gained dense attribute/link storage (fractal heap +
-    # v2 B-tree, read and write paths) and message-body bounds checks
-    # in both header parsers; normalize_unit now collapses whitespace
-    # only around operators ('m s' can no longer alias to 'ms').
-    # m13's fixture values are identical, but its ingest modules
-    # changed. Re-verified locally at sf0.001/0.01/0.1 the day of
-    # the change.
-    "m13_nexus_ingest_merge",
-})
-
-_PROVEN = (_R01_GREEN | _R02_GREEN | _R03_GREEN | _R04_GREEN
-           | _R05_GREEN | _R06_GREEN | _R07_GREEN
-           | _R08_GREEN | _R09_GREEN) - _STALE_PROOF
+def _proven_round(name: str) -> int:
+    """Round of the query's standing proof, 0 if it has none."""
+    rnd = _last_green().get(name, 0)
+    return rnd if rnd > _CHANGED_AFTER.get(name, 0) else 0
 
 
 def all_queries() -> dict[str, QuerySpec]:
     _load_all()
-    # Within the unproven block, oracled queries outrank rows-only ones,
-    # and batch queries outrank streaming ones (streaming rows carry
-    # trigger fixed costs and their semantics are batch-parity anyway):
-    # if the driver again samples a 50-query prefix, the fast hash-gated
-    # checks claim the slots and the weak/slow checks yield the tail.
+    # Within a round: oracled batch, oracled streaming, then rows-only.
     def rank(item):
         n, s = item
-        return (n in _PROVEN, s.oracle is None, n.startswith("w"))
+        return (_proven_round(n), s.oracle is None, n.startswith("w"))
     return dict(sorted(_REGISTRY.items(), key=rank))
 
 

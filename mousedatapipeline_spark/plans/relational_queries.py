@@ -1386,9 +1386,9 @@ def q33_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ' AS VARCHAR) AS DOUBLE)')),
     doc="Bucketed co-located join through the sink: orders and customer "
         "are written bucketed by custkey (16 buckets, sorted), read "
-        "back from the catalog, and joined with the broadcast threshold "
-        "disabled — the join must carry ZERO exchanges (asserted by a "
-        "plan test), which is THE 100-TB pattern for a fact table "
+        "back from the catalog, and joined under a merge hint — the "
+        "join must carry ZERO exchanges (asserted by a plan test), "
+        "which is THE 100-TB pattern for a fact table "
         "joined repeatedly on one key. The oracle computes the same "
         "aggregation straight from the source, so the bucketed write/"
         "read round trip is value-checked too.",
@@ -1406,23 +1406,16 @@ def q34_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                    sort_cols=["o_custkey"], path=base + "/orders")
     write_bucketed(c, "q34_customer_b", ["c_custkey"], 16,
                    sort_cols=["c_custkey"], path=base + "/customer")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = (spark.table("q34_orders_b")
-             .join(spark.table("q34_customer_b"),
-                   F.col("o_custkey") == F.col("c_custkey")))
-        # Force the join plan to resolve under the no-broadcast conf;
-        # the result DataFrame keeps that physical plan.
-        out = (j.join(F.broadcast(n),
-                      F.col("c_nationkey") == F.col("n_nationkey"))
-               .groupBy(F.col("n_name").alias("nation"))
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                    stable_round(dsum("o_totalprice")).alias("revenue")))
-        out.count()  # materialize under the conf (plan is decided here)
-        return out
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # The merge hint keeps the co-located sort-merge join at any
+    # session broadcast threshold.
+    j = (spark.table("q34_orders_b").hint("merge")
+         .join(spark.table("q34_customer_b"),
+               F.col("o_custkey") == F.col("c_custkey")))
+    return (j.join(F.broadcast(n),
+                   F.col("c_nationkey") == F.col("n_nationkey"))
+            .groupBy(F.col("n_name").alias("nation"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                 stable_round(dsum("o_totalprice")).alias("revenue")))
 
 
 @register(

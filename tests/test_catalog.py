@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import math
 
 import duckdb
@@ -52,22 +53,17 @@ def test_stable_round_is_close_to_true_round(spark):
         assert abs(got - round(x, 6)) <= 1.1e-6
 
 
-def test_registration_order_is_verification_policy():
-    """The catalog prefix is evidence policy: every query WITHOUT a
-    green driver row must register before every proven one (the driver
-    samples a ~50-query prefix per round), with rows-only checks last
-    within the unproven block."""
-    from mousedatapipeline_spark.plans.catalog import (
-        _PROVEN,
-        all_queries,
-    )
-    qs = all_queries()
+def _assert_order_policy(qs) -> None:
+    """Every query WITHOUT a standing green row registers before every
+    proven one (each correctness round samples a ~50-query prefix),
+    rows-only checks go last within the unproven block, and proven
+    queries follow least recently proven first."""
     names = list(qs)
-    first_proven = next(i for i, n in enumerate(names) if n in _PROVEN)
+    rounds = [catalog._proven_round(n) for n in names]
+    first_proven = next((i for i, r in enumerate(rounds) if r), len(names))
     # no unproven query after the first proven one
-    for n in names[first_proven:]:
-        assert n in _PROVEN, (
-            f"unproven query {n!r} ranked after proven block")
+    for n, r in zip(names[first_proven:], rounds[first_proven:]):
+        assert r, f"unproven query {n!r} ranked after proven block"
     # rows-only checks yield the prefix to hash-gated ones: within the
     # unproven block no oracled query may rank after a rows-only one
     unproven = names[:first_proven]
@@ -78,14 +74,79 @@ def test_registration_order_is_verification_policy():
         else:
             assert not seen_rows_only, (
                 f"oracled {n!r} ranked after a rows-only query")
-    # every _PROVEN name actually exists (typo guard for the rotation)
-    assert _PROVEN <= set(names)
+    # least recently proven first
+    assert rounds[first_proven:] == sorted(rounds[first_proven:])
+
+
+def test_registration_order_is_verification_policy():
+    """The catalog prefix is evidence policy, derived from the checked-out
+    CORRECTNESS_r*.json ledger."""
+    qs = catalog.all_queries()
+    # a broken ledger root would silently leave everything unproven
+    assert catalog._last_green(), "no CORRECTNESS_r*.json rows found"
+    _assert_order_policy(qs)
+    # every _CHANGED_AFTER name actually exists (typo guard)
+    assert catalog._CHANGED_AFTER.keys() <= set(qs)
+
+
+@pytest.fixture
+def ledger(tmp_path, monkeypatch):
+    """Point the catalog's ledger at an empty ``tmp_path``; yields a
+    writer of fake ``CORRECTNESS_rNN.json`` files from
+    ``{query: hash_match}``."""
+    monkeypatch.setattr(catalog, "_ROOT", tmp_path)
+    catalog._last_green.cache_clear()
+
+    def write(rnd: int, rows: dict) -> None:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(
+            {n: {"rows_match": h, "schema_match": h, "hash_match": h,
+                 "err": None} for n, h in rows.items()}))
+        catalog._last_green.cache_clear()
+
+    yield write
+    catalog._last_green.cache_clear()
+
+
+def test_ledger_rows_only_and_red_rows_never_prove(ledger):
+    ledger(1, {"u01_beam_analysis": None, "q02_order_census": False,
+               "q01_pricing_summary": True})
+    assert catalog._proven_round("u01_beam_analysis") == 0
+    assert catalog._proven_round("q02_order_census") == 0
+    assert catalog._proven_round("q01_pricing_summary") == 1
+
+
+def test_ledger_change_unproves_until_a_later_round(ledger, monkeypatch):
+    monkeypatch.setitem(catalog._CHANGED_AFTER, "q01_pricing_summary", 3)
+    ledger(2, {"q01_pricing_summary": True})
+    ledger(3, {"q01_pricing_summary": True})
+    assert catalog._proven_round("q01_pricing_summary") == 0
+    ledger(4, {"q01_pricing_summary": True})
+    assert catalog._proven_round("q01_pricing_summary") == 4
+
+
+def test_ledger_absent_leaves_everything_unproven(ledger):
+    qs = catalog.all_queries()
+    assert not catalog._last_green()
+    assert not any(catalog._proven_round(n) for n in qs)
+    _assert_order_policy(qs)
+
+
+def test_ledger_least_recently_proven_first(ledger):
+    ledger(1, {"q01_pricing_summary": True, "q02_order_census": True})
+    ledger(2, {"q02_order_census": True, "q03_region_revenue": True})
+    ledger(3, {"q04_asof_view_before_purchase": True})
+    qs = catalog.all_queries()
+    names = list(qs)
+    assert names[-4:] == ["q01_pricing_summary", "q02_order_census",
+                          "q03_region_revenue",
+                          "q04_asof_view_before_purchase"]
+    _assert_order_policy(qs)
 
 
 def test_proven_query_never_composes_unproven_one():
     """Staleness must propagate through composition: if query X's plan
     function is called by query Y, an edit that stales X stales Y's
-    results too, so Y may not stay in _PROVEN while X is out (the r06
+    results too, so Y may not stay proven while X is out (the r06
     review caught exactly this: s27 composes s02, whose shingle hash
     changed, but only s02 was staled).  Edges are detected as direct
     ``<registered_name>(`` call sites in the composer's source — shared
@@ -94,9 +155,8 @@ def test_proven_query_never_composes_unproven_one():
     import inspect
     import re
 
-    from mousedatapipeline_spark.plans.catalog import _PROVEN, all_queries
-
-    qs = all_queries()
+    qs = catalog.all_queries()
+    proven = {n for n in qs if catalog._proven_round(n)}
     calls: dict[str, set[str]] = {}
     for name, spec in qs.items():
         src = inspect.getsource(spec.spark)
@@ -115,14 +175,14 @@ def test_proven_query_never_composes_unproven_one():
     composed = {n: c for n, c in calls.items() if c}
     assert composed, "expected at least one composing query (s14->s02)"
     for name, callees in composed.items():
-        if name in _PROVEN:
+        if name in proven:
             # Rows-only queries (oracle=None: u01, m15) can never be
             # driver-proven BY DESIGN — their oracled contract twins
             # (u02, m18) are the proof mechanism, so a twin composing
             # its rows-only subject is the intended shape, not a leak.
             leaked = {c for c in callees
-                      if c not in _PROVEN and qs[c].oracle is not None}
+                      if c not in proven and qs[c].oracle is not None}
             assert not leaked, (
                 f"{name!r} is driver-proven but composes unproven "
                 f"{sorted(leaked)} — stale the composer too "
-                f"(plans/catalog.py _STALE_PROOF)")
+                f"(plans/catalog.py _CHANGED_AFTER)")

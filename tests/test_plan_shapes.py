@@ -540,6 +540,41 @@ def test_q34_bucketed_join_zero_exchanges(spark):
         spark.sql("DROP TABLE IF EXISTS q34_customer_b")
 
 
+def _subtree(plan: str, node: str) -> str:
+    """The tree-string lines of the first ``node`` and its children."""
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if node in ln)
+    depth = lines[i].index(node)
+    sub = [lines[i]]
+    for ln in lines[i + 1:]:
+        if re.search(r"[A-Za-z]", ln).start() <= depth:
+            break
+        sub.append(ln)
+    return "\n".join(sub)
+
+
+@_needs_data
+def test_q34_merge_hint_leaves_session_threshold(spark):
+    """Under the session's own (enabled) broadcast threshold, q34's merge
+    hint keeps the bucketed join a SortMergeJoin that no Exchange feeds,
+    and the threshold reads the same afterwards."""
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    assert before.strip() not in ("-1", "0")
+    try:
+        df = catalog.all_queries()["q34_bucketed_join_roundtrip"].spark(
+            spark, SF_DIR)
+        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") \
+            == before
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan, plan
+        smj = _subtree(plan, "SortMergeJoin")
+        assert smj.count("Bucketed: true") == 2, plan
+        assert "Exchange" not in smj, plan
+    finally:
+        spark.sql("DROP TABLE IF EXISTS q34_orders_b")
+        spark.sql("DROP TABLE IF EXISTS q34_customer_b")
+
+
 @_needs_data
 def test_c01_curation_two_shuffles(spark):
     """The end-to-end curation plan is the dedup window + the census

@@ -2,47 +2,38 @@
 query — which round's driver correctness row proves it (if any), and
 what local verification the unproven backlog carries meanwhile.
 
-Sources: plans/catalog.py's green/stale sets (the rotation policy's
-single source of truth) and the CORRECTNESS_r*.json files.
+Sources: the CORRECTNESS_r*.json rows as plans/catalog.py reads them
+(``_proven_round``) and its hand-kept ``_CHANGED_AFTER`` staleness map.
 
 Run after catalog changes: PYTHONPATH=. python tools/verification_doc.py
 """
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 
 
 def main() -> None:
-    import mousedatapipeline_spark.plans.catalog as cat
     from mousedatapipeline_spark.plans.catalog import (
-        _PROVEN,
-        _STALE_PROOF,
+        _CHANGED_AFTER,
+        _proven_round,
         all_queries,
     )
-    green_rounds = sorted(
-        (n for n in dir(cat) if n.startswith("_R") and n.endswith("_GREEN")),
-        reverse=True)  # latest round first
     qs = all_queries()
     rows = []
     for name, spec in qs.items():
-        state = None
-        if name in _STALE_PROOF:
-            state = "re-verify (changed after its green row)"
+        if rnd := _proven_round(name):
+            state = f"driver-green (r{rnd:02d})"
+        elif name in _CHANGED_AFTER:
+            state = f"re-verify (changed after r{_CHANGED_AFTER[name]:02d})"
+        elif spec.oracle is None:
+            state = "rows-only (non-SQL kernel; closed-form tests)"
         else:
-            for gr in green_rounds:
-                if name in getattr(cat, gr):
-                    state = f"driver-green ({gr[1:4].lower()})"
-                    break
-        if state is None:
-            state = ("rows-only (non-SQL kernel; closed-form tests)"
-                     if spec.oracle is None
-                     else "local-green (queued for driver)")
+            state = "local-green (queued for driver)"
         rows.append((name, state))
-    n_proven = sum(n in _PROVEN for n, _ in rows)
+    n_proven = sum(_proven_round(n) > 0 for n, _ in rows)
     n_rows_only = sum(qs[n].oracle is None for n, _ in rows)
     n_queued = len(rows) - n_proven - n_rows_only
     lines = [
