@@ -11,6 +11,11 @@ Conventions (required for the driver's order-insensitive value hash):
   different orders; per-row IEEE arithmetic matches bit-exactly, but
   reassociated sums and libm transcendentals do not);
 - cast integer-ish outputs to BIGINT on both sides.
+
+A query that composes another query's oracle imports that query's
+module at the top and reads ``_REGISTRY[name].oracle`` inside its own
+``@register(oracle=...)``; ``register`` is the only writer of the
+registry, and a spec is never replaced after registration.
 """
 
 from __future__ import annotations
@@ -109,6 +114,10 @@ _CHANGED_AFTER: dict[str, int] = {
         "w16_stream_sliding_hll"), 11),
     # q39: per-write partitionOverwriteMode; q34: merge hint, no toggle.
     "q39_partition_backfill": 11, "q34_bucketed_join_roundtrip": 11,
+    # q17/q21/q38: the forced customer broadcast is gone; the session's
+    # threshold decides.
+    **dict.fromkeys(("q17_rollup_revenue", "q21_pivot_status_counts",
+        "q38_constraint_audit"), 11),
 }
 
 

@@ -21,9 +21,20 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators import sampling as SA
+from mousedatapipeline_spark.operators import similarity as S
 from mousedatapipeline_spark.operators import text as T
-from mousedatapipeline_spark.plans.catalog import register
-from mousedatapipeline_spark.tables import load
+from mousedatapipeline_spark.operators.graph import connected_components
+from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
+from mousedatapipeline_spark.plans.similarity_queries import (
+    MIN_SHARED_BANDS,
+    VERIFY_JACCARD,
+    _bands_wide_sql,
+    _minhash_wide_sql,
+    degree_cap_sql,
+    lsh_verified_edges,
+)
+from mousedatapipeline_spark.plans.text_queries import t03_quality_score
+from mousedatapipeline_spark.tables import load, load_spread
 
 # Mixing rates: rebalance the synthetic corpus toward under-represented
 # languages (en is ~44% of documents; see TESTDATA.md).
@@ -658,59 +669,10 @@ def c03_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "c04_quality_threshold_curve",
-    # t03's registered oracle composed verbatim (patched below): ONE
-    # quality definition shared with the per-doc scorer.
-    oracle="__PATCHED_FROM_T03__",
-    doc="Quality-threshold calibration curve: per (lang, quality "
-        "decile bucket), document and token counts plus the share of "
-        "the language's tokens KEPT if the cut were set at that "
-        "bucket — the evidence behind t03's fixed 0.5 verdict and the "
-        "knob c03's mixture planner trades against. Buckets are fixed "
-        "(floor(quality*10), capped at 9) so the histogram is "
-        "scan-stage; the cumulative windows run on the <=10-row "
-        "per-lang aggregate, never the corpus.",
-)
-def c04_quality_threshold_curve(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.plans.text_queries import (
-        t03_quality_score,
-    )
-    q = t03_quality_score(spark, sf_dir).select("doc_id", "lang",
-                                                "quality")
-    tk = load(spark, sf_dir, "documents").select(
-        "doc_id", T.token_count(F.col("text")).cast("bigint")
-        .alias("n_tok"))
-    b = (q.join(tk, "doc_id")
-         .select("lang",
-                 F.least(F.floor(F.col("quality") * 10), F.lit(9))
-                 .cast("int").alias("bucket"), "n_tok"))
-    g = b.groupBy("lang", "bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tok").cast("bigint").alias("tokens"))
-    w_cum = (Window.partitionBy("lang")
-             .orderBy(F.desc("bucket"))
-             .rowsBetween(Window.unboundedPreceding, 0))
-    w_all = Window.partitionBy("lang")
-    return g.select(
-        "lang", "bucket", "n_docs", "tokens",
-        stable_round(F.sum("tokens").over(w_cum).cast("double")
-                     / F.sum("tokens").over(w_all).cast("double"))
-        .alias("kept_token_share"))
-
-
-def _finalize_c04_oracle() -> None:
-    from dataclasses import replace
-
-    # Cross-module reference: force the defining module to register
-    # first (direct imports of THIS module must not depend on catalog
-    # load order).
-    import mousedatapipeline_spark.plans.text_queries  # noqa: F401
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    t03 = _REGISTRY["t03_quality_score"].oracle
-    spec = _REGISTRY["c04_quality_threshold_curve"]
-    _REGISTRY["c04_quality_threshold_curve"] = replace(
-        spec, oracle=f"""
-    WITH q AS ({t03}),
+    # t03's registered oracle composed verbatim: ONE quality
+    # definition shared with the per-doc scorer.
+    oracle=f"""
+    WITH q AS ({_REGISTRY['t03_quality_score'].oracle}),
     tk AS (
       SELECT doc_id,
              CAST(len(list_filter(string_split(lower(text), ' '),
@@ -735,10 +697,39 @@ def _finalize_c04_oracle() -> None:
                'AS DOUBLE) / CAST(SUM(tokens) OVER '
                '(PARTITION BY lang) AS DOUBLE)')} AS kept_token_share
     FROM g
-    """)
-
-
-_finalize_c04_oracle()
+    """,
+    doc="Quality-threshold calibration curve: per (lang, quality "
+        "decile bucket), document and token counts plus the share of "
+        "the language's tokens KEPT if the cut were set at that "
+        "bucket — the evidence behind t03's fixed 0.5 verdict and the "
+        "knob c03's mixture planner trades against. Buckets are fixed "
+        "(floor(quality*10), capped at 9) so the histogram is "
+        "scan-stage; the cumulative windows run on the <=10-row "
+        "per-lang aggregate, never the corpus.",
+)
+def c04_quality_threshold_curve(spark: SparkSession,
+                                sf_dir: str) -> DataFrame:
+    q = t03_quality_score(spark, sf_dir).select("doc_id", "lang",
+                                                "quality")
+    tk = load(spark, sf_dir, "documents").select(
+        "doc_id", T.token_count(F.col("text")).cast("bigint")
+        .alias("n_tok"))
+    b = (q.join(tk, "doc_id")
+         .select("lang",
+                 F.least(F.floor(F.col("quality") * 10), F.lit(9))
+                 .cast("int").alias("bucket"), "n_tok"))
+    g = b.groupBy("lang", "bucket").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_tok").cast("bigint").alias("tokens"))
+    w_cum = (Window.partitionBy("lang")
+             .orderBy(F.desc("bucket"))
+             .rowsBetween(Window.unboundedPreceding, 0))
+    w_all = Window.partitionBy("lang")
+    return g.select(
+        "lang", "bucket", "n_docs", "tokens",
+        stable_round(F.sum("tokens").over(w_cum).cast("double")
+                     / F.sum("tokens").over(w_all).cast("double"))
+        .alias("kept_token_share"))
 
 
 # --------------------------------------------------------------------------
@@ -830,89 +821,11 @@ def c05_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "c06_production_dedup_e2e",
-    oracle="__C06_PLACEHOLDER__",
-    doc="Production dedup funnel end-to-end in ONE plan: exact dedup "
-        "(md5 min-id) -> s19 LSH+verified-Jaccard near-dup over "
-        "survivors -> connected components -> min-id canonical -> t03 "
-        "quality gate -> per-source census (docs, exact survivors, "
-        "near-dup canonicals, final docs, final token budget). The "
-        "scale story: duplicate mass is removed by one hash shuffle "
-        "BEFORE any shingle work, so the quadratic-in-bucket LSH "
-        "stage sees only unique content.",
-)
-def c06_production_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.graph import (
-        connected_components,
-    )
-    from mousedatapipeline_spark.plans.similarity_queries import (
-        lsh_verified_edges,
-    )
-    from mousedatapipeline_spark.tables import load_spread
-
-    d = load_spread(spark, sf_dir, "documents")
-    base = d.select(
-        "doc_id", "source", "lang", "text",
-        T.content_hash(F.col("text")).alias("xh"),
-        T.quality_score(F.col("text")).alias("quality"),
-        T.token_count(F.col("text")).cast("bigint").alias("n_tok"))
-    # Exact stage as ONE window over xh (the s14 idiom), not
-    # groupBy+self-join: the join form re-derived `canon`'s subtree
-    # from the parquet (documents scanned twice, md5 evaluated again
-    # in the join-key null filter INSIDE the scan stage), and the
-    # final census below re-scanned a third time. One scan + one
-    # hash shuffle now carries the corpus through the whole funnel;
-    # the checkpoint pins it for the survivor branch AND the census
-    # (guide §2.4 / §8: decide and aggregate off one materialized
-    # pass, never re-read the heavy payload).
-    w = Window.partitionBy("xh")
-    mem = (base.withColumn("cid", F.min("doc_id").over(w))
-           .localCheckpoint(eager=False))  # lazy: the eager bands
-    # checkpoint inside lsh_verified_edges materializes it first and
-    # every later consumer (component seed, census join) reuses the
-    # cache — sequential in practice (same rationale the r09 A/B
-    # measured for the old surv checkpoint, 6.25 -> 6.45 s eager).
-    # Re-spread the survivors before the per-row-EXPENSIVE shingle
-    # projection (the s14 lesson): AQE coalesces the window's
-    # tiny-by-bytes shuffle output toward one partition, which would
-    # single-thread the shingle scan stage.
-    surv = (mem.filter(F.col("doc_id") == F.col("cid"))
-            .select("doc_id", "lang", "text")
-            .repartition(spark.sparkContext.defaultParallelism))
-    edges = lsh_verified_edges(surv).select("d1", "d2")
-    cc = connected_components(surv.select("doc_id"), edges,
-                              "doc_id", "d1", "d2")
-    j = mem.join(cc, "doc_id", "left")
-    is_nd = F.col("doc_id") == F.col("component_id")
-    is_final = is_nd & (F.col("quality") >= 0.5)
-    return j.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.count(F.col("component_id")).cast("bigint")
-        .alias("n_after_exact"),
-        F.count(F.when(is_nd, 1)).cast("bigint").alias("n_after_neardup"),
-        F.count(F.when(is_final, 1)).cast("bigint").alias("n_final"),
-        F.coalesce(F.sum(F.when(is_final, F.col("n_tok"))), F.lit(0))
-        .cast("bigint").alias("tokens_final"))
-
-
-def _finalize_c06_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.operators import similarity as S
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    from mousedatapipeline_spark.plans.similarity_queries import (
-        MIN_SHARED_BANDS,
-        VERIFY_JACCARD,
-        _bands_wide_sql,
-        _minhash_wide_sql,
-        degree_cap_sql,
-    )
-
-    quality = _QUALITY_SQL
-    oracle = f"""
+    oracle=f"""
     WITH RECURSIVE base AS MATERIALIZED (
       SELECT doc_id, source, lang, text, md5(text) AS xh,
              CAST({_SQL_NTOK} AS BIGINT) AS n_tok,
-             {quality} AS quality
+             {_QUALITY_SQL} AS quality
       FROM documents
     ),
     canon AS (SELECT xh, MIN(doc_id) AS cid FROM base GROUP BY xh),
@@ -984,9 +897,57 @@ def _finalize_c06_oracle() -> None:
              AS tokens_final
     FROM base b LEFT JOIN comp ON b.doc_id = comp.doc_id
     GROUP BY b.source
-    """
-    spec = _REGISTRY["c06_production_dedup_e2e"]
-    _REGISTRY["c06_production_dedup_e2e"] = replace(spec, oracle=oracle)
-
-
-_finalize_c06_oracle()
+    """,
+    doc="Production dedup funnel end-to-end in ONE plan: exact dedup "
+        "(md5 min-id) -> s19 LSH+verified-Jaccard near-dup over "
+        "survivors -> connected components -> min-id canonical -> t03 "
+        "quality gate -> per-source census (docs, exact survivors, "
+        "near-dup canonicals, final docs, final token budget). The "
+        "scale story: duplicate mass is removed by one hash shuffle "
+        "BEFORE any shingle work, so the quadratic-in-bucket LSH "
+        "stage sees only unique content.",
+)
+def c06_production_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_spread(spark, sf_dir, "documents")
+    base = d.select(
+        "doc_id", "source", "lang", "text",
+        T.content_hash(F.col("text")).alias("xh"),
+        T.quality_score(F.col("text")).alias("quality"),
+        T.token_count(F.col("text")).cast("bigint").alias("n_tok"))
+    # Exact stage as ONE window over xh (the s14 idiom), not
+    # groupBy+self-join: the join form re-derived `canon`'s subtree
+    # from the parquet (documents scanned twice, md5 evaluated again
+    # in the join-key null filter INSIDE the scan stage), and the
+    # final census below re-scanned a third time. One scan + one
+    # hash shuffle now carries the corpus through the whole funnel;
+    # the checkpoint pins it for the survivor branch AND the census
+    # (guide §2.4 / §8: decide and aggregate off one materialized
+    # pass, never re-read the heavy payload).
+    w = Window.partitionBy("xh")
+    mem = (base.withColumn("cid", F.min("doc_id").over(w))
+           .localCheckpoint(eager=False))  # lazy: the eager bands
+    # checkpoint inside lsh_verified_edges materializes it first and
+    # every later consumer (component seed, census join) reuses the
+    # cache — sequential in practice (same rationale the r09 A/B
+    # measured for the old surv checkpoint, 6.25 -> 6.45 s eager).
+    # Re-spread the survivors before the per-row-EXPENSIVE shingle
+    # projection (the s14 lesson): AQE coalesces the window's
+    # tiny-by-bytes shuffle output toward one partition, which would
+    # single-thread the shingle scan stage.
+    surv = (mem.filter(F.col("doc_id") == F.col("cid"))
+            .select("doc_id", "lang", "text")
+            .repartition(spark.sparkContext.defaultParallelism))
+    edges = lsh_verified_edges(surv).select("d1", "d2")
+    cc = connected_components(surv.select("doc_id"), edges,
+                              "doc_id", "d1", "d2")
+    j = mem.join(cc, "doc_id", "left")
+    is_nd = F.col("doc_id") == F.col("component_id")
+    is_final = is_nd & (F.col("quality") >= 0.5)
+    return j.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.count(F.col("component_id")).cast("bigint")
+        .alias("n_after_exact"),
+        F.count(F.when(is_nd, 1)).cast("bigint").alias("n_after_neardup"),
+        F.count(F.when(is_final, 1)).cast("bigint").alias("n_final"),
+        F.coalesce(F.sum(F.when(is_final, F.col("n_tok"))), F.lit(0))
+        .cast("bigint").alias("tokens_final"))

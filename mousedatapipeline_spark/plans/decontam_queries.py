@@ -27,8 +27,10 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
 )
+from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import text as T
-from mousedatapipeline_spark.plans.catalog import register
+from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
+from mousedatapipeline_spark.plans.curation_queries import SPLIT_FRACTIONS
 from mousedatapipeline_spark.tables import load, load_spread
 
 # Docs whose id is divisible by EVAL_MOD stand in for the held-out
@@ -516,7 +518,7 @@ def t26_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sp AS (
       SELECT doc_id, text,
-             {{split_case}} AS split
+             {SA.split_sql_case('doc_id', SPLIT_FRACTIONS)} AS split
       FROM documents
     ),
     ex AS (
@@ -562,11 +564,8 @@ def t26_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rollup.",
 )
 def t30_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators import sampling as SA
     from mousedatapipeline_spark.operators.aggregates import dsum
-    from mousedatapipeline_spark.plans.curation_queries import (
-        SPLIT_FRACTIONS,
-    )
+
     d = SA.dataset_split(load_spread(spark, sf_dir, "documents"),
                          "doc_id", SPLIT_FRACTIONS)
     grams = F.array_distinct(
@@ -592,29 +591,23 @@ def t30_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mean_contamination"))
 
 
-def _finalize_t30_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.operators import sampling as SA
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    from mousedatapipeline_spark.plans.curation_queries import (
-        SPLIT_FRACTIONS,
-    )
-    spec = _REGISTRY["t30_split_contamination"]
-    _REGISTRY["t30_split_contamination"] = replace(
-        spec, oracle=spec.oracle.format(
-            split_case=SA.split_sql_case("doc_id", SPLIT_FRACTIONS)))
-
-
-_finalize_t30_oracle()
-
-
 @register(
     "t31_dedup_savings_by_source",
-    # t26's registered oracle composed verbatim (patched below) — one
-    # removal definition shared between the row-level op and this
-    # planning rollup.
-    oracle="__PATCHED_FROM_T26__",
+    # t26's registered oracle composed verbatim — one removal
+    # definition shared between the row-level op and this planning
+    # rollup.
+    oracle=f"""
+    WITH lab AS (SELECT doc_id, source FROM documents)
+    SELECT lab.source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(p.n_tokens) AS BIGINT) AS raw_tokens,
+           CAST(SUM(p.n_removed) AS BIGINT) AS removed_tokens,
+           {stable_round_sql(
+               'CAST(SUM(p.n_removed) AS DOUBLE)'
+               ' / CAST(SUM(p.n_tokens) AS DOUBLE)')} AS savings_share
+    FROM ({_REGISTRY['t26_substring_removal'].oracle}) p JOIN lab ON p.doc_id = lab.doc_id
+    GROUP BY lab.source
+    """,
     doc="Substring-dedup savings report: t26's removal results rolled "
         "up per source — document count, raw tokens, tokens the "
         "chunk-run removal deletes, and the savings share — the "
@@ -637,27 +630,3 @@ def t31_dedup_savings_by_source(spark: SparkSession,
         rm.cast("bigint").alias("removed_tokens"),
         stable_round(rm.cast("double") / raw.cast("double"))
         .alias("savings_share"))
-
-
-def _finalize_t31_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    t26 = _REGISTRY["t26_substring_removal"].oracle
-    spec = _REGISTRY["t31_dedup_savings_by_source"]
-    _REGISTRY["t31_dedup_savings_by_source"] = replace(
-        spec, oracle=f"""
-    WITH lab AS (SELECT doc_id, source FROM documents)
-    SELECT lab.source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(p.n_tokens) AS BIGINT) AS raw_tokens,
-           CAST(SUM(p.n_removed) AS BIGINT) AS removed_tokens,
-           {stable_round_sql(
-               'CAST(SUM(p.n_removed) AS DOUBLE)'
-               ' / CAST(SUM(p.n_tokens) AS DOUBLE)')} AS savings_share
-    FROM ({t26}) p JOIN lab ON p.doc_id = lab.doc_id
-    GROUP BY lab.source
-    """)
-
-
-_finalize_t31_oracle()

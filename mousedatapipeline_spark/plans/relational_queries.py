@@ -562,8 +562,9 @@ def q16_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-level aggregation (ROLLUP): region -> nation -> grand total in ONE
 # pass. Reference has only flat groupBys; this is the OLAP rollup shape a
 # reporting layer needs. Scale: Spark expands the rollup into a single
-# Expand + hash aggregate — one shuffle regardless of level count; dims
-# are broadcast so the fact table is scanned once.
+# Expand + hash aggregate — one shuffle regardless of level count;
+# nation/region are broadcast, and customer (which grows with the data)
+# broadcasts only while the session threshold admits it.
 # --------------------------------------------------------------------------
 @register(
     "q17_rollup_revenue",
@@ -589,8 +590,7 @@ def q17_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
     joined = (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey)
+        orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
@@ -797,8 +797,7 @@ _PIVOT_STATUSES = ("F", "O", "P")
 def q21_pivot_status_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    joined = orders.join(F.broadcast(cust),
-                         orders.o_custkey == cust.c_custkey)
+    joined = orders.join(cust, orders.o_custkey == cust.c_custkey)
     wide = (joined.groupBy("c_mktsegment")
             .pivot("o_orderstatus", list(_PIVOT_STATUSES))
             .agg(F.count(F.lit(1)).cast("bigint")))
@@ -1569,7 +1568,7 @@ def q38_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pk = row("customer_pk_unique", cust.agg(
         (F.count(F.lit(1)) - F.countDistinct("c_custkey")).alias("n")))
     fk = row("orders_custkey_fk", orders.join(
-        F.broadcast(cust.select("c_custkey")),
+        cust.select("c_custkey"),
         orders.o_custkey == cust.c_custkey, "left_anti")
         .agg(F.count(F.lit(1)).alias("n")))
     rng = row("lineitem_quantity_range", li.agg(F.count(
@@ -2233,7 +2232,7 @@ def _q48_oracle() -> str:
 
 @register(
     "q48_zorder_skipping",
-    oracle="{body}",
+    oracle=_q48_oracle(),
     doc="Z-order layout audit: maps orders to 16-bit (custkey, "
         "orderdate) coordinates, packs them into 64 files under a "
         "bit-interleaved z-value prefix vs a custkey-only prefix, and "
@@ -2296,15 +2295,3 @@ def q48_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         stable_round(F.lit(1.0) - F.col("scanned_pairs").cast("double")
                      / (F.col("n_files") * nq).cast("double"))
         .alias("skip_pct"))
-
-
-def _finalize_q48_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["q48_zorder_skipping"]
-    _REGISTRY["q48_zorder_skipping"] = replace(
-        spec, oracle=spec.oracle.format(body=_q48_oracle()))
-
-
-_finalize_q48_oracle()

@@ -15,9 +15,11 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators import graph as G
+from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import similarity as S
 from mousedatapipeline_spark.operators import text as T
-from mousedatapipeline_spark.plans.catalog import register
+from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
+from mousedatapipeline_spark.plans.text_queries import t03_quality_score
 from mousedatapipeline_spark.tables import (
     fits_broadcast,
     load,
@@ -1699,19 +1701,14 @@ def s24_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # it reuses the two registered queries (and their oracles) verbatim so
 # the evaluated plans are exactly the production ones.
 # --------------------------------------------------------------------------
-def _registered_oracle(name: str) -> str:
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    return _REGISTRY[name].oracle
-
-
 @register(
     "s25_ann_recall",
     oracle=f"""
     WITH exact AS (
-      SELECT qid, cid FROM ({{s05}}) x WHERE rank <= 3
+      SELECT qid, cid FROM ({_REGISTRY['s05_knn_cosine'].oracle}) x WHERE rank <= 3
     ),
     ann AS (
-      SELECT qid, cid FROM ({{s06}}) y
+      SELECT qid, cid FROM ({_REGISTRY['s06_ann_lsh'].oracle}) y
     ),
     hit AS (
       SELECT e.qid, CAST(COUNT(a.cid) AS BIGINT) AS n_hit,
@@ -1744,23 +1741,6 @@ def s25_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     stable_round(F.col("n_hit").cast("double")
                                  / F.col("n_exact").cast("double"))
                     .alias("recall")))
-
-
-# Patch the {s05}/{s06} placeholders with the registered oracle texts
-# (single source of truth — the recall oracle always evaluates exactly
-# what s05/s06 evaluate).
-def _finalize_s25_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s25_ann_recall"]
-    _REGISTRY["s25_ann_recall"] = replace(
-        spec, oracle=spec.oracle.format(
-            s05=_registered_oracle("s05_knn_cosine"),
-            s06=_registered_oracle("s06_ann_lsh")))
-
-
-_finalize_s25_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -2284,7 +2264,7 @@ _S32_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
     norms AS ({_SQL_NORMS}),
     s AS (
       SELECT e.vec_id, e.label, n.norm,
-             {{split_case}} AS split
+             {SA.split_sql_case('e.vec_id', _S32_SPLITS)} AS split
       FROM embeddings e JOIN norms n ON e.vec_id = n.vec_id
     )
     SELECT split, label,
@@ -2310,8 +2290,6 @@ _S32_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
 def s32_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from mousedatapipeline_spark.operators import sampling as SA
-
     e = load(spark, sf_dir, "embeddings")
     dims = S.vector_dims(e, "vec_id", "embedding")
     norms = S.vector_norms(dims, "vec_id")
@@ -2331,20 +2309,6 @@ def s32_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("label_share"))
 
 
-def _finalize_s32_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.operators import sampling as SA
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s32_split_drift"]
-    _REGISTRY["s32_split_drift"] = replace(
-        spec, oracle=spec.oracle.format(
-            split_case=SA.split_sql_case("e.vec_id", _S32_SPLITS)))
-
-
-_finalize_s32_oracle()
-
-
 # --------------------------------------------------------------------------
 # s33: cross-source duplication matrix — WHERE near-dups come from.
 # s02/s24 block by (lang, source), so they can never see a doc copied
@@ -2356,17 +2320,19 @@ _finalize_s32_oracle()
 # --------------------------------------------------------------------------
 @register(
     "s33_cross_source_dup_matrix",
-    # The pair set IS s19's registered oracle (composed verbatim, s25
-    # pattern) — one source of truth for the near-dup definition.
-    oracle="""
+    # The pair set IS s19's registered oracle, composed verbatim — one
+    # source of truth for the near-dup definition.
+    oracle=f"""
     WITH lab AS (SELECT doc_id, source FROM documents)
     SELECT LEAST(x.source, y.source) AS source_a,
            GREATEST(x.source, y.source) AS source_b,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(SUM(CASE WHEN x.source <> y.source THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_cross,
-           {mean_j} AS mean_jaccard
-    FROM ({s19}) p
+           {stable_round_sql(
+               'CAST(CAST(SUM(CAST(p.jaccard AS DECIMAL(30,10)))'
+               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_jaccard
+    FROM ({_REGISTRY['s19_lsh_verified_neardup'].oracle}) p
     JOIN lab x ON p.d1 = x.doc_id
     JOIN lab y ON p.d2 = y.doc_id
     GROUP BY 1, 2
@@ -2402,22 +2368,6 @@ def s33_cross_source_dup_matrix(spark: SparkSession,
              .alias("mean_jaccard")))
 
 
-def _finalize_s33_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s33_cross_source_dup_matrix"]
-    _REGISTRY["s33_cross_source_dup_matrix"] = replace(
-        spec, oracle=spec.oracle.format(
-            s19=_registered_oracle("s19_lsh_verified_neardup"),
-            mean_j=stable_round_sql(
-                "CAST(CAST(SUM(CAST(p.jaccard AS DECIMAL(30,10)))"
-                " AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")))
-
-
-_finalize_s33_oracle()
-
-
 # --------------------------------------------------------------------------
 # s34: quality-aware canonical selection — s14 keeps min(doc_id) per
 # near-dup cluster, but a production dedup keeps the BEST member.
@@ -2428,12 +2378,12 @@ _finalize_s33_oracle()
 # --------------------------------------------------------------------------
 @register(
     "s34_quality_canonical",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, component_id, n_members, quality,
            CAST(ROW_NUMBER() OVER (PARTITION BY component_id
                                    ORDER BY quality DESC, doc_id) = 1
                 AS INT) AS keep
-    FROM ({s14}) c JOIN ({t03}) q USING (doc_id)
+    FROM ({_REGISTRY['s14_neardup_components'].oracle}) c JOIN ({_REGISTRY['t03_quality_score'].oracle}) q USING (doc_id)
     """,
     doc="Quality-aware canonical selection per near-dup cluster: s14's "
         "connected components joined to t03's quality score; one "
@@ -2447,9 +2397,6 @@ _finalize_s33_oracle()
 def s34_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from mousedatapipeline_spark.plans.text_queries import (
-        t03_quality_score,
-    )
     cc = s14_neardup_components(spark, sf_dir).select(
         "doc_id", "component_id", "n_members")
     q = t03_quality_score(spark, sf_dir).select("doc_id", "quality")
@@ -2458,22 +2405,6 @@ def s34_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select(
         "doc_id", "component_id", "n_members", "quality",
         (F.row_number().over(w) == 1).cast("int").alias("keep"))
-
-
-def _finalize_s34_oracle() -> None:
-    from dataclasses import replace
-
-    # Cross-module reference (t03): force its module to register first.
-    import mousedatapipeline_spark.plans.text_queries  # noqa: F401
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s34_quality_canonical"]
-    _REGISTRY["s34_quality_canonical"] = replace(
-        spec, oracle=spec.oracle.format(
-            s14=_registered_oracle("s14_neardup_components"),
-            t03=_registered_oracle("t03_quality_score")))
-
-
-_finalize_s34_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -3073,10 +3004,10 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s39_ivf_pq_index_build",
     # Assignment and code CTEs composed from the same definitions
-    # s08/s36 mirror (patched below with the s36 oracle's body, which
-    # already contains the cell-independent code derivation).
-    oracle="""
-    WITH dims AS ({dims}),
+    # s08/s36 mirror (the s36 oracle already contains the
+    # cell-independent code derivation).
+    oracle=f"""
+    WITH dims AS ({_SQL_DIMS}),
     labeled AS (
       SELECT e.label, d.dim, d.v
       FROM embeddings e JOIN dims d ON e.vec_id = d.vec_id
@@ -3097,15 +3028,17 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT vec_id, cell
       FROM (SELECT vec_id, label AS cell, ROW_NUMBER() OVER (
               PARTITION BY vec_id
-              ORDER BY {rdot} DESC, label) AS rn
+              ORDER BY {stable_round_sql('dot')} DESC, label) AS rn
             FROM cdots)
       WHERE rn = 1
     ),
-    codes AS ({s36})
+    codes AS ({_REGISTRY['s36_product_quantization'].oracle})
     SELECT a.cell,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(COUNT(DISTINCT c.code) AS BIGINT) AS n_distinct_codes,
-           {mean_err} AS mean_recon_err
+           {stable_round_sql(
+               'CAST(CAST(SUM(CAST(c.recon_err AS DECIMAL(30,10)))'
+               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_recon_err
     FROM assign a JOIN codes c ON a.vec_id = c.vec_id
     GROUP BY a.cell
     """,
@@ -3149,24 +3082,6 @@ def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mean_recon_err"))
 
 
-def _finalize_s39_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s39_ivf_pq_index_build"]
-    _REGISTRY["s39_ivf_pq_index_build"] = replace(
-        spec, oracle=spec.oracle.format(
-            dims=_SQL_DIMS,
-            rdot=stable_round_sql("dot"),
-            s36=_REGISTRY["s36_product_quantization"].oracle,
-            mean_err=stable_round_sql(
-                "CAST(CAST(SUM(CAST(c.recon_err AS DECIMAL(30,10)))"
-                " AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")))
-
-
-_finalize_s39_oracle()
-
-
 # --------------------------------------------------------------------------
 # s40: PageRank over the verified near-dup graph — the iterative-
 # algorithm pattern (fixed damping 0.85, 3 synchronous iterations)
@@ -3208,10 +3123,10 @@ def _s40_oracle_iterations() -> str:
 
 @register(
     "s40_neardup_pagerank",
-    # The pair set IS s19's registered oracle (composed verbatim, s25/
-    # s33 pattern) — one source of truth for the near-dup definition.
-    oracle="""
-    WITH pr AS MATERIALIZED ({s19}),
+    # The pair set IS s19's registered oracle, composed verbatim — one
+    # source of truth for the near-dup definition.
+    oracle=f"""
+    WITH pr AS MATERIALIZED ({_REGISTRY['s19_lsh_verified_neardup'].oracle}),
     e AS MATERIALIZED (
       SELECT d1 AS src, d2 AS dst FROM pr
       UNION ALL
@@ -3222,9 +3137,9 @@ def _s40_oracle_iterations() -> str:
     nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg),
     r0 AS (SELECT src AS doc_id,
                   1.0 / CAST((SELECT n FROM nn) AS DOUBLE) AS r
-           FROM deg),{iters}
-    SELECT r.doc_id, deg.outdeg AS degree, {rank} AS pagerank
-    FROM r{last} r JOIN deg ON r.doc_id = deg.src
+           FROM deg),{_s40_oracle_iterations()}
+    SELECT r.doc_id, deg.outdeg AS degree, {stable_round_sql('r.r')} AS pagerank
+    FROM r{_S40_ITERS} r JOIN deg ON r.doc_id = deg.src
     """,
     doc="PageRank (damping 0.85, 3 synchronous iterations) over s19's "
         "verified near-dup graph made symmetric — ranks the most "
@@ -3276,22 +3191,6 @@ def s40_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                              F.col("outdeg").alias("degree")), "doc_id")
             .select("doc_id", "degree",
                     stable_round(F.col("r")).alias("pagerank")))
-
-
-def _finalize_s40_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s40_neardup_pagerank"]
-    _REGISTRY["s40_neardup_pagerank"] = replace(
-        spec, oracle=spec.oracle.format(
-            s19=_registered_oracle("s19_lsh_verified_neardup"),
-            iters=_s40_oracle_iterations(),
-            last=_S40_ITERS,
-            rank=stable_round_sql("r.r")))
-
-
-_finalize_s40_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -3392,7 +3291,7 @@ def _s41_ssq(wcol):
 
 @register(
     "s41_power_iteration_pca",
-    oracle="{body}",
+    oracle=_s41_oracle(),
     doc="Top principal direction of the embedding Gram matrix by "
         "3-step power iteration, computed entirely in-engine: the "
         "per-vector projection x·v is a row-local array fold (never a "
@@ -3426,18 +3325,6 @@ def s41_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("pos") + 1).cast("int").alias("dim"),
         stable_round(F.col("w") / nrm).alias("loading"),
         stable_round(nrm).alias("eigenvalue"))
-
-
-def _finalize_s41_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s41_power_iteration_pca"]
-    _REGISTRY["s41_power_iteration_pca"] = replace(
-        spec, oracle=spec.oracle.format(body=_s41_oracle()))
-
-
-_finalize_s41_oracle()
 
 
 # --------------------------------------------------------------------------
@@ -3487,7 +3374,7 @@ _S42_ORACLE_BODY = f"""
                PARTITION BY depth, qid
                ORDER BY {stable_round_sql('cosine')} DESC, cid) AS rank
       FROM tcos),
-    exact AS (SELECT qid, cid FROM ({{s05}}) x WHERE rank <= 3),
+    exact AS (SELECT qid, cid FROM ({_REGISTRY['s05_knn_cosine'].oracle}) x WHERE rank <= 3),
     exact_d AS (SELECT depth, qid, cid FROM exact, dep),
     hit AS (
       SELECT e.depth, e.qid,
@@ -3562,19 +3449,6 @@ def s42_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall")))
 
 
-def _finalize_s42_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s42_matryoshka_recall"]
-    _REGISTRY["s42_matryoshka_recall"] = replace(
-        spec, oracle=spec.oracle.format(
-            s05=_registered_oracle("s05_knn_cosine")))
-
-
-_finalize_s42_oracle()
-
-
 # --------------------------------------------------------------------------
 # s43: label-propagation communities (3 synchronous iterations) over
 # the verified near-dup graph — the finer-grained complement to s14's
@@ -3612,19 +3486,19 @@ def _s43_oracle_iterations() -> str:
 
 @register(
     "s43_label_propagation",
-    oracle="""
-    WITH pr AS MATERIALIZED ({s19}),
+    oracle=f"""
+    WITH pr AS MATERIALIZED ({_REGISTRY['s19_lsh_verified_neardup'].oracle}),
     e AS MATERIALIZED (
       SELECT d1 AS src, d2 AS dst FROM pr
       UNION ALL
       SELECT d2 AS src, d1 AS dst FROM pr
     ),
-    l0 AS (SELECT DISTINCT src AS v, src AS lab FROM e),{iters}
+    l0 AS (SELECT DISTINCT src AS v, src AS lab FROM e),{_s43_oracle_iterations()}
     SELECT lab AS community,
            CAST(COUNT(*) AS BIGINT) AS n_members,
            CAST(MIN(v) AS BIGINT) AS min_member,
            CAST(MAX(v) AS BIGINT) AS max_member
-    FROM l{last} GROUP BY lab
+    FROM l{_S43_ITERS} GROUP BY lab
     """,
     doc="Label-propagation community detection (3 synchronous rounds, "
         "majority label with count-then-smaller-label tie-break) over "
@@ -3662,18 +3536,3 @@ def s43_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_members"),
         F.min("v").cast("bigint").alias("min_member"),
         F.max("v").cast("bigint").alias("max_member"))
-
-
-def _finalize_s43_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["s43_label_propagation"]
-    _REGISTRY["s43_label_propagation"] = replace(
-        spec, oracle=spec.oracle.format(
-            s19=_registered_oracle("s19_lsh_verified_neardup"),
-            iters=_s43_oracle_iterations(),
-            last=_S43_ITERS))
-
-
-_finalize_s43_oracle()

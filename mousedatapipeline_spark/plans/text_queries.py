@@ -1623,7 +1623,7 @@ def _t37_oracle() -> str:
 
 @register(
     "t37_textrank_keywords",
-    oracle="{body}",
+    oracle=_t37_oracle(),
     doc="TextRank keyword extraction: weighted PageRank (damping 0.85, "
         "3 iterations) over the corpus word co-occurrence graph — "
         "consecutive non-stopword alphabetic tokens within a document "
@@ -1695,18 +1695,6 @@ def t37_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("pos", F.row_number().over(w_top).cast("int"))
             .select("word", "wdeg", "pos",
                     stable_round(F.col("r")).alias("score")))
-
-
-def _finalize_t37_oracle() -> None:
-    from dataclasses import replace
-
-    from mousedatapipeline_spark.plans.catalog import _REGISTRY
-    spec = _REGISTRY["t37_textrank_keywords"]
-    _REGISTRY["t37_textrank_keywords"] = replace(
-        spec, oracle=spec.oracle.format(body=_t37_oracle()))
-
-
-_finalize_t37_oracle()
 
 
 # ---- t38: URL canonicalization + exact dedup (web-crawl curation) --------

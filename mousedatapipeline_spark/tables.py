@@ -327,13 +327,6 @@ def _checkpoint_keep_layout(df: DataFrame) -> DataFrame:
     the RDD itself lives in the shared SparkContext, so nothing about
     the materialized data changes. A failing clone compile raises:
     there is no session-global fallback."""
-    return _checkpoint_in_clone(df)
-
-
-def _checkpoint_in_clone(df: DataFrame) -> DataFrame:
-    """Compile + execute ``df.localCheckpoint(eager=True)`` under a
-    cloned session whose ``spark.sql.adaptive.enabled`` is false, and
-    re-host the resulting LogicalRDD in ``df``'s own session."""
     spark = df.sparkSession
     jvm = spark.sparkContext._jvm
     jclone = spark._jsparkSession.cloneSession()

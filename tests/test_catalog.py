@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import json
 import math
+import re
+import subprocess
+import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -186,3 +190,62 @@ def test_proven_query_never_composes_unproven_one():
                 f"{name!r} is driver-proven but composes unproven "
                 f"{sorted(leaked)} — stale the composer too "
                 f"(plans/catalog.py _CHANGED_AFTER)")
+
+
+# composer -> the queries whose registered oracle it embeds verbatim
+_COMPOSED_ORACLES = {
+    "c04_quality_threshold_curve": ("t03_quality_score",),
+    "t31_dedup_savings_by_source": ("t26_substring_removal",),
+    "s25_ann_recall": ("s05_knn_cosine", "s06_ann_lsh"),
+    "s33_cross_source_dup_matrix": ("s19_lsh_verified_neardup",),
+    "s40_neardup_pagerank": ("s19_lsh_verified_neardup",),
+    "s43_label_propagation": ("s19_lsh_verified_neardup",),
+    "s34_quality_canonical": ("s14_neardup_components",
+                              "t03_quality_score"),
+    "s39_ivf_pq_index_build": ("s36_product_quantization",),
+    "s42_matryoshka_recall": ("s05_knn_cosine",),
+    "w10_stream_decontam": ("s18_bloom_decontam",),
+    "w15_stream_compaction": ("c05_compaction_plan",),
+}
+
+# an unfilled template slot ({body}, {s19}) or a stub (__C06_...__)
+_UNFINISHED = re.compile(r"\{[a-z_]\w*\}|__[A-Z][A-Z0-9_]*__")
+
+
+def test_composed_oracles_embed_their_parts_verbatim():
+    """One source of truth: a composed oracle contains each part's
+    registered oracle as a substring, so an edit to the part reaches
+    the composer with no second copy to update."""
+    qs = catalog.all_queries()
+    for composer, parts in _COMPOSED_ORACLES.items():
+        for part in parts:
+            assert qs[part].oracle in qs[composer].oracle, (
+                f"{composer!r} does not embed {part!r}'s oracle verbatim")
+
+
+@pytest.mark.parametrize("module", [
+    "relational_queries", "text_queries", "decontam_queries",
+    "similarity_queries", "curation_queries", "streaming_queries"])
+def test_plan_module_alone_registers_final_oracles(module):
+    """Importing one plan module on its own, in a fresh interpreter,
+    registers the same oracles as the full catalog: composition does
+    not depend on catalog load order, and no stub is ever registered."""
+    code = (
+        "import importlib, json\n"
+        f"importlib.import_module('mousedatapipeline_spark.plans.{module}')\n"
+        "from mousedatapipeline_spark.plans.catalog import _REGISTRY\n"
+        "print(json.dumps({n: s.oracle for n, s in _REGISTRY.items()}))\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1], timeout=300, check=True)
+    alone = json.loads(out.stdout)
+    full = {n: s.oracle for n, s in catalog.all_queries().items()}
+    mine = [n for n, s in full.items()
+            if s is not None and catalog._REGISTRY[n].spark.__module__
+            .endswith(module)]
+    assert mine and set(mine) <= set(alone)
+    for name, oracle in alone.items():
+        assert oracle == full[name], f"{name!r} differs when {module} " \
+            "is imported alone"
+        assert oracle is None or not _UNFINISHED.search(oracle), (
+            f"{name!r} registered an unfinished oracle")

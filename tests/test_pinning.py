@@ -126,14 +126,14 @@ def test_pin_compile_leaves_session_aqe_alone(spark):
 
 
 def test_pin_clone_compile_is_primary_path(spark):
-    """_checkpoint_in_clone (the no-toggle path) must work against this
-    Spark version's internals — it is the only path: every pin goes
-    through it, and a failing clone compile raises."""
-    from mousedatapipeline_spark.tables import _checkpoint_in_clone
+    """_checkpoint_keep_layout (the no-toggle clone compile) must work
+    against this Spark version's internals — it is the only path: every
+    pin goes through it, and a failing clone compile raises."""
+    from mousedatapipeline_spark.tables import _checkpoint_keep_layout
 
     df = spark.range(1000).select(F.col("id").alias("v"))
-    ck = _checkpoint_in_clone(df.repartition(4, "v")
-                              .sortWithinPartitions("v"))
+    ck = _checkpoint_keep_layout(df.repartition(4, "v")
+                                 .sortWithinPartitions("v"))
     plan = _formatted(ck)
     assert "hashpartitioning(v" in plan
     assert sorted(r.v for r in ck.collect()) == list(range(1000))

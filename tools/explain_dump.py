@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -27,7 +29,7 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r10"
     only = sys.argv[2:]
     suffix = os.environ.get("EXPLAIN_SUFFIX", "before")
-    outdir = os.path.join("/root/repo/plans", tag)
+    outdir = os.path.join(REPO, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
     spark = get_spark("explain_dump")
