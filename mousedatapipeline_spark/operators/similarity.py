@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark.operators.aggregates import dsum
+
 MOD = 2_147_483_647  # 2^31 - 1
 
 # Deterministic MinHash permutation parameters, shared with the SQL
@@ -287,23 +289,6 @@ def simhash_col(hash_array: Column, n_bits: int = SIMHASH_BITS) -> Column:
     return out.cast("bigint")
 
 
-def minhash_signature_wide(sh: DataFrame,
-                           id_cols: Sequence[str]) -> DataFrame:
-    """(id_cols, mh0..mh{N-1}): all N_PERM minhashes in ONE groupBy with
-    N min-aggregate columns — no ×N_PERM explode, no N·|shingles| row
-    shuffle. This is the scale formulation: shuffle volume equals the
-    shingle count, and map-side partial MIN does the rest.
-    """
-    ids = list(id_cols)
-    # Project the shingle hash ONCE; inlining it into each MIN would
-    # re-evaluate the ascii/substring chain N_PERM times per row.
-    hashed = sh.select(*ids, shingle_hash(F.col("shingle")).alias("h"))
-    return hashed.groupBy(*ids).agg(*[
-        F.min((F.lit(MINHASH_A[i]) * F.col("h") + F.lit(MINHASH_B[i])) % MOD)
-        .alias(f"mh{i}")
-        for i in range(N_PERM)])
-
-
 def band_signatures_wide(sig_wide: DataFrame,
                          id_cols: Sequence[str]) -> DataFrame:
     """(id_cols, band, band_sig) from the wide signature — a 4-element
@@ -320,18 +305,6 @@ def band_signatures_wide(sig_wide: DataFrame,
     return sig_wide.select(*ids, bands).select(
         *ids, F.col("bb.band").alias("band"),
         F.col("bb.band_sig").alias("band_sig"))
-
-
-def band_signatures(sig: DataFrame, id_cols: Sequence[str]) -> DataFrame:
-    """(id_cols, band, band_sig): LSH band signature strings — documents
-    sharing any (band, band_sig) bucket are near-dup candidates."""
-    ids = list(id_cols)
-    banded = sig.withColumn("band", (F.col("i") / ROWS_PER_BAND).cast("int"))
-    ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("i", "mh"))),
-        lambda s: s["mh"].cast("string"))
-    return banded.groupBy(*ids, "band").agg(
-        F.concat_ws("-", ordered).alias("band_sig"))
 
 
 def simhash(df: DataFrame, id_cols: Sequence[str], token_col: str = "token",
@@ -464,8 +437,7 @@ def vector_dims(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
 def vector_norms(dims: DataFrame, id_col: str) -> DataFrame:
     """(id, norm): L2 norm via exact decimal sum of squares."""
     return dims.groupBy(id_col).agg(
-        F.sqrt(F.sum((F.col("v") * F.col("v")).cast("decimal(30,10)"))
-               .cast("double")).alias("norm"))
+        F.sqrt(dsum(F.col("v") * F.col("v"))).alias("norm"))
 
 
 def cosine_pairs(q_dims: DataFrame, c_dims: DataFrame,
@@ -477,8 +449,7 @@ def cosine_pairs(q_dims: DataFrame, c_dims: DataFrame,
     dots = (
         q_dims.join(c_dims, "dim")
         .groupBy(qid, cid)
-        .agg(F.sum((F.col("qv") * F.col("cv")).cast("decimal(30,10)"))
-             .cast("double").alias("dot")))
+        .agg(dsum(F.col("qv") * F.col("cv"), "dot")))
     return (
         dots.join(q_norms, qid).join(c_norms, cid)
         .withColumn(
@@ -495,16 +466,14 @@ def cosine_pairs(q_dims: DataFrame, c_dims: DataFrame,
 # else, or a consumer silently desynchronizes from its oracle.
 # ---------------------------------------------------------------------------
 
-def train_label_centroids(e: DataFrame,
-                          dec: str = "decimal(30,10)") -> DataFrame:
+def train_label_centroids(e: DataFrame) -> DataFrame:
     """(label, c: array<double>): per-label centroid arrays via the
     exact per-dim decimal mean — one skew-free (label, dim) shuffle;
     the result is broadcast-class (|labels| rows)."""
     dims = vector_dims(e, "vec_id", "embedding")
     labeled = dims.join(e.select("vec_id", "label"), "vec_id")
     cent = labeled.groupBy("label", "dim").agg(
-        (F.sum(F.col("v").cast(dec)).cast("double")
-         / F.count(F.lit(1)).cast("double")).alias("cv"))
+        (dsum("v") / F.count(F.lit(1)).cast("double")).alias("cv"))
     return cent.groupBy("label").agg(
         F.transform(F.array_sort(F.collect_list(F.struct("dim", "cv"))),
                     lambda s: s["cv"]).alias("c"))
@@ -639,8 +608,7 @@ def cell_ranks(vecs: DataFrame, cent_arr: DataFrame,
         what="cell_ranks")
 
 
-def sqrtn_kmeans_centroids(e: DataFrame,
-                           dec: str = "decimal(30,10)") -> DataFrame:
+def sqrtn_kmeans_centroids(e: DataFrame) -> DataFrame:
     """(label, c: array<double>): scale-aware IVF coarse codebook —
     k = ceil(sqrt(N)) Lloyd-refined centroids, replacing the fixed
     label vocabulary wherever cell size itself is the scale contract.
@@ -721,8 +689,7 @@ def sqrtn_kmeans_centroids(e: DataFrame,
                            F.col("b.v").alias("v"))
     cent = (assigned.select("cell", F.posexplode("v").alias("pos", "val"))
             .groupBy("cell", (F.col("pos") + 1).alias("dim"))
-            .agg((F.sum(F.col("val").cast(dec)).cast("double")
-                  / F.count(F.lit(1)).cast("double")).alias("cv")))
+            .agg((dsum("val") / F.count(F.lit(1)).cast("double")).alias("cv")))
     return (cent.groupBy("cell")
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct("dim", "cv"))),

@@ -12,6 +12,9 @@ Conventions (required for the driver's order-insensitive value hash):
   reassociated sums and libm transcendentals do not);
 - cast integer-ish outputs to BIGINT on both sides.
 
+Sum doubles with ``aggregates.dsum`` on the Spark side and
+``aggregates.dsum_sql`` in the oracle (the exact decimal accumulator).
+
 A query that composes another query's oracle imports that query's
 module at the top and reads ``_REGISTRY[name].oracle`` inside its own
 ``@register(oracle=...)``; ``register`` is the only writer of the
@@ -141,10 +144,11 @@ def _proven_round(name: str) -> int:
 
 def all_queries() -> dict[str, QuerySpec]:
     _load_all()
-    # Within a round: oracled batch, oracled streaming, then rows-only.
+    # Within a round: oracled batch, oracled streaming, then rows-only;
+    # ties by name, so the order never depends on module import order.
     def rank(item):
         n, s = item
-        return (_proven_round(n), s.oracle is None, n.startswith("w"))
+        return (_proven_round(n), s.oracle is None, n.startswith("w"), n)
     return dict(sorted(_REGISTRY.items(), key=rank))
 
 

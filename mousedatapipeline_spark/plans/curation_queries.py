@@ -23,6 +23,7 @@ from mousedatapipeline_spark.functions.rounding import (
 from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import similarity as S
 from mousedatapipeline_spark.operators import text as T
+from mousedatapipeline_spark.operators.aggregates import dsum, dsum_sql
 from mousedatapipeline_spark.operators.graph import connected_components
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.similarity_queries import (
@@ -236,9 +237,9 @@ def s15_exact_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# s16: temperature-scaled source mixing weights (alpha = 0.5).
+# s16: temperature-scaled source mixing weights (alpha = 0.5): weight
+# ∝ n^0.5 (UL2/PaLM-style temperature mix).
 # --------------------------------------------------------------------------
-MIX_ALPHA_SQRT = True  # weight ∝ n^0.5 (UL2/PaLM-style temperature mix)
 
 
 @register(
@@ -466,11 +467,11 @@ _QUALITY_SQL = f"""LEAST(CAST({_SQL_NTOK} AS DOUBLE) / 50.0, 1.0) * 0.4
     SELECT split, lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CAST(n_tok AS BIGINT)) AS BIGINT) AS total_tokens,
-           {{mq}} AS mean_quality
+           {stable_round_sql(
+               dsum_sql("quality") + " / CAST(COUNT(*) AS DOUBLE)")}
+             AS mean_quality
     FROM assigned GROUP BY split, lang
-    """.format(mq=stable_round_sql(
-        'CAST(CAST(SUM(CAST(quality AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')),
+    """,
     doc="Curation pipeline end-to-end (the LLM-side m05): Gopher-style "
         "quality gate (scan-stage expressions) -> exact dedup (one "
         "window over md5(text), canonical = min doc_id) -> "
@@ -496,9 +497,8 @@ def c01_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("bigint").alias("n_docs"),
         F.sum(F.col("n_tok").cast("bigint")).cast("bigint")
         .alias("total_tokens"),
-        stable_round(
-            F.sum(F.col("quality").cast("decimal(30,10)")).cast("double")
-            / n.cast("double")).alias("mean_quality"))
+        stable_round(dsum("quality") / n.cast("double"))
+        .alias("mean_quality"))
 
 
 @register(

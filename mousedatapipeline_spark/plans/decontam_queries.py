@@ -29,6 +29,7 @@ from mousedatapipeline_spark.functions.rounding import (
 )
 from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import text as T
+from mousedatapipeline_spark.operators.aggregates import dsum, dsum_sql
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.curation_queries import SPLIT_FRACTIONS
 from mousedatapipeline_spark.tables import load, load_spread
@@ -547,9 +548,8 @@ def t26_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN n_hit * 2 >= n_grams THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_flagged,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(CAST(n_hit AS DOUBLE) '
-               '/ CAST(n_grams AS DOUBLE) AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("CAST(n_hit AS DOUBLE) / CAST(n_grams AS DOUBLE)")
+               + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_contamination
     FROM per GROUP BY split
     """,
@@ -564,8 +564,6 @@ def t26_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rollup.",
 )
 def t30_split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     d = SA.dataset_split(load_spread(spark, sf_dir, "documents"),
                          "doc_id", SPLIT_FRACTIONS)
     grams = F.array_distinct(

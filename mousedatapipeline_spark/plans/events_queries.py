@@ -18,7 +18,7 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
 )
-from mousedatapipeline_spark.operators.aggregates import dsum
+from mousedatapipeline_spark.operators.aggregates import DEC, dsum, dsum_sql
 from mousedatapipeline_spark.operators.joins import (
     bucketed_range_join,
     salted_join,
@@ -35,8 +35,7 @@ from mousedatapipeline_spark.tables import load, load_spread
            event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)')} AS value_sum
+           {stable_round_sql(dsum_sql("value"))} AS value_sum
     FROM events
     GROUP BY 1, 2
     """,
@@ -348,10 +347,10 @@ def e07_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "e08_trailing_hour_stats",
-    oracle="""
+    oracle=f"""
     SELECT event_id,
            CAST(COUNT(*) OVER w AS BIGINT) AS n_trailing_hour,
-           CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) OVER w
+           CAST(CAST(SUM(CAST(value AS {DEC})) OVER w
                 AS VARCHAR) AS DOUBLE) AS value_trailing_hour
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts
@@ -376,7 +375,7 @@ def e08_trailing_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.count(F.lit(1)).over(w).cast("bigint")
         .alias("n_trailing_hour"),
-        F.sum(F.col("value").cast("decimal(30,10)")).over(w)
+        F.sum(F.col("value").cast(DEC)).over(w)
         .cast("double").alias("value_trailing_hour"))
 
 
@@ -898,9 +897,7 @@ def e17_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT grain, bucket, event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(value AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS value_sum
+           {stable_round_sql(dsum_sql("value"))} AS value_sum
     FROM long GROUP BY grain, bucket, event_type
     """,
     doc="Multi-granularity time rollup: hourly AND daily aggregates of "
@@ -1008,9 +1005,7 @@ def e19_weekly_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(dv AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS engagement
+           {stable_round_sql(dsum_sql("dv"))} AS engagement
     FROM sc GROUP BY user_id
     """,
     doc="Recency-weighted engagement score — the decay-weighted signal "
@@ -1068,8 +1063,7 @@ def e20_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_transitions,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(nll AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("nll") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_nll
     FROM scored GROUP BY user_id
     """,
@@ -1100,7 +1094,6 @@ def e21_sequence_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_pair").cast("bigint").alias("n_prev"))
     nll = (F.log(F.col("n_prev").cast("double"))
            - F.log(F.col("n_pair").cast("double")))
-    from mousedatapipeline_spark.operators.aggregates import dsum
     scored = (tr.join(F.broadcast(m), ["prev_type", "next_type"])
               .join(F.broadcast(tot), "prev_type")
               .select("user_id", nll.alias("nll")))
@@ -1213,10 +1206,8 @@ def _e22_w_sql(k: int) -> str:
 
 
 def _e22_sql() -> str:
-    dsum = ("CAST(CAST(SUM(CAST({t} AS DECIMAL(30,10))) AS VARCHAR)"
-            " AS DOUBLE)")
     aggs = ", ".join(
-        dsum.format(t=f"value * ({_e22_w_sql(k)})") + f" AS sv{k}, "
+        dsum_sql(f"value * ({_e22_w_sql(k)})") + f" AS sv{k}, "
         f"CAST(SUM({_e22_w_sql(k)}) AS BIGINT) AS sw{k}"
         for k in range(_E22_B))
     ms = ", ".join(
@@ -1231,7 +1222,7 @@ def _e22_sql() -> str:
     WITH agg AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             {dsum.format(t='value')} AS sv,
+             {dsum_sql("value")} AS sv,
              {aggs}
       FROM events GROUP BY event_type
     ),
@@ -1275,16 +1266,14 @@ def e22_bootstrap_stderr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (load_spread(spark, sf_dir, "events")
           .select("event_type", "value",
                   _e22_weights_col().alias("wts")))
-    dec = "decimal(30,10)"
     aggs = []
     for k in range(_E22_B):
         wk = F.element_at("wts", k + 1)
-        aggs.append(F.sum((F.col("value") * wk).cast(dec))
-                    .cast("double").alias(f"sv{k}"))
+        aggs.append(dsum(F.col("value") * wk, f"sv{k}"))
         aggs.append(F.sum(wk).cast("bigint").alias(f"sw{k}"))
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("value").cast(dec)).cast("double").alias("sv"),
+        dsum("value", "sv"),
         *aggs)
     m = agg.selectExpr(
         "event_type", "n", "sv / CAST(n AS DOUBLE) AS mean_v",
@@ -1378,15 +1367,13 @@ def e25_behavioral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS rows_deleted,
              CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users_deleted,
-             CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DECIMAL(30,10))
-               AS vdel
+             CAST(SUM(CAST(value AS {DEC})) AS {DEC}) AS vdel
       FROM deleted GROUP BY event_type
     ),
     r AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS rows_remaining,
-             CAST(SUM(CAST(value AS DECIMAL(30,10))) AS DECIMAL(30,10))
-               AS vrem
+             CAST(SUM(CAST(value AS {DEC})) AS {DEC}) AS vrem
       FROM remaining GROUP BY event_type
     )
     SELECT r.event_type,
@@ -1412,8 +1399,6 @@ def e25_behavioral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "audit columns report deleted rows/users/value per type.",
 )
 def e26_deletion_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import DEC
-
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_type", "value")
     # Tombstones are a USER-derived set (~1% of users) — unbounded at

@@ -30,6 +30,7 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
 )
+from mousedatapipeline_spark.operators.aggregates import dsum, dsum_sql
 from mousedatapipeline_spark.plans.catalog import register
 from mousedatapipeline_spark.tables import load
 
@@ -297,12 +298,10 @@ def mm03_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id,
            CAST(COUNT(*) AS BIGINT) AS n_frames,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(rms AS DECIMAL(30,10))) AS VARCHAR)'
-               ' AS DOUBLE) / COUNT(*)')} AS mean_rms,
+               dsum_sql("rms") + " / COUNT(*)")} AS mean_rms,
            {stable_round_sql('MAX(rms)')} AS peak_rms,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(zcr AS DECIMAL(30,10))) AS VARCHAR)'
-               ' AS DOUBLE) / COUNT(*)')} AS mean_zcr,
+               dsum_sql("zcr") + " / COUNT(*)")} AS mean_zcr,
            CAST(MAX(CASE WHEN r = 1 THEN frame_idx END) AS INT)
              AS loudest_frame
     FROM rk GROUP BY media_id
@@ -318,7 +317,6 @@ def mm03_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "against a closed-form PCM/framing re-derivation.",
 )
 def mm04_audio_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
     from mousedatapipeline_spark.operators.multimodal import (
         audio_frame_features,
     )
@@ -399,7 +397,6 @@ def m15_kernel_flux_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from mousedatapipeline_spark.functions.rounding import stable_round
-    from mousedatapipeline_spark.operators.aggregates import dsum
 
     li = load(spark, sf_dir, "lineitem")
     keys = (li.filter(F.col("l_orderkey") < 200)

@@ -31,9 +31,10 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators import joins, windows
-from mousedatapipeline_spark.operators.aggregates import dsum, stack_stats
+from mousedatapipeline_spark.operators.aggregates import (
+    census, dsum, dsum_sql, stack_stats,
+)
 from mousedatapipeline_spark.operators.filters import completeness_check
-from mousedatapipeline_spark.operators.aggregates import census
 from mousedatapipeline_spark.plans.catalog import register
 from mousedatapipeline_spark.tables import load
 
@@ -101,13 +102,12 @@ def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM prop
     ), s AS (
       SELECT batch, configuration,
-             CAST(CAST(SUM(CAST(transmission_corrected AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS su,
-             CAST(CAST(SUM(CAST(transmission_corrected * transmission_corrected
-                           AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sq,
+             {dsum_sql("transmission_corrected")} AS su,
+             {dsum_sql("transmission_corrected * transmission_corrected")} AS sq,
              CAST(COUNT(*) AS BIGINT) AS t_count,
              MAX(transmission_corrected) AS t_max,
              MIN(transmission_corrected) AS t_min,
-             CAST(CAST(SUM(CAST(direct_flux AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS flux_sum,
+             {dsum_sql("direct_flux")} AS flux_sum,
              MAX(max_scatter_prob) AS max_scatter_prob
       FROM corr GROUP BY batch, configuration
     )
@@ -165,7 +165,7 @@ def m01_stacked_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH m AS ({_MEASUREMENT_SQL_CTE}),
     bg AS (
       SELECT batch AS bg_batch,
-             CAST(CAST(SUM(CAST(transmission AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("transmission")}
                / CAST(COUNT(*) AS DOUBLE) AS transmission_bg
       FROM m GROUP BY batch
     ), j AS (
@@ -379,15 +379,14 @@ def pipeline_inputs(spark: SparkSession, sf_dir: str):
     ),
     s AS (
       SELECT ymd, batch, configuration,
-             CAST(CAST(SUM(CAST(transmission_corrected AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS su,
-             CAST(CAST(SUM(CAST(transmission_corrected * transmission_corrected
-                           AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sq,
+             {dsum_sql("transmission_corrected")} AS su,
+             {dsum_sql("transmission_corrected * transmission_corrected")} AS sq,
              CAST(COUNT(*) AS BIGINT) AS t_count,
              MAX(transmission_corrected) AS t_max,
              MIN(transmission_corrected) AS t_min,
-             CAST(CAST(SUM(CAST(direct_flux AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("direct_flux")}
                AS flux_sum,
-             CAST(CAST(SUM(CAST(thickness AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("thickness")}
                AS thick_sum,
              MAX(max_scatter_prob) AS max_scatter_prob
       FROM th GROUP BY 1, 2, 3
@@ -973,9 +972,7 @@ def m13_nexus_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(year(l_shipdate) AS INT) AS year,
            l_orderkey AS batch,
            CAST(COUNT(*) AS BIGINT) AS n_reps,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS qty_sum
+           {stable_round_sql(dsum_sql("l_quantity"))} AS qty_sum
     FROM lineitem GROUP BY 1, 2
     """,
     doc="S11: stacked-results sink (sinks.write_stacked — partitioned, "
@@ -1020,8 +1017,7 @@ def m14_stacked_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                             AND transmission > 0 AND transmission < 1
                            THEN 1 END) AS BIGINT) AS n_processable,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(transmission AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("transmission") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_transmission,
            {stable_round_sql('MAX(direct_flux)')} AS max_flux
     FROM m GROUP BY ymd
@@ -1035,8 +1031,6 @@ def m14_stacked_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "evaluates in the scan stage.",
 )
 def m16_daily_ops_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     m = measurements(spark, sf_dir)
     processable = ((F.col("samplethickness") > 0)
                    & (F.col("transmission") > 0)
@@ -1064,10 +1058,8 @@ def m16_daily_ops_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (
       SELECT batch, configuration,
              CAST(COUNT(*) AS BIGINT) AS n_reps,
-             CAST(CAST(SUM(CAST(transmission AS DECIMAL(30,10)))
-                  AS VARCHAR) AS DOUBLE) AS t_sum,
-             CAST(CAST(SUM(CAST(transmission * transmission
-                  AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS t_sumsq
+             {dsum_sql("transmission")} AS t_sum,
+             {dsum_sql("transmission * transmission")} AS t_sumsq
       FROM m GROUP BY batch, configuration
     )
     SELECT batch, configuration, n_reps,
@@ -1102,10 +1094,8 @@ def m17_repetition_drift_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = measurements(spark, sf_dir)
     g = m.groupBy("batch", "configuration").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_reps"),
-        F.sum(F.col("transmission").cast("decimal(30,10)"))
-        .cast("double").alias("t_sum"),
-        F.sum((F.col("transmission") * F.col("transmission"))
-              .cast("decimal(30,10)")).cast("double").alias("t_sumsq"))
+        dsum("transmission", "t_sum"),
+        dsum(F.col("transmission") * F.col("transmission"), "t_sumsq"))
     mean = F.col("t_sum") / F.col("n_reps").cast("double")
     var = F.greatest(
         (F.col("t_sumsq") - F.col("t_sum") * F.col("t_sum")

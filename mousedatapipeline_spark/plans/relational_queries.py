@@ -33,8 +33,8 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators.aggregates import (
-    DEC, census, dsum, first_by_order, profile_columns, repetition_stack,
-    stack_stats,
+    DEC, census, dsum, dsum_sql, first_by_order, profile_columns,
+    repetition_stack, stack_stats,
 )
 from mousedatapipeline_spark.plans.catalog import register
 from mousedatapipeline_spark.tables import load
@@ -49,13 +49,13 @@ from mousedatapipeline_spark.tables import load
     "q01_pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")} AS sum_qty,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")} AS sum_base_price,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")} AS sum_disc_price,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")} AS sum_charge,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")} AS avg_qty,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")} AS avg_price,
-           {stable_round_sql("CAST(CAST(SUM(CAST(l_discount AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)")} AS avg_disc,
+           {stable_round_sql(dsum_sql("l_quantity"))} AS sum_qty,
+           {stable_round_sql(dsum_sql("l_extendedprice"))} AS sum_base_price,
+           {stable_round_sql(dsum_sql("l_extendedprice * (1.0 - l_discount)"))} AS sum_disc_price,
+           {stable_round_sql(dsum_sql("l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)"))} AS sum_charge,
+           {stable_round_sql(dsum_sql("l_quantity") + " / CAST(COUNT(*) AS DOUBLE)")} AS avg_qty,
+           {stable_round_sql(dsum_sql("l_extendedprice") + " / CAST(COUNT(*) AS DOUBLE)")} AS avg_price,
+           {stable_round_sql(dsum_sql("l_discount") + " / CAST(COUNT(*) AS DOUBLE)")} AS avg_disc,
            CAST(COUNT(*) AS BIGINT) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -122,7 +122,7 @@ def q02_order_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q03_region_revenue",
     oracle=f"""
     SELECT r.r_name,
-           {stable_round_sql("CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")} AS revenue,
+           {stable_round_sql(dsum_sql("o.o_totalprice"))} AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM orders o
     JOIN customer c ON o.o_custkey = c.c_custkey
@@ -363,8 +363,8 @@ def q10_energy_tcf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT l_suppkey,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS su,
-             CAST(CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sq,
+             {dsum_sql("l_extendedprice")} AS su,
+             {dsum_sql("l_extendedprice * l_extendedprice")} AS sq,
              CAST(COUNT(l_extendedprice) AS BIGINT) AS price_count,
              MAX(l_extendedprice) AS price_max,
              MIN(l_extendedprice) AS price_min
@@ -534,7 +534,7 @@ def q15_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT v) AS BIGINT) AS n_distinct,
            {stable_round_sql('MIN(v)')} AS min_v,
            {stable_round_sql('MAX(v)')} AS max_v,
-           {stable_round_sql('CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) / COUNT(v)')}
+           {stable_round_sql(dsum_sql("v") + " / COUNT(v)")}
                AS mean_v,
            {stable_round_sql('quantile_cont(v, 0.25)')} AS p25,
            {stable_round_sql('quantile_cont(v, 0.5)')} AS p50,
@@ -579,7 +579,7 @@ def q16_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY ROLLUP (r.r_name, n.n_name)
-    """.format(rr=stable_round_sql('CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)')),
+    """.format(rr=stable_round_sql(dsum_sql("o.o_totalprice"))),
     doc="Hierarchical ROLLUP aggregation (region, nation, grand total) "
         "in one Expand+aggregate pass; NULL grouping slots rendered as "
         "'<all>' on both engines.",
@@ -677,7 +677,7 @@ def q18_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # old_agg (+) delta(CDC diff) — the oracle computes the new snapshot's
 # aggregate DIRECTLY, so a hash match proves incremental maintenance
 # is exactly equivalent to full recomputation. Exactness relies on
-# decimal accumulators end-to-end: sums stay decimal(30,10)-based
+# decimal accumulators end-to-end: sums stay DEC-based
 # until one final cast, so old+delta is bit-identical to a full
 # re-sum regardless of partitioning or merge order.
 # At 100 TB: the old aggregate and the CDC feed are materialized
@@ -694,9 +694,7 @@ def q18_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
            {rr} AS revenue
     FROM orders WHERE o_orderkey % 97 <> 0
     GROUP BY o_custkey
-    """.format(rr=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rr=stable_round_sql(dsum_sql("o_totalprice"))),
     doc="Incremental view maintenance: per-customer (count, revenue) "
         "maintained by merging the CDC delta into the old aggregate "
         "(insert:+new, delete:-old, update:+new-old); groups whose "
@@ -746,9 +744,7 @@ def q19_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
            {rr} AS revenue
     FROM orders
     GROUP BY CUBE(o_orderstatus, o_orderpriority)
-    """.format(rr=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rr=stable_round_sql(dsum_sql("o_totalprice"))),
     doc="Multidimensional CUBE aggregation (all status x priority "
         "subtotals plus grand total) in one scan; grouping() separates "
         "rolled-up NULLs from genuine NULL keys, as in q17's rollup.",
@@ -895,25 +891,25 @@ def q23_exists_slow_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q24_window_analytics",
-    oracle="""
+    oracle=f"""
     SELECT o_custkey, o_orderkey,
            CAST(ROW_NUMBER() OVER w AS BIGINT) AS seq,
            o_totalprice AS price,
            LAG(o_totalprice) OVER w AS prev_price,
            o_totalprice - LAG(o_totalprice) OVER w AS delta,
-           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) OVER w
+           CAST(CAST(SUM(CAST(o_totalprice AS {DEC})) OVER w
                 AS VARCHAR) AS DOUBLE) AS running_rev,
-           {avg3} AS avg3
+           {stable_round_sql(
+               f"CAST(CAST(SUM(CAST(o_totalprice AS {DEC})) OVER w3"
+               " AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) OVER w3 AS DOUBLE)")}
+               AS avg3
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey
                  ORDER BY o_orderdate, o_orderkey),
            w3 AS (PARTITION BY o_custkey
                   ORDER BY o_orderdate, o_orderkey
                   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-    """.format(avg3=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10))) OVER w3'
-        ' AS VARCHAR) AS DOUBLE)'
-        ' / CAST(COUNT(*) OVER w3 AS DOUBLE)')),
+    """,
     doc="Window-function analytics per customer order history: "
         "row_number sequence, lag, per-order delta, running revenue "
         "(unbounded preceding) and 3-order moving average. All windows "
@@ -991,10 +987,10 @@ def q25_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 @register(
     "q26_above_avg_orders",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT o_orderkey, o_custkey, o_totalprice,
-             CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))
+             CAST(CAST(SUM(CAST(o_totalprice AS {DEC}))
                        OVER (PARTITION BY o_custkey) AS VARCHAR) AS DOUBLE)
                AS sum_d,
              CAST(COUNT(*) OVER (PARTITION BY o_custkey) AS BIGINT) AS n
@@ -1002,12 +998,10 @@ def q25_group_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_orders,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_orderkey,
-           {rev} AS revenue
+           {stable_round_sql(dsum_sql("o_totalprice"))} AS revenue
     FROM t
     WHERE o_totalprice * CAST(n AS DOUBLE) * 2.0 > 3.0 * sum_d
-    """.format(rev=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """,
     doc="Correlated scalar-aggregate subquery (order price > 1.5x the "
         "customer's own average), decorrelated to one window over "
         "o_custkey — a single scan and a single shuffle instead of a "
@@ -1055,8 +1049,7 @@ _TOPK = 10
     ORDER BY revenue DESC, o.o_orderkey ASC
     LIMIT {_TOPK}
     """.format(rev=stable_round_sql(
-        'CAST(CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)'
-        ' AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)')),
+        dsum_sql("l.l_extendedprice * (1.0 - l.l_discount)"))),
     doc="Global top-k revenue among open orders (TPC-H Q3 shape): "
         "grouped revenue then ORDER BY + LIMIT planned as "
         "TakeOrderedAndProject — per-task top-k heaps merged on the "
@@ -1273,9 +1266,7 @@ def q31_scalable_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                             (o_orderstatus), (o_orderpriority))
-    """.format(rr=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rr=stable_round_sql(dsum_sql("o_totalprice"))),
     doc="Explicit GROUPING SETS (the general form under ROLLUP/CUBE): "
         "three chosen aggregation granularities in ONE Expand + hash "
         "aggregate pass over a single scan — no UNION of three "
@@ -1380,9 +1371,7 @@ def q33_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN customer c ON o.o_custkey = c.c_custkey
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY n.n_name
-    """.format(rr=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rr=stable_round_sql(dsum_sql("o.o_totalprice"))),
     doc="Bucketed co-located join through the sink: orders and customer "
         "are written bucketed by custkey (16 buckets, sorted), read "
         "back from the catalog, and joined under a merge hint — the "
@@ -1464,9 +1453,7 @@ def q35_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT l_returnflag, metric,
            CAST(COUNT(*) AS BIGINT) AS n,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR)'
-               ' AS DOUBLE)')} AS total
+           {stable_round_sql(dsum_sql("v"))} AS total
     FROM long GROUP BY l_returnflag, metric
     """,
     doc="UNPIVOT (wide->long melt, the inverse of q21's pivot): three "
@@ -1584,7 +1571,7 @@ def q38_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q39_partition_backfill",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT o_orderpriority AS prio,
              CASE WHEN o_orderpriority = '1-URGENT'
@@ -1593,8 +1580,7 @@ def q38_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT prio,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(CAST(SUM(CAST(amt AS DECIMAL(30,10))) AS VARCHAR)
-                AS DOUBLE) AS amt_sum
+           {dsum_sql("amt")} AS amt_sum
     FROM base GROUP BY prio
     """,
     doc="Idempotent partition backfill via dynamic partition overwrite: "
@@ -1623,7 +1609,6 @@ def q39_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("amt", -F.col("amt")))
     upsert_partitions(backfill, out, ["prio"])
     back = spark.read.parquet(out)
-    from mousedatapipeline_spark.operators.aggregates import dsum
     return back.groupBy("prio").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         dsum("amt").alias("amt_sum"))
@@ -1765,9 +1750,7 @@ def q41_grouped_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
            {rev} AS revenue
     FROM orders WHERE o_orderstatus = 'F'
     GROUP BY o_orderpriority
-    """.format(rev=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rev=stable_round_sql(dsum_sql("o_totalprice"))),
     doc="Source/sink format breadth: orders written as "
         "zstd-compressed ORC partitioned by o_orderstatus, read back "
         "through the ORC source with a partition filter, and "
@@ -1849,7 +1832,7 @@ def q43_schema_evolution_merge(spark: SparkSession,
 # O(features), rounds unroll exactly like s10's k-means. Parity:
 # step 1's predictions are the constant 0.5 (w=0), so its gradient is
 # exact decimal arithmetic; step 2's sigmoid goes through libm exp,
-# whose <=1-ulp engine drift vanishes in the per-term DECIMAL(30,10)
+# whose <=1-ulp engine drift vanishes in the per-term decimal
 # cast (t14's transcendental-parity pattern); the accuracy threshold
 # compares the raw dot product against 0 — sigmoid(d) >= 0.5 iff
 # d >= 0 — an exact comparison.
@@ -1859,18 +1842,16 @@ _Q44_JS = range(_Q44_D + 1)
 
 
 def _q44_sql() -> str:
-    dsum = ("CAST(CAST(SUM(CAST({t} AS DECIMAL(30,10))) AS VARCHAR)"
-            " AS DOUBLE)")
     cols = ", ".join(
         ["1.0 AS x0"] + [f"CAST(embedding[{j}] AS DOUBLE) AS x{j}"
                          for j in range(1, _Q44_D + 1)])
     g1 = ", ".join(
-        dsum.format(t=f"(0.5 - y) * x{j}")
+        dsum_sql(f"(0.5 - y) * x{j}")
         + f" / CAST(COUNT(*) AS DOUBLE) AS g{j}" for j in _Q44_JS)
     w1 = ", ".join(f"-g{j} AS w{j}" for j in _Q44_JS)
     dot = " + ".join(f"w.w{j} * x.x{j}" for j in _Q44_JS)
     g2 = ", ".join(
-        dsum.format(t=f"(p - y) * x{j}")
+        dsum_sql(f"(p - y) * x{j}")
         + f" / CAST(COUNT(*) AS DOUBLE) AS g{j}" for j in _Q44_JS)
     w2 = ", ".join(f"w1.w{j} - g2.g{j} AS w{j}" for j in _Q44_JS)
     xs = ", ".join(f"x.x{j}" for j in _Q44_JS)
@@ -1930,8 +1911,8 @@ def q44_logistic_regression_steps(spark: SparkSession,
     def grads(df, resid):
         n = F.count(F.lit(1))
         return df.agg(*[
-            (F.sum((resid * F.col(f"x{j}")).cast(DEC)).cast("double")
-             / n.cast("double")).alias(f"g{j}") for j in _Q44_JS])
+            (dsum(resid * F.col(f"x{j}")) / n.cast("double"))
+            .alias(f"g{j}") for j in _Q44_JS])
 
     w1 = grads(X, F.lit(0.5) - F.col("y")).select(
         *[(-F.col(f"g{j}")).alias(f"w{j}") for j in _Q44_JS])
@@ -1971,9 +1952,7 @@ def q44_logistic_regression_steps(spark: SparkSession,
     JOIN customer c ON o.o_custkey = c.c_custkey
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY n.n_name
-    """.format(rev=stable_round_sql(
-        'CAST(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,10)))'
-        ' AS VARCHAR) AS DOUBLE)')),
+    """.format(rev=stable_round_sql(dsum_sql("o.o_totalprice"))),
     doc="Incremental JOIN maintenance (the join half of q19's IVM "
         "story): the orders-customer-nation join is materialized for "
         "the base 90% of orders, then a 10% delta arrives and only "
@@ -2081,9 +2060,7 @@ def q46_sql_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted,
            CAST(MIN(o_orderkey) AS BIGINT) AS min_key,
            CAST(MAX(o_orderkey) AS BIGINT) AS max_key,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS revenue
+           {stable_round_sql(dsum_sql("o_totalprice"))} AS revenue
     FROM merged GROUP BY o_orderstatus
     """,
     doc="MERGE INTO (upsert with deletes), the lakehouse CDC staple: a "

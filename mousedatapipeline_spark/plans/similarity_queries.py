@@ -18,6 +18,7 @@ from mousedatapipeline_spark.operators import graph as G
 from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import similarity as S
 from mousedatapipeline_spark.operators import text as T
+from mousedatapipeline_spark.operators.aggregates import DEC, dsum, dsum_sql
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.text_queries import t03_quality_score
 from mousedatapipeline_spark.tables import (
@@ -40,9 +41,9 @@ _SQL_DIMS = """
            UNNEST(generate_series(1, len(embedding))) AS t(dim)
 """
 
-_SQL_NORMS = """
+_SQL_NORMS = f"""
       SELECT vec_id,
-             SQRT(CAST(CAST(SUM(CAST(v * v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)) AS norm
+             SQRT({dsum_sql("v * v")}) AS norm
       FROM dims GROUP BY vec_id
 """
 
@@ -344,7 +345,7 @@ def s04_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms AS ({_SQL_NORMS}),
     dots AS (
       SELECT q.vec_id AS qid, c.vec_id AS cid,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM dims q JOIN dims c ON q.dim = c.dim
       WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
       GROUP BY 1, 2
@@ -425,7 +426,7 @@ _SQL_SIGN = ("CASE WHEN ((p * 2654435761 + dim * 40503) % 2147483647) % 2 = 0 "
     norms AS ({_SQL_NORMS}),
     proj AS (
       SELECT vec_id, p, w,
-             CAST(CAST(SUM(CAST(({_SQL_SIGN}) * v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS proj
+             {dsum_sql(f"({_SQL_SIGN}) * v")} AS proj
       FROM dims, {_SQL_PLANES}
       GROUP BY 1, 2, 3
     ),
@@ -441,7 +442,7 @@ _SQL_SIGN = ("CASE WHEN ((p * 2654435761 + dim * 40503) % 2147483647) % 2 = 0 "
     ),
     dots AS (
       SELECT cand.qid, cand.cid, cand.bucket,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM cand JOIN dims q ON cand.qid = q.vec_id
                 JOIN dims c ON cand.cid = c.vec_id AND q.dim = c.dim
       GROUP BY 1, 2, 3
@@ -534,8 +535,7 @@ def s06_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT label, dim,
            CAST(COUNT(*) AS BIGINT) AS n,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) '
-               '/ CAST(COUNT(*) AS DOUBLE)')} AS centroid_v
+               dsum_sql("v") + " / CAST(COUNT(*) AS DOUBLE)")} AS centroid_v
     FROM labeled GROUP BY label, dim
     """,
     doc="Per-label embedding centroids (the IVF coarse-quantizer "
@@ -548,9 +548,8 @@ def s07_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = dims.join(e.select("vec_id", "label"), "vec_id")
     return labeled.groupBy("label", "dim").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        stable_round(
-            F.sum(F.col("v").cast("decimal(30,10)")).cast("double")
-            / F.count(F.lit(1)).cast("double")).alias("centroid_v"))
+        stable_round(dsum("v") / F.count(F.lit(1)).cast("double"))
+        .alias("centroid_v"))
 
 
 # --------------------------------------------------------------------------
@@ -572,7 +571,7 @@ _NEARDUP_TAU = 0.35
     lab AS (SELECT vec_id, label FROM embeddings),
     dots AS (
       SELECT a.vec_id AS d1, b.vec_id AS d2, la.label,
-             CAST(CAST(SUM(CAST(a.v * b.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("a.v * b.v")} AS dot
       FROM dims a
       JOIN lab la ON a.vec_id = la.vec_id
       JOIN lab lb ON la.label = lb.label
@@ -647,13 +646,13 @@ def s09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     centroids AS (
       SELECT label, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM labeled GROUP BY label, dim
     ),
     cdots AS (
       SELECT d.vec_id, c.label,
-             CAST(CAST(SUM(CAST(d.v * c.cv AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("d.v * c.cv")} AS dot
       FROM dims d JOIN centroids c ON d.dim = c.dim
       GROUP BY d.vec_id, c.label
     ),
@@ -672,7 +671,7 @@ def s09_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dots AS (
       SELECT cand.qid, cand.cid, cand.cell,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM cand JOIN dims q ON cand.qid = q.vec_id
                 JOIN dims c ON cand.cid = c.vec_id AND q.dim = c.dim
       GROUP BY 1, 2, 3
@@ -786,8 +785,7 @@ def _km_centroids(assigned: DataFrame) -> DataFrame:
         "cell", F.posexplode("v").alias("pos", "val"))
     return dims.groupBy("cell", (F.col("pos") + 1).alias("dim")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (F.sum(F.col("val").cast("decimal(30,10)")).cast("double")
-         / F.count(F.lit(1)).cast("double")).alias("cv"))
+        (dsum("val") / F.count(F.lit(1)).cast("double")).alias("cv"))
 
 
 def _km_to_arrays(cent: DataFrame) -> DataFrame:
@@ -796,24 +794,28 @@ def _km_to_arrays(cent: DataFrame) -> DataFrame:
                     lambda s: s["cv"]).alias("c"))
 
 
-_KM_SQL_ASSIGN = """
+def _km_sql_assign(i: int, j: int) -> str:
+    """k-means round i: assign every vector to its nearest c{j} centroid
+    and recompute the centroids as c{i}."""
+    return f"""
     dist{i} AS (
       SELECT d.vec_id, c.cell,
-             CAST(CAST(SUM(CAST((d.v - c.cv) * (d.v - c.cv) AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dist
+             {dsum_sql("(d.v - c.cv) * (d.v - c.cv)")} AS dist
       FROM dims d JOIN c{j} c ON d.dim = c.dim GROUP BY 1, 2
     ),
     a{i} AS (
       SELECT vec_id, cell FROM (
         SELECT vec_id, cell,
                ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY {rd} ASC, cell ASC) AS rn
+                                  ORDER BY {stable_round_sql('dist')} ASC,
+                                           cell ASC) AS rn
         FROM dist{i})
       WHERE rn = 1
     ),
     c{i} AS (
       SELECT a.cell, d.dim,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(CAST(SUM(CAST(d.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("d.v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM dims d JOIN a{i} a ON d.vec_id = a.vec_id GROUP BY 1, 2
     )"""
@@ -878,8 +880,7 @@ def sqrtn_quantizer_sql() -> str:
     ),
     c1 AS (
       SELECT a.cell, d.dim,
-             CAST(CAST(SUM(CAST(d.v AS DECIMAL(30,10))) AS VARCHAR)
-                  AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS cv
+             {dsum_sql("d.v")} / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM dims d JOIN ka a ON d.vec_id = a.vec_id
       GROUP BY 1, 2
     ),
@@ -907,12 +908,12 @@ def sqrtn_quantizer_sql() -> str:
     WITH dims AS ({_SQL_DIMS}),
     c0 AS (
       SELECT e.label AS cell, d.dim,
-             CAST(CAST(SUM(CAST(d.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("d.v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM dims d JOIN embeddings e ON d.vec_id = e.vec_id GROUP BY 1, 2
     ),
-    {_KM_SQL_ASSIGN.format(i=1, j=0, rd=stable_round_sql('dist'))},
-    {_KM_SQL_ASSIGN.format(i=2, j=1, rd=stable_round_sql('dist'))}
+    {_km_sql_assign(1, 0)},
+    {_km_sql_assign(2, 1)}
     SELECT CAST(cell AS INT) AS cell, CAST(dim AS INT) AS dim, n,
            {stable_round_sql('cv')} AS centroid_v
     FROM c2
@@ -1353,7 +1354,7 @@ _OUTLIER_K = 5
     lab AS (SELECT vec_id, label FROM embeddings),
     cent AS (
       SELECT la.label, d.dim,
-             CAST(CAST(SUM(CAST(d.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("d.v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM dims d JOIN lab la ON d.vec_id = la.vec_id
       GROUP BY 1, 2
@@ -1406,8 +1407,7 @@ def s20_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrays and broadcast.
     dims = vecs.select("label", F.posexplode("v").alias("pos", "val"))
     cent = dims.groupBy("label", (F.col("pos") + 1).alias("dim")).agg(
-        (F.sum(F.col("val").cast("decimal(30,10)")).cast("double")
-         / F.count(F.lit(1)).cast("double")).alias("cv"))
+        (dsum("val") / F.count(F.lit(1)).cast("double")).alias("cv"))
     cent_arr = cent.groupBy("label").agg(
         F.transform(F.array_sort(F.collect_list(F.struct("dim", "cv"))),
                     lambda s: s["cv"]).alias("c"))
@@ -1439,7 +1439,7 @@ def s20_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab AS (SELECT vec_id, label FROM embeddings),
     dots AS (
       SELECT a.vec_id AS d1, b.vec_id AS d2, la.label,
-             CAST(CAST(SUM(CAST(a.v * b.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("a.v * b.v")} AS dot
       FROM dims a
       JOIN lab la ON a.vec_id = la.vec_id
       JOIN lab lb ON la.label = lb.label
@@ -2160,7 +2160,7 @@ def s29_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     cent AS (
       SELECT label, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS c
       FROM labeled GROUP BY label, dim
     ),
@@ -2171,14 +2171,13 @@ def s29_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     inert AS (
       SELECT label,
              CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
-             CAST(CAST(SUM(CAST(s AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("s")}
                AS inertia
       FROM sq GROUP BY label
     ),
     cd AS (
       SELECT a.label AS la, b.label AS lb,
-             CAST(CAST(SUM(CAST((a.c - b.c) * (a.c - b.c)
-                                AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("(a.c - b.c) * (a.c - b.c)")}
                AS csq
       FROM cent a JOIN cent b ON a.dim = b.dim AND a.label <> b.label
       GROUP BY 1, 2
@@ -2214,8 +2213,7 @@ def s30_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                .localCheckpoint(eager=True))  # centroid + distance pass
     # run concurrently in the final job (r09 A/B 1.14 -> 0.98 s eager)
     cent = (labeled.groupBy("label", "dim")
-            .agg((F.sum(F.col("v").cast("decimal(30,10)")).cast("double")
-                  / F.count(F.lit(1)).cast("double")).alias("c"))
+            .agg((dsum("v") / F.count(F.lit(1)).cast("double")).alias("c"))
             .localCheckpoint(eager=True))  # reused three times
     # (inertia + both sides of the k x k separation pass, one job)
     sq = (labeled.join(cent, ["label", "dim"])
@@ -2224,16 +2222,14 @@ def s30_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                    * (F.col("v") - F.col("c"))).alias("s")))
     inert = sq.groupBy("label").agg(
         F.countDistinct("vec_id").cast("bigint").alias("n_vecs"),
-        F.sum(F.col("s").cast("decimal(30,10)")).cast("double")
-        .alias("inertia"))
+        dsum("s", "inertia"))
     ca = cent.select(F.col("label").alias("la"), "dim", F.col("c").alias("cva"))
     cb = cent.select(F.col("label").alias("lb"), "dim", F.col("c").alias("cvb"))
     cd = (ca.join(cb, "dim")
           .filter(F.col("la") != F.col("lb"))
           .groupBy("la", "lb")
-          .agg(F.sum(((F.col("cva") - F.col("cvb"))
-                      * (F.col("cva") - F.col("cvb")))
-                     .cast("decimal(30,10)")).cast("double").alias("csq")))
+          .agg(dsum((F.col("cva") - F.col("cvb"))
+                    * (F.col("cva") - F.col("cvb")), "csq")))
     w = W.partitionBy("la").orderBy("csq", "lb")
     nearest = (cd.withColumn("rk", F.row_number().over(w))
                .filter(F.col("rk") == 1))
@@ -2270,8 +2266,7 @@ _S32_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
     SELECT split, label,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(norm AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("norm") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_norm,
            {stable_round_sql(
                'CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) '
@@ -2298,7 +2293,7 @@ def s32_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _S32_SPLITS)
     g = s.groupBy("split", "label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-        (F.sum(F.col("norm").cast("decimal(30,10)")).cast("double")
+        (dsum("norm")
          / F.count(F.lit(1)).cast("double")).alias("mean_norm_raw"))
     w = W.partitionBy("split")
     return g.select(
@@ -2330,8 +2325,7 @@ def s32_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CASE WHEN x.source <> y.source THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_cross,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(p.jaccard AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_jaccard
+               dsum_sql("p.jaccard") + " / CAST(COUNT(*) AS DOUBLE)")} AS mean_jaccard
     FROM ({_REGISTRY['s19_lsh_verified_neardup'].oracle}) p
     JOIN lab x ON p.d1 = x.doc_id
     JOIN lab y ON p.d2 = y.doc_id
@@ -2348,8 +2342,6 @@ def s32_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s33_cross_source_dup_matrix(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     pairs = s19_lsh_verified_neardup(spark, sf_dir)
     lab = load(spark, sf_dir, "documents").select("doc_id", "source")
     j = (pairs
@@ -2428,13 +2420,13 @@ def s34_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     centroids AS (
       SELECT label, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM labeled GROUP BY label, dim
     ),
     cdots AS (
       SELECT d.vec_id, c.label,
-             CAST(CAST(SUM(CAST(d.v * c.cv AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("d.v * c.cv")} AS dot
       FROM dims d JOIN centroids c ON d.dim = c.dim
       GROUP BY d.vec_id, c.label
     ),
@@ -2458,7 +2450,7 @@ def s34_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     dots AS (
       SELECT cand.qid, cand.q_label, cand.cell, cand.cid,
              cand.neg_label,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM cand JOIN dims q ON cand.qid = q.vec_id
                 JOIN dims c ON cand.cid = c.vec_id AND q.dim = c.dim
       GROUP BY 1, 2, 3, 4, 5
@@ -2562,15 +2554,14 @@ _PQ_WIDTH = 16  # dims per subspace (4 x 16 = 64)
     ),
     cent AS (
       SELECT label, sub, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM labeled GROUP BY label, sub, dim
     ),
     dist AS (
       SELECT d.vec_id, d.sub, c.label,
-             {stable_round_sql(
-                 'CAST(CAST(SUM(CAST((d.v - c.cv) * (d.v - c.cv)'
-                 ' AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)')} AS dd
+             {stable_round_sql(dsum_sql("(d.v - c.cv) * (d.v - c.cv)"))}
+               AS dd
       FROM sdims d JOIN cent c ON d.dim = c.dim AND d.sub = c.sub
       GROUP BY 1, 2, 3
     ),
@@ -2583,9 +2574,7 @@ _PQ_WIDTH = 16  # dims per subspace (4 x 16 = 64)
     )
     SELECT vec_id,
            STRING_AGG(CAST(label AS VARCHAR), '-' ORDER BY sub) AS code,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(dd AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS recon_err
+           {stable_round_sql(dsum_sql("dd"))} AS recon_err
     FROM best GROUP BY vec_id
     """,
     doc="Product quantization (PQ): each vector split into 4 16-dim "
@@ -2599,9 +2588,6 @@ _PQ_WIDTH = 16  # dims per subspace (4 x 16 = 64)
         "raw vectors after the one training aggregate.",
 )
 def s36_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
-    dec = "decimal(30,10)"
     # load_spread (r10): the per-row work off this scan (subvector
     # slicing, codebook distance folds) is the query's hot loop, and
     # the single-file local fixture otherwise single-threads it —
@@ -2625,8 +2611,7 @@ def s36_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = S.vector_dims(e, "vec_id", "embedding")
     labeled = dims.join(e.select("vec_id", "label"), "vec_id")
     cent = (labeled.groupBy("label", "dim")
-            .agg((F.sum(F.col("v").cast(dec)).cast("double")
-                  / F.count(F.lit(1)).cast("double")).alias("cv"))
+            .agg((dsum("v") / F.count(F.lit(1)).cast("double")).alias("cv"))
             .withColumn("sub", ((F.col("dim") - 1) / _PQ_WIDTH)
                         .cast("int"))
             .groupBy("label", "sub")
@@ -2639,8 +2624,8 @@ def s36_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.01 lands on a rounding boundary stable_round cannot absorb.
     d2 = F.aggregate(
         F.zip_with("sv", "cw", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast(dec),
-        lambda acc, x: (acc + x.cast(dec)).cast(dec)).cast("double")
+        F.lit(0).cast(DEC),
+        lambda acc, x: (acc + x.cast(DEC)).cast(DEC)).cast("double")
     scored = (subs.join(F.broadcast(cent), "sub")
               .withColumn("dd", stable_round(d2)))
     best = scored.groupBy("vec_id", "sub").agg(
@@ -2681,13 +2666,13 @@ _S37_MAX_P = 3    # deepest probe
     ),
     centroids AS (
       SELECT label, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM labeled GROUP BY label, dim
     ),
     cdots AS (
       SELECT d.vec_id, c.label,
-             CAST(CAST(SUM(CAST(d.v * c.cv AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("d.v * c.cv")} AS dot
       FROM dims d JOIN centroids c ON d.dim = c.dim
       GROUP BY d.vec_id, c.label
     ),
@@ -2701,7 +2686,7 @@ _S37_MAX_P = 3    # deepest probe
     assign AS (SELECT vec_id, cell FROM cellrank WHERE crn = 1),
     exdots AS (
       SELECT q.vec_id AS qid, c.vec_id AS cid,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM dims q JOIN dims c ON q.dim = c.dim
       WHERE q.vec_id < {_S37_NQ} AND q.vec_id <> c.vec_id
       GROUP BY 1, 2
@@ -2870,7 +2855,7 @@ _S38_K = 3
     {sqrtn_quantizer_sql()},
     pdots AS (
       SELECT a.vec_id AS qid, b.vec_id AS cid, a.cell,
-             CAST(CAST(SUM(CAST(q.v * c.v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM assign a JOIN assign b ON a.cell = b.cell
                                  AND a.vec_id <> b.vec_id
       JOIN dims q ON q.vec_id = a.vec_id
@@ -2908,7 +2893,7 @@ _S38_K = 3
     ),
     mstat AS (
       SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_mutual,
-             CAST(CAST(SUM(CAST(rcos AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("rcos")}
                / CAST(COUNT(*) AS DOUBLE) AS mc
       FROM mutual GROUP BY cell
     )
@@ -2931,8 +2916,6 @@ _S38_K = 3
 )
 def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from mousedatapipeline_spark.operators.aggregates import dsum
 
     # load_spread (r10): quantizer seeding + within-cell kNN distance
     # folds ride the scan stage; single-file fixture single-threads
@@ -3014,13 +2997,13 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     centroids AS (
       SELECT label, dim,
-             CAST(CAST(SUM(CAST(v AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)
+             {dsum_sql("v")}
                / CAST(COUNT(*) AS DOUBLE) AS cv
       FROM labeled GROUP BY label, dim
     ),
     cdots AS (
       SELECT d.vec_id, c.label,
-             CAST(CAST(SUM(CAST(d.v * c.cv AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS dot
+             {dsum_sql("d.v * c.cv")} AS dot
       FROM dims d JOIN centroids c ON d.dim = c.dim
       GROUP BY d.vec_id, c.label
     ),
@@ -3037,8 +3020,7 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
            CAST(COUNT(DISTINCT c.code) AS BIGINT) AS n_distinct_codes,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(c.recon_err AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')} AS mean_recon_err
+               dsum_sql("c.recon_err") + " / CAST(COUNT(*) AS DOUBLE)")} AS mean_recon_err
     FROM assign a JOIN codes c ON a.vec_id = c.vec_id
     GROUP BY a.cell
     """,
@@ -3054,8 +3036,6 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
-
-    from mousedatapipeline_spark.operators.aggregates import dsum
 
     # load_spread (r10): PQ codebook training folds ride the scan
     # stage (identity at scale). A/B min-of-3: 2.99 -> 2.60 s.
@@ -3077,8 +3057,7 @@ def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
         F.countDistinct("code").cast("bigint")
         .alias("n_distinct_codes"),
-        stable_round(dsum("recon_err")
-                     / F.count(F.lit(1)).cast("double"))
+        stable_round(dsum("recon_err") / F.count(F.lit(1)).cast("double"))
         .alias("mean_recon_err"))
 
 
@@ -3097,8 +3076,6 @@ def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # output is rounded.
 # --------------------------------------------------------------------------
 _S40_ITERS = 3
-_S40_DSUM_SQL = ("CAST(CAST(SUM(CAST(r / CAST(outdeg AS DOUBLE)"
-                 " AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)")
 
 
 def _s40_oracle_iterations() -> str:
@@ -3107,7 +3084,7 @@ def _s40_oracle_iterations() -> str:
     for k in range(1, _S40_ITERS + 1):
         ctes.append(f"""
     c{k} AS (
-      SELECT e.dst AS doc_id, {_S40_DSUM_SQL} AS s
+      SELECT e.dst AS doc_id, {dsum_sql("r / CAST(outdeg AS DOUBLE)")} AS s
       FROM e JOIN {prev} ON e.src = {prev}.doc_id
              JOIN deg ON e.src = deg.src
       GROUP BY e.dst
@@ -3152,8 +3129,6 @@ def _s40_oracle_iterations() -> str:
         "by decimal-accumulator induction.",
 )
 def s40_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     from mousedatapipeline_spark.operators.graph import symmetrize_edges
 
     from mousedatapipeline_spark.tables import pin_keyed
@@ -3207,14 +3182,9 @@ def s40_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parity by induction: v0 = 1/sqrt(d) is the same double in both
 # engines (sqrt is IEEE-exact), the dot folds are order-matched
 # (s23/t17 pattern), and every cross-row sum goes through the
-# decimal(30,10) accumulator — so v_k is bit-identical at every k.
+# decimal accumulator (dsum) — so v_k is bit-identical at every k.
 # --------------------------------------------------------------------------
 _S41_ITERS = 3
-
-
-def _s41_dsum_sql(expr: str) -> str:
-    return (f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(30,10)))"
-            " AS VARCHAR) AS DOUBLE)")
 
 
 def _s41_oracle() -> str:
@@ -3234,14 +3204,14 @@ def _s41_oracle() -> str:
     for k in range(1, _S41_ITERS + 1):
         ctes.append(f"""
     w{k} AS MATERIALIZED (
-      SELECT dims.dim AS dim, {_s41_dsum_sql('dims.v * d%d.dot' % k)} AS w
+      SELECT dims.dim AS dim, {dsum_sql('dims.v * d%d.dot' % k)} AS w
       FROM dims JOIN d{k} USING (vec_id) GROUP BY dims.dim)""")
         if k == _S41_ITERS:
             break
         ctes.append(f"""
     v{k} AS (
       SELECT dim,
-             w / (SELECT SQRT({_s41_dsum_sql('w * w')}) FROM w{k}) AS v
+             w / (SELECT SQRT({dsum_sql("w * w")}) FROM w{k}) AS v
       FROM w{k}),
     varr{k} AS (SELECT list(v ORDER BY dim) AS varr FROM v{k}),
     d{k + 1} AS MATERIALIZED (
@@ -3252,7 +3222,7 @@ def _s41_oracle() -> str:
                (acc, x) -> acc + x) AS dot
       FROM embeddings, varr{k})""")
     last = _S41_ITERS
-    nrm = f"(SELECT SQRT({_s41_dsum_sql('w * w')}) FROM w{last})"
+    nrm = f"(SELECT SQRT({dsum_sql('w * w')}) FROM w{last})"
     return f"""
     WITH {','.join(ctes)},
     nf AS (SELECT {nrm} AS nrm)
@@ -3269,8 +3239,6 @@ def _s41_dot(vlit):
 
 
 def _s41_w(emb: DataFrame, vlit) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     # dot is projected BELOW the generator so it is evaluated once per
     # vector, not once per exploded component.
     base = emb.select("xs", _s41_dot(vlit).alias("dot"))
@@ -3281,8 +3249,6 @@ def _s41_w(emb: DataFrame, vlit) -> DataFrame:
 
 def _s41_ssq(wcol):
     from pyspark.sql import Window
-
-    from mousedatapipeline_spark.operators.aggregates import DEC
 
     # Global window over d rows (s28's bounded-global-window shape).
     return F.sum((wcol * wcol).cast(DEC)).over(
@@ -3341,11 +3307,6 @@ def s41_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 _S42_DEPTHS = (16, 32)
 
 
-def _s42_dsum(expr: str) -> str:
-    return (f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(30,10)))"
-            " AS VARCHAR) AS DOUBLE)")
-
-
 _S42_ORACLE_BODY = f"""
     WITH fdims AS MATERIALIZED ({_SQL_DIMS}),
     dep AS (SELECT CAST(d AS INT) AS depth
@@ -3353,11 +3314,11 @@ _S42_ORACLE_BODY = f"""
     tdims AS MATERIALIZED (
       SELECT depth, vec_id, dim, v FROM fdims, dep WHERE dim <= depth),
     tnorms AS (
-      SELECT depth, vec_id, SQRT({_s42_dsum('v * v')}) AS norm
+      SELECT depth, vec_id, SQRT({dsum_sql("v * v")}) AS norm
       FROM tdims GROUP BY 1, 2),
     tdots AS (
       SELECT q.depth AS depth, q.vec_id AS qid, c.vec_id AS cid,
-             {_s42_dsum('q.v * c.v')} AS dot
+             {dsum_sql("q.v * c.v")} AS dot
       FROM tdims q JOIN tdims c ON q.dim = c.dim AND q.depth = c.depth
       WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id
       GROUP BY 1, 2, 3),

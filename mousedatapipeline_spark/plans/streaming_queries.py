@@ -27,7 +27,7 @@ from mousedatapipeline_spark.functions.rounding import (
 from mousedatapipeline_spark.operators import bloom
 from mousedatapipeline_spark.operators import sketches as K
 from mousedatapipeline_spark.operators import text as TX
-from mousedatapipeline_spark.operators.aggregates import dsum
+from mousedatapipeline_spark.operators.aggregates import DEC, dsum, dsum_sql
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
 from mousedatapipeline_spark.plans.decontam_queries import EVAL_MOD, NGRAM
@@ -90,8 +90,7 @@ def _hourly_counts(batch: DataFrame) -> DataFrame:
            event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(value AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE)')} AS value_sum
+           {stable_round_sql(dsum_sql("value"))} AS value_sum
     FROM events
     GROUP BY 1, 2
     """,
@@ -201,23 +200,22 @@ def w03_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # streaming face of q19's IVM story: per-trigger cost is proportional
 # to the delta plus the aggregate's cardinality, never to history.
 # --------------------------------------------------------------------------
-_DEC = "decimal(30,10)"
 
 
 def _w04_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
     rows = batch.select(
         "event_type", F.lit(1).cast("bigint").alias("n_events"),
-        F.col("value").cast(_DEC).alias("value_dec"))
+        F.col("value").cast(DEC).alias("value_dec"))
     return (prior.unionByName(rows)
             .groupBy("event_type")
             .agg(F.sum("n_events").cast("bigint").alias("n_events"),
                  # narrow the decimal(38,10) sum back down so later
                  # merges never hit the precision-loss scale cut
-                 F.sum("value_dec").cast(_DEC).alias("value_dec")))
+                 F.sum("value_dec").cast(DEC).alias("value_dec")))
 
 
 _W04_FOLD = fold.Fold(
-    _w04_merge, f"event_type string, n_events bigint, value_dec {_DEC}")
+    _w04_merge, f"event_type string, n_events bigint, value_dec {DEC}")
 
 
 @register(
@@ -225,9 +223,7 @@ _W04_FOLD = fold.Fold(
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           {stable_round_sql(
-               'CAST(CAST(SUM(CAST(value AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE)')} AS value_sum
+           {stable_round_sql(dsum_sql("value"))} AS value_sum
     FROM events
     GROUP BY event_type
     """,
@@ -709,22 +705,22 @@ def _w13_merge(prior: DataFrame, batch: DataFrame) -> DataFrame:
               .select("event_type", "value",
                       _e22_weights_col().alias("wts")))
     rows = [F.lit(1).cast("bigint").alias("n"),
-            F.col("value").cast(_DEC).alias("sv")]
+            F.col("value").cast(DEC).alias("sv")]
     sums = [F.sum("n").cast("bigint").alias("n"),
-            F.sum("sv").cast(_DEC).alias("sv")]
+            F.sum("sv").cast(DEC).alias("sv")]
     for k in range(_E22_B):
         wk = F.element_at("wts", k + 1)
-        rows += [(F.col("value") * wk).cast(_DEC).alias(f"sv{k}"),
+        rows += [(F.col("value") * wk).cast(DEC).alias(f"sv{k}"),
                  wk.cast("bigint").alias(f"sw{k}")]
-        sums += [F.sum(f"sv{k}").cast(_DEC).alias(f"sv{k}"),
+        sums += [F.sum(f"sv{k}").cast(DEC).alias(f"sv{k}"),
                  F.sum(f"sw{k}").cast("bigint").alias(f"sw{k}")]
     return (prior.unionByName(staged.select("event_type", *rows))
             .groupBy("event_type").agg(*sums))
 
 
 _W13_FOLD = fold.Fold(
-    _w13_merge, f"event_type string, n bigint, sv {_DEC}, " + ", ".join(
-        f"sv{k} {_DEC}, sw{k} bigint" for k in range(_E22_B)))
+    _w13_merge, f"event_type string, n bigint, sv {DEC}, " + ", ".join(
+        f"sv{k} {DEC}, sw{k} bigint" for k in range(_E22_B)))
 
 
 @register(

@@ -18,6 +18,7 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators import text as T
+from mousedatapipeline_spark.operators.aggregates import dsum, dsum_sql
 from mousedatapipeline_spark.plans.catalog import register
 from mousedatapipeline_spark.tables import (
     fits_broadcast,
@@ -406,12 +407,10 @@ def t09_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(n_tok AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("n_tok") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_tokens,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(quality AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("quality") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_quality,
            CAST(COUNT(CASE WHEN quality >= 0.5 THEN 1 END) AS BIGINT)
              AS n_keep
@@ -423,7 +422,6 @@ def t09_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One shuffle on source; signals evaluate in the scan stage.",
 )
 def t13_source_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
     d = load(spark, sf_dir, "documents")
     q = T.quality_score(F.col("text"))
     f = d.select(
@@ -461,8 +459,7 @@ def t13_source_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(surp AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("surp") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_surprisal
     FROM s GROUP BY doc_id
     """,
@@ -476,8 +473,6 @@ def t13_source_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "float sum.",
 )
 def t14_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
     # Materialized + size-gated hint (r11, VERDICT r10 #4): freq is the
@@ -529,8 +524,7 @@ def t14_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_bigrams,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(surp AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("surp") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS mean_surprisal
     FROM s GROUP BY doc_id
     """,
@@ -547,8 +541,6 @@ def t14_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mean, so partition order cannot move the float.",
 )
 def t15_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     d = load_spread(spark, sf_dir, "documents")
     # Bigrams as (w1, w2) STRUCTS straight off the token array (r10):
     # the previous form concat_ws'd each pair into a "w1 w2" string
@@ -1011,8 +1003,7 @@ def _bigram_bucket(g: F.Column) -> F.Column:
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_feats,
            {stable_round_sql(
-               'CAST(CAST(SUM(CAST(lr AS DECIMAL(30,10)))'
-               ' AS VARCHAR) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)')}
+               dsum_sql("lr") + " / CAST(COUNT(*) AS DOUBLE)")}
              AS importance
     FROM s GROUP BY doc_id
     """,
@@ -1028,8 +1019,6 @@ def _bigram_bucket(g: F.Column) -> F.Column:
         "groupBy(doc_id).",
 )
 def t28_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import dsum
-
     d = load_spread(spark, sf_dir, "documents")
     ex = (d.select(
         "doc_id", "lang",
@@ -1085,10 +1074,10 @@ def t28_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     mo AS (
       SELECT lang,
              CAST(COUNT(*) AS BIGINT) AS n_terms,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sxy,
-             CAST(CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sxx
+             {dsum_sql("x")} AS sx,
+             {dsum_sql("y")} AS sy,
+             {dsum_sql("x * y")} AS sxy,
+             {dsum_sql("x * x")} AS sxx
       FROM r GROUP BY lang
     )
     SELECT lang, n_terms,
@@ -1111,8 +1100,6 @@ def t28_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t32_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from mousedatapipeline_spark.operators.aggregates import DEC
-
     d = load(spark, sf_dir, "documents")
     c = (d.select("lang", F.explode(T.tokens(F.col("text"))).alias("term"))
          .groupBy("lang", "term")
@@ -1124,12 +1111,9 @@ def t32_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("freq").cast("double")).alias("y"))
     mo = r.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-        F.sum(F.col("x").cast(DEC)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double")
-        .alias("sxx"))
+        dsum("x", "sx"), dsum("y", "sy"),
+        dsum(F.col("x") * F.col("y"), "sxy"),
+        dsum(F.col("x") * F.col("x"), "sxx"))
     nn = F.col("n_terms").cast("double")
     slope = ((nn * F.col("sxy") - F.col("sx") * F.col("sy"))
              / (nn * F.col("sxx") - F.col("sx") * F.col("sx")))
@@ -1178,10 +1162,10 @@ _T33_POINTS = 10  # prefix grid: vocab measured at 10%, 20%, ... of docs
     ),
     mo AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS np,
-             CAST(CAST(SUM(CAST(x AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(y AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(x * y AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sxy,
-             CAST(CAST(SUM(CAST(x * x AS DECIMAL(30,10))) AS VARCHAR) AS DOUBLE) AS sxx
+             {dsum_sql("x")} AS sx,
+             {dsum_sql("y")} AS sy,
+             {dsum_sql("x * y")} AS sxy,
+             {dsum_sql("x * x")} AS sxx
       FROM lg
     )
     SELECT np,
@@ -1206,8 +1190,6 @@ _T33_POINTS = 10  # prefix grid: vocab measured at 10%, 20%, ... of docs
         "log-log grid.",
 )
 def t33_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mousedatapipeline_spark.operators.aggregates import DEC
-
     d = load(spark, sf_dir, "documents")
     tk = (d.select("doc_id",
                    F.explode(T.tokens(F.col("text"))).alias("term"))
@@ -1240,12 +1222,9 @@ def t33_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("np"),
         F.max("n_tokens").cast("bigint").alias("n_tokens"),
         F.max("vocab").cast("bigint").alias("vocab"),
-        F.sum(F.col("x").cast(DEC)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double")
-        .alias("sxx"))
+        dsum("x", "sx"), dsum("y", "sy"),
+        dsum(F.col("x") * F.col("y"), "sxy"),
+        dsum(F.col("x") * F.col("x"), "sxx"))
     nn = F.col("np").cast("double")
     beta = ((nn * F.col("sxy") - F.col("sx") * F.col("sy"))
             / (nn * F.col("sxx") - F.col("sx") * F.col("sx")))
@@ -1462,9 +1441,7 @@ def _bm25_oracle() -> str:
     agg AS (
       SELECT query_id, doc_id,
              CAST(COUNT(*) AS BIGINT) AS n_terms_matched,
-             {stable_round_sql(
-                 'CAST(CAST(SUM(CAST(contrib AS DECIMAL(30,10)))'
-                 ' AS VARCHAR) AS DOUBLE)')} AS score
+             {stable_round_sql(dsum_sql("contrib"))} AS score
       FROM scored GROUP BY 1, 2
     )
     SELECT query_id, doc_id, rank, n_terms_matched, score FROM (
@@ -1493,8 +1470,6 @@ def _bm25_oracle() -> str:
 )
 def t36_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from mousedatapipeline_spark.operators.aggregates import dsum
 
     d = load_spread(spark, sf_dir, "documents")
     base = d.select("doc_id", T.tokens(F.col("text")).alias("toks"))
@@ -1569,15 +1544,13 @@ _T37_TOPK = 20
 
 def _t37_oracle() -> str:
     stops = ", ".join(f"'{s}'" for s in T.EN_STOPWORDS)
-    dsum = ("CAST(CAST(SUM(CAST((r * CAST(w AS DOUBLE))"
-            " / CAST(wdeg AS DOUBLE) AS DECIMAL(30,10)))"
-            " AS VARCHAR) AS DOUBLE)")
+    contrib = dsum_sql("(r * CAST(w AS DOUBLE)) / CAST(wdeg AS DOUBLE)")
     iters = []
     prev = "r0"
     for k in range(1, _T37_ITERS + 1):
         iters.append(f"""
     c{k} AS (
-      SELECT e.dst AS word, {dsum} AS s
+      SELECT e.dst AS word, {contrib} AS s
       FROM e JOIN {prev} ON e.src = {prev}.word
              JOIN deg ON e.src = deg.src
       GROUP BY e.dst),
@@ -1637,8 +1610,6 @@ def _t37_oracle() -> str:
 )
 def t37_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-
-    from mousedatapipeline_spark.operators.aggregates import dsum
 
     d = load_spread(spark, sf_dir, "documents")
     stops = list(T.EN_STOPWORDS)

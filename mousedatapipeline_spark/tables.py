@@ -225,14 +225,8 @@ def pin_keyed(df: DataFrame, keys: "list[str] | tuple[str, ...]",
     lower bound (one shuffle, ever).
     """
     raw = df.localCheckpoint(eager=True)
-    spark = raw.sparkSession
-    raw_thr = str(spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10m")).strip()
-    if raw_thr not in ("-1", "0"):  # broadcast disabled => always pin
-        thr = _parse_bytes(raw_thr, default=10 * 1024**2)
-        size = _cached_bytes(raw)
-        if size is not None and size <= thr:
-            return raw
+    if fits_broadcast(raw):  # broadcast disabled => never fits => pin
+        return raw
     pinned = pin_partitioned(raw, keys, sort=sort)
     # The pinned copy is materialized; drop the intermediate raw
     # checkpoint's cache NOW instead of waiting for Python GC + the

@@ -93,6 +93,16 @@ def test_registration_order_is_verification_policy():
     assert catalog._CHANGED_AFTER.keys() <= set(qs)
 
 
+def test_all_queries_order_ignores_registration_order(monkeypatch):
+    """Ties within a rank break by name: reversing the registry's
+    insertion order (what a module import reorder does) leaves the
+    catalog order unchanged."""
+    before = list(catalog.all_queries())
+    monkeypatch.setattr(catalog, "_REGISTRY",
+                        dict(reversed(catalog._REGISTRY.items())))
+    assert list(catalog.all_queries()) == before
+
+
 @pytest.fixture
 def ledger(tmp_path, monkeypatch):
     """Point the catalog's ledger at an empty ``tmp_path``; yields a
