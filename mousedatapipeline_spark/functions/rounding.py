@@ -49,3 +49,15 @@ def stable_round_sql(expr: str, digits: int = 6) -> str:
             f"THEN CAST({expr} AS DOUBLE) "
             f"ELSE FLOOR(CAST({expr} AS DOUBLE) * {scale} + 0.5001) / {scale} "
             f"END")
+
+
+def stable_round_array(x, digits: int = 6):
+    """The numpy twin of :func:`stable_round` over a float64 array, for
+    results computed on the driver: the same multiply, add, floor and
+    divide, so the values are bit-identical to Spark's."""
+    import numpy as np
+
+    scale = float(10 ** digits)
+    x = np.asarray(x, dtype=np.float64)
+    return np.where(np.abs(x) >= _PASSTHROUGH, x,
+                    np.floor(x * scale + 0.5001) / scale)

@@ -250,7 +250,6 @@ AHASH_SCHEMA = T.StructType([
     T.StructField("ahash", T.LongType()),
 ])
 
-AHASH_BITS = 64
 AHASH_BANDS = 4  # 4 x 16-bit bands: pigeonhole-complete for hamming <= 3
 
 

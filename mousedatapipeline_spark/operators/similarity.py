@@ -15,6 +15,16 @@ Scale design:
   block, which the caller controls. This is the standard LSH contract:
   at 100 TB you never join document-to-document directly, only within
   band-signature buckets.
+- The LSH near-dup funnel (``plans.similarity_queries.
+  lsh_verified_edges``) has two regimes. The hashed shingle sets
+  (:func:`shingle_hash_sets`) are checkpointed once; when their cached
+  size fits ``spark.sql.autoBroadcastJoinThreshold``
+  (``tables.fits_broadcast``) AND the candidate volume does (sum of
+  k(k-1)/2 over the band buckets at 16 bytes a pair,
+  :func:`pair_volume`), the sets are collected once and the rest runs
+  on the driver (:func:`band_buckets_np`, :func:`driver_verified_edges`);
+  past either gate the band self-join, verify join and
+  :func:`degree_cap_edges` run distributed. Both return the same edges.
 - Embedding dot products explode to (vec, dim) rows and aggregate with
   decimal sums: exact, shuffle-friendly, and skew-free (the `dim` join
   key is uniform by construction).
@@ -165,6 +175,18 @@ def hashed_shingle_docs(d: DataFrame, extra_cols: Sequence[str] = ("lang",),
     general case by :func:`shingle_hash_injective_on` (run by
     tools/check_correctness.py at every shipped SF).
     """
+    out = shingle_hash_sets(d, extra_cols).localCheckpoint(eager=False)
+    if with_n:
+        out = out.select("*", F.size("hs").cast("bigint").alias("n"))
+    return out
+
+
+def shingle_hash_sets(d: DataFrame,
+                      extra_cols: Sequence[str] = ("lang",)) -> DataFrame:
+    """The un-materialized plan behind :func:`hashed_shingle_docs`:
+    (doc_id, *extra_cols, hs) for the documents of length >= 3. For a
+    caller that materializes it itself (an eager checkpoint whose
+    size picks a regime)."""
     base = d.filter(F.length("text") >= 3)
     # O(n) formulation (r10): stage the codepoint array as a REAL
     # column (three element_at references below — CollapseProject
@@ -181,11 +203,7 @@ def hashed_shingle_docs(d: DataFrame, extra_cols: Sequence[str] = ("lang",),
         lambda i: (F.element_at(cp, i) * 65_536
                    + F.element_at(cp, i + 1) * 256
                    + F.element_at(cp, i + 2)) % MOD))
-    out = (staged.select("doc_id", *extra_cols, hs.alias("hs"))
-           .localCheckpoint(eager=False))
-    if with_n:
-        out = out.select("*", F.size("hs").cast("bigint").alias("n"))
-    return out
+    return staged.select("doc_id", *extra_cols, hs.alias("hs"))
 
 
 SHINGLE_HASH_SQL = ("(ascii(substr(shingle, 1, 1)) * 65536 "
@@ -750,3 +768,206 @@ def degree_cap_edges(verified: DataFrame, max_degree: int) -> DataFrame:
                     F.greatest("node", "nbr").alias("d2"),
                     "n_common", "jaccard_raw")
             .distinct())
+
+
+# --------------------------------------------------------------------------
+# Driver regime of the LSH near-dup funnel (plans.similarity_queries.
+# lsh_verified_edges): the same steps as the Spark plan above — MinHash
+# over the collected shingle-hash sets, banding, >= k shared bands,
+# exact Jaccard, union top-m degree cap — in numpy, for a hashed corpus
+# small enough to collect. Every step is exact integer arithmetic plus
+# the one IEEE division of the Spark plan, so both regimes return the
+# same edges.
+# --------------------------------------------------------------------------
+def _list_parts(col) -> tuple:
+    """(flat int64 values, int64 offsets) of an Arrow list<bigint>
+    column."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    arr = col.combine_chunks()
+    lens = pc.fill_null(pc.list_value_length(arr), 0).to_numpy()
+    offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    return pc.list_flatten(arr).to_numpy().astype(np.int64), offsets
+
+
+def _valid(col):
+    """Numpy mask of the non-null entries of an Arrow column."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    return np.asarray(pc.is_valid(col), dtype=bool)
+
+
+def _ranges(starts, counts):
+    """(group, index): for every group g, indices starts[g] ..
+    starts[g] + counts[g] - 1, with g repeated alongside."""
+    import numpy as np
+
+    group = np.repeat(np.arange(len(counts)), counts)
+    ends = np.cumsum(counts)
+    local = np.arange(ends[-1] if len(ends) else 0) \
+        - np.repeat(ends - counts, counts)
+    return group, np.repeat(starts, counts) + local
+
+
+def band_buckets_np(tbl) -> tuple:
+    """``(rows, sizes)`` for a collected ``(doc_id, lang, hs, ...)``
+    table: the row indices of every (lang, band, band_sig) LSH bucket,
+    bucket by bucket, and each bucket's size.
+
+    MinHash and banding as :func:`minhash_cols` and
+    :func:`band_signatures_wide` compute them; a band signature is
+    compared as its ROWS_PER_BAND minhashes, which the dash-joined
+    decimal string identifies exactly. Rows with a null ``doc_id`` or
+    ``lang`` enter no bucket: Spark's equi-join never matches a null
+    key, and a null-id row fails the ``d1 < d2`` filter."""
+    import numpy as np
+
+    vals, offsets = _list_parts(tbl.column("hs"))
+    lens = np.diff(offsets)
+    lang = tbl.column("lang").combine_chunks().dictionary_encode().indices
+    keep = np.flatnonzero(_valid(tbl.column("doc_id")) & _valid(lang)
+                          & (lens > 0))
+    if not len(keep):
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    _, idx = _ranges(offsets[keep], lens[keep])
+    kept = vals[idx]
+    heads = np.concatenate([[0], np.cumsum(lens[keep])[:-1]])
+    mh = np.stack([
+        np.minimum.reduceat((MINHASH_A[i] * kept + MINHASH_B[i]) % MOD,
+                            heads)
+        for i in range(N_PERM)])
+    code = lang.fill_null(0).to_numpy(zero_copy_only=False)[keep]
+    keys = np.concatenate([
+        np.stack([code, np.full(len(keep), b),
+                  *mh[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND]])
+        for b in range(N_BANDS)], axis=1)
+    rows = np.tile(keep, N_BANDS)
+    order = np.lexsort(keys[::-1])
+    keys, rows = keys[:, order], rows[order]
+    new = np.ones(len(rows), dtype=bool)
+    new[1:] = (keys[:, 1:] != keys[:, :-1]).any(axis=0)
+    bounds = np.append(np.flatnonzero(new), len(rows))
+    return rows, np.diff(bounds)
+
+
+def pair_volume(sizes) -> int:
+    """Row pairs the bucket self-join emits: sum of k(k-1)/2 over the
+    bucket sizes."""
+    return int((sizes * (sizes - 1) // 2).sum())
+
+
+def _common_counts(vals, offsets, r1, r2, chunk: int = 1 << 22):
+    """|hs[r1] & hs[r2]| for every row pair, hs being distinct-valued
+    lists (array_distinct): the two lists of each pair are tagged with
+    the pair's index and sorted together, so a repeated (pair, hash)
+    key is one common element. Hash values are < MOD = 2^31 - 1, which
+    leaves the bits above 31 for the tag. Pairs go in chunks of about
+    ``chunk`` elements to bound the sort's memory."""
+    import numpy as np
+
+    lens = np.diff(offsets)
+    cum = np.cumsum(lens[r1] + lens[r2])
+    out = np.zeros(len(r1), dtype=np.int64)
+    lo = 0
+    while lo < len(r1):
+        base = cum[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(cum, base + chunk, "right")))
+        p1, i1 = _ranges(offsets[r1[lo:hi]], lens[r1[lo:hi]])
+        p2, i2 = _ranges(offsets[r2[lo:hi]], lens[r2[lo:hi]])
+        key = ((np.concatenate([p1, p2]) << 31)
+               | np.concatenate([vals[i1], vals[i2]]))
+        key.sort()
+        same = key[1:] == key[:-1]
+        out[lo:hi] = np.bincount(key[1:][same] >> 31, minlength=hi - lo)
+        lo = hi
+    return out
+
+
+def driver_verified_edges(tbl, rows, sizes, min_shared_bands: int,
+                          min_jaccard: float, max_degree: int):
+    """Arrow ``(d1, d2, n_common, jaccard_raw)`` from a collected
+    ``(doc_id, lang, hs, ...)`` table and its :func:`band_buckets_np`:
+    the Spark funnel's candidate, verify and degree-cap steps.
+
+    - Candidates: every row pair inside a bucket with different ids,
+      oriented ``d1 < d2``, counted per id pair; pairs seen at least
+      ``min_shared_bands`` times survive.
+    - Verify: each candidate is scored against EVERY row carrying its
+      ids (the Spark plan's semi-join and joins key on ``doc_id``
+      alone, so a repeated id is scored once per copy, whatever its
+      lang): ``n_common`` is the size of the hash-set intersection and
+      ``jaccard_raw`` its one IEEE division, kept at ``min_jaccard``
+      or above.
+    - Cap: :func:`degree_cap_edges`' union top-m rule, ranked by
+      (jaccard_raw DESC, neighbor ASC) per node, then distinct. Only a
+      repeated id can tie on both keys; Spark's choice among such rows
+      is arbitrary, and this one takes the smaller ``n_common``.
+
+    ``d1``/``d2`` keep the Arrow type of ``doc_id``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = tbl.column("doc_id")
+    vals, offsets = _list_parts(tbl.column("hs"))
+    lens = np.diff(offsets)
+    # Dense, order-preserving ranks of the non-null ids; `rep` is one
+    # row carrying each rank's id.
+    id_rows = np.flatnonzero(_valid(ids))
+    uniq, first, inv = np.unique(np.asarray(pc.take(ids, id_rows)),
+                                 return_index=True, return_inverse=True)
+    n_ids = len(uniq)
+    rep = id_rows[first]
+    dense = np.full(tbl.num_rows, -1, dtype=np.int64)
+    dense[id_rows] = inv
+
+    # Candidates: position i of a bucket pairs with every later one.
+    heads = np.cumsum(sizes) - sizes
+    later = np.repeat(sizes, sizes) - 1 \
+        - (np.arange(len(rows)) - np.repeat(heads, sizes))
+    i, j = _ranges(np.arange(len(rows)) + 1, later)
+    a, b = dense[rows[i]], dense[rows[j]]
+    apart = a != b
+    pairs, shared = np.unique(
+        np.minimum(a, b)[apart] * n_ids + np.maximum(a, b)[apart],
+        return_counts=True)
+    pairs = pairs[shared >= min_shared_bands]
+    c1, c2 = pairs // n_ids, pairs % n_ids
+
+    # Verify against every row of both ids.
+    by_id = id_rows[np.argsort(inv, kind="stable")]
+    per_id = np.bincount(inv, minlength=n_ids)
+    id_head = np.cumsum(per_id) - per_id
+    cross = per_id[c1] * per_id[c2]
+    pair, k = _ranges(np.zeros(len(cross), dtype=np.int64), cross)
+    width = per_id[c2[pair]]
+    r1 = by_id[id_head[c1[pair]] + k // width]
+    r2 = by_id[id_head[c2[pair]] + k % width]
+    common = _common_counts(vals, offsets, r1, r2)
+    jr = common.astype(np.float64) \
+        / (lens[r1] + lens[r2] - common).astype(np.float64)
+    ok = jr >= min_jaccard
+    d1, d2, common, jr = c1[pair][ok], c2[pair][ok], common[ok], jr[ok]
+
+    # Union top-m degree cap.
+    node, nbr = np.concatenate([d1, d2]), np.concatenate([d2, d1])
+    nc2, jr2 = np.concatenate([common, common]), np.concatenate([jr, jr])
+    order = np.lexsort((nc2, nbr, -jr2, node))
+    ranked = node[order]
+    rank = np.arange(len(order)) - np.searchsorted(ranked, ranked)
+    kept = order[rank < max_degree]
+    lo, hi = np.minimum(node, nbr)[kept], np.maximum(node, nbr)[kept]
+    nc2, jr2 = nc2[kept], jr2[kept]
+    order = np.lexsort((jr2.view(np.int64), nc2, hi, lo))
+    lo, hi, nc2, jr2 = lo[order], hi[order], nc2[order], jr2[order]
+    new = np.ones(len(lo), dtype=bool)
+    new[1:] = ((lo[1:] != lo[:-1]) | (hi[1:] != hi[:-1])
+               | (nc2[1:] != nc2[:-1]) | (jr2[1:] != jr2[:-1]))
+    return pa.table({
+        "d1": pc.take(ids, rep[lo[new]]),
+        "d2": pc.take(ids, rep[hi[new]]),
+        "n_common": pa.array(nc2[new], type=pa.int64()),
+        "jaccard_raw": pa.array(jr2[new], type=pa.float64())})

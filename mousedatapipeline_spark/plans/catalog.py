@@ -103,9 +103,13 @@ _ROOT = Path(__file__).resolve().parents[2]
 # round or earlier no longer proves them. Drop an entry once re-proven.
 _CHANGED_AFTER: dict[str, int] = {
     # operators/graph.py: driver-side connected components; s34 uses s14.
+    # lsh_verified_edges: driver regime below the broadcast threshold
+    # (c06, s19, and s33/s40/s43 through s19).
     **dict.fromkeys(("c06_production_dedup_e2e", "s14_neardup_components",
         "s21_semantic_dedup", "mm06_media_dedup_clusters",
-        "s34_quality_canonical"), 11),
+        "s34_quality_canonical", "s19_lsh_verified_neardup",
+        "s33_cross_source_dup_matrix", "s40_neardup_pagerank",
+        "s43_label_propagation"), 11),
     # streaming/fold.py: w01-w16 rewritten on one drain-and-fold harness.
     **dict.fromkeys(("w01_stream_tumbling_counts", "w02_stream_sessionization",
         "w03_stream_dedup", "w04_stream_incremental_agg",

@@ -925,8 +925,8 @@ def c06_production_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass, never re-read the heavy payload).
     w = Window.partitionBy("xh")
     mem = (base.withColumn("cid", F.min("doc_id").over(w))
-           .localCheckpoint(eager=False))  # lazy: the eager bands
-    # checkpoint inside lsh_verified_edges materializes it first and
+           .localCheckpoint(eager=False))  # lazy: the eager hashed-
+    # sets checkpoint inside lsh_verified_edges materializes it first and
     # every later consumer (component seed, census join) reuses the
     # cache — sequential in practice (same rationale the r09 A/B
     # measured for the old surv checkpoint, 6.25 -> 6.45 s eager).

@@ -18,10 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mousedatapipeline_spark.functions.kernels import (
-    BEAM_STATS_SCHEMA,
-    beam_analysis,
-)
+from mousedatapipeline_spark.functions.kernels import beam_analysis
 from mousedatapipeline_spark.operators.multimodal import (
     attach_synthetic_media,
     extract_features,

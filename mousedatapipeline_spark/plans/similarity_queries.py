@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.functions.rounding import (
     stable_round,
+    stable_round_array,
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators import graph as G
@@ -1245,15 +1246,40 @@ def lsh_verified_edges(d: DataFrame) -> DataFrame:
     (union top-m — edge mass <= m*|V| by construction).  Factored out
     so composed pipelines (c06) can run the identical stage over a
     FILTERED corpus (e.g. exact-dedup survivors) without re-stating
-    the plan."""
+    the plan.
+
+    Two regimes, picked from observed size the way
+    ``connected_components`` picks its own. The hashed shingle sets
+    are materialized once (an eager checkpoint, the only corpus pass
+    either regime makes); then
+    - the DRIVER regime runs when two gates pass: the checkpoint's
+      cached size fits ``spark.sql.autoBroadcastJoinThreshold``
+      (``tables.fits_broadcast``), and so does the candidate volume,
+      sum of k(k-1)/2 over the (lang, band, band_sig) buckets at 16
+      bytes per pair (a hot bucket fails this one). The sets come back
+      in one Arrow collect, and minhash, banding, the >=
+      MIN_SHARED_BANDS filter, exact Jaccard and the degree cap run in
+      numpy (``operators.similarity.driver_verified_edges``). The
+      edges return as an Arrow-built LocalRelation: no closing
+      checkpoint, and c06 runs 13 jobs where the plan below ran 21;
+    - otherwise the distributed plan below runs.
+    Every step after the shingle hashing is exact integer arithmetic
+    plus one IEEE division, so both regimes return the same rows
+    (property-tested)."""
     # ONE corpus pass computes the hashed shingle sets that BOTH stages
     # consume: the minhash signatures derive from `hashed`, and the
     # verify stage reads the same checkpoint (s03 run standalone would
     # recompute the sets for its own pipeline — inlining its body here
     # halves the corpus-scan work of the combined query).
-    from mousedatapipeline_spark.tables import pin_keyed
+    from mousedatapipeline_spark.tables import fits_threshold, pin_keyed
 
-    hashed = S.hashed_shingle_docs(d, with_n=True)
+    hashed = S.shingle_hash_sets(d).localCheckpoint(eager=True)
+    if fits_broadcast(hashed):
+        tbl = hashed.toArrow()
+        rows, sizes = S.band_buckets_np(tbl)
+        if fits_threshold(hashed.sparkSession, 16 * S.pair_volume(sizes)):
+            return _driver_lsh_edges(hashed, tbl, rows, sizes)
+    hashed = hashed.select("*", F.size("hs").cast("bigint").alias("n"))
     sig = hashed.select("doc_id", "lang", *S.minhash_cols(F.col("hs")))
     bands = pin_keyed(
         S.band_signatures_wide(sig, ["doc_id", "lang"]),
@@ -1336,6 +1362,33 @@ def lsh_verified_edges(d: DataFrame) -> DataFrame:
                           stable_round(F.col("jaccard_raw"))
                           .alias("jaccard"))
             .localCheckpoint(eager=True))
+
+
+def _driver_lsh_edges(hashed: DataFrame, tbl, rows, sizes) -> DataFrame:
+    """The driver regime of :func:`lsh_verified_edges` over the
+    collected ``hashed`` table ``tbl`` and its LSH buckets: the edges
+    as one Arrow-built frame typed like the distributed plan's
+    output."""
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
+    edges = S.driver_verified_edges(tbl, rows, sizes, MIN_SHARED_BANDS,
+                                    VERIFY_JACCARD, MAX_NEARDUP_DEGREE)
+    jaccard = stable_round_array(edges.column("jaccard_raw").to_numpy())
+    id_type = hashed.schema["doc_id"].dataType
+    return hashed.sparkSession.createDataFrame(
+        pa.table({"d1": edges.column("d1"), "d2": edges.column("d2"),
+                  "n_common": edges.column("n_common"),
+                  "jaccard": pa.array(jaccard, type=pa.float64())}),
+        StructType([StructField("d1", id_type),
+                    StructField("d2", id_type),
+                    StructField("n_common", LongType(), False),
+                    StructField("jaccard", DoubleType())]))
 
 
 # --------------------------------------------------------------------------

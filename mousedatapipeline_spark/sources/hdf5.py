@@ -25,8 +25,8 @@ the library.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator, Mapping
-from dataclasses import dataclass, field
+from collections.abc import Iterator, Mapping
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame

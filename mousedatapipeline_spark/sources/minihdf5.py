@@ -103,7 +103,6 @@ _MSG_LINK_INFO = 0x0002
 _MSG_DATATYPE = 0x0003
 _MSG_LINK = 0x0006
 _MSG_LAYOUT = 0x0008
-_MSG_GROUP_INFO = 0x000A
 _MSG_FILTER_PIPELINE = 0x000B
 _MSG_ATTRIBUTE = 0x000C
 _MSG_CONTINUATION = 0x0010

@@ -13,11 +13,6 @@ TABLE_NAMES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Small dimensions: always broadcast-eligible at any scale factor in this
-# schema (region=5 rows, nation=25). customer/supplier/part grow with SF
-# but stay dimension-sized relative to lineitem/orders.
-BROADCAST_DIMS = ("region", "nation", "supplier")
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
@@ -259,14 +254,22 @@ def fits_broadcast(df: DataFrame) -> bool:
     plan-size estimates; the two track each other but are not the
     same measure. The threshold now bounds a driver collect as well
     as a broadcast hint: ``connected_components`` solves on the driver
-    exactly when its materialized edge list passes this gate."""
-    raw_thr = str(df.sparkSession.conf.get(
+    exactly when its materialized edge list passes this gate, and
+    ``lsh_verified_edges`` only when its hashed corpus does."""
+    size = _cached_bytes(df)
+    return size is not None and fits_threshold(df.sparkSession, size)
+
+
+def fits_threshold(spark: SparkSession, nbytes: int) -> bool:
+    """True iff ``nbytes`` is at most
+    ``spark.sql.autoBroadcastJoinThreshold``; never when broadcasting
+    is disabled (-1 or 0). The byte test behind :func:`fits_broadcast`,
+    for a size the caller computed itself."""
+    raw_thr = str(spark.conf.get(
         "spark.sql.autoBroadcastJoinThreshold", "10m")).strip()
     if raw_thr in ("-1", "0"):
         return False
-    thr = _parse_bytes(raw_thr, default=10 * 1024**2)
-    size = _cached_bytes(df)
-    return size is not None and size <= thr
+    return nbytes <= _parse_bytes(raw_thr, default=10 * 1024**2)
 
 
 def _unpersist_quietly(df: DataFrame) -> None:
@@ -373,9 +376,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_nanos_conf(spark)
     return normalize_events_ts(
         spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (mirrors the DuckDB oracle setup)."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from pyspark.sql import functions as F
-
 from mousedatapipeline_spark.operators import bloom
 from mousedatapipeline_spark.operators.windows import funnel_stage
 

@@ -11,7 +11,7 @@ from contextlib import contextmanager
 
 import duckdb
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -225,6 +225,84 @@ def test_cc_driver_solve_equals_distributed_loop(spark, graph):
         for x in merged:
             comp[x] = merged
     assert driver == {n: min(comp[n]) for n in nodes}
+
+
+_BASES = ("the quick brown fox jumps over the lazy dog",
+          "pack my box with five dozen liquor jugs",
+          "çà et là, über straße — 日本語のテキスト 😀𝒜 emoji")
+_CLIQUE_TEXT = "sphinx of black quartz, judge my vow"
+
+
+@st.composite
+def _corpora(draw):
+    """(doc_id, lang, text) rows for the LSH funnel: exact and near
+    copies of a few bases (multi-byte and supplementary codepoints
+    included), docs under 3 chars and null texts, several langs and
+    null langs, null and repeated doc_ids (a repeated id appears at
+    most twice among at most 19 such rows, so no node reaches the
+    degree cap and the distributed rank is deterministic), and
+    optionally an equal-Jaccard clique of unique ids larger than
+    MAX_NEARDUP_DEGREE."""
+    from mousedatapipeline_spark.plans.similarity_queries import (
+        MAX_NEARDUP_DEGREE,
+    )
+    edit = st.tuples(st.integers(0, 60), st.text(max_size=3))
+
+    def text():
+        kind = draw(st.sampled_from(("copy", "near", "short", "null")))
+        if kind == "short":
+            return draw(st.text(max_size=2))
+        if kind == "null":
+            return None
+        base = draw(st.sampled_from(_BASES))
+        if kind == "copy":
+            return base
+        for pos, ins in draw(st.lists(edit, min_size=1, max_size=3)):
+            base = base[:pos] + ins + base[pos + len(ins):]
+        return base
+
+    ids = draw(st.lists(st.integers(0, 40), max_size=16, unique=True))
+    ids += draw(st.lists(st.sampled_from(ids), max_size=3, unique=True)) \
+        if ids else []
+    ids += [None] * draw(st.integers(0, 2))
+    lang = st.sampled_from(("en", "de", "fr", None))
+    rows = [(i, draw(lang), text()) for i in ids]
+    if draw(st.booleans()):
+        n = MAX_NEARDUP_DEGREE + draw(st.integers(2, 6))
+        rows += [(1000 + k, "en", _CLIQUE_TEXT) for k in range(n)]
+    return draw(st.permutations(rows))
+
+
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_corpora())
+@example(docs=[])
+def test_lsh_driver_regime_equals_distributed(spark, monkeypatch, docs):
+    """lsh_verified_edges solved on the driver (the hashed corpus and
+    its bucket pairs fit the broadcast threshold) and by the
+    distributed plan (forced with a 1-byte threshold) return the same
+    rows and schema."""
+    from mousedatapipeline_spark.plans import similarity_queries as SQ
+
+    solved = []
+    driver = SQ._driver_lsh_edges
+    monkeypatch.setattr(SQ, "_driver_lsh_edges",
+                        lambda *a: solved.append(1) or driver(*a))
+    d = spark.createDataFrame(docs, "doc_id bigint, lang string, "
+                                    "text string")
+
+    def edges():
+        out = SQ.lsh_verified_edges(d)
+        return out.schema, sorted(map(tuple, out.collect()))
+
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "64MB"):
+        on_driver = edges()
+    assert solved == [1]
+    with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "1"):
+        distributed = edges()
+    if any(t is not None and len(t) >= 3 for _, _, t in docs):
+        assert solved == [1]  # a non-empty checkpoint never fits 1 byte
+    assert on_driver == distributed
 
 
 @settings(max_examples=15, deadline=None,

@@ -13,7 +13,6 @@ and DuckDB.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.plans import catalog

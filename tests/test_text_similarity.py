@@ -3,6 +3,8 @@ fingerprint fold, minhash/simhash invariants."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.operators import similarity as S
@@ -1073,6 +1075,91 @@ def test_degree_cap_binding_at_sf0001_matches_python(monkeypatch):
     got = {(r["d1"], r["d2"]) for r in SQ.lsh_verified_edges(d).collect()}
     assert got == _capped_edges_python(uncapped, 3)
     assert len(got) <= 3 * len({x for e in uncapped for x in e})
+
+
+# --------------------------------------------------------------------------
+# lsh_verified_edges' two regimes: the driver solve below the broadcast
+# threshold and the distributed plan past either gate (equality of the
+# two is a property in tests/test_properties.py).
+# --------------------------------------------------------------------------
+@contextmanager
+def _threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_lsh_driver_regime_job_budget(spark):
+    """Below the threshold the funnel runs two jobs: the eager
+    checkpoint of the hashed shingle sets and their one Arrow collect.
+    Everything after is numpy, and the edges come back as a local
+    relation, so collecting them runs no job at all. The distributed
+    plan ran ~10; sub-job creep on this path fails here."""
+    from mousedatapipeline_spark.plans import similarity_queries as SQ
+
+    sc = spark.sparkContext
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    d = spark.createDataFrame(
+        [(i, "en", text if i % 3 else text + f" {i}") for i in range(30)],
+        "doc_id bigint, lang string, text string")
+    group = "lsh-job-budget"
+
+    def jobs():
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, "lsh_verified_edges job budget")
+    try:
+        with _threshold(spark, "64MB"):
+            out = SQ.lsh_verified_edges(d)
+        inside = jobs()
+        got = out.collect()
+        total = jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    copies = [i for i in range(30) if i % 3]
+    assert {(a, b) for a in copies for b in copies if a < b} \
+        <= {(r.d1, r.d2) for r in got}
+    assert inside <= 2, inside
+    assert total <= 2, total
+
+
+def test_lsh_hot_bucket_past_pair_guard_runs_distributed(spark,
+                                                          monkeypatch):
+    """150 identical docs: the hashed corpus fits 256 KB, but every band
+    is one 150-doc bucket, 4 * C(150, 2) = 44,700 row pairs = 715 KB at
+    16 bytes a pair. Under a 256 KB threshold the first gate passes (the
+    buckets are computed) and the pair guard fails, so the distributed
+    plan runs; it returns the capped clique, the same edges as the
+    driver regime under 64 MB."""
+    from mousedatapipeline_spark.plans import similarity_queries as SQ
+
+    solved, bucketed = [], []
+    driver, buckets = SQ._driver_lsh_edges, S.band_buckets_np
+    monkeypatch.setattr(SQ, "_driver_lsh_edges",
+                        lambda *a: solved.append(1) or driver(*a))
+    monkeypatch.setattr(S, "band_buckets_np",
+                        lambda t: bucketed.append(1) or buckets(t))
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    d = spark.createDataFrame([(i, "en", text) for i in range(150)],
+                              "doc_id bigint, lang string, text string")
+    with _threshold(spark, "256k"):
+        hot = {(r.d1, r.d2): (r.n_common, r.jaccard)
+               for r in SQ.lsh_verified_edges(d).collect()}
+    assert bucketed == [1] and solved == []
+    with _threshold(spark, "64MB"):
+        cool = {(r.d1, r.d2): (r.n_common, r.jaccard)
+                for r in SQ.lsh_verified_edges(d).collect()}
+    assert solved == [1]
+    assert hot == cool
+    n = len({text[i:i + 3] for i in range(len(text) - 2)})
+    clique = {(a, b): (n, 1.0) for a in range(150) for b in range(a + 1, 150)}
+    assert set(hot) == _capped_edges_python(clique, SQ.MAX_NEARDUP_DEGREE)
+    assert set(hot.values()) == {(n, 1.0)}
 
 
 def test_sqrtn_kmeans_nonempty_on_offset_sparse_ids(spark):
