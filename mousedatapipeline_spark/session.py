@@ -24,7 +24,6 @@ def default_parallelism() -> int:
 
 
 def get_spark(app_name: str = "mousedatapipeline_spark",
-              shuffle_partitions: int | None = None,
               ansi: bool = False) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
@@ -51,7 +50,7 @@ def get_spark(app_name: str = "mousedatapipeline_spark",
     the caller's ``ansi`` too (static confs like driver memory remain
     reuse-inert).
     """
-    n = shuffle_partitions or default_parallelism()
+    n = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))

@@ -172,8 +172,7 @@ class NexusStreamReader(SimpleDataSourceStreamReader):
     over a long-lived landing dir. Idempotence (SURVEY.md §2.8 W3) is
     unchanged: each file is read exactly once, and replaying a
     committed range re-reads exactly the files fresh relative to the
-    range's start but not its end. Legacy ``{"processed": [...]}``
-    offsets from older checkpoints are still understood.
+    range's start but not its end.
 
     Contract: landing files must arrive with non-decreasing mtimes
     (true for real landing dirs — the watcher's debounce assumes the
@@ -200,9 +199,6 @@ class NexusStreamReader(SimpleDataSourceStreamReader):
 
     def _fresh(self, offset: dict) -> list[str]:
         """Files fresh relative to ``offset``, with their mtimes."""
-        if "processed" in offset:  # legacy full-manifest offset
-            done = set(offset.get("processed", []))
-            return [f for f in self._listing() if f not in done]
         hwm = offset.get("hwm", -1)
         frontier = set(offset.get("frontier", []))
         out = []

@@ -187,11 +187,6 @@ def test_stream_offsets_are_compact_high_water_marks(landing):
     p.unlink()
     assert len(list(r.readBetweenOffsets(o0, o1))) == 3
 
-    # Legacy manifest offsets from old checkpoints still resolve.
-    legacy = {"processed": sorted(r._listing())[:2]}
-    rows_l, _ = r.read(legacy)
-    assert len(list(rows_l)) == 1
-
 
 def test_h5py_round_trip_matches_dict_tree():
     """Real-HDF5 parity: the h5py branch of read_h5_value/flatten_tree

@@ -675,23 +675,27 @@ def test_write_bucketed_managed_survives_stale_location(spark):
     wh = Path(spark.conf.get("spark.sql.warehouse.dir")
               .removeprefix("file:"))
     spark.sql("CREATE DATABASE IF NOT EXISTS btdb")
-    # default-db AND qualified-name cases: the orphan location differs
-    # (<wh>/<t> vs <wh>/<db>.db/<t>), which a naive guess gets wrong
-    for table, loc in [("bt_stale", wh / "bt_stale"),
-                       ("btdb.bt_stale", wh / "btdb.db" / "bt_stale")]:
-        sinks.write_bucketed(df, table, ["k"], 4)
-        assert loc.exists(), loc
-        stash = loc.with_name("bt_stale_stash")
-        if stash.exists():                    # interrupted prior run
-            shutil.rmtree(stash)
-        shutil.copytree(loc, stash)
-        spark.sql(f"DROP TABLE {table}")      # drops dir too (managed)
-        shutil.move(str(stash), str(loc))     # orphan the location
-        try:
-            sinks.write_bucketed(df, table, ["k"], 4)  # must not raise
-            assert spark.table(table).count() == 100
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        # default-db AND qualified-name cases: the orphan location differs
+        # (<wh>/<t> vs <wh>/<db>.db/<t>), which a naive guess gets wrong
+        for table, loc in [("bt_stale", wh / "bt_stale"),
+                           ("btdb.bt_stale", wh / "btdb.db" / "bt_stale")]:
+            sinks.write_bucketed(df, table, ["k"], 4)
+            assert loc.exists(), loc
+            stash = loc.with_name("bt_stale_stash")
+            if stash.exists():                # interrupted prior run
+                shutil.rmtree(stash)
+            shutil.copytree(loc, stash)
+            spark.sql(f"DROP TABLE {table}")  # drops dir too (managed)
+            shutil.move(str(stash), str(loc))  # orphan the location
+            try:
+                sinks.write_bucketed(df, table, ["k"], 4)  # must not raise
+                assert spark.table(table).count() == 100
+            finally:
+                spark.sql(f"DROP TABLE IF EXISTS {table}")
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS btdb CASCADE")
+    assert not (wh / "btdb.db").exists()
 
 
 def _sum_merge(prior, batch):
