@@ -25,6 +25,14 @@ even. They disagree when that scaled product lands exactly on .5:
 of single-value sums found 408 mismatches in 6,000 uniform doubles
 within +-1e4 and +-1e6, and none for values under 1 or for 2-decimal
 prices up to 5e5.
+
+Sample variance (``dvar``/``dvar_sql``) takes its own exact sums: the
+textbook ``(sumsq - sum^2/n) / (n-1)`` in double loses about
+``eps * sumsq``, so it gives equal values a std near 1e-5 (0.33203125
+twice: 6.8e-6) and equal values near 1e6 one near 1e-2. Each
+input is rounded to ``VDEC`` (8 places), where its square is exact, and
+the sums are re-centred on ``k = floor(min)`` in decimal, so only the
+small term ``(sum(v - k))^2 / n`` is left to double arithmetic.
 """
 
 from __future__ import annotations
@@ -59,6 +67,62 @@ def dsum_sql(expr: str) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS {DEC})) AS VARCHAR) AS DOUBLE)"
 
 
+# Scale of the variance path: a value rounded to 8 places squares
+# exactly into 16 places, so both of its sums are exact. The
+# casts in ``_var_sql`` bound |v| < 1e10, |sum v| < 1e18 and
+# sum v^2 < 1e21 per group (null past them, or an error under ANSI).
+VDEC = "DECIMAL(18,8)"
+
+
+def dvar_parts_sql(expr: str, tag: str) -> list[str]:
+    """The three aggregates ``dvar``/``dvar_sql`` finish, as SQL text
+    both engines parse alike: ``{tag}_s1`` = sum, ``{tag}_s2`` = sum of
+    squares and ``{tag}_k`` = floor of the minimum, all exact decimals
+    of ``expr`` rounded to ``VDEC``."""
+    r = f"CAST({expr} AS {VDEC})"
+    # One factor at precision 19: DuckDB multiplies two DECIMAL(18)s in
+    # 64 bits and overflows, and Spark still fits the product in 38.
+    return [f"CAST(SUM({r}) AS DECIMAL(28,8)) AS {tag}_s1",
+            f"SUM({r} * CAST({r} AS DECIMAL(19,8))) AS {tag}_s2",
+            f"CAST(FLOOR(MIN({r})) AS DECIMAL(11,0)) AS {tag}_k"]
+
+
+def dvar_parts(col: str, tag: str) -> list[Column]:
+    """Spark side of ``dvar_parts_sql`` over the column named ``col``."""
+    return [F.expr(e) for e in dvar_parts_sql(f"`{col}`", tag)]
+
+
+def _var_sql(tag: str, n: str, to_double) -> str:
+    """Sample variance (ddof=1) from the ``{tag}_*`` parts and the count
+    ``n``. ``u`` = sum(v - k) and ``t`` = sum((v - k)^2) = s2 - k*(s1 + u)
+    are exact decimals; then ``(t - u^2/n) / (n-1)``, clamped at 0 (with
+    v >= k, both terms are at most about n times the result, so the
+    double subtraction loses only ~n ulps of it). Every cast pins a type
+    whose precision Spark's decimal rules would otherwise cut."""
+    s1, s2, k = f"{tag}_s1", f"{tag}_s2", f"{tag}_k"
+    u = f"({s1} - CAST(CAST({n} AS DECIMAL(19,0)) * {k} AS DECIMAL(20,0)))"
+    t = (f"(CAST({s2} AS DECIMAL(37,16))"
+         f" - CAST({k} * CAST({s1} + {u} AS DECIMAL(26,8))"
+         f" AS DECIMAL(37,16)))")
+    nd = f"CAST({n} AS DOUBLE)"
+    ud = to_double(u)
+    return (f"GREATEST(({to_double(t)} - {ud} * {ud} / {nd})"
+            f" / ({nd} - 1.0), 0.0)")
+
+
+def dvar(tag: str, n: str) -> Column:
+    """Order-independent sample variance from ``dvar_parts(col, tag)``
+    over the count column ``n``."""
+    return F.expr(_var_sql(tag, n, lambda x: f"CAST({x} AS DOUBLE)"))
+
+
+def dvar_sql(tag: str, n: str) -> str:
+    """DuckDB twin of ``dvar``; decimals go to DOUBLE through VARCHAR
+    for the reason ``dsum_sql`` gives."""
+    return _var_sql(
+        tag, n, lambda x: f"CAST(CAST({x} AS VARCHAR) AS DOUBLE)")
+
+
 def stack_stats(df: DataFrame, keys: Sequence[str], value: str,
                 prefix: str = "",
                 extra_aggs: dict[str, Column] | None = None) -> DataFrame:
@@ -69,8 +133,9 @@ def stack_stats(df: DataFrame, keys: Sequence[str], value: str,
     (src/post_translation_operation_hdf5_stacker.py:162-189).
 
     Single shuffle on ``keys`` with map-side partial aggregation; the
-    variance is derived from exact decimal sums so the result is
-    reproducible under any partitioning (see module docstring).
+    mean and variance come from exact decimal sums (``dsum``, ``dvar``)
+    so the result is reproducible under any partitioning (see module
+    docstring).
     ``extra_aggs`` rides additional aggregate columns on the SAME
     groupBy — callers needing stats plus other aggregates should pass
     them here rather than aggregating twice and joining.
@@ -79,7 +144,7 @@ def stack_stats(df: DataFrame, keys: Sequence[str], value: str,
     v = F.col(value)
     agg = df.groupBy(*keys).agg(
         dsum(v, "__sum"),
-        F.sum((v * v).cast(DEC)).cast("double").alias("__sumsq"),
+        *dvar_parts(value, "__v"),
         F.count(v).cast("bigint").alias(f"{p}count"),
         F.max(v).alias(f"{p}max"),
         F.min(v).alias(f"{p}min"),
@@ -87,18 +152,12 @@ def stack_stats(df: DataFrame, keys: Sequence[str], value: str,
     )
     n = F.col(f"{p}count").cast("double")
     mean = F.col("__sum") / n
-    # Clamp: the textbook formula can go epsilon-negative when all group
-    # values are equal (catastrophic cancellation); sqrt must stay defined.
-    var = F.greatest(
-        (F.col("__sumsq") - (F.col("__sum") * F.col("__sum")) / n)
-        / (n - F.lit(1.0)),
-        F.lit(0.0))
-    std = F.sqrt(var)
+    std = F.sqrt(dvar("__v", f"`{p}count`"))
     return (
         agg.withColumn(f"{p}mean", mean)
         .withColumn(f"{p}std", F.when(F.col(f"{p}count") > 1, std))
         .withColumn(f"{p}sem", F.when(F.col(f"{p}count") > 1, std / F.sqrt(n)))
-        .drop("__sum", "__sumsq")
+        .drop("__sum", "__v_s1", "__v_s2", "__v_k")
     )
 
 

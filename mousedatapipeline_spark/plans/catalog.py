@@ -125,6 +125,9 @@ _CHANGED_AFTER: dict[str, int] = {
     # threshold decides.
     **dict.fromkeys(("q17_rollup_revenue", "q21_pivot_status_counts",
         "q38_constraint_audit"), 11),
+    # operators/aggregates.dvar: std from exact centred decimal sums.
+    **dict.fromkeys(("m01_stacked_summary", "m05_pipeline_e2e",
+        "m17_repetition_drift_qc", "q11_stack_stats"), 11),
 }
 
 

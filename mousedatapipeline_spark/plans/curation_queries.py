@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
@@ -374,8 +375,6 @@ def s17_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         "any JSON mangling (escaping, encoding, truncation) hash-fails.",
 )
 def t16_jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import types as T
 
     from mousedatapipeline_spark.sources.sinks import write_jsonl_shards
@@ -384,22 +383,22 @@ def t16_jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         .alias("shard"),
         "doc_id", "lang", "text")
-    out = tempfile.mkdtemp(prefix="mouse_jsonl_t16_")
-    write_jsonl_shards(d, out, "shard")
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("lang", T.StringType()),
         T.StructField("text", T.StringType()),
     ])
-    back = (spark.read.schema(schema).json(out + "/shard=*")
-            .withColumn("shard",
-                        F.regexp_extract(F.input_file_name(),
-                                         r"shard=([0-9a-f])", 1)))
-    return back.groupBy("shard").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("doc_id").cast("bigint").alias("id_sum"),
-        F.sum(F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10)
-              .cast("bigint")).cast("bigint").alias("text_hash_sum"))
+    with scratch.workdir("mouse_jsonl_t16_") as out:
+        write_jsonl_shards(d, str(out), "shard")
+        back = (spark.read.schema(schema).json(f"{out}/shard=*")
+                .withColumn("shard",
+                            F.regexp_extract(F.input_file_name(),
+                                             r"shard=([0-9a-f])", 1)))
+        return scratch.keep(back.groupBy("shard").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("doc_id").cast("bigint").alias("id_sum"),
+            F.sum(F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10)
+                  .cast("bigint")).cast("bigint").alias("text_hash_sum")))
 
 
 # --------------------------------------------------------------------------
@@ -589,28 +588,26 @@ _SORT_BUCKETS = 4
 )
 def t20_sorted_export_roundtrip(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    import tempfile
-
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
     bucketed = d.withColumn("bucket", F.col("doc_id") % _SORT_BUCKETS)
-    out = tempfile.mkdtemp(prefix="mouse_t20_")
-    (bucketed.repartition(_SORT_BUCKETS, "bucket")
-     .sortWithinPartitions("doc_id")
-     .write.mode("overwrite").parquet(out))
-    back = spark.read.parquet(out).select(
-        "bucket", "doc_id",
-        F.input_file_name().alias("f"),
-        F.monotonically_increasing_id().alias("mid"))
     w = Window.partitionBy("f").orderBy("mid")
-    flagged = back.withColumn(
-        "viol",
-        (F.col("doc_id") < F.lag("doc_id").over(w)).cast("int"))
-    return flagged.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.min("doc_id").cast("bigint").alias("min_id"),
-        F.max("doc_id").cast("bigint").alias("max_id"),
-        F.coalesce(F.sum("viol"), F.lit(0)).cast("bigint")
-        .alias("order_violations"))
+    with scratch.workdir("mouse_t20_") as out:
+        (bucketed.repartition(_SORT_BUCKETS, "bucket")
+         .sortWithinPartitions("doc_id")
+         .write.mode("overwrite").parquet(str(out)))
+        back = spark.read.parquet(str(out)).select(
+            "bucket", "doc_id",
+            F.input_file_name().alias("f"),
+            F.monotonically_increasing_id().alias("mid"))
+        flagged = back.withColumn(
+            "viol",
+            (F.col("doc_id") < F.lag("doc_id").over(w)).cast("int"))
+        return scratch.keep(flagged.groupBy("bucket").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.min("doc_id").cast("bigint").alias("min_id"),
+            F.max("doc_id").cast("bigint").alias("max_id"),
+            F.coalesce(F.sum("viol"), F.lit(0)).cast("bigint")
+            .alias("order_violations")))
 
 
 TOKEN_BUDGET = 50_000  # declared training-mix token budget

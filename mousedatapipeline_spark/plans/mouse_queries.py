@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.functions import physics
 from mousedatapipeline_spark.functions.rounding import (
     stable_round,
@@ -32,7 +33,8 @@ from mousedatapipeline_spark.functions.rounding import (
 )
 from mousedatapipeline_spark.operators import joins, windows
 from mousedatapipeline_spark.operators.aggregates import (
-    census, dsum, dsum_sql, stack_stats,
+    census, dsum, dsum_sql, dvar, dvar_parts, dvar_parts_sql, dvar_sql,
+    stack_stats,
 )
 from mousedatapipeline_spark.operators.filters import completeness_check
 from mousedatapipeline_spark.plans.catalog import register
@@ -103,7 +105,7 @@ def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), s AS (
       SELECT batch, configuration,
              {dsum_sql("transmission_corrected")} AS su,
-             {dsum_sql("transmission_corrected * transmission_corrected")} AS sq,
+             {", ".join(dvar_parts_sql("transmission_corrected", "sv"))},
              CAST(COUNT(*) AS BIGINT) AS t_count,
              MAX(transmission_corrected) AS t_max,
              MIN(transmission_corrected) AS t_min,
@@ -113,14 +115,12 @@ def measurements(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT batch, configuration, t_count, t_max, t_min, max_scatter_prob,
            {stable_round_sql('su / CAST(t_count AS DOUBLE)')} AS t_mean,
-           CASE WHEN t_count > 1 THEN {stable_round_sql('''
-                   SQRT(GREATEST((sq - (su * su) / CAST(t_count AS DOUBLE))
-                        / (CAST(t_count AS DOUBLE) - 1.0), 0.0))''')}
+           CASE WHEN t_count > 1 THEN {stable_round_sql(
+                   f"SQRT({dvar_sql('sv', 't_count')})")}
                 END AS t_std,
-           CASE WHEN t_count > 1 THEN {stable_round_sql('''
-                   SQRT(GREATEST((sq - (su * su) / CAST(t_count AS DOUBLE))
-                        / (CAST(t_count AS DOUBLE) - 1.0), 0.0))
-                   / SQRT(CAST(t_count AS DOUBLE))''')}
+           CASE WHEN t_count > 1 THEN {stable_round_sql(
+                   f"SQRT({dvar_sql('sv', 't_count')})"
+                   " / SQRT(CAST(t_count AS DOUBLE))")}
                 END AS t_sem,
            {stable_round_sql('flux_sum')} AS flux_sum
     FROM s
@@ -380,7 +380,7 @@ def pipeline_inputs(spark: SparkSession, sf_dir: str):
     s AS (
       SELECT ymd, batch, configuration,
              {dsum_sql("transmission_corrected")} AS su,
-             {dsum_sql("transmission_corrected * transmission_corrected")} AS sq,
+             {", ".join(dvar_parts_sql("transmission_corrected", "sv"))},
              CAST(COUNT(*) AS BIGINT) AS t_count,
              MAX(transmission_corrected) AS t_max,
              MIN(transmission_corrected) AS t_min,
@@ -394,9 +394,8 @@ def pipeline_inputs(spark: SparkSession, sf_dir: str):
     SELECT ymd, batch, configuration, t_count, t_max, t_min,
            max_scatter_prob,
            {stable_round_sql('su / CAST(t_count AS DOUBLE)')} AS t_mean,
-           CASE WHEN t_count > 1 THEN {stable_round_sql('''
-                   SQRT(GREATEST((sq - (su * su) / CAST(t_count AS DOUBLE))
-                        / (CAST(t_count AS DOUBLE) - 1.0), 0.0))''')}
+           CASE WHEN t_count > 1 THEN {stable_round_sql(
+                   f"SQRT({dvar_sql('sv', 't_count')})")}
                 END AS t_std,
            {stable_round_sql('flux_sum')} AS flux_sum,
            {stable_round_sql('thick_sum / CAST(t_count AS DOUBLE)')}
@@ -901,8 +900,6 @@ def m12_canstack_checklist(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m13_nexus_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
-    import tempfile
-    from pathlib import Path
     from mousedatapipeline_spark.sources.nexus_source import NexusDataSource
 
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 20)
@@ -916,19 +913,6 @@ def m13_nexus_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.min("l_tax").alias("t"))
             .collect())  # bounded fixture build (< ~100 files), like w01
 
-    landing = Path(tempfile.mkdtemp(prefix="mouse_nexus_m13_"))
-    for r in rows:
-        sample = {"transmission": 1.0 - r["d"],
-                  # A5: array-valued scalar read collapses via mean
-                  "mu_arr": [r["t"], r["t"] * 2.0, r["t"] * 3.0]}
-        if r["q"] >= 10.0:   # S3: absent float degrades to 0.0
-            sample["thickness"] = r["q"] / 100.0
-        if r["q"] >= 25.0:   # S4: absent string degrades to ''
-            sample["name"] = "demo"
-        tree = {"entry": {"sample": sample}}
-        name = f"MOUSE_{r['ymd']}_{r['l_orderkey']}_{r['l_linenumber']}"
-        (landing / f"{name}.json").write_text(_json.dumps(tree))
-
     spark.dataSource.register(NexusDataSource)
     mapping = _json.dumps([  # S8: declarative path -> column remap
         {"source_path": "/entry/sample/transmission",
@@ -940,25 +924,36 @@ def m13_nexus_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"source_path": "/entry/sample/name",
          "column": "sample_name", "kind": "string"},
     ])
-    ingested = (spark.read.format("nexus")
-                .option("path", str(landing))
-                .option("mapping", mapping).load())
-
     # J5: detector <-> metadata equi-join (dim side broadcast).
     dim = load(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") < 20).select(
         F.col("o_orderkey").alias("batch"), "o_orderstatus")
-    out = ingested.join(F.broadcast(dim), "batch", "left")
-    return out.select(
-        F.col("batch").cast("int").alias("batch"),
-        F.col("repetition").cast("int").alias("repetition"),
-        "ymd",
-        stable_round(F.col("transmission")).alias("transmission"),
-        stable_round(F.col("thickness")).alias("thickness"),
-        stable_round(F.col("mu")).alias("mu"),
-        "sample_name",
-        F.coalesce(F.col("o_orderstatus"), F.lit("")).alias("status"),
-    )
+    with scratch.workdir("mouse_nexus_m13_") as landing:
+        for r in rows:
+            sample = {"transmission": 1.0 - r["d"],
+                      # A5: array-valued scalar read collapses via mean
+                      "mu_arr": [r["t"], r["t"] * 2.0, r["t"] * 3.0]}
+            if r["q"] >= 10.0:   # S3: absent float degrades to 0.0
+                sample["thickness"] = r["q"] / 100.0
+            if r["q"] >= 25.0:   # S4: absent string degrades to ''
+                sample["name"] = "demo"
+            tree = {"entry": {"sample": sample}}
+            key = "MOUSE_{ymd}_{l_orderkey}_{l_linenumber}".format(**r.asDict())
+            (landing / f"{key}.json").write_text(_json.dumps(tree))
+        ingested = (spark.read.format("nexus")
+                    .option("path", str(landing))
+                    .option("mapping", mapping).load())
+        out = ingested.join(F.broadcast(dim), "batch", "left")
+        return scratch.keep(out.select(
+            F.col("batch").cast("int").alias("batch"),
+            F.col("repetition").cast("int").alias("repetition"),
+            "ymd",
+            stable_round(F.col("transmission")).alias("transmission"),
+            stable_round(F.col("thickness")).alias("thickness"),
+            stable_round(F.col("mu")).alias("mu"),
+            "sample_name",
+            F.coalesce(F.col("o_orderstatus"), F.lit("")).alias("status"),
+        ))
 
 
 # --------------------------------------------------------------------------
@@ -982,7 +977,6 @@ def m13_nexus_ingest_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is what is checked.",
 )
 def m14_stacked_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
     from mousedatapipeline_spark.sources.sinks import write_stacked
 
     li = load(spark, sf_dir, "lineitem")
@@ -991,11 +985,12 @@ def m14_stacked_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("batch")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_reps"),
         stable_round(dsum("l_quantity")).alias("qty_sum"))
-    out_dir = tempfile.mkdtemp(prefix="mouse_stacked_m14_")
-    write_stacked(stacked, out_dir, partition_cols=("year",))
-    back = spark.read.parquet(out_dir)
-    return back.select(F.col("year").cast("int").alias("year"),
-                       "batch", "n_reps", "qty_sum")
+    with scratch.workdir("mouse_stacked_m14_") as out_dir:
+        write_stacked(stacked, str(out_dir), partition_cols=("year",))
+        back = spark.read.parquet(str(out_dir))
+        return scratch.keep(back.select(
+            F.col("year").cast("int").alias("year"),
+            "batch", "n_reps", "qty_sum"))
 
 
 @register(
@@ -1059,22 +1054,18 @@ def m16_daily_ops_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT batch, configuration,
              CAST(COUNT(*) AS BIGINT) AS n_reps,
              {dsum_sql("transmission")} AS t_sum,
-             {dsum_sql("transmission * transmission")} AS t_sumsq
+             {", ".join(dvar_parts_sql("transmission", "tv"))}
       FROM m GROUP BY batch, configuration
     )
     SELECT batch, configuration, n_reps,
            {stable_round_sql('t_sum / CAST(n_reps AS DOUBLE)')} AS t_mean,
            {stable_round_sql(
                'CASE WHEN n_reps > 1 THEN '
-               'SQRT(GREATEST((t_sumsq - t_sum * t_sum '
-               '/ CAST(n_reps AS DOUBLE)) '
-               '/ CAST(n_reps - 1 AS DOUBLE), 0.0)) '
+               f'SQRT({dvar_sql("tv", "n_reps")}) '
                '/ (t_sum / CAST(n_reps AS DOUBLE)) ELSE 0.0 END')}
              AS cv,
            CAST(n_reps > 1 AND
-                SQRT(GREATEST((t_sumsq - t_sum * t_sum
-                     / CAST(n_reps AS DOUBLE))
-                     / CAST(n_reps - 1 AS DOUBLE), 0.0))
+                SQRT({dvar_sql("tv", "n_reps")})
                 / (t_sum / CAST(n_reps AS DOUBLE)) > 0.05
                 AS INT) AS drift_flag
     FROM g
@@ -1082,10 +1073,10 @@ def m16_daily_ops_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Repetition-stability QC (the drift gate A1/A2 stacking "
         "implicitly assumes: repetitions of one (batch, configuration) "
         "measure the SAME sample state): per group, the coefficient of "
-        "variation of transmission across repetitions from explicit "
-        "decimal sums (sum + sum-of-squares — identical IEEE "
-        "expressions both engines, GREATEST(...,0) absorbing the "
-        "catastrophic-cancellation negative), flagged above 5% CV. "
+        "variation of transmission across repetitions from exact "
+        "decimal sums (dsum for the mean, dvar's centred sums for the "
+        "variance — identical IEEE expressions both engines), flagged "
+        "above 5% CV. "
         "A flagged batch means the beam or sample moved mid-series "
         "and its stack statistics are averaging different states. "
         "One shuffle.",
@@ -1095,14 +1086,10 @@ def m17_repetition_drift_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = m.groupBy("batch", "configuration").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_reps"),
         dsum("transmission", "t_sum"),
-        dsum(F.col("transmission") * F.col("transmission"), "t_sumsq"))
+        *dvar_parts("transmission", "tv"))
     mean = F.col("t_sum") / F.col("n_reps").cast("double")
-    var = F.greatest(
-        (F.col("t_sumsq") - F.col("t_sum") * F.col("t_sum")
-         / F.col("n_reps").cast("double"))
-        / (F.col("n_reps") - 1).cast("double"),
-        F.lit(0.0))
-    cv = F.when(F.col("n_reps") > 1, F.sqrt(var) / mean).otherwise(0.0)
+    cv = F.when(F.col("n_reps") > 1,
+                F.sqrt(dvar("tv", "n_reps")) / mean).otherwise(0.0)
     return g.select(
         "batch", "configuration", "n_reps",
         stable_round(mean).alias("t_mean"),
@@ -1154,9 +1141,6 @@ def m17_repetition_drift_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the hash.",
 )
 def m19_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-    from pathlib import Path
-
     from mousedatapipeline_spark.sources.manifest import (
         extract_keys,
         repetition_manifest,
@@ -1169,27 +1153,27 @@ def m19_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.date_format("o_orderdate", "yyyyMMdd").alias("ymd"))
             .collect())  # bounded fixture build (< ~30 dirs), like m13
 
-    root = Path(tempfile.mkdtemp(prefix="mouse_manifest_m19_"))
-    for r in keys:
-        for rep in range(1, 2 + r["batch"] % 3):
-            d = (root / r["ymd"][:4] / r["ymd"]
-                 / f"{r['ymd']}_{r['batch']}_{rep}")
-            for sub in ("beam_profile", "beam_profile_through_sample"):
-                (d / sub).mkdir(parents=True, exist_ok=True)
-                (d / sub / "eiger_1_master.h5").write_bytes(b"x")
-                (d / sub / "im_craw.nxs").write_bytes(b"x")
-            if (r["batch"] + rep) % 4 != 0:  # minted incompleteness
-                (d / "eiger_2_master.h5").write_bytes(b"x")
-            (d / "im_craw.nxs").write_bytes(b"x")
+    with scratch.workdir("mouse_manifest_m19_") as root:
+        for r in keys:
+            for rep in range(1, 2 + r["batch"] % 3):
+                d = (root / r["ymd"][:4] / r["ymd"]
+                     / f"{r['ymd']}_{r['batch']}_{rep}")
+                for sub in ("beam_profile", "beam_profile_through_sample"):
+                    (d / sub).mkdir(parents=True, exist_ok=True)
+                    (d / sub / "eiger_1_master.h5").write_bytes(b"x")
+                    (d / sub / "im_craw.nxs").write_bytes(b"x")
+                if (r["batch"] + rep) % 4 != 0:  # minted incompleteness
+                    (d / "eiger_2_master.h5").write_bytes(b"x")
+                (d / "im_craw.nxs").write_bytes(b"x")
 
-    manifest = repetition_manifest(
-        extract_keys(scan_files(spark, str(root))))
-    return manifest.select(
-        "ymd", F.col("batch").cast("int").alias("batch"),
-        F.col("repetition").cast("int").alias("repetition"),
-        "n_sub_master", "n_sub_craw", "n_top_master", "n_top_craw",
-        F.col("is_complete").cast("int").alias("is_complete"),
-        F.array_join("missing", ",").alias("missing_csv"))
+        manifest = repetition_manifest(
+            extract_keys(scan_files(spark, str(root))))
+        return scratch.keep(manifest.select(
+            "ymd", F.col("batch").cast("int").alias("batch"),
+            F.col("repetition").cast("int").alias("repetition"),
+            "n_sub_master", "n_sub_craw", "n_top_master", "n_top_craw",
+            F.col("is_complete").cast("int").alias("is_complete"),
+            F.array_join("missing", ",").alias("missing_csv")))
 
 
 # --------------------------------------------------------------------------
@@ -1221,8 +1205,6 @@ def m19_manifest_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "their reasons intact, not merely that the filter splits.",
 )
 def m20_quarantine_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from mousedatapipeline_spark.operators.filters import split_valid
     from mousedatapipeline_spark.sources.sinks import write_quarantine
 
@@ -1237,12 +1219,11 @@ def m20_quarantine_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.lit("quantity_overflow"))
         .otherwise(F.lit("discount_out_of_range")))
 
-    qdir = tempfile.mkdtemp(prefix="mouse_quarantine_m20_")
-    write_quarantine(bad, qdir)
-    back = spark.read.parquet(qdir)
-
-    rejected = back.groupBy(F.col("reject_reason").alias("reason")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"))
     valid = ok.agg(F.count(F.lit(1)).cast("bigint").alias("n")).select(
         F.lit("__valid__").alias("reason"), "n")
-    return rejected.unionByName(valid)
+    with scratch.workdir("mouse_quarantine_m20_") as qdir:
+        write_quarantine(bad, str(qdir))
+        back = spark.read.parquet(str(qdir))
+        rejected = back.groupBy(F.col("reject_reason").alias("reason")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"))
+        return scratch.keep(rejected.unionByName(valid))

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.functions import physics
 from mousedatapipeline_spark.operators import joins, windows
 from mousedatapipeline_spark.functions.rounding import (
@@ -33,7 +34,8 @@ from mousedatapipeline_spark.functions.rounding import (
     stable_round_sql,
 )
 from mousedatapipeline_spark.operators.aggregates import (
-    DEC, census, dsum, dsum_sql, first_by_order, profile_columns,
+    DEC, census, dsum, dsum_sql, dvar_parts_sql, dvar_sql, first_by_order,
+    profile_columns,
     repetition_stack, stack_stats,
 )
 from mousedatapipeline_spark.plans.catalog import register
@@ -364,7 +366,7 @@ def q10_energy_tcf(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT l_suppkey,
              {dsum_sql("l_extendedprice")} AS su,
-             {dsum_sql("l_extendedprice * l_extendedprice")} AS sq,
+             {", ".join(dvar_parts_sql("l_extendedprice", "sv"))},
              CAST(COUNT(l_extendedprice) AS BIGINT) AS price_count,
              MAX(l_extendedprice) AS price_max,
              MIN(l_extendedprice) AS price_min
@@ -372,11 +374,11 @@ def q10_energy_tcf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT l_suppkey, price_count, price_max, price_min,
            {stable_round_sql("su / CAST(price_count AS DOUBLE)")} AS price_mean,
-           {stable_round_sql('''SQRT(GREATEST((sq - (su * su) / CAST(price_count AS DOUBLE))
-                      / (CAST(price_count AS DOUBLE) - 1.0), 0.0))''')} AS price_std,
-           {stable_round_sql('''SQRT(GREATEST((sq - (su * su) / CAST(price_count AS DOUBLE))
-                      / (CAST(price_count AS DOUBLE) - 1.0), 0.0))
-                 / SQRT(CAST(price_count AS DOUBLE))''')} AS price_sem
+           {stable_round_sql(f"SQRT({dvar_sql('sv', 'price_count')})")}
+             AS price_std,
+           {stable_round_sql(f"SQRT({dvar_sql('sv', 'price_count')})"
+                             " / SQRT(CAST(price_count AS DOUBLE))")}
+             AS price_sem
     FROM s
     """,
     doc="A2: stacker statistics mean/std(ddof=1)/sem/max/min/count "
@@ -1382,28 +1384,31 @@ def q33_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "read round trip is value-checked too.",
 )
 def q34_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from mousedatapipeline_spark.sources.sinks import write_bucketed
 
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="mouse_bt_q34_")
-    write_bucketed(o, "q34_orders_b", ["o_custkey"], 16,
-                   sort_cols=["o_custkey"], path=base + "/orders")
-    write_bucketed(c, "q34_customer_b", ["c_custkey"], 16,
-                   sort_cols=["c_custkey"], path=base + "/customer")
-    # The merge hint keeps the co-located sort-merge join at any
-    # session broadcast threshold.
-    j = (spark.table("q34_orders_b").hint("merge")
-         .join(spark.table("q34_customer_b"),
-               F.col("o_custkey") == F.col("c_custkey")))
-    return (j.join(F.broadcast(n),
-                   F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy(F.col("n_name").alias("nation"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-                 stable_round(dsum("o_totalprice")).alias("revenue")))
+    with scratch.workdir("mouse_bt_q34_") as base:
+        try:
+            write_bucketed(o, "q34_orders_b", ["o_custkey"], 16,
+                           sort_cols=["o_custkey"], path=f"{base}/orders")
+            write_bucketed(c, "q34_customer_b", ["c_custkey"], 16,
+                           sort_cols=["c_custkey"], path=f"{base}/customer")
+            # The merge hint keeps the co-located sort-merge join at any
+            # session broadcast threshold.
+            j = (spark.table("q34_orders_b").hint("merge")
+                 .join(spark.table("q34_customer_b"),
+                       F.col("o_custkey") == F.col("c_custkey")))
+            return scratch.keep(
+                j.join(F.broadcast(n),
+                       F.col("c_nationkey") == F.col("n_nationkey"))
+                .groupBy(F.col("n_name").alias("nation"))
+                .agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+                     stable_round(dsum("o_totalprice")).alias("revenue")))
+        finally:
+            spark.sql("DROP TABLE IF EXISTS q34_orders_b")
+            spark.sql("DROP TABLE IF EXISTS q34_customer_b")
 
 
 @register(
@@ -1595,23 +1600,22 @@ def q38_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "data; sibling partitions are never read or rewritten.",
 )
 def q39_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from mousedatapipeline_spark.sources.sinks import upsert_partitions
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
         F.col("o_totalprice").alias("amt"))
-    out = tempfile.mkdtemp(prefix="mouse_q39_")
-    (o.write.mode("overwrite").partitionBy("prio").parquet(out))
-    backfill = (spark.read.parquet(out)
-                .filter(F.col("prio") == "1-URGENT")
-                .withColumn("amt", -F.col("amt")))
-    upsert_partitions(backfill, out, ["prio"])
-    back = spark.read.parquet(out)
-    return back.groupBy("prio").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        dsum("amt").alias("amt_sum"))
+    with scratch.workdir("mouse_q39_") as work:
+        out = str(work)
+        (o.write.mode("overwrite").partitionBy("prio").parquet(out))
+        backfill = (spark.read.parquet(out)
+                    .filter(F.col("prio") == "1-URGENT")
+                    .withColumn("amt", -F.col("amt")))
+        upsert_partitions(backfill, out, ["prio"])
+        back = spark.read.parquet(out)
+        return scratch.keep(back.groupBy("prio").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            dsum("amt").alias("amt_sum")))
 
 
 @register(
@@ -1763,19 +1767,18 @@ def q41_grouped_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q42_orc_partitioned_roundtrip(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    import tempfile
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice")
-    out = tempfile.mkdtemp(prefix="mouse_orc_") + "/orders_orc"
-    (orders.write.mode("overwrite")
-     .option("compression", "zstd")
-     .partitionBy("o_orderstatus")
-     .orc(out))
-    back = spark.read.orc(out).filter(F.col("o_orderstatus") == "F")
-    return back.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        stable_round(dsum("o_totalprice")).alias("revenue"))
+    with scratch.workdir("mouse_orc_") as work:
+        out = f"{work}/orders_orc"
+        (orders.write.mode("overwrite")
+         .option("compression", "zstd")
+         .partitionBy("o_orderstatus")
+         .orc(out))
+        back = spark.read.orc(out).filter(F.col("o_orderstatus") == "F")
+        return scratch.keep(back.groupBy("o_orderpriority").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            stable_round(dsum("o_totalprice")).alias("revenue")))
 
 
 @register(
@@ -1804,22 +1807,21 @@ def q42_orc_partitioned_roundtrip(spark: SparkSession,
 )
 def q43_schema_evolution_merge(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    import tempfile
-
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority")
-    out = tempfile.mkdtemp(prefix="mouse_evo_") + "/orders_evo"
     v1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus")          # priority not yet added
     v2 = orders.filter(F.col("o_orderkey") % 2 == 1)
-    v1.write.mode("overwrite").parquet(out + "/batch=v1")
-    v2.write.mode("overwrite").parquet(out + "/batch=v2")
-    back = spark.read.option("mergeSchema", "true").parquet(out)
-    return back.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.count("o_orderpriority").cast("bigint")
-        .alias("n_with_priority"),
-        F.min("o_orderpriority").alias("min_priority"))
+    with scratch.workdir("mouse_evo_") as work:
+        out = f"{work}/orders_evo"
+        v1.write.mode("overwrite").parquet(out + "/batch=v1")
+        v2.write.mode("overwrite").parquet(out + "/batch=v2")
+        back = spark.read.option("mergeSchema", "true").parquet(out)
+        return scratch.keep(back.groupBy("o_orderstatus").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.count("o_orderpriority").cast("bigint")
+            .alias("n_with_priority"),
+            F.min("o_orderpriority").alias("min_priority")))
 
 
 # --------------------------------------------------------------------------
@@ -2019,7 +2021,10 @@ GROUP BY l_returnflag, l_linestatus
 )
 def q46_sql_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_Q46_SQL)
+    try:  # the analyzed frame holds the view's plan, not its name
+        return spark.sql(_Q46_SQL)
+    finally:
+        spark.catalog.dropTempView("lineitem")
 
 
 @register(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_array,
@@ -3088,8 +3089,6 @@ def s38_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "definitions directly.",
 )
 def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     # load_spread (r10): PQ codebook training folds ride the scan
     # stage (identity at scale). A/B min-of-3: 2.99 -> 2.60 s.
     e = load_spread(spark, sf_dir, "embeddings")
@@ -3101,17 +3100,19 @@ def s39_ivf_pq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = s36_product_quantization(spark, sf_dir)
     index = assign.join(codes, "vec_id").select(
         "vec_id", "cell", "code", "recon_err")
-    out = tempfile.mkdtemp(prefix="mouse_ivfpq_") + "/index"
-    index.write.mode("overwrite").partitionBy("cell").parquet(out)
-    back = spark.read.parquet(out)
-    # The audit reads ALL cells; the single-cell pruning contract is
-    # plan-tested separately (tests/test_plan_shapes.py).
-    return back.groupBy("cell").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
-        F.countDistinct("code").cast("bigint")
-        .alias("n_distinct_codes"),
-        stable_round(dsum("recon_err") / F.count(F.lit(1)).cast("double"))
-        .alias("mean_recon_err"))
+    with scratch.workdir("mouse_ivfpq_") as work:
+        out = f"{work}/index"
+        index.write.mode("overwrite").partitionBy("cell").parquet(out)
+        back = spark.read.parquet(out)
+        # The audit reads ALL cells; the single-cell pruning contract is
+        # plan-tested separately (tests/test_plan_shapes.py).
+        return scratch.keep(back.groupBy("cell").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
+            F.countDistinct("code").cast("bigint")
+            .alias("n_distinct_codes"),
+            stable_round(dsum("recon_err")
+                         / F.count(F.lit(1)).cast("double"))
+            .alias("mean_recon_err")))
 
 
 # --------------------------------------------------------------------------

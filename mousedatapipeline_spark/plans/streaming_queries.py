@@ -6,9 +6,9 @@ The reference's "streaming" is ingestion-triggered batch (SURVEY.md
 the landing area in one availableNow pass must produce exactly the
 batch aggregation of the same files. That is what the oracle asserts.
 
-Landing, draining, versioned foreachBatch state and work-dir cleanup
-are the shared harness in ``streaming/fold.py``; each query here is its
-stream and its merge.
+Landing, draining and versioned foreachBatch state are the shared
+harness in ``streaming/fold.py``, work-dir cleanup is ``scratch``; each
+query here is its stream and its merge.
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.functions.rounding import (
     stable_round,
     stable_round_sql,
@@ -59,16 +60,6 @@ def _events_us(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
         *cols, F.unix_micros("ts").alias("ts_us"))
 
 
-def _events_file_schema(spark: SparkSession, path: str) -> T.StructType:
-    """File sources need an explicit schema; take it from the file
-    itself so the stream follows whichever ts encoding the generator
-    used (TIMESTAMP(NANOS)-as-long under the legacy conf, or
-    TIMESTAMP_NTZ). Footer-only read — no data scan."""
-    from mousedatapipeline_spark.tables import ensure_nanos_conf
-    ensure_nanos_conf(spark)
-    return spark.read.parquet(path).schema
-
-
 def _hourly_counts(batch: DataFrame) -> DataFrame:
     from mousedatapipeline_spark.tables import normalize_events_ts
     return (
@@ -100,18 +91,19 @@ def _hourly_counts(batch: DataFrame) -> DataFrame:
         "equal the batch aggregation (streaming/batch parity oracle).",
 )
 def w01_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_stream_") as work:
+    with scratch.workdir("mouse_stream_") as work:
         landing = work / "landing"
         landing.mkdir()
         shutil.copy(f"{sf_dir}/events.parquet", landing / "events.parquet")
+        # File sources need an explicit schema: the file's own (a footer
+        # read), so the stream follows whichever ts encoding it stores.
         stream = watcher.stream_manifest(
-            spark, str(landing),
-            _events_file_schema(spark, str(landing / "events.parquet")))
+            spark, str(landing), spark.read.parquet(str(landing)).schema)
         sink = str(work / "sink")
         fold.drain(spark, lambda: watcher.run_watcher(
             stream, _hourly_counts, sink, str(work / "ckpt"),
             available_now=True, dedupe_keys=None))
-        return fold.keep(spark.read.parquet(sink))
+        return scratch.keep(spark.read.parquet(sink))
 
 
 @register(
@@ -147,14 +139,14 @@ def w01_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "streaming/batch parity is the correctness contract.",
 )
 def w02_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_sess_stream_") as work:
+    with scratch.workdir("mouse_sess_stream_") as work:
         stream = _chunk_stream(spark, _events_us(spark, sf_dir, "user_id"),
                                work, 2, "ts_us")
         emissions = fold.sink(
             spark, stateful.sessionize_stream(stream, gap_seconds=1800), work)
         # Counters are monotonic per key, so max() over the append sink
         # is the exactly-once final answer even under trigger re-delivery.
-        return fold.keep(emissions.groupBy("user_id").agg(
+        return scratch.keep(emissions.groupBy("user_id").agg(
             F.max("n_sessions").cast("bigint").alias("n_sessions"),
             F.max("n_events").cast("bigint").alias("n_events")))
 
@@ -175,7 +167,7 @@ def w02_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         "deliberately blind to the duplication.",
 )
 def w03_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_dedup_stream_") as work:
+    with scratch.workdir("mouse_dedup_stream_") as work:
         landing = work / "landing"
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts")
@@ -188,7 +180,7 @@ def w03_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # alive for the whole replay, so ALL re-deliveries are dropped.
         deduped = stateful.dedupe_stream(stream, ["event_id"], "ts",
                                          watermark="60 days")
-        return fold.keep(fold.sink(spark, deduped, work)
+        return scratch.keep(fold.sink(spark, deduped, work)
                          .groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.count_distinct("user_id").cast("bigint").alias("n_users")))
@@ -236,12 +228,12 @@ _W04_FOLD = fold.Fold(
 )
 def w04_stream_incremental_agg(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w04_") as work:
+    with scratch.workdir("mouse_w04_") as work:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "value")
         state = _W04_FOLD.run(
             spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
-        return fold.keep(state.select(
+        return scratch.keep(state.select(
             "event_type", "n_events",
             stable_round(F.col("value_dec").cast("double"))
             .alias("value_sum")))
@@ -282,7 +274,7 @@ def w04_stream_incremental_agg(spark: SparkSession,
         "independent of stream length.",
 )
 def w05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w05_") as work:
+    with scratch.workdir("mouse_w05_") as work:
         # Two time chunks = two triggers: enough to prove watermark-
         # bounded cross-trigger join state while keeping the per-trigger
         # fixed cost (state-store open/commit x partitions x 2 sides)
@@ -310,7 +302,8 @@ def w05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 HOUR")),
             "inner",
         ).select(F.col("c_user_id").alias("user_id"), "c_event_id")
-        return fold.keep(fold.sink(spark, pairs, work).groupBy("user_id").agg(
+        back = fold.sink(spark, pairs, work)
+        return scratch.keep(back.groupBy("user_id").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.count_distinct("c_event_id").cast("bigint")
             .alias("n_converted_clicks")))
@@ -370,13 +363,13 @@ def _w06_oracle_sql() -> str:
         "hash-gated by the SQL oracle.",
 )
 def w06_stream_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w06_") as work:
+    with scratch.workdir("mouse_w06_") as work:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type")
         registers = _W06_FOLD.run(
             spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
         est = K.hll_estimate(registers, ["event_type"])
-        return fold.keep(est.select(
+        return scratch.keep(est.select(
             "event_type", stable_round(F.col("hll_est_raw")).alias("hll_users")))
 
 
@@ -451,7 +444,7 @@ _W07_FOLD = fold.Fold(_w07_merge, "bucket bigint, cnt bigint")
 )
 def w07_stream_quantile_histogram(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w07_") as work:
+    with scratch.workdir("mouse_w07_") as work:
         ev = load(spark, sf_dir, "events").select("event_id", "value")
         hist = _W07_FOLD.run(
             spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
@@ -460,7 +453,7 @@ def w07_stream_quantile_histogram(spark: SparkSession,
             F.sum("cnt").over(Window.orderBy("bucket").rowsBetween(
                 Window.unboundedPreceding, 0)).alias("cum"),
             F.sum("cnt").over(Window.partitionBy()).alias("n"))
-        return fold.keep(c.agg(
+        return scratch.keep(c.agg(
             F.max("n").cast("bigint").alias("n_events"),
             *[F.min(F.when(F.col("cum") >= F.ceil(F.lit(q) * F.col("n")),
                            F.col("bucket") * _W07_BUCKET_WIDTH))
@@ -485,7 +478,7 @@ def w07_stream_quantile_histogram(spark: SparkSession,
         "then equal the batch sessionization (e14's oracle).",
 )
 def w08_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w08_") as work:
+    with scratch.workdir("mouse_w08_") as work:
         landing = work / "landing"
         schema = fold.land_chunks(_events_us(spark, sf_dir, "user_id"),
                                   landing, 3, "ts_us")
@@ -524,7 +517,7 @@ def w08_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = (stream.groupBy(F.session_window("ts", "30 minutes"), "user_id")
                .agg(F.count(F.lit(1)).cast("bigint").alias("n_events")))
         back = fold.sink(spark, agg, work)
-        return fold.keep(
+        return scratch.keep(
             back.filter(F.col("user_id") >= 0)
             .select("user_id",
                     F.unix_micros("session_window.start").cast("bigint")
@@ -582,12 +575,12 @@ _W09_FOLD = fold.Fold(
         "on both sides.",
 )
 def w09_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w09_") as work:
+    with scratch.workdir("mouse_w09_") as work:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "value")
         state = _W09_FOLD.run(
             spark, _chunk_stream(spark, ev, work, 3, "event_id"), work)
-        return fold.keep(
+        return scratch.keep(
             state.withColumn("rank", _w09_rank().cast("int"))
             .select("event_type", "rank", "event_id",
                     stable_round(F.col("value")).alias("value")))
@@ -637,7 +630,7 @@ def w10_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (cand.join(F.broadcast(ev), "gram", "left_semi")
                 .select("doc_id").distinct())
 
-    with fold.workdir("mouse_w10_") as work:
+    with scratch.workdir("mouse_w10_") as work:
         # Two chunks = two data triggers: the per-batch gate still runs
         # across multiple triggers (the semantics under test) at the
         # minimum state-store/sink fixed cost.
@@ -650,7 +643,7 @@ def w10_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
             available_now=True, dedupe_keys=None))
         # Each doc lives in exactly one chunk, so the union of per-batch
         # hits is already distinct across batches.
-        return fold.keep(spark.read.parquet(sink).select("doc_id"))
+        return scratch.keep(spark.read.parquet(sink).select("doc_id"))
 
 
 @register(
@@ -677,7 +670,7 @@ def w10_stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w12_stream_running_profile(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w12_") as work:
+    with scratch.workdir("mouse_w12_") as work:
         stream = _chunk_stream(
             spark, _events_us(spark, sf_dir, "event_id", "user_id",
                               "event_type"),
@@ -686,7 +679,7 @@ def w12_stream_running_profile(spark: SparkSession,
         final = snap.groupBy("user_id").agg(
             F.max(F.struct("n_events", "n_types", "first_us", "last_us"))
             .alias("b"))
-        return fold.keep(final.select(
+        return scratch.keep(final.select(
             "user_id", F.col("b.n_events").alias("n_events"),
             F.col("b.n_types").alias("n_types"),
             F.col("b.first_us").alias("first_us"),
@@ -737,7 +730,7 @@ _W13_FOLD = fold.Fold(
         "O(types x replicas) state, no history rescans, no RNG.",
 )
 def w13_stream_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w13_") as work:
+    with scratch.workdir("mouse_w13_") as work:
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "value")
         agg = _W13_FOLD.run(
@@ -747,7 +740,7 @@ def w13_stream_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mean_v",
             *[f"CAST(sv{k} AS DOUBLE) / CAST(sw{k} AS DOUBLE) AS m{k}"
               for k in range(_E22_B)])
-        return fold.keep(_e22_tail(m))
+        return scratch.keep(_e22_tail(m))
 
 
 # --------------------------------------------------------------------------
@@ -838,13 +831,13 @@ _W14_FOLD = fold.Fold(_w14_scd2_merge, _W14_CLOSED_SCHEMA, closed="closed")
         "streaming/batch parity.",
 )
 def w14_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w14_") as work:
+    with scratch.workdir("mouse_w14_") as work:
         stream = _chunk_stream(
             spark, _events_us(spark, sf_dir, "event_id", "user_id",
                               "event_type"),
             work, 3, "ts_us")
         state = _W14_FOLD.run(spark, stream, work)
-        return fold.keep(state.select(
+        return scratch.keep(state.select(
             "user_id", "tier", "version_event_id",
             F.col("valid_from").cast("bigint").alias("valid_from"),
             F.coalesce(F.col("valid_to"), F.lit(-1)).cast("bigint")
@@ -951,7 +944,7 @@ _W15_FOLD = fold.Fold(
         "streaming/batch parity (shared oracle).",
 )
 def w15_stream_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w15_") as work:
+    with scratch.workdir("mouse_w15_") as work:
         m = load(spark, sf_dir, "documents").select(
             "source", F.col("doc_id").alias("file_id"),
             F.length("text").cast("bigint").alias("sz"))
@@ -959,7 +952,7 @@ def w15_stream_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # chunks — the ordering contract the carry-forward pack needs.
         state = _W15_FOLD.run(
             spark, _chunk_stream(spark, m, work, 3, "file_id"), work)
-        return fold.keep(state.select(
+        return scratch.keep(state.select(
             "source", "bin",
             F.col("n").alias("n_input_files"),
             F.col("tot").alias("total_bytes"),
@@ -1042,7 +1035,7 @@ def _w16_oracle_sql() -> str:
         "the batch sketch chain over the full feed.",
 )
 def w16_stream_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    with fold.workdir("mouse_w16_") as work:
+    with scratch.workdir("mouse_w16_") as work:
         stream = _chunk_stream(
             spark, _events_us(spark, sf_dir, "event_id", "user_id",
                               "event_type"),
@@ -1055,6 +1048,6 @@ def w16_stream_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         win = (fan.join(F.broadcast(spine), "day")
                .groupBy("day", "reg").agg(F.max("max_rho").alias("max_rho")))
         est = K.hll_estimate(win, ["day"])
-        return fold.keep(est.select(
+        return scratch.keep(est.select(
             F.date_format("day", "yyyy-MM-dd").alias("day"),
             stable_round(F.col("hll_est_raw")).alias("hll_est")))

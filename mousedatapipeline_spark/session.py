@@ -61,6 +61,9 @@ def get_spark(app_name: str = "mousedatapipeline_spark",
         .config("spark.sql.ansi.enabled", "true" if ansi else "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # events.ts may be stored as TIMESTAMP(NANOS), which the parquet
+        # reader rejects by default; read it as long (tables.load).
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
     if SparkSession.getActiveSession() is None:

@@ -104,14 +104,18 @@ def compact(spark, path: str, target_rows_per_file: int = 1_000_000,
     n_rows = df.count()
     n_files = max(1, math.ceil(n_rows / target_rows_per_file))
     tmp = _tmp.mkdtemp(prefix="compact_", dir=str(_P(path).parent))
-    if partition_cols:
-        # Cluster by the partition key so each output dir gets ONE file
-        # (hash-colocated), regardless of how many tasks run.
-        out = df.repartition(n_files, *partition_cols)
-        writer = out.write.mode("overwrite").partitionBy(*partition_cols)
-    else:
-        writer = df.repartition(n_files).write.mode("overwrite")
-    writer.parquet(tmp)
+    try:
+        if partition_cols:
+            # Cluster by the partition key so each output dir gets ONE
+            # file (hash-colocated), regardless of how many tasks run.
+            out = df.repartition(n_files, *partition_cols)
+            writer = out.write.mode("overwrite").partitionBy(*partition_cols)
+        else:
+            writer = df.repartition(n_files).write.mode("overwrite")
+        writer.parquet(tmp)
+    except BaseException:
+        _sh.rmtree(tmp, ignore_errors=True)
+        raise
     _sh.rmtree(path)
     _sh.move(tmp, path)
     return len(list(_P(path).rglob("part-*.parquet")))

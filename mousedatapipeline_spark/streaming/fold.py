@@ -11,19 +11,15 @@ answer back. The pieces:
 - :func:`drain` — start a query in the caller's session at
   ``DRAIN_PARTITIONS`` shuffle partitions and wait for it to finish;
 - :class:`Fold` — versioned ``foreachBatch`` state: each batch writes
-  ``merge(prior, batch)`` as a new version next to the old ones;
-- :func:`workdir` / :func:`keep` — a temp work dir removed on exit,
-  after the answer has been materialized out of it.
+  ``merge(prior, batch)`` as a new version next to the old ones.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import threading
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -31,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from mousedatapipeline_spark.tables import _unpersist_quietly
 
 # State-store partition count is fixed per checkpoint at the shuffle
 # partitions in force when the query starts, and every trigger pays
@@ -42,25 +40,6 @@ _DRAIN_TIMEOUT_S = 300
 # Serializes the set/restore around start(): unlocked, two drains can
 # interleave save-set-restore and leave the caller's session at 4.
 _START_LOCK = threading.Lock()
-
-
-@contextmanager
-def workdir(prefix: str) -> Iterator[Path]:
-    """A fresh temp dir, removed on exit — on error too. Return
-    ``keep(answer)`` from inside the block: the answer must not read
-    from the dir once it is gone."""
-    work = Path(tempfile.mkdtemp(prefix=prefix))
-    try:
-        yield work
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-def keep(df: DataFrame) -> DataFrame:
-    """Materialize a small final answer out of the work dir. An eager
-    local checkpoint keeps the Spark types exactly (a collect and
-    re-create would not)."""
-    return df.localCheckpoint(eager=True)
 
 
 def land_chunks(df: DataFrame, landing: Path, n: int,
@@ -180,11 +159,14 @@ class Fold:
         if self.closed is None:
             out.write.mode("overwrite").parquet(str(live / name))
             return
+        # One evaluation of the merge feeds both writes.
+        out = out.localCheckpoint(eager=True)
         done = F.col(self.closed)
         for rows, where in ((out.filter(done), state_dir / "closed"),
                             (out.filter(~done), live)):
             rows.drop(self.closed).write.mode("overwrite") \
                 .parquet(str(where / name))
+        _unpersist_quietly(out)
 
     def final(self, spark: SparkSession, state_dir: Path) -> DataFrame:
         """The drained state: the newest version (plus every closed

@@ -360,19 +360,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def ensure_nanos_conf(spark: SparkSession) -> None:
-    """Allow reading TIMESTAMP(NANOS) parquet as long — the single home
-    of the legacy-conf idiom (also used by the streaming file sources)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:  # noqa: BLE001 - conf locked down: fall through, the
-        pass           # read will surface PARQUET_TYPE_ILLEGAL if so
-
-
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet has stored ``ts`` as TIMESTAMP(NANOS) — which
-    Spark's vectorized parquet reader rejects by default — or
-    TIMESTAMP_NTZ. Read nanos as long (legacy conf) and normalize."""
-    ensure_nanos_conf(spark)
+    """events.parquet has stored ``ts`` as TIMESTAMP(NANOS) — read as
+    long under the legacy conf ``get_spark`` sets — or TIMESTAMP_NTZ.
+    Normalize either."""
     return normalize_events_ts(
         spark.read.parquet(f"{sf_dir}/events.parquet"))

@@ -15,6 +15,8 @@ from mousedatapipeline_spark.operators.aggregates import (
     census,
     dsum,
     dsum_sql,
+    dvar_parts_sql,
+    dvar_sql,
     first_by_order,
     repetition_stack,
     stack_stats,
@@ -39,6 +41,20 @@ def test_stack_stats_constant_group_has_zero_std(spark):
     df = spark.createDataFrame([("b", 0.1)] * 4, "k string, v double")
     row = stack_stats(df, ["k"], "v").collect()[0]
     assert row["std"] == 0.0 and not math.isnan(row["std"])
+
+
+@pytest.mark.parametrize("vals, expected", [
+    ([0.33203125, 0.33203125], 0.0),
+    ([100.1] * 3, 0.0),
+    ([-999999.9] * 5, 0.0),
+    ([1e6, 1e6 + 0.001], float(np.std([1e6, 1e6 + 0.001], ddof=1))),
+])
+def test_stack_stats_std_of_near_equal_values(spark, vals, expected):
+    # The textbook sumsq - sum^2/n in double gave 6.8e-6, 1.9e-6 and
+    # 0.0156 for the first, second and last of these.
+    df = spark.createDataFrame([("b", v) for v in vals], "k string, v double")
+    row = stack_stats(df, ["k"], "v").collect()[0]
+    assert row["std"] == pytest.approx(expected, rel=1e-6, abs=1e-12)
 
 
 def test_stack_stats_single_row_null_std(spark):
@@ -105,6 +121,29 @@ def _duckdb_dsum(values):
 ])
 def test_dsum_sql_matches_dsum(spark, values):
     assert _spark_dsum(spark, values) == _duckdb_dsum(values)
+
+
+def _duckdb_dvar(values):
+    with duckdb.connect() as con:
+        con.execute("CREATE TABLE t (v DOUBLE)")
+        con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in values])
+        return con.execute(
+            f"WITH a AS (SELECT CAST(COUNT(v) AS BIGINT) AS n, "
+            f"{', '.join(dvar_parts_sql('v', 'x'))} FROM t) "
+            f"SELECT {dvar_sql('x', 'n')} FROM a").fetchone()[0]
+
+
+@pytest.mark.parametrize("values", [
+    [0.1, 0.2, 0.3],
+    [1234.56, 0.01, 99999.99, -4321.5],
+    [0.33203125, 0.33203125],
+    [-999999.9, -999999.9, -999999.91],
+    [1e-7, 0.123456789, -0.5, 0.987654321],
+])
+def test_dvar_sql_matches_dvar(spark, values):
+    df = spark.createDataFrame([("b", v) for v in values], "k string, v double")
+    std = stack_stats(df, ["k"], "v").collect()[0]["std"]
+    assert std == math.sqrt(_duckdb_dvar(values))
 
 
 @pytest.mark.xfail(strict=True, reason=(

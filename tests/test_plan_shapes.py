@@ -15,6 +15,7 @@ import re
 
 import pytest
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.plans import catalog
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
@@ -23,10 +24,31 @@ _needs_data = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason=f"no test data at {SF_DIR}")
 
 
-def _plan(spark, name: str) -> str:
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    df = catalog.all_queries()[name].spark(spark, SF_DIR)
+def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _plan(spark, name: str) -> str:
+    """The executed plan of ``name``'s answer. A query that returns
+    ``scratch.keep(answer)`` hands back a checkpoint scan, so for it
+    this is the plan of the frame it kept, recorded on the way in."""
+    key = "spark.sql.maxMetadataStringLength"
+    prev = spark.conf.get(key)
+    real_keep = scratch.keep
+    kept = []
+
+    def keep(df):
+        kept.append(_executed(df))
+        return real_keep(df)
+
+    spark.conf.set(key, "2000")
+    scratch.keep = keep
+    try:
+        df = catalog.all_queries()[name].spark(spark, SF_DIR)
+        return kept[-1] if kept else _executed(df)
+    finally:
+        scratch.keep = real_keep
+        spark.conf.set(key, prev)
 
 
 def _optimized(spark, name: str) -> str:
@@ -517,29 +539,6 @@ def test_e10_register_agg_partial_aggregates(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-@_needs_data
-def test_q34_bucketed_join_zero_exchanges(spark):
-    """With broadcast disabled, the bucketed orders/customer join must
-    sort-merge with ZERO exchanges on the bucketed sides (the nation
-    dim stays an explicit broadcast)."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        catalog.all_queries()["q34_bucketed_join_roundtrip"].spark(
-            spark, SF_DIR)  # side effect: writes + registers the tables
-        j = spark.table("q34_orders_b").join(
-            spark.table("q34_customer_b"),
-            spark.table("q34_orders_b").o_custkey
-            == spark.table("q34_customer_b").c_custkey)
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS q34_orders_b")
-        spark.sql("DROP TABLE IF EXISTS q34_customer_b")
-
-
 def _subtree(plan: str, node: str) -> str:
     """The tree-string lines of the first ``node`` and its children."""
     lines = plan.splitlines()
@@ -553,6 +552,26 @@ def _subtree(plan: str, node: str) -> str:
     return "\n".join(sub)
 
 
+def _assert_q34_bucketed_smj(plan: str) -> None:
+    assert "SortMergeJoin" in plan, plan
+    smj = _subtree(plan, "SortMergeJoin")
+    assert smj.count("Bucketed: true") == 2, plan
+    assert "Exchange" not in smj, plan
+
+
+@_needs_data
+def test_q34_bucketed_join_zero_exchanges(spark):
+    """With broadcast disabled, the bucketed orders/customer join must
+    sort-merge with ZERO exchanges on the bucketed sides (the nation
+    dim stays an explicit broadcast)."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        _assert_q34_bucketed_smj(_plan(spark, "q34_bucketed_join_roundtrip"))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 @_needs_data
 def test_q34_merge_hint_leaves_session_threshold(spark):
     """Under the session's own (enabled) broadcast threshold, q34's merge
@@ -560,19 +579,9 @@ def test_q34_merge_hint_leaves_session_threshold(spark):
     and the threshold reads the same afterwards."""
     before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     assert before.strip() not in ("-1", "0")
-    try:
-        df = catalog.all_queries()["q34_bucketed_join_roundtrip"].spark(
-            spark, SF_DIR)
-        assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") \
-            == before
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan
-        smj = _subtree(plan, "SortMergeJoin")
-        assert smj.count("Bucketed: true") == 2, plan
-        assert "Exchange" not in smj, plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS q34_orders_b")
-        spark.sql("DROP TABLE IF EXISTS q34_customer_b")
+    plan = _plan(spark, "q34_bucketed_join_roundtrip")
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
+    _assert_q34_bucketed_smj(plan)
 
 
 @_needs_data

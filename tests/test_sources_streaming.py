@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from mousedatapipeline_spark import scratch
 from mousedatapipeline_spark.sources import hdf5, manifest, sinks
 from mousedatapipeline_spark.streaming import fold, watcher
 
@@ -345,6 +346,15 @@ def test_compact_partitioned_one_file_per_dir(tmp_path, spark):
     assert spark.read.parquet(path).count() == 300
 
 
+def test_failed_compact_leaves_no_staging_dir(tmp_path, spark):
+    path = tmp_path / "frag"
+    spark.range(10).write.parquet(str(path))
+    with pytest.raises(Exception, match="nope"):
+        sinks.compact(spark, str(path), partition_cols=["nope"])
+    assert [p.name for p in tmp_path.iterdir()] == ["frag"]
+    assert spark.read.parquet(str(path)).count() == 10
+
+
 def test_merge_batch_into_state_versions_and_running_totals(spark, tmp_path):
     """w04's foreachBatch merge: each call writes a NEW version whose
     totals are the running (count, decimal sum) over all batches."""
@@ -588,6 +598,21 @@ def test_w15_out_of_order_batch_fails_loudly(spark, tmp_path):
     _W15_FOLD.step(b0, 0, state)
     with _pytest.raises(Exception, match="ordering contract"):
         _W15_FOLD.step(late, 1, state)
+
+
+def test_w15_evaluates_each_merge_once(spark):
+    """With ``closed`` set, a batch's merge feeds both the closed and the
+    open write from one evaluation (42 jobs per run when each write
+    recomputed it, 30 with one). Counted by job-id range: the
+    micro-batches run under the stream's own job group."""
+    from mousedatapipeline_spark.plans import streaming_queries as SQ
+
+    corpus = str(Path(__file__).resolve().parents[1] / "perfbench" / "base")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    SQ.w15_stream_compaction(spark, corpus)
+    jobs = dag.nextJobId() - j0
+    assert jobs <= 32, jobs
 
 
 def test_w16_hll_merge_is_replay_idempotent_and_order_insensitive(
@@ -843,7 +868,7 @@ def test_failing_merge_propagates_and_removes_workdir(spark):
 
     dirs = []
     with pytest.raises(Exception, match="merge failed on purpose"):
-        with fold.workdir("mouse_fold_test_") as work:
+        with scratch.workdir("mouse_fold_test_") as work:
             dirs.append(work)
             _sum_fold(boom).run(spark, _landed_stream(spark, work), work)
     assert len(dirs) == 1 and not dirs[0].exists()
