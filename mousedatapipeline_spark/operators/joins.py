@@ -1,5 +1,5 @@
 """Join operators: broadcast dimension lookup (J1), as-of join (J2),
-background self-join (J3/J4), semi/anti membership (J6).
+semi/anti membership (J6).
 
 Reference parity notes are cited per function (file:line into
 /root/reference/).
@@ -14,21 +14,18 @@ from pyspark.sql import functions as F
 
 
 def broadcast_lookup(fact: DataFrame, dim: DataFrame, on: Sequence[str],
-                     how: str = "left", dedupe_dim: bool = True) -> DataFrame:
+                     how: str = "left") -> DataFrame:
     """J1 — dimension lookup as an explicit broadcast hash join.
 
     The reference scans its Excel logbook for the *first* entry matching
-    (ymd, batchnum) (src/processstep_metadata_update.py:41-48); a
-    relational join must dedupe the dimension on the key first to keep
-    that first-match semantics (one output row per fact row).
+    (ymd, batchnum) (src/processstep_metadata_update.py:41-48). ``dim``
+    must already be unique on ``on`` so each fact row gets one output
+    row: the logbook source keeps that first match when it loads
+    (sources/logbook.load_logbook), so no dedupe runs here.
 
     Scale: the dimension is broadcast — no shuffle of the fact table at
-    any scale; the dedupe shuffles only the (small) dimension.
+    any scale.
     """
-    if dedupe_dim:
-        w = Window.partitionBy(*on).orderBy(*[F.col(c) for c in dim.columns])
-        dim = dim.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") == 1).drop("__rn")
     return fact.join(F.broadcast(dim), list(on), how)
 
 
@@ -108,57 +105,6 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],
         *[F.col(f"__lrow.{c}").alias(c) for c in left_cols],
         *[F.col(f"__carry.__payload.{c}").alias(f"{c}{suffix}") for c in rv],
     )
-
-
-def background_self_join(df: DataFrame, keys: Sequence[str],
-                         bg_keys: Sequence[str],
-                         value_cols: Sequence[str],
-                         suffix: str = "_bg",
-                         order_col: str | None = None) -> DataFrame:
-    """J3/J4 — attach the background measurement's values to each sample
-    row via its background identifier; a row may be its own background.
-
-    Reference: sample rows carry a `background_identifier` = '{ymd}_{batch}'
-    pointing at another stacked measurement
-    (src/processstep_add_background_files.py:63-80); thickness correction
-    skips when the background IS the sample's own batch
-    (src/processstep_thickness_from_absorption.py:95-108). The same-batch
-    guard is exposed here as a boolean `same_as_bg{suffix}` column.
-
-    Scale: self-join on the bg identifier; background sets are a small
-    fraction of measurements, so the right side (deduped backgrounds) is
-    broadcast-eligible — hint applied.
-
-    ``order_col`` makes the per-key background pick deterministic via
-    min_by (the stacker's "from first file" = lowest repetition,
-    src/post_translation_operation_hdf5_stacker.py:191-214); without it
-    the pick among same-key rows is arbitrary (dropDuplicates).
-    """
-    keys, bg_keys = list(keys), list(bg_keys)
-    if order_col is not None:
-        # One min_by over a composite (order, values...) struct: picks a
-        # single row deterministically even when order_col ties (the
-        # values themselves break the tie) — independent min_bys per
-        # column could mix rows.
-        picked = F.min_by(
-            F.struct(*[F.col(v) for v in value_cols]),
-            F.struct(F.col(order_col), *[F.col(v) for v in value_cols]))
-        bg_side = df.groupBy(
-            *[F.col(k).alias(b) for k, b in zip(keys, bg_keys)]
-        ).agg(picked.alias("__pick")).select(
-            *bg_keys,
-            *[F.col(f"__pick.{v}").alias(f"{v}{suffix}")
-              for v in value_cols])
-    else:
-        bg_side = df.select(
-            *[F.col(k).alias(b) for k, b in zip(keys, bg_keys)],
-            *[F.col(v).alias(f"{v}{suffix}") for v in value_cols],
-        ).dropDuplicates(bg_keys)
-    joined = df.join(F.broadcast(bg_side), bg_keys, "left")
-    same = F.lit(True)
-    for k, b in zip(keys, bg_keys):
-        same = same & (F.col(k) == F.col(b))
-    return joined.withColumn(f"same_as_bg{suffix}", F.coalesce(same, F.lit(False)))
 
 
 def anti_members(manifest: DataFrame, processed: DataFrame,

@@ -12,18 +12,21 @@ apply_transmission_correction_factor, so thickness consumes the
 CORRECTED transmission (SURVEY.md §7.3 hard-point 1).
 
 Spark design: each "step" is a function on the measurements DataFrame;
-composing them builds ONE lazy plan that Catalyst optimizes whole —
-the reference's step-major barriers (src/directory_processor.py:65-79)
-fall out as shuffle stage boundaries exactly where the window/groupBy
-operators sit. Where the reference mutates `transmission` in place,
-this pipeline keeps `transmission` (beam) and adds
-`transmission_corrected` — each consumer binds to the intended variant
-explicitly.
+composing them builds one plan that Catalyst optimizes whole, except
+for the small per-batch table tcf_propagation materializes — the
+reference's step-major barriers (src/directory_processor.py:65-79)
+fall out as shuffle stage boundaries where the groupBys sit. Where the
+reference mutates `transmission` in place, this pipeline keeps
+`transmission` (beam) and adds `transmission_corrected` — each consumer
+binds to the intended variant explicitly.
 
-Scale: the whole chain is three shuffles — the A4 window on
-(ymd, batch), the J3 background join (broadcast), and the A1/A2
-stacking groupBy on (ymd, batch, configuration). Everything else is
-map-side expression work.
+Scale: no window, and no row-wide shuffle while the per-batch table
+fits the broadcast threshold. The chain then shuffles only the narrow
+per-(ymd, batch) aggregate behind A4 and J3 (keys plus three values,
+broadcast back) and the A1/A2 stacking groupBy on
+(ymd, batch, configuration); a logbook derived from the measurements
+(the CLI's) adds its own DISTINCT. Everything else is map-side
+expression work.
 """
 
 from __future__ import annotations
@@ -34,8 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mousedatapipeline_spark.functions import physics
-from mousedatapipeline_spark.operators import joins, windows
+from mousedatapipeline_spark.operators import joins
 from mousedatapipeline_spark.operators.aggregates import dsum, stack_stats
+from mousedatapipeline_spark.tables import fits_broadcast
 
 Step = Callable[[DataFrame], DataFrame]
 
@@ -77,10 +81,47 @@ def flux_and_transmissions(df: DataFrame) -> DataFrame:
 
 def tcf_propagation(df: DataFrame) -> DataFrame:
     """A4 (src/processstep_transmission_correction_factor_propagator.py:54-81):
-    batch-wide max TCF + scattering probability onto every row."""
-    return windows.propagate_group_max(
-        df, ["ymd", "batch"],
-        {"tcf": "largest_tcf", "scattering_prob": "max_scatter_prob"})
+    batch-wide max TCF + scattering probability onto every row, and with
+    them J3's background value, from ONE narrow per-batch aggregate.
+
+    J3 reads the corrected transmission of the background batch's first
+    file (lowest repetition; src/post_translation_operation_hdf5_stacker.py:191-214,
+    src/processstep_thickness_from_absorption.py:90-108). ``apply_tcf``
+    scales a whole batch by one factor >= 1, which keeps the order of
+    its transmissions, so that value is ``apply_tcf`` of the first RAW
+    transmission. Ordering by (repetition, transmission) picks one row
+    even when repetitions tie.
+
+    The table is materialized once (eager localCheckpoint) and joined
+    back twice: the batch's own maxima null-safe on (ymd, batch), as a
+    window groups NULL keys together; the background value by plain
+    equality on (bg_ymd, bg_batch), so a NULL or missing pointer finds
+    none. Both joins broadcast while the table's observed size fits the
+    threshold, and merge past it: the planner's estimate for a
+    checkpoint is not its size (it broadcast m05's 600k-row, 81.5 MB
+    table at sf0.1 under a 64 MB threshold, slower than the shuffles).
+    """
+    per_batch = df.groupBy("ymd", "batch").agg(
+        F.max("tcf").alias("largest_tcf"),
+        F.max("scattering_prob").alias("max_scatter_prob"),
+        F.min_by("transmission", F.struct("repetition", "transmission"))
+        .alias("first_t"),
+    ).localCheckpoint(eager=True)
+    hint = (F.broadcast if fits_broadcast(per_batch)
+            else (lambda f: f.hint("merge")))
+    own = hint(per_batch.select(
+        F.col("ymd").alias("__ymd"), F.col("batch").alias("__batch"),
+        "largest_tcf", "max_scatter_prob"))
+    out = df.join(
+        own,
+        F.col("ymd").eqNullSafe(F.col("__ymd"))
+        & F.col("batch").eqNullSafe(F.col("__batch")),
+        "left").drop("__ymd", "__batch")
+    bg = hint(per_batch.select(
+        F.col("ymd").alias("bg_ymd"), F.col("batch").alias("bg_batch"),
+        physics.apply_tcf(F.col("first_t"), F.col("largest_tcf"))
+        .alias("transmission_corrected_bg")))
+    return out.join(bg, ["bg_ymd", "bg_batch"], "left")
 
 
 def apply_tcf_step(df: DataFrame) -> DataFrame:
@@ -91,37 +132,31 @@ def apply_tcf_step(df: DataFrame) -> DataFrame:
         physics.apply_tcf(F.col("transmission"), F.col("largest_tcf")))
 
 
-def background_thickness(bg_key: Sequence[str] = ("bg_ymd", "bg_batch")) -> Step:
+def background_thickness(df: DataFrame) -> DataFrame:
     """J3 + P9 + P8 + P10 (src/processstep_thickness_from_absorption.py):
-    background self-join with same-batch guard, corrected absorption,
-    thickness with sentinel chain. Runs AFTER apply_tcf_step (nostack
-    ordering) so the CORRECTED transmission is consumed."""
-    def step(df: DataFrame) -> DataFrame:
-        # df carries pointer columns named per bg_key (J4 dispersant
-        # variants pass different names); keys (ymd, batch) are the
-        # measurement's own identity.
-        #
-        # The background aggregation and the join's left side both
-        # consume df, so the upstream window chain executes twice.
-        # Measured: recomputing the (cheap, expression-only) chain beats
-        # materializing the full intermediate — do NOT checkpoint here;
-        # only materialize when the upstream is expensive relative to
-        # its size (see s03_minhash_lsh for the opposite call).
-        joined = joins.background_self_join(
-            df, ["ymd", "batch"], list(bg_key),
-            ["transmission_corrected"], order_col="repetition")
-        a = joined.withColumn(
-            "absorption_corrected",
-            physics.background_corrected_absorption(
-                F.col("transmission_corrected"),
-                F.col("transmission_corrected_bg"),
-                F.col("same_as_bg_bg")))
-        derived = physics.thickness_from_absorption(
-            F.col("absorption_corrected"), F.col("mu"))
-        return a.withColumn(
-            "thickness",
-            physics.select_thickness(F.col("samplethickness"), derived))
-    return step
+    same-batch guard, corrected absorption, thickness with sentinel
+    chain. Runs AFTER apply_tcf_step (nostack ordering) so the
+    CORRECTED transmission is consumed; the background's own corrected
+    transmission was attached by tcf_propagation."""
+    same = F.coalesce((F.col("ymd") == F.col("bg_ymd"))
+                      & (F.col("batch") == F.col("bg_batch")), F.lit(False))
+    # The program's output schema puts transmission_corrected_bg right
+    # after transmission_corrected.
+    a = df.select(
+        *[c for c in df.columns if c != "transmission_corrected_bg"],
+        "transmission_corrected_bg",
+        same.alias("same_as_bg_bg"),
+    ).withColumn(
+        "absorption_corrected",
+        physics.background_corrected_absorption(
+            F.col("transmission_corrected"),
+            F.col("transmission_corrected_bg"),
+            F.col("same_as_bg_bg")))
+    derived = physics.thickness_from_absorption(
+        F.col("absorption_corrected"), F.col("mu"))
+    return a.withColumn(
+        "thickness",
+        physics.select_thickness(F.col("samplethickness"), derived))
 
 
 def stack(df: DataFrame) -> DataFrame:
@@ -148,7 +183,7 @@ STEP_BUILDERS = {
     "flux_and_transmissions": lambda ctx: flux_and_transmissions,
     "tcf_propagation": lambda ctx: tcf_propagation,
     "apply_tcf": lambda ctx: apply_tcf_step,
-    "background_thickness": lambda ctx: background_thickness(),
+    "background_thickness": lambda ctx: background_thickness,
     "stacker": lambda ctx: stack,
 }
 

@@ -390,7 +390,11 @@ def t16_jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     with scratch.workdir("mouse_jsonl_t16_") as out:
         write_jsonl_shards(d, str(out), "shard")
-        back = (spark.read.schema(schema).json(f"{out}/shard=*")
+        # No glob (the file-sink metadata probe logs one as a missing
+        # path) and no inferred `shard` partition column: the shard comes
+        # back from the file name.
+        back = (spark.read.schema(schema)
+                .option("recursiveFileLookup", "true").json(str(out))
                 .withColumn("shard",
                             F.regexp_extract(F.input_file_name(),
                                              r"shard=([0-9a-f])", 1)))

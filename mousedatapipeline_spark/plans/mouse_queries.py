@@ -310,9 +310,12 @@ def pipeline_inputs(spark: SparkSession, sf_dir: str):
 
 
 # --------------------------------------------------------------------------
-# End-to-end pipeline: the watcher's full step program as ONE lazy plan
-# (pipeline.full_program). Three shuffles total: A4 window, J3 broadcast
-# join, A1/A2 stacking groupBy.
+# End-to-end pipeline: the watcher's full step program
+# (pipeline.full_program). No window. The per-(ymd, batch) aggregate
+# behind A4 and J3 is materialized once when the program is built; while
+# it fits the broadcast threshold the only other shuffle is the A1/A2
+# stacking groupBy, and no measurement row crosses a shuffle
+# (tests/test_plan_shapes.py).
 # --------------------------------------------------------------------------
 @register(
     "m05_pipeline_e2e",

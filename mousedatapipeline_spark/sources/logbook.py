@@ -5,16 +5,20 @@ Reference: `Logbook2MouseReader` loads an Excel workbook once per run;
 entries carry ymd, batchnum, background/dispersant-background pointers,
 sample id, project, thickness, positions
 (src/directory_processor.py:30-33, src/processstep_metadata_update.py:41-48,
-217-235). Lookups are first-match by (ymd, batchnum).
+217-235). Lookups are first-match by (ymd, batchnum) in file order.
 
 Spark design: read driver-side with pandas (the logbook is tiny), then
-broadcast-join. openpyxl may be absent (it is in this container), so a
+broadcast-join. The loaded logbook is unique on (ymd, batch): the
+first use-flagged entry of each key in file order wins, here, so J1
+(joins.broadcast_lookup) joins it as-is with one output row per
+measurement. openpyxl may be absent (it is in this container), so a
 CSV fallback with the same schema keeps the path testable; '{None}'
 sentinels become real NULLs at this boundary (SURVEY.md P15 note).
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,7 +40,8 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def load_logbook(spark: SparkSession, path: str) -> DataFrame:
     """Load the logbook (xlsx via pandas/openpyxl, or csv fallback) as a
-    deduped dimension DataFrame ready for broadcast_lookup (J1)."""
+    dimension DataFrame unique on (ymd, batch), ready for
+    broadcast_lookup (J1)."""
     if path.endswith((".xlsx", ".xls")):
         try:
             pdf = pd.read_excel(path)  # needs openpyxl
@@ -48,13 +53,29 @@ def load_logbook(spark: SparkSession, path: str) -> DataFrame:
         pdf = pd.read_csv(path, dtype={"ymd": str, "bg_ymd": str,
                                        "dbg_ymd": str})
     norm = _normalize(pdf)
+    norm = norm.astype(object).where(pd.notna(norm), None)
+    # Only entries flagged for processing are searched
+    # (MOUSE_settings.yaml:14 "set the use flag to True for all entries
+    # that should be searched"); a missing column (all NULL after
+    # _normalize) keeps every row for fixture logbooks that predate
+    # the flag.
+    use = norm["use"].map(
+        lambda v: v is None or str(v).lower() in ("true", "1", "1.0"))
+    # astype: an empty map is object-typed, which pandas would take as
+    # column labels and drop every column.
+    norm = norm[use.astype(bool)]
+    # First match in file order (src/processstep_metadata_update.py:41-48),
+    # on the key as Spark casts it below: batch "1" and "1.0" are one key.
+    key = pd.DataFrame({
+        "ymd": norm["ymd"].map(lambda v: None if v is None else str(v)),
+        "batch": np.trunc(pd.to_numeric(norm["batch"], errors="coerce")),
+    })
+    norm = norm[~key.duplicated(keep="first")].drop(columns="use")
     # Explicit schema: inference fails on all-NULL columns (e.g. no
     # dispersant background anywhere in the logbook).
-    norm = norm.astype(object).where(pd.notna(norm), None)
     schema = ("ymd string, batch string, sample_name string, "
               "project string, samplethickness string, bg_ymd string, "
-              "bg_batch string, dbg_ymd string, dbg_batch string, "
-              "use string")
+              "bg_batch string, dbg_ymd string, dbg_batch string")
     rows = [tuple(None if v is None else str(v) for v in r)
             for r in norm.itertuples(index=False)]
     df = spark.createDataFrame(rows, schema)
@@ -66,15 +87,4 @@ def load_logbook(spark: SparkSession, path: str) -> DataFrame:
                     F.col("dbg_batch").cast("double").cast("int"))
         .withColumn("samplethickness",
                     F.col("samplethickness").cast("double"))
-        # Only entries flagged for processing are searched
-        # (MOUSE_settings.yaml:14 "set the use flag to True for all
-        # entries that should be searched"); a missing column (all
-        # NULL after _normalize) keeps every row for fixture logbooks
-        # that predate the flag.
-        .filter(F.col("use").isNull()
-                | F.lower(F.col("use")).isin("true", "1", "1.0"))
-        .drop("use")
-        # first-match semantics of the reference's linear scan
-        # (src/processstep_metadata_update.py:41-48)
-        .dropDuplicates(["ymd", "batch"])
     )

@@ -11,7 +11,6 @@ from mousedatapipeline_spark.operators.joins import (
     salted_join,
     anti_members,
     asof_join,
-    background_self_join,
     broadcast_lookup,
     semi_members,
 )
@@ -58,23 +57,29 @@ def test_asof_tolerance(spark):
     assert out["b"] == "m200"     # exact match within tolerance
 
 
-def test_broadcast_lookup_first_match_dedupe(spark):
-    fact = spark.createDataFrame([(1, "x")], "k int, payload string")
-    dim = spark.createDataFrame(
-        [(1, "keep"), (1, "drop")], "k int, v string")
-    rows = broadcast_lookup(fact, dim, ["k"]).collect()
-    assert len(rows) == 1          # one output row per fact row
-    assert rows[0]["v"] == "drop"  # deterministic first by column order
+def test_load_logbook_keeps_first_match(spark, tmp_path):
+    """J1's first-match contract lives in the logbook source: the
+    earlier use-flagged entry of a (ymd, batch) wins over a later
+    duplicate, even one that sorts lower (here on every column), and an
+    entry left out by its use flag never shadows a later one. Batch
+    "1.0" and "1" are one key, as Spark casts them."""
+    from mousedatapipeline_spark.sources.logbook import load_logbook
 
-
-def test_background_self_join_same_batch_guard(spark):
-    df = spark.createDataFrame(
-        [(1, 1, 0.5), (2, 1, 0.7)], "batch int, bg_batch int, t double")
-    out = {r["batch"]: r for r in background_self_join(
-        df, ["batch"], ["bg_batch"], ["t"]).collect()}
-    assert out[1]["same_as_bg_bg"] is True    # its own background
-    assert out[2]["same_as_bg_bg"] is False
-    assert out[2]["t_bg"] == 0.5              # bg row's value attached
+    p = tmp_path / "logbook.csv"
+    p.write_text(
+        "ymd,batch,sample_name,use\n"
+        "20240101,1,zz-first,True\n"
+        "20240101,1.0,aa-later,True\n"
+        "20240102,2,aa-unused,False\n"
+        "20240102,2,zz-used,True\n"
+        "20240102,2,aa-dupe,True\n")
+    lb = load_logbook(spark, str(p))
+    got = sorted((r["ymd"], r["batch"], r["sample_name"])
+                 for r in lb.collect())
+    assert got == [("20240101", 1, "zz-first"), ("20240102", 2, "zz-used")]
+    fact = spark.createDataFrame([("20240101", 1), ("20240102", 2)],
+                                 "ymd string, batch int")
+    assert broadcast_lookup(fact, lb, ["ymd", "batch"]).count() == 2
 
 
 def test_semi_anti_partition_manifest(spark):

@@ -74,6 +74,62 @@ def test_m01_has_exactly_one_data_shuffle(spark):
     assert _count_shuffles(plan) == 1, plan
 
 
+def _sql_plans(spark, j0: int, j1: int) -> list[str]:
+    """Physical plans of the SQL executions whose jobs started in the
+    job-id range [j0, j1), from the status store (no UI needed)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        ids, it = [], e.jobs().keysIterator()
+        while it.hasNext():
+            ids.append(int(it.next()))
+        if ids and j0 <= min(ids) < j1:
+            plans.append(e.physicalPlanDescription())
+    return plans
+
+
+@_needs_data
+def test_mouse_program_reads_one_per_batch_table(spark):
+    """The nostack program and m05 take the A4 maxima and the J3
+    background from one narrow per-(ymd, batch) aggregate: no Window
+    node, no Exchange that carries a row-level measurement column (only
+    keys and aggregate buffers cross a shuffle), and the aggregate (the
+    plans' only min_by) runs once, in the eager checkpoint the program
+    build triggers. Its runs are counted by job-id range: one SQL
+    execution among the build's jobs, none among the action's."""
+    from mousedatapipeline_spark import pipeline as P
+    from mousedatapipeline_spark.plans.mouse_queries import pipeline_inputs
+
+    def nostack():
+        m, logbook = pipeline_inputs(spark, SF_DIR)
+        return P.nostack_program(logbook)(m)
+
+    def m05():
+        return catalog.all_queries()["m05_pipeline_e2e"].spark(spark, SF_DIR)
+
+    row_cols = set(pipeline_inputs(spark, SF_DIR)[0].columns) - {
+        "ymd", "batch", "configuration"}
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for name, build in (("nostack", nostack), ("m05", m05)):
+        j0 = dag.nextJobId()
+        df = build()
+        j1 = dag.nextJobId()
+        df.write.format("noop").mode("overwrite").save()
+        j2 = dag.nextJobId()
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        assert not re.search(r"\bWindow \(\d+\)", plan), (name, plan)
+        for cols in re.findall(r"\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]",
+                               plan):
+            carried = {c.split("#")[0] for c in cols.split(", ")}
+            assert not carried & row_cols, (name, cols)
+        build_aggs = [p for p in _sql_plans(spark, j0, j1) if "min_by" in p]
+        action_aggs = [p for p in _sql_plans(spark, j1, j2) if "min_by" in p]
+        assert (len(build_aggs), len(action_aggs)) == (1, 0), name
+
+
 @_needs_data
 def test_m03_scan_prunes_columns(spark):
     """The metrics projection reads 6 of lineitem's 16 columns; the
@@ -283,15 +339,20 @@ def test_bucketed_join_has_zero_exchanges(spark, tmp_path):
                    path=str(tmp_path / "bt_a"))
     write_bucketed(b, "bt_b", ["k"], 8, sort_cols=["k"],
                    path=str(tmp_path / "bt_b"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        spark.conf.set(key, "-1")
         j = spark.table("bt_a").join(spark.table("bt_b"), "k")
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan
         assert "Exchange" not in plan, plan
         assert j.count() == 1000
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
         spark.sql("DROP TABLE IF EXISTS bt_a")
         spark.sql("DROP TABLE IF EXISTS bt_b")
 

@@ -469,3 +469,116 @@ def test_w15_carry_forward_pack_equals_single_shot(
         expect[(src, b)] = (n + 1, tot + sz, min(mn, fid), max(mx, fid))
         cum[src] = c + sz
     assert got == expect
+
+
+# The m05 oracle's CTE chain without the stacker: DuckDB's window max
+# and ROW_NUMBER background pick, against the nostack program's one
+# per-batch aggregate joined back. Every input is non-null and finite.
+_NOSTACK_SQL = """
+WITH j1 AS (
+  SELECT m.*, lb.sample_name,
+         CASE WHEN m.wavelength_nm <= 0.0 THEN 0.0
+              ELSE 1.2398419843320026 / m.wavelength_nm END AS energy_kev
+  FROM meas m LEFT JOIN lb ON m.ymd = lb.ymd AND m.batch = lb.batch
+), prop AS (
+  SELECT *,
+         MAX(tcf) OVER (PARTITION BY ymd, batch) AS largest_tcf,
+         MAX(scattering_prob) OVER (PARTITION BY ymd, batch)
+           AS max_scatter_prob
+  FROM j1
+), corr AS (
+  SELECT *,
+         CASE WHEN largest_tcf > 1.0 THEN transmission * largest_tcf
+              ELSE transmission END AS transmission_corrected
+  FROM prop
+), bg AS (
+  SELECT ymd AS bg_ymd, batch AS bg_batch, transmission_corrected AS tc_bg
+  FROM (SELECT *, ROW_NUMBER() OVER (
+          PARTITION BY ymd, batch
+          ORDER BY repetition, transmission_corrected) AS rn
+        FROM corr)
+  WHERE rn = 1
+), jb AS (
+  SELECT c.*, bg.tc_bg,
+         (c.bg_ymd = c.ymd AND c.bg_batch = c.batch) AS same_bg
+  FROM corr c LEFT JOIN bg
+    ON c.bg_ymd = bg.bg_ymd AND c.bg_batch = bg.bg_batch
+), a AS (
+  SELECT *,
+         CASE WHEN tc_bg IS NOT NULL AND tc_bg <> 0.0 AND NOT same_bg
+              THEN 1.0 - transmission_corrected / tc_bg
+              ELSE 1.0 - transmission_corrected END AS ac
+  FROM jb
+)
+SELECT rid, sample_name, energy_kev, largest_tcf, max_scatter_prob,
+       transmission_corrected, tc_bg, same_bg, ac,
+       CASE WHEN samplethickness >= 0.0 THEN samplethickness
+            WHEN mu > 0.0 AND ABS(ac) > 0.0 AND ABS(ac) <= 1.0
+            THEN -SIGN(ac) * LN(1.0 - ABS(ac)) / mu
+            ELSE -1.0 END AS thickness
+FROM a
+"""
+
+_KEYS = [("20240101", 0), ("20240101", 1), ("20240102", 1), ("20240102", 2)]
+_measurement_row = st.tuples(
+    st.sampled_from(_KEYS),
+    st.integers(0, 2),                                    # tied repetitions
+    st.floats(0.01, 1.0),                                 # transmission
+    st.one_of(st.sampled_from([0.8, 1.0, 1.25]),          # TCF <= 1 and > 1
+              st.floats(0.5, 1.5)),
+    st.floats(0.0, 1.0),                                  # scattering prob
+    # the background: the row's own batch, another batch, a missing one
+    st.one_of(st.none(), st.sampled_from(_KEYS + [("20240103", 9)])),
+    st.sampled_from([-1.0, 0.2]),                         # sample thickness
+)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_measurement_row, min_size=1, max_size=12))
+def test_nostack_matches_duckdb_property(spark, rows):
+    """The nostack program equals the oracle's window-and-ROW_NUMBER
+    formulation row for row, on both sides of the per-batch table's
+    broadcast gate (the session threshold, and -1: no hint)."""
+    import pandas as pd
+
+    from mousedatapipeline_spark import pipeline as P
+
+    meas = pd.DataFrame(
+        [(i, ymd, b, rep, 0.2 + i / 10, 100.0 + i, t, tcf, sp, 2.0, st_,
+          *(bg or (ymd, b)))
+         for i, ((ymd, b), rep, t, tcf, sp, bg, st_) in enumerate(rows)],
+        columns=["rid", "ymd", "batch", "repetition", "wavelength_nm",
+                 "direct_flux", "transmission", "tcf", "scattering_prob",
+                 "mu", "samplethickness", "bg_ymd", "bg_batch"])
+    lb = pd.DataFrame([(y, b, f"S_{b}") for y, b in _KEYS[:3]],
+                      columns=["ymd", "batch", "sample_name"])
+    con = duckdb.connect()
+    con.register("meas", meas)
+    con.register("lb", lb)
+    expect = {r[0]: r[1:] for r in con.execute(_NOSTACK_SQL).fetchall()}
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key, None)
+    try:
+        for threshold in (prev, "-1"):
+            if threshold is not None:
+                spark.conf.set(key, threshold)
+            out = P.nostack_program(spark.createDataFrame(lb))(
+                spark.createDataFrame(meas))
+            got = {r["rid"]: r for r in out.collect()}
+            assert got.keys() == expect.keys()
+            for rid, (name, kev, tcf, sp, tc, tc_bg, same, ac, th) \
+                    in expect.items():
+                g = got[rid]
+                assert (g["sample_name"], g["energy_kev"], g["largest_tcf"],
+                        g["max_scatter_prob"], g["transmission_corrected"],
+                        g["transmission_corrected_bg"], g["same_as_bg_bg"],
+                        g["absorption_corrected"]) == (
+                    name, kev, tcf, sp, tc, tc_bg, same, ac), (threshold, rid)
+                assert g["thickness"] == pytest.approx(th, rel=1e-12)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
