@@ -23,8 +23,14 @@ Scale design:
   k(k-1)/2 over the band buckets at 16 bytes a pair,
   :func:`pair_volume`), the sets are collected once and the rest runs
   on the driver (:func:`band_buckets_np`, :func:`driver_verified_edges`);
-  past either gate the band self-join, verify join and
-  :func:`degree_cap_edges` run distributed. Both return the same edges.
+  past either gate the band self-join (:func:`lsh_candidates`), the
+  verify join (:func:`hashed_jaccard`) and :func:`degree_cap_edges`
+  run distributed. Both return the same edges.
+- Each near-dup pair step is written once here, and every query that
+  takes the step calls it: the band self-join, the hashed-set verify,
+  the MinHash lane compare (:func:`signature_pairs`,
+  :func:`matching_lanes`) and the blocked all-pairs overlap
+  (:func:`blocked_overlaps`).
 - Embedding dot products explode to (vec, dim) rows and aggregate with
   decimal sums: exact, shuffle-friendly, and skew-free (the `dim` join
   key is uniform by construction).
@@ -66,36 +72,14 @@ def bit_weights_sql(n_bits: int = SIMHASH_BITS) -> str:
     return f"(VALUES {rows}) AS bw(j, w)"
 
 
-def shingles(df: DataFrame, text_col: str, id_cols: Sequence[str],
-             n: int = 3) -> DataFrame:
-    """Distinct character n-gram shingles per document.
-
-    Explode-only (no shuffle until the consumer's distinct/groupBy);
-    documents shorter than ``n`` produce no shingles.
-    """
-    ids = list(id_cols)
-    pos = F.explode(
-        F.when(F.length(text_col) >= n,
-               F.sequence(F.lit(1), F.length(text_col) - (n - 1)))
-        .otherwise(F.array().cast("array<int>"))).alias("pos")
-    return (
-        df.select(*ids, F.col(text_col), pos)
-        .select(*ids,
-                F.substring(F.col(text_col), F.col("pos"), n).alias("shingle"))
-        .distinct()
-    )
-
-
 def shingle_set_col(text: Column, n: int = 3) -> Column:
     """Distinct character n-gram shingles of ONE document as a per-row
     array expression — no explode, no shuffle, pure codegen.
 
-    This is the preferred formulation whenever shingles are consumed
-    per-document (set building, minhash): a document's shingle set is a
-    row-local quantity, so deriving it through explode + groupBy (two
-    712k-row shuffles at sf0.1) is pure waste. Use :func:`shingles`
-    only when downstream genuinely needs shingle-level rows (the
-    inverted-index join shape).
+    A document's shingle set is a row-local quantity, so deriving it
+    through explode + groupBy (two 712k-row shuffles at sf0.1) is pure
+    waste; explode this array only where downstream genuinely needs
+    shingle-level rows (the injectivity census below).
     """
     return F.when(
         F.length(text) >= n,
@@ -229,25 +213,6 @@ def shingle_hash_injective_on(d: DataFrame) -> tuple[int, int]:
     return int(row["strings"]), int(row["hashes"])
 
 
-def minhash_signature(sh: DataFrame, id_cols: Sequence[str]) -> DataFrame:
-    """(id_cols, i, mh): MinHash value for each of N_PERM permutations.
-
-    One explode (×N_PERM) + one groupBy shuffle on the doc key with
-    map-side MIN combine — the canonical scalable formulation.
-    """
-    ids = list(id_cols)
-    params = F.explode(F.array(*[
-        F.struct(F.lit(i).alias("i"),
-                 F.lit(MINHASH_A[i]).alias("a"),
-                 F.lit(MINHASH_B[i]).alias("b"))
-        for i in range(N_PERM)])).alias("p")
-    hashed = sh.withColumn("h", shingle_hash(F.col("shingle")))
-    expanded = hashed.select(*ids, "h", params).select(
-        *ids, F.col("p.i").alias("i"),
-        ((F.col("p.a") * F.col("h") + F.col("p.b")) % MOD).alias("ph"))
-    return expanded.groupBy(*ids, "i").agg(F.min("ph").alias("mh"))
-
-
 def minhash_cols(hash_array: Column) -> list[Column]:
     """All N_PERM minhashes of a document's shingle-HASH array as
     per-row expressions (``mh0``..``mh{N-1}``) — zero shuffles.
@@ -323,6 +288,117 @@ def band_signatures_wide(sig_wide: DataFrame,
     return sig_wide.select(*ids, bands).select(
         *ids, F.col("bb.band").alias("band"),
         F.col("bb.band_sig").alias("band_sig"))
+
+
+# Candidates must collide in >= 2 of the 4 bands: the synthetic text's
+# tiny shingle vocabulary makes single-band buckets nearly all-pairs
+# (650k+ candidates at sf0.1); two-band agreement restores the sparse
+# candidate set the pattern is designed around.
+MIN_SHARED_BANDS = 2
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """(d1, d2, shared_bands): every document pair (d1 < d2) sharing a
+    (lang, band, band_sig) bucket of :func:`band_signatures_wide`'s
+    (doc_id, lang, band, band_sig) table, with its count of shared
+    bands.
+
+    A self-join, NOT :func:`blocked_pairs`: LSH buckets are skewed (one
+    925-doc bucket at sf0.1 => 427k pairs), and the array-based pair
+    generator would materialize a whole bucket's pairs in one task. The
+    join spreads pair production across partitions of the bucket key;
+    AQE skew-join splits the hot bucket. Both sides read ``bands``:
+    materialize it first, or the signature pipeline runs once per
+    side."""
+    ba = bands.select(F.col("doc_id").alias("d1"), "lang", "band",
+                      "band_sig")
+    bb = bands.select(F.col("doc_id").alias("d2"), "lang", "band",
+                      "band_sig")
+    return (ba.join(bb, ["lang", "band", "band_sig"])
+            .filter(F.col("d1") < F.col("d2"))
+            .groupBy("d1", "d2")
+            .agg(F.count(F.lit(1)).alias("shared_bands")))
+
+
+def lsh_candidates(bands: DataFrame) -> DataFrame:
+    """(d1, d2): the LSH candidate pairs, :func:`band_pairs` sharing at
+    least MIN_SHARED_BANDS bands. SQL twin: plans.similarity_queries.
+    cand_sql()."""
+    return (band_pairs(bands)
+            .filter(F.col("shared_bands") >= MIN_SHARED_BANDS)
+            .select("d1", "d2"))
+
+
+def signature_pairs(pairs: DataFrame, sig: DataFrame) -> DataFrame:
+    """``pairs`` (d1, d2, ...) joined to both documents' MinHash lanes
+    of the wide signature ``sig`` (doc_id, mh0..mh{N-1}): lane ``i`` of
+    d1 as ``mh{i}_1``, of d2 as ``mh{i}_2``; feed it
+    :func:`matching_lanes`."""
+    def side(k: int) -> DataFrame:
+        return sig.select(F.col("doc_id").alias(f"d{k}"),
+                          *[F.col(f"mh{i}").alias(f"mh{i}_{k}")
+                            for i in range(N_PERM)])
+
+    return pairs.join(side(1), "d1").join(side(2), "d2")
+
+
+def matching_lanes(low_bits: int | None = None) -> Column:
+    """Number of the N_PERM lanes on which a :func:`signature_pairs`
+    row's two signatures agree (int). With ``low_bits`` only each
+    lane's low ``low_bits`` bits are compared: b-bit MinHash."""
+    def lane(i: int) -> Column:
+        x1, x2 = F.col(f"mh{i}_1"), F.col(f"mh{i}_2")
+        if low_bits is not None:
+            x1, x2 = x1 % (1 << low_bits), x2 % (1 << low_bits)
+        return F.when(x1 == x2, 1).otherwise(0)
+
+    return sum((lane(i) for i in range(1, N_PERM)), lane(0))
+
+
+def jaccard_col(n_common: Column, n1: Column, n2: Column) -> Column:
+    """|A & B| / |A | B| from the overlap and the two set sizes: one
+    IEEE division of exact integer counts, as every oracle computes
+    it."""
+    return n_common.cast("double") / (n1 + n2 - n_common).cast("double")
+
+
+def hashed_jaccard(cands: DataFrame, hashed: DataFrame,
+                   pairs: DataFrame | None = None) -> DataFrame:
+    """Exact set overlap of the candidate pairs: ``pairs`` (default
+    ``cands``; d1, d2 and any other columns) with ``n_common`` and
+    ``jaccard_raw`` appended, from ``hashed`` (doc_id, hs, n) — the
+    shingle-hash sets of :func:`hashed_shingle_docs` with their sizes.
+
+    The sets are pruned to the candidates' documents first (a
+    semi-join on the distinct ids of ``cands``: candidates are a
+    vanishing fraction of the corpus at scale), so the two joins
+    stream small int arrays, never the corpus; the overlap is a JVM
+    ``array_intersect``. Intersect counts equal the string-set counts
+    under the corpus-checked hash injectivity (see
+    :func:`hashed_shingle_docs`).
+
+    The id set is broadcast only while ``cands``' MATERIALIZED size
+    fits ``tables.fits_broadcast`` (the id set is never larger:
+    distinct single ids vs id pairs). Candidate volume grows with the
+    corpus, and a forced hint would eventually hit the 8 GB broadcast
+    cap; a lazily checkpointed or unmaterialized ``cands`` reads as
+    unknown size, and AQE plans the semi-join from runtime stats."""
+    from mousedatapipeline_spark.tables import fits_broadcast
+
+    cand_ids = (cands.select(F.explode(F.array("d1", "d2")).alias("doc_id"))
+                .distinct())
+    sets = (hashed.join(F.broadcast(cand_ids) if fits_broadcast(cands)
+                        else cand_ids, "doc_id", "left_semi")
+            .select("doc_id", "hs", "n"))
+    s1 = sets.select(F.col("doc_id").alias("d1"),
+                     F.col("hs").alias("ss1"), F.col("n").alias("n1"))
+    s2 = sets.select(F.col("doc_id").alias("d2"),
+                     F.col("hs").alias("ss2"), F.col("n").alias("n2"))
+    pairs = cands if pairs is None else pairs
+    n_common = F.size(F.array_intersect("ss1", "ss2")).cast("bigint")
+    return pairs.join(s1, "d1").join(s2, "d2").select(
+        *pairs.columns, n_common.alias("n_common"),
+        jaccard_col(n_common, F.col("n1"), F.col("n2")).alias("jaccard_raw"))
 
 
 def simhash(df: DataFrame, id_cols: Sequence[str], token_col: str = "token",
@@ -428,6 +504,41 @@ def blocked_pairs(sets: DataFrame, block_cols: Sequence[str],
             lambda y: pair_struct(x, y))))
     return (grouped.select(*blocks, F.explode(pairs).alias("p"))
             .select(*blocks, "p.*"))
+
+
+def blocked_overlaps(docs: DataFrame, redistribute: int,
+                     feasible=None) -> DataFrame:
+    """(lang, source, d1, d2, n_1, n_2, n_common): the 3-gram set sizes
+    and exact overlap of every within-(lang, source) document pair of
+    ``docs`` (doc_id, lang, source, text[, ...]) — the all-pairs
+    near-dup stage. SQL twin: plans.similarity_queries.
+    blocked_common_sql() over sz_sql().
+
+    The shingle work runs once, as 8-byte hashes
+    (:func:`hashed_shingle_docs`); documents shorter than 3 chars drop
+    out, as they have no rows in the oracles' shingle relation. Pairs
+    come from :func:`blocked_pairs`, and the intersect happens INSIDE
+    its pair lambda, so pair structs carry three scalars, never copies
+    of the shingle arrays.
+
+    ``feasible(n_1, n_2)``, when given, is an exact length filter (a
+    Column): a pair it rejects skips its intersect and carries
+    ``n_common = 0``."""
+    sets = hashed_shingle_docs(docs, extra_cols=("lang", "source"),
+                               with_n=True)
+
+    def overlap(x, y):
+        n = F.size(F.array_intersect(x["hs"], y["hs"])).cast("bigint")
+        if feasible is None:
+            return n
+        return F.when(feasible(x["n"], y["n"]), n) \
+            .otherwise(F.lit(0).cast("bigint"))
+
+    return blocked_pairs(
+        sets, ["lang", "source"], {"hs": "hs", "n": "n"},
+        redistribute=redistribute,
+        combine=lambda x, y: [x["n"].alias("n_1"), y["n"].alias("n_2"),
+                              overlap(x, y).alias("n_common")])
 
 
 def ddot(a: Column, b: Column) -> Column:

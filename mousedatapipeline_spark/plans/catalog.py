@@ -110,6 +110,16 @@ _CHANGED_AFTER: dict[str, int] = {
         "s34_quality_canonical", "s19_lsh_verified_neardup",
         "s33_cross_source_dup_matrix", "s40_neardup_pagerank",
         "s43_label_propagation"), 11),
+    # operators/similarity.py: one near-dup pair stage (band self-join,
+    # hashed-set verify, lane compare, blocked overlap) for every caller;
+    # s27 composes s02. The c06 and s14 (so s34) oracles now read the
+    # shared CTE builders; c06's drops its redundant `b.lang = a.lang`.
+    **dict.fromkeys(("s02_ngram_jaccard", "s03_minhash_lsh",
+        "s22_incremental_neardup", "s24_containment_neardup",
+        "s26_minhash_accuracy", "s27_triangle_count", "s28_threshold_sweep",
+        "s29_bbit_minhash"), 11),
+    # e01 aggregates with w01's hourly_counts.
+    "e01_tumbling_counts": 11,
     # streaming/fold.py: w01-w16 rewritten on one drain-and-fold harness.
     **dict.fromkeys(("w01_stream_tumbling_counts", "w02_stream_sessionization",
         "w03_stream_dedup", "w04_stream_incremental_agg",

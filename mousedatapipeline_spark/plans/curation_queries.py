@@ -28,12 +28,15 @@ from mousedatapipeline_spark.operators.aggregates import dsum, dsum_sql
 from mousedatapipeline_spark.operators.graph import connected_components
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.similarity_queries import (
-    MIN_SHARED_BANDS,
     VERIFY_JACCARD,
     _bands_wide_sql,
     _minhash_wide_sql,
+    cand_common_sql,
+    cand_sql,
     degree_cap_sql,
     lsh_verified_edges,
+    sz_sql,
+    verified_sql,
 )
 from mousedatapipeline_spark.plans.text_queries import t03_quality_score
 from mousedatapipeline_spark.tables import load, load_spread
@@ -844,35 +847,10 @@ def c05_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     h AS (SELECT doc_id, lang, {S.SHINGLE_HASH_SQL} AS h FROM sh),
     mh AS ({_minhash_wide_sql()}),
     bands AS ({_bands_wide_sql()}),
-    cand AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_sig = b.band_sig
-       AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= {MIN_SHARED_BANDS}
-    ),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.d1
-      JOIN sh b ON b.doc_id = c.d2 AND b.shingle = a.shingle
-                AND b.lang = a.lang
-      GROUP BY c.d1, c.d2
-    ),
-    verified AS (
-      SELECT m.d1, m.d2, m.n_common,
-             CAST(m.n_common AS DOUBLE)
-             / CAST(s1.n + s2.n - m.n_common AS DOUBLE) AS jr
-      FROM common m
-      JOIN sz s1 ON s1.doc_id = m.d1
-      JOIN sz s2 ON s2.doc_id = m.d2
-      WHERE CAST(m.n_common AS DOUBLE)
-            / CAST(s1.n + s2.n - m.n_common AS DOUBLE)
-            >= {VERIFY_JACCARD}
-    ),
+    {cand_sql()},
+    {sz_sql()},
+    {cand_common_sql()},
+    {verified_sql(VERIFY_JACCARD)},
     {degree_cap_sql()},
     edges AS MATERIALIZED (SELECT d1, d2 FROM capped),
     und AS (SELECT d1 AS u, d2 AS v FROM edges
@@ -931,14 +909,17 @@ def c06_production_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every later consumer (component seed, census join) reuses the
     # cache — sequential in practice (same rationale the r09 A/B
     # measured for the old surv checkpoint, 6.25 -> 6.45 s eager).
+    surv = mem.filter(F.col("doc_id") == F.col("cid"))
     # Re-spread the survivors before the per-row-EXPENSIVE shingle
     # projection (the s14 lesson): AQE coalesces the window's
     # tiny-by-bytes shuffle output toward one partition, which would
-    # single-thread the shingle scan stage.
-    surv = (mem.filter(F.col("doc_id") == F.col("cid"))
-            .select("doc_id", "lang", "text")
-            .repartition(spark.sparkContext.defaultParallelism))
-    edges = lsh_verified_edges(surv).select("d1", "d2")
+    # single-thread the shingle scan stage. The component seed takes
+    # the ids straight from `mem`: a second round-robin shuffle of them
+    # would buy nothing.
+    edges = lsh_verified_edges(
+        surv.select("doc_id", "lang", "text")
+        .repartition(spark.sparkContext.defaultParallelism)
+    ).select("d1", "d2")
     cc = connected_components(surv.select("doc_id"), edges,
                               "doc_id", "d1", "d2")
     j = mem.join(cc, "doc_id", "left")

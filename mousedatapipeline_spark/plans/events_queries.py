@@ -25,7 +25,11 @@ from mousedatapipeline_spark.operators.joins import (
 )
 from mousedatapipeline_spark.operators.windows import sessionize
 from mousedatapipeline_spark.plans.catalog import register
-from mousedatapipeline_spark.tables import load, load_spread
+from mousedatapipeline_spark.tables import (
+    load,
+    load_spread,
+    normalize_events_ts,
+)
 
 
 @register(
@@ -44,9 +48,17 @@ from mousedatapipeline_spark.tables import load, load_spread
         "a watermark (streaming/watcher.py).",
 )
 def e01_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
+    return hourly_counts(load(spark, sf_dir, "events"))
+
+
+def hourly_counts(ev: DataFrame) -> DataFrame:
+    """e01's aggregate over any events frame, also w01's per-batch fold:
+    one definition for both sides of the streaming/batch parity. ``ts``
+    is normalized first (a no-op on ``tables.load``'s output), since a
+    streamed batch arrives in the file's own encoding."""
     return (
-        ev.groupBy(
+        normalize_events_ts(ev)
+        .groupBy(
             F.date_format(F.date_trunc("hour", F.col("ts")),
                           "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type")

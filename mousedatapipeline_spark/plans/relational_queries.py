@@ -38,7 +38,7 @@ from mousedatapipeline_spark.operators.aggregates import (
     profile_columns,
     repetition_stack, stack_stats,
 )
-from mousedatapipeline_spark.plans.catalog import register
+from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.tables import load
 
 
@@ -1946,15 +1946,7 @@ def q44_logistic_regression_steps(spark: SparkSession,
 
 @register(
     "q45_delta_join_maintenance",
-    oracle="""
-    SELECT n.n_name AS nation,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {rev} AS revenue
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """.format(rev=stable_round_sql(dsum_sql("o.o_totalprice"))),
+    oracle=_REGISTRY["q34_bucketed_join_roundtrip"].oracle,
     doc="Incremental JOIN maintenance (the join half of q19's IVM "
         "story): the orders-customer-nation join is materialized for "
         "the base 90% of orders, then a 10% delta arrives and only "

@@ -21,6 +21,7 @@ from mousedatapipeline_spark.operators import sampling as SA
 from mousedatapipeline_spark.operators import similarity as S
 from mousedatapipeline_spark.operators import text as T
 from mousedatapipeline_spark.operators.aggregates import DEC, dsum, dsum_sql
+from mousedatapipeline_spark.operators.similarity import MIN_SHARED_BANDS
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.text_queries import t03_quality_score
 from mousedatapipeline_spark.tables import (
@@ -48,6 +49,94 @@ _SQL_NORMS = f"""
              SQRT({dsum_sql("v * v")}) AS norm
       FROM dims GROUP BY vec_id
 """
+
+
+def _minhash_wide_sql() -> str:
+    mins = ", ".join(
+        f"MIN(({S.MINHASH_A[i]}::BIGINT * h + {S.MINHASH_B[i]}::BIGINT) "
+        f"% 2147483647) AS mh{i}"
+        for i in range(S.N_PERM))
+    return f"SELECT doc_id, lang, {mins} FROM h GROUP BY doc_id, lang"
+
+
+def _bands_wide_sql() -> str:
+    selects = []
+    for b in range(S.N_BANDS):
+        cols = range(b * S.ROWS_PER_BAND, (b + 1) * S.ROWS_PER_BAND)
+        sig = " || '-' || ".join(f"CAST(mh{i} AS VARCHAR)" for i in cols)
+        selects.append(
+            f"SELECT doc_id, lang, {b} AS band, {sig} AS band_sig FROM mh")
+    return " UNION ALL ".join(selects)
+
+
+# The near-dup pair stage's CTEs, each written once for every oracle
+# that uses it (the degree_cap_sql() pattern). They read a shingle
+# relation `sh` (doc_id, lang[, source], shingle) and, for cand_sql(),
+# the `bands` CTE of _bands_wide_sql(); the Spark twins are named on
+# each.
+def sz_sql() -> str:
+    """``sz`` (doc_id, n): shingle-set sizes. Spark twin: the ``n`` of
+    ``operators.similarity.hashed_shingle_docs(with_n=True)``."""
+    return ("sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n"
+            " FROM sh GROUP BY doc_id)")
+
+
+def blocked_common_sql() -> str:
+    """``common`` (d1, d2, n_common) over ALL within-(lang, source)
+    pairs sharing a shingle. Spark twin: ``operators.similarity.
+    blocked_overlaps``."""
+    return """common AS (
+      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
+      FROM sh a JOIN sh b
+        ON a.shingle = b.shingle AND a.lang = b.lang
+       AND a.source = b.source AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+
+
+def cand_sql() -> str:
+    """``cand`` (d1, d2): LSH candidates, pairs sharing at least
+    MIN_SHARED_BANDS (lang, band, band_sig) buckets. Spark twin:
+    ``operators.similarity.lsh_candidates``."""
+    return f"""cand AS (
+      SELECT a.doc_id AS d1, b.doc_id AS d2
+      FROM bands a JOIN bands b
+        ON a.band = b.band AND a.band_sig = b.band_sig
+       AND a.lang = b.lang AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+      HAVING COUNT(*) >= {MIN_SHARED_BANDS}
+    )"""
+
+
+def cand_common_sql() -> str:
+    """``common`` (d1, d2, n_common) over the ``cand`` pairs. Keyed on
+    doc_id alone, as the Spark twin's joins are
+    (``operators.similarity.hashed_jaccard``)."""
+    return """common AS (
+      SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS n_common
+      FROM cand c
+      JOIN sh a ON a.doc_id = c.d1
+      JOIN sh b ON b.doc_id = c.d2 AND b.shingle = a.shingle
+      GROUP BY c.d1, c.d2
+    )"""
+
+
+def verified_sql(min_jaccard: float, rounded: bool = False) -> str:
+    """``verified`` (d1, d2, n_common, jr): the ``common`` pairs whose
+    exact Jaccard over ``sz`` reaches ``min_jaccard``; the input of
+    degree_cap_sql(). ``rounded`` stable-rounds ``jr`` (s14 ranks its
+    cap on the rounded value in both engines)."""
+    raw = ("CAST(m.n_common AS DOUBLE)"
+           " / CAST(s1.n + s2.n - m.n_common AS DOUBLE)")
+    jr = stable_round_sql(raw) if rounded else raw
+    return f"""verified AS (
+      SELECT m.d1, m.d2, m.n_common,
+             {jr} AS jr
+      FROM common m
+      JOIN sz s1 ON s1.doc_id = m.d1
+      JOIN sz s2 ON s2.doc_id = m.d2
+      WHERE {raw} >= {min_jaccard}
+    )"""
 
 
 # --------------------------------------------------------------------------
@@ -99,65 +188,36 @@ def exact_jaccard_edges(docs: DataFrame, redistribute: int) -> DataFrame:
     Instead the shingle SET is computed as a per-row array expression
     (zero shuffles — a document's shingle set is row-local), pairs are
     generated per (lang, source) block without a self-join
-    (S.blocked_pairs), and the overlap is a JVM-side array_intersect.
+    (S.blocked_overlaps), and the overlap is a JVM-side array_intersect.
     One small shuffle total; pair count bounded by block size.
     With large blocks + rich vocabulary the inverted index wins; the
     true scale path is s03's MinHash banding.
-    hashed_shingle_docs: shingle work once, as 8-byte hashes (never
-    string arrays — see the helper's doc); intersect counts equal the
-    string-set counts under the corpus-checked hash injectivity.
-    Docs shorter than 3 chars drop out here, matching the oracle's
-    shingle relation (they have no rows there and can never reach
-    the 0.6 threshold).
+    Docs shorter than 3 chars drop out (S.blocked_overlaps), matching
+    the oracle's shingle relation.
+
+    Length filter (PPJoin-family, exact): J <= min/max, so a pair with
+    5*min(n1,n2) < 3*max(n1,n2) can never reach 0.6 — it skips its
+    intersect entirely (integer compare, no float boundary; ~28% of
+    candidate pairs on this corpus). n_common=0 keeps the skipped pair
+    below every downstream threshold, matching the oracle's WHERE on
+    the true Jaccard.
     """
-    sets = S.hashed_shingle_docs(
-        docs, extra_cols=("lang", "source"), with_n=True)
-
-    # The intersect happens INSIDE the pair lambda (combine=): pair
-    # structs carry five scalars, never copies of the shingle arrays.
-    # Length filter (PPJoin-family, exact): J <= min/max, so a pair
-    # with 5*min(n1,n2) < 3*max(n1,n2) can never reach 0.6 — skip its
-    # intersect entirely (integer compare, no float boundary; ~28% of
-    # candidate pairs on this corpus). n_common=0 keeps the skipped
-    # pair below every downstream threshold, matching the oracle's
-    # WHERE on the true Jaccard.
-    def _overlap(x, y):
-        feasible = (F.least(x["n"], y["n"]) * 5
-                    >= F.greatest(x["n"], y["n"]) * 3)
-        return F.when(
-            feasible,
-            F.size(F.array_intersect(x["hs"], y["hs"])).cast("bigint")
-        ).otherwise(F.lit(0).cast("bigint"))
-
-    pairs = S.blocked_pairs(
-        sets, ["lang", "source"], {"hs": "hs", "n": "n"},
-        redistribute=redistribute,
-        combine=lambda x, y: [
-            x["n"].alias("n_1"), y["n"].alias("n_2"),
-            _overlap(x, y).alias("n_common"),
-        ])
+    pairs = S.blocked_overlaps(
+        docs, redistribute,
+        feasible=lambda n1, n2: F.least(n1, n2) * 5 >= F.greatest(n1, n2) * 3)
     scored = pairs.withColumn(
         "jaccard_raw",
-        F.col("n_common").cast("double")
-        / (F.col("n_1") + F.col("n_2") - F.col("n_common"))
-        .cast("double"))
+        S.jaccard_col(F.col("n_common"), F.col("n_1"), F.col("n_2")))
     return scored.filter(F.col("jaccard_raw") >= 0.6) \
         .select("d1", "d2", "n_common", "jaccard_raw")
-
 
 
 @register(
     "s02_ngram_jaccard",
     oracle=f"""
     WITH sh AS ({_SQL_SHINGLES}),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang
-       AND a.source = b.source AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    {sz_sql()},
+    {blocked_common_sql()}
     SELECT d1, d2, n_common,
            {stable_round_sql(
                'CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE)')}
@@ -183,24 +243,6 @@ def s02_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH banding: the scale path for near-dup — candidates come
 # only from shared (lang, band, signature) buckets, never all-pairs.
 # --------------------------------------------------------------------------
-def _minhash_wide_sql() -> str:
-    mins = ", ".join(
-        f"MIN(({S.MINHASH_A[i]}::BIGINT * h + {S.MINHASH_B[i]}::BIGINT) "
-        f"% 2147483647) AS mh{i}"
-        for i in range(S.N_PERM))
-    return f"SELECT doc_id, lang, {mins} FROM h GROUP BY doc_id, lang"
-
-
-def _bands_wide_sql() -> str:
-    selects = []
-    for b in range(S.N_BANDS):
-        cols = range(b * S.ROWS_PER_BAND, (b + 1) * S.ROWS_PER_BAND)
-        sig = " || '-' || ".join(f"CAST(mh{i} AS VARCHAR)" for i in cols)
-        selects.append(
-            f"SELECT doc_id, lang, {b} AS band, {sig} AS band_sig FROM mh")
-    return " UNION ALL ".join(selects)
-
-
 @register(
     "s03_minhash_lsh",
     oracle=f"""
@@ -223,19 +265,12 @@ def _bands_wide_sql() -> str:
 def s03_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signature computation is fully per-row (S.minhash_cols): the
     # shingle-hash array and all 16 permutation minima are array
-    # expressions — zero shuffles until the bucket grouping. Candidate
-    # pairs come from S.blocked_pairs per (lang, band, band_sig)
-    # bucket — no self-join, no recomputation of the signature subtree —
-    # then one count shuffle keyed (d1, d2).
-    # documents.parquet is a single file -> a single input partition;
-    # the per-row signature work below (~|text| shingles x 16 perms per
-    # doc) would otherwise run in ONE task. Spread the (small) doc set
-    # across the cluster first — the shuffle moves raw texts once and
-    # buys full parallelism for the expensive projection. On a real
-    # cluster the source would already be many splits and this is a
-    # no-op cost.
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    # expressions — zero shuffles until the bucket self-join
+    # (S.band_pairs), then one count shuffle keyed (d1, d2).
+    # load_spread: documents.parquet is a single file -> a single input
+    # partition, and the per-row signature work below (~|text| shingles
+    # x 16 perms per doc) would otherwise run in ONE task.
+    d = load_spread(spark, sf_dir, "documents")
     # hashed_shingle_docs: hs is a checkpointed materialized column so
     # the 16 minhash projections share ONE shingle-scan evaluation
     # (inline expressions would be duplicated into every column by
@@ -253,20 +288,7 @@ def s03_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved A/B read a tie (3.24/3.28 s) — s03's cost is its
     # pair OUTPUT, and the hashed checkpoint under sig already bounds
     # the corpus scan to one run.
-    bands = bands.localCheckpoint(eager=False)
-    # Bucket pairing via self-join, NOT blocked_pairs: LSH buckets are
-    # skewed (one 925-doc bucket at sf0.1 => 427k pairs), and the
-    # array-based pair generator would materialize a whole bucket's
-    # pairs in one task. The join spreads pair production across
-    # partitions of the bucket key; AQE skew-join splits the hot bucket.
-    a = bands.select(F.col("doc_id").alias("d1"), "lang", "band", "band_sig")
-    b = bands.select(F.col("doc_id").alias("d2"), "lang", "band", "band_sig")
-    return (
-        a.join(b, ["lang", "band", "band_sig"])
-        .filter(F.col("d1") < F.col("d2"))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_bands"))
-    )
+    return S.band_pairs(bands.localCheckpoint(eager=False))
 
 
 # --------------------------------------------------------------------------
@@ -1062,24 +1084,9 @@ def degree_cap_sql() -> str:
            UNNEST(generate_series(1, greatest(length(dd.text) - 2, 0)))
              AS t(pos)
     ),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang
-       AND a.source = b.source AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    verified AS (
-      SELECT d1, d2, n_common,
-             {stable_round_sql(
-                 'CAST(n_common AS DOUBLE)'
-                 ' / CAST(x.n + y.n - n_common AS DOUBLE)')} AS jr
-      FROM common JOIN sz x ON d1 = x.doc_id
-                  JOIN sz y ON d2 = y.doc_id
-      WHERE CAST(n_common AS DOUBLE)
-            / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6
-    ),
+    {sz_sql()},
+    {blocked_common_sql()},
+    {verified_sql(0.6, rounded=True)},
     {degree_cap_sql()},
     und AS (SELECT d1 AS u, d2 AS v FROM capped
             UNION ALL SELECT d2, d1 FROM capped
@@ -1178,11 +1185,6 @@ def s14_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # misses, which is the measured trade of the scale path.
 # --------------------------------------------------------------------------
 VERIFY_JACCARD = 0.5
-# Candidates must collide in >= 2 of the 4 bands: the synthetic text's
-# tiny shingle vocabulary makes single-band buckets nearly all-pairs
-# (650k+ candidates at sf0.1); two-band agreement restores the sparse
-# candidate set the pattern is designed around.
-MIN_SHARED_BANDS = 2
 
 
 @register(
@@ -1192,33 +1194,10 @@ MIN_SHARED_BANDS = 2
     h AS (SELECT doc_id, lang, {S.SHINGLE_HASH_SQL} AS h FROM sh),
     mh AS ({_minhash_wide_sql()}),
     bands AS ({_bands_wide_sql()}),
-    cand AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_sig = b.band_sig
-       AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= {MIN_SHARED_BANDS}
-    ),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.d1
-      JOIN sh b ON b.doc_id = c.d2 AND b.shingle = a.shingle
-      GROUP BY c.d1, c.d2
-    ),
-    verified AS (
-      SELECT m.d1, m.d2, m.n_common,
-             CAST(m.n_common AS DOUBLE)
-             / CAST(s1.n + s2.n - m.n_common AS DOUBLE) AS jr
-      FROM common m
-      JOIN sz s1 ON s1.doc_id = m.d1
-      JOIN sz s2 ON s2.doc_id = m.d2
-      WHERE CAST(m.n_common AS DOUBLE)
-            / CAST(s1.n + s2.n - m.n_common AS DOUBLE) >= {VERIFY_JACCARD}
-    ),
+    {cand_sql()},
+    {sz_sql()},
+    {cand_common_sql()},
+    {verified_sql(VERIFY_JACCARD)},
     {degree_cap_sql()}
     SELECT d1, d2, n_common, {stable_round_sql('jr')} AS jaccard
     FROM capped
@@ -1233,11 +1212,9 @@ MIN_SHARED_BANDS = 2
         "consumers never see quadratic duplicate mass.",
 )
 def s19_lsh_verified_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Repartition first: documents.parquet is one file -> one input
-    # partition (see s03's comment).
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
-    return lsh_verified_edges(d)
+    # load_spread: documents.parquet is one file -> one input partition
+    # (see s03's comment).
+    return lsh_verified_edges(load_spread(spark, sf_dir, "documents"))
 
 
 def lsh_verified_edges(d: DataFrame) -> DataFrame:
@@ -1262,7 +1239,7 @@ def lsh_verified_edges(d: DataFrame) -> DataFrame:
       MIN_SHARED_BANDS filter, exact Jaccard and the degree cap run in
       numpy (``operators.similarity.driver_verified_edges``). The
       edges return as an Arrow-built LocalRelation: no closing
-      checkpoint, and c06 runs 13 jobs where the plan below ran 21;
+      checkpoint (c06 fell from 21 jobs to 13 when it landed);
     - otherwise the distributed plan below runs.
     Every step after the shingle hashing is exact integer arithmetic
     plus one IEEE division, so both regimes return the same rows
@@ -1297,49 +1274,14 @@ def lsh_verified_edges(d: DataFrame) -> DataFrame:
     # the same eager checkpoint as before (identity under the
     # broadcast-threshold gate). Hot-bucket skew of the pinned layout
     # is bounded in-plan by the banding guards.
-    ba = bands.select(F.col("doc_id").alias("d1"), "lang", "band",
-                      "band_sig")
-    bb = bands.select(F.col("doc_id").alias("d2"), "lang", "band",
-                      "band_sig")
-    cands = (ba.join(bb, ["lang", "band", "band_sig"])
-             .filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2")
-             .agg(F.count(F.lit(1)).alias("shared_bands"))
-             .filter(F.col("shared_bands") >= MIN_SHARED_BANDS)
-             .select("d1", "d2")
-             .localCheckpoint(eager=True))  # feeds the verify join AND
-    # the pruning id set below (broadcast build + probe run in the
-    # same job)
-    cand_ids = (cands.select(F.explode(F.array("d1", "d2")).alias("doc_id"))
-                .distinct())
+    cands = S.lsh_candidates(bands).localCheckpoint(eager=True)  # feeds
+    # the verify join AND the pruning id set, whose broadcast hint this
+    # materialized size gates (broadcast build + probe run in one job).
     # Verify on HASHED shingle arrays: the byte-positional base-256
     # hash is injective on 3-grams (single-byte codepoints occupy
-    # disjoint byte lanes), so intersect counts equal
-    # the string-set counts while the joins shuffle int arrays, not
-    # 3-char strings. Pruned to candidate documents (semi-join over
-    # the checkpoint — candidates are a vanishing fraction of the
-    # corpus at scale), so the two join sides stream small array
-    # sets, not the corpus. The broadcast hint is size-gated on the
-    # MATERIALIZED parent (cand_ids is never larger than cands —
-    # distinct single ids vs id pairs): candidate volume grows with
-    # the corpus, and a forced hint would eventually hit the 8 GB
-    # broadcast cap (VERDICT r10 #4); past the gate AQE plans the
-    # semi-join from runtime stats.
-    hint = fits_broadcast(cands)
-    sets = (hashed.join(F.broadcast(cand_ids) if hint else cand_ids,
-                        "doc_id", "left_semi")
-            .select("doc_id", "hs", "n"))
-    s1 = sets.select(F.col("doc_id").alias("d1"),
-                     F.col("hs").alias("ss1"), F.col("n").alias("n1"))
-    s2 = sets.select(F.col("doc_id").alias("d2"),
-                     F.col("hs").alias("ss2"), F.col("n").alias("n2"))
-    joined = cands.join(s1, "d1").join(s2, "d2")
-    n_common = F.size(F.array_intersect("ss1", "ss2")).cast("bigint")
-    scored = joined.select(
-        "d1", "d2", n_common.alias("n_common"),
-        (n_common.cast("double")
-         / (F.col("n1") + F.col("n2") - n_common).cast("double"))
-        .alias("jaccard_raw"))
+    # disjoint byte lanes), so intersect counts equal the string-set
+    # counts while the joins shuffle int arrays, not 3-char strings.
+    scored = S.hashed_jaccard(cands, hashed)
     # No checkpoint on `verified`: degree_cap_edges consumes it exactly
     # once (single two-struct explode since r07) — the former lazy
     # checkpoint here was dead weight (r08 verdict #3).
@@ -1577,8 +1519,7 @@ def s21_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Same band-bucket machinery as s03.",
 )
 def s22_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
+    d = load_spread(spark, sf_dir, "documents")
     hashed = S.hashed_shingle_docs(d)
     sig = hashed.select("doc_id", "lang", *S.minhash_cols(F.col("hs")))
     bands = (S.band_signatures_wide(sig, ["doc_id", "lang"])
@@ -1694,14 +1635,8 @@ def s23_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s24_containment_neardup",
     oracle=f"""
     WITH sh AS ({_SQL_SHINGLES}),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang
-       AND a.source = b.source AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    {sz_sql()},
+    {blocked_common_sql()}
     SELECT d1, d2, n_common,
            {stable_round_sql(
                'CAST(n_common AS DOUBLE) / CAST(LEAST(x.n, y.n) AS DOUBLE)')}
@@ -1718,25 +1653,11 @@ def s23_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s24_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Sub-3-char docs have an empty 3-gram shingle set: the oracle's
     # shingle self-join can never emit them, and pairing one divides
-    # by min(|A|,|B|) = 0. shingle_set_col is empty EXACTLY when
-    # length < 3, so guard on the raw length — a scan-stage pushed
-    # filter, vs filtering on size(shs) which re-evaluates the whole
-    # shingle expression a second time (the r03 +46% regression).
-    # hashed_shingle_docs subsumes the length >= 3 scan filter and
-    # evaluates the shingle work once, as 8-byte hashes (intersect
-    # counts equal string-set counts under the corpus-checked hash
-    # injectivity — see the helper's doc).
-    sets = S.hashed_shingle_docs(
+    # by min(|A|,|B|) = 0. blocked_overlaps drops them with a
+    # scan-stage length >= 3 filter and runs the shingle work once.
+    pairs = S.blocked_overlaps(
         load_spread(spark, sf_dir, "documents"),
-        extra_cols=("lang", "source"), with_n=True)
-    pairs = S.blocked_pairs(
-        sets, ["lang", "source"], {"hs": "hs", "n": "n"},
-        redistribute=spark.sparkContext.defaultParallelism,
-        combine=lambda x, y: [
-            x["n"].alias("n_1"), y["n"].alias("n_2"),
-            F.size(F.array_intersect(x["hs"], y["hs"]))
-            .cast("bigint").alias("n_common"),
-        ])
+        redistribute=spark.sparkContext.defaultParallelism)
     scored = pairs.withColumn(
         "containment_raw",
         F.col("n_common").cast("double")
@@ -1817,29 +1738,15 @@ def _lane_match_sql() -> str:
     h AS (SELECT doc_id, lang, {S.SHINGLE_HASH_SQL} AS h FROM sh),
     mh AS ({_minhash_wide_sql()}),
     bands AS ({_bands_wide_sql()}),
-    cand AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_sig = b.band_sig
-       AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= {MIN_SHARED_BANDS}
-    ),
+    {cand_sql()},
     lanes AS (
       SELECT c.d1, c.d2,
              CAST({_lane_match_sql()} AS BIGINT) AS n_lanes
       FROM cand c JOIN mh a ON a.doc_id = c.d1
                   JOIN mh b ON b.doc_id = c.d2
     ),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-           FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.d1
-      JOIN sh b ON b.doc_id = c.d2 AND b.shingle = a.shingle
-      GROUP BY c.d1, c.d2
-    )
+    {sz_sql()},
+    {cand_common_sql()}
     SELECT l.d1, l.d2, l.n_lanes,
            {stable_round_sql(f'CAST(l.n_lanes AS DOUBLE) / {S.N_PERM}.0')}
              AS est_jaccard,
@@ -1866,58 +1773,27 @@ def _lane_match_sql() -> str:
         "rows, never shingle sets.",
 )
 def s26_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
-    hashed = S.hashed_shingle_docs(d, with_n=True)
+    hashed = S.hashed_shingle_docs(load_spread(spark, sf_dir, "documents"),
+                                   with_n=True)
     sig = (hashed.select("doc_id", "lang", *S.minhash_cols(F.col("hs")))
            .localCheckpoint(eager=False))  # joined twice below — the
     # s26 chain kept lazy as a family: band/cand shuffles serialize
     # the consumers in practice (r09 A/B: eager cost 2.31 -> 2.60 s)
     bands = (S.band_signatures_wide(sig, ["doc_id", "lang"])
              .localCheckpoint(eager=False))
-    ba = bands.select(F.col("doc_id").alias("d1"), "lang", "band",
-                      "band_sig")
-    bb = bands.select(F.col("doc_id").alias("d2"), "lang", "band",
-                      "band_sig")
-    cands = (ba.join(bb, ["lang", "band", "band_sig"])
-             .filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2")
-             .agg(F.count(F.lit(1)).alias("shared_bands"))
-             .filter(F.col("shared_bands") >= MIN_SHARED_BANDS)
-             .select("d1", "d2")
-             .localCheckpoint(eager=False))
-    lane_match = sum(
-        (F.when(F.col(f"mh{i}_1") == F.col(f"mh{i}_2"), 1).otherwise(0)
-         for i in range(1, S.N_PERM)),
-        F.when(F.col("mh0_1") == F.col("mh0_2"), 1).otherwise(0))
-    sa = sig.select(F.col("doc_id").alias("d1"),
-                    *[F.col(f"mh{i}").alias(f"mh{i}_1")
-                      for i in range(S.N_PERM)])
-    sb = sig.select(F.col("doc_id").alias("d2"),
-                    *[F.col(f"mh{i}").alias(f"mh{i}_2")
-                      for i in range(S.N_PERM)])
-    lanes = (cands.join(sa, "d1").join(sb, "d2")
-             .select("d1", "d2",
-                     lane_match.cast("bigint").alias("n_lanes")))
-    cand_ids = (cands.select(F.explode(F.array("d1", "d2")).alias("doc_id"))
-                .distinct())
-    sets = (hashed.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-            .select("doc_id", "hs", "n"))
-    s1 = sets.select(F.col("doc_id").alias("d1"),
-                     F.col("hs").alias("ss1"), F.col("n").alias("n1"))
-    s2 = sets.select(F.col("doc_id").alias("d2"),
-                     F.col("hs").alias("ss2"), F.col("n").alias("n2"))
-    joined = lanes.join(s1, "d1").join(s2, "d2")
-    n_common = F.size(F.array_intersect("ss1", "ss2")).cast("bigint")
+    cands = S.lsh_candidates(bands).localCheckpoint(eager=False)
+    lanes = S.signature_pairs(cands, sig).select(
+        "d1", "d2", S.matching_lanes().cast("bigint").alias("n_lanes"))
+    # cands is lazy, so its size is unknown here and hashed_jaccard
+    # leaves the id-set join to AQE's runtime stats.
+    scored = S.hashed_jaccard(cands, hashed, lanes)
     est = F.col("n_lanes").cast("double") / F.lit(float(S.N_PERM))
-    exact = (n_common.cast("double")
-             / (F.col("n1") + F.col("n2") - n_common).cast("double"))
-    return joined.select(
+    exact = F.col("jaccard_raw")
+    return scored.select(
         "d1", "d2", "n_lanes",
         stable_round(est).alias("est_jaccard"),
         stable_round(exact).alias("exact_jaccard"),
         stable_round(F.abs(est - exact)).alias("abs_err"))
-
 
 # --------------------------------------------------------------------------
 # s27: triangle counting on the near-dup graph — density diagnostics
@@ -1933,14 +1809,8 @@ def s26_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s27_triangle_count",
     oracle=f"""
     WITH sh AS ({_SQL_SHINGLES}),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang
-       AND a.source = b.source AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {sz_sql()},
+    {blocked_common_sql()},
     edges AS (
       SELECT d1, d2 FROM common JOIN sz x ON d1 = x.doc_id
                                 JOIN sz y ON d2 = y.doc_id
@@ -2028,14 +1898,8 @@ def s27_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s28_threshold_sweep",
     oracle=f"""
     WITH sh AS ({_SQL_SHINGLES}),
-    sz AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2, CAST(COUNT(*) AS BIGINT) AS n_common
-      FROM sh a JOIN sh b
-        ON a.shingle = b.shingle AND a.lang = b.lang
-       AND a.source = b.source AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {sz_sql()},
+    {blocked_common_sql()},
     scored AS (
       SELECT CAST(FLOOR(CAST(n_common AS DOUBLE)
                         / CAST(x.n + y.n - n_common AS DOUBLE) * 10)
@@ -2061,23 +1925,13 @@ def s27_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s28_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    # Same single-evaluation hashed-set scan as s02/s24 (see
-    # hashed_shingle_docs); len<3 docs have no oracle shingle rows and
-    # cannot reach the sweep's lowest threshold.
-    sets = S.hashed_shingle_docs(
+    # Same single-evaluation blocked overlap as s02/s24; len<3 docs
+    # have no oracle shingle rows and cannot reach the sweep's lowest
+    # threshold.
+    pairs = S.blocked_overlaps(
         load_spread(spark, sf_dir, "documents"),
-        extra_cols=("lang", "source"), with_n=True)
-    pairs = S.blocked_pairs(
-        sets, ["lang", "source"], {"hs": "hs", "n": "n"},
-        redistribute=spark.sparkContext.defaultParallelism,
-        combine=lambda x, y: [
-            x["n"].alias("n_1"), y["n"].alias("n_2"),
-            F.size(F.array_intersect(x["hs"], y["hs"]))
-            .cast("bigint").alias("n_common"),
-        ])
-    j = (F.col("n_common").cast("double")
-         / (F.col("n_1") + F.col("n_2") - F.col("n_common"))
-         .cast("double"))
+        redistribute=spark.sparkContext.defaultParallelism)
+    j = S.jaccard_col(F.col("n_common"), F.col("n_1"), F.col("n_2"))
     # Curve over OVERLAPPING pairs only: blocked_pairs enumerates every
     # within-block pair, but the oracle's shingle self-join can only
     # see pairs sharing >= 1 shingle — and a zero-overlap pair carries
@@ -2118,14 +1972,7 @@ def _bbit_lane_match_sql() -> str:
     h AS (SELECT doc_id, lang, {S.SHINGLE_HASH_SQL} AS h FROM sh),
     mh AS ({_minhash_wide_sql()}),
     bands AS ({_bands_wide_sql()}),
-    cand AS (
-      SELECT a.doc_id AS d1, b.doc_id AS d2
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.band_sig = b.band_sig
-       AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING COUNT(*) >= {MIN_SHARED_BANDS}
-    )
+    {cand_sql()}
     SELECT c.d1, c.d2,
            CAST({_lane_match_sql()} AS BIGINT) AS n_full,
            CAST({_bbit_lane_match_sql()} AS BIGINT) AS n_bbit,
@@ -2148,44 +1995,16 @@ def _bbit_lane_match_sql() -> str:
         "16-lane rows.",
 )
 def s29_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism)
-    hashed = S.hashed_shingle_docs(d)
+    hashed = S.hashed_shingle_docs(load_spread(spark, sf_dir, "documents"))
     sig = (hashed.select("doc_id", "lang", *S.minhash_cols(F.col("hs")))
            .localCheckpoint(eager=False))  # bands + two probe sides —
     # kept lazy like s26's chain (r09 A/B: eager cost 1.86 -> 1.91 s)
     bands = (S.band_signatures_wide(sig, ["doc_id", "lang"])
              .localCheckpoint(eager=False))
-    ba = bands.select(F.col("doc_id").alias("d1"), "lang", "band",
-                      "band_sig")
-    bb = bands.select(F.col("doc_id").alias("d2"), "lang", "band",
-                      "band_sig")
-    cands = (ba.join(bb, ["lang", "band", "band_sig"])
-             .filter(F.col("d1") < F.col("d2"))
-             .groupBy("d1", "d2")
-             .agg(F.count(F.lit(1)).alias("shared_bands"))
-             .filter(F.col("shared_bands") >= MIN_SHARED_BANDS)
-             .select("d1", "d2"))
-    m = 1 << _BBITS
-
-    def matches(mask: bool):
-        def lane(i: int):
-            x1, x2 = F.col(f"mh{i}_1"), F.col(f"mh{i}_2")
-            if mask:
-                x1, x2 = x1 % m, x2 % m
-            return F.when(x1 == x2, 1).otherwise(0)
-        return sum((lane(i) for i in range(1, S.N_PERM)), lane(0))
-
-    sa = sig.select(F.col("doc_id").alias("d1"),
-                    *[F.col(f"mh{i}").alias(f"mh{i}_1")
-                      for i in range(S.N_PERM)])
-    sb = sig.select(F.col("doc_id").alias("d2"),
-                    *[F.col(f"mh{i}").alias(f"mh{i}_2")
-                      for i in range(S.N_PERM)])
-    j = cands.join(sa, "d1").join(sb, "d2")
-    n_full = matches(False).cast("bigint")
-    n_bbit = matches(True).cast("bigint")
-    c = 1.0 / m
+    j = S.signature_pairs(S.lsh_candidates(bands), sig)
+    n_full = S.matching_lanes().cast("bigint")
+    n_bbit = S.matching_lanes(_BBITS).cast("bigint")
+    c = 1.0 / (1 << _BBITS)
     return j.select(
         "d1", "d2",
         n_full.alias("n_full"), n_bbit.alias("n_bbit"),
@@ -2193,7 +2012,6 @@ def s29_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("est_full"),
         stable_round((n_bbit.cast("double") / float(S.N_PERM) - c)
                      / (1.0 - c)).alias("est_bbit"))
-
 
 # --------------------------------------------------------------------------
 # s30: clustering quality — the "measure it" harness for the embedding

@@ -28,7 +28,7 @@ from mousedatapipeline_spark.functions.rounding import (
 from mousedatapipeline_spark.operators import bloom
 from mousedatapipeline_spark.operators import sketches as K
 from mousedatapipeline_spark.operators import text as TX
-from mousedatapipeline_spark.operators.aggregates import DEC, dsum, dsum_sql
+from mousedatapipeline_spark.operators.aggregates import DEC, dsum_sql
 from mousedatapipeline_spark.plans.catalog import _REGISTRY, register
 from mousedatapipeline_spark.plans.curation_queries import _C05_TARGET
 from mousedatapipeline_spark.plans.decontam_queries import EVAL_MOD, NGRAM
@@ -38,6 +38,7 @@ from mousedatapipeline_spark.plans.events_queries import (
     _e22_sql,
     _e22_tail,
     _e22_weights_col,
+    hourly_counts,
 )
 from mousedatapipeline_spark.streaming import fold, stateful, watcher
 from mousedatapipeline_spark.tables import load, load_spread
@@ -60,31 +61,9 @@ def _events_us(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
         *cols, F.unix_micros("ts").alias("ts_us"))
 
 
-def _hourly_counts(batch: DataFrame) -> DataFrame:
-    from mousedatapipeline_spark.tables import normalize_events_ts
-    return (
-        normalize_events_ts(batch)
-        .groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")),
-                          "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"),
-             F.countDistinct("user_id").cast("bigint").alias("n_users"),
-             stable_round(dsum("value")).alias("value_sum"))
-    )
-
-
 @register(
     "w01_stream_tumbling_counts",
-    oracle=f"""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-           {stable_round_sql(dsum_sql("value"))} AS value_sum
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=_REGISTRY["e01_tumbling_counts"].oracle,
     doc="W1-W5 end-to-end: events land in a staging dir, a Structured "
         "Streaming file source drains them availableNow through "
         "foreachBatch into a parquet sink, and the drained sink must "
@@ -101,36 +80,14 @@ def w01_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, str(landing), spark.read.parquet(str(landing)).schema)
         sink = str(work / "sink")
         fold.drain(spark, lambda: watcher.run_watcher(
-            stream, _hourly_counts, sink, str(work / "ckpt"),
+            stream, hourly_counts, sink, str(work / "ckpt"),
             available_now=True, dedupe_keys=None))
         return scratch.keep(spark.read.parquet(sink))
 
 
 @register(
     "w02_stream_sessionization",
-    oracle="""
-    WITH g AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       IS NULL
-                  OR CAST(epoch(ts) AS BIGINT)
-                     - CAST(epoch(lag(ts) OVER (PARTITION BY user_id
-                                                ORDER BY ts, event_id))
-                            AS BIGINT) > 1800
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-    ),
-    s AS (
-      SELECT user_id,
-             SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                               ROWS UNBOUNDED PRECEDING) AS session_seq
-      FROM g
-    )
-    SELECT user_id,
-           CAST(MAX(session_seq) AS BIGINT) AS n_sessions,
-           CAST(COUNT(*) AS BIGINT) AS n_events
-    FROM s GROUP BY user_id
-    """,
+    oracle=_REGISTRY["e02_sessionization"].oracle,
     doc="Stateful Structured Streaming sessionization "
         "(applyInPandasWithState): per-user gap-session state carried "
         "across micro-batch triggers (time-chunked landing files, "

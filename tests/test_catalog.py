@@ -214,8 +214,11 @@ _COMPOSED_ORACLES = {
                               "t03_quality_score"),
     "s39_ivf_pq_index_build": ("s36_product_quantization",),
     "s42_matryoshka_recall": ("s05_knn_cosine",),
+    "w01_stream_tumbling_counts": ("e01_tumbling_counts",),
+    "w02_stream_sessionization": ("e02_sessionization",),
     "w10_stream_decontam": ("s18_bloom_decontam",),
     "w15_stream_compaction": ("c05_compaction_plan",),
+    "q45_delta_join_maintenance": ("q34_bucketed_join_roundtrip",),
 }
 
 # an unfilled template slot ({body}, {s19}) or a stub (__C06_...__)

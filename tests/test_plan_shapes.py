@@ -10,8 +10,10 @@ accidental shuffle) immediately.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import re
+from pathlib import Path
 
 import pytest
 
@@ -74,20 +76,18 @@ def test_m01_has_exactly_one_data_shuffle(spark):
     assert _count_shuffles(plan) == 1, plan
 
 
-def _sql_plans(spark, j0: int, j1: int) -> list[str]:
-    """Physical plans of the SQL executions whose jobs started in the
-    job-id range [j0, j1), from the status store (no UI needed)."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = []
-    for i in range(execs.size()):
-        e = execs.apply(i)
-        ids, it = [], e.jobs().keysIterator()
-        while it.hasNext():
-            ids.append(int(it.next()))
-        if ids and j0 <= min(ids) < j1:
-            plans.append(e.physicalPlanDescription())
-    return plans
+def _load_explain_dump():
+    spec = importlib.util.spec_from_file_location(
+        "_explain_dump", Path(__file__).resolve().parents[1] / "tools"
+        / "explain_dump.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+# Physical plans of the SQL executions whose jobs started in a job-id
+# range, as tools/explain_dump.py writes them after a final plan.
+_sql_plans = _load_explain_dump().sql_plans
 
 
 @_needs_data
@@ -193,8 +193,8 @@ def test_simhash_signatures_no_shuffle_before_blocking(spark):
     simhash work is scan-stage CPU), the block groupBy, and the pair
     redistribution; signature computation itself must not add a
     per-permutation shuffle (the failure mode this test exists for —
-    a minhash_signature-style explode+groupBy would add N_PERM-fold
-    shuffle volume)."""
+    an explode-per-permutation + groupBy signature would add
+    N_PERM-fold shuffle volume)."""
     plan = _plan(spark, "s04_simhash")
     assert _count_shuffles(plan) <= 3, plan
 
